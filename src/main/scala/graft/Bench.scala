@@ -331,7 +331,7 @@ object Bench {
     // Protocol (BASELINE.md): identical job at local-cluster[N,4,8g] and
     // local-cluster[4N,4,8g] — one JVM per executor, matching a real
     // cluster's process isolation. Input sized so per-run compute dwarfs
-    // fixed job overheads (scheduling, commit, the enrich dim subquery).
+    // fixed job overheads (scheduling, commit).
     // Best-of-4 per size (symmetric) estimates capacity; every rep starts with a sync
     // (identically for both sizes) and all I/O is tmpfs-backed.
     val scaling = if (doScaling) try {

@@ -448,7 +448,7 @@ object SparkEntry {
       ev.unionByName(ev).dropDuplicates("host", "source", "ts", "offset")
         .select(col("doc_id"))
     }),
-    // full pipeline: tokens -> parse -> enrich(J2 broadcast) -> per-sink
+    // full pipeline: tokens -> parse -> enrich(J2, memoized) -> per-sink
     // counts (A3, the north-rule per-sink aggregate invariant)
     "q_pipeline_sinkcounts" -> ((s, dir) => {
       val enriched = graft.plans.LogPipeline.run(

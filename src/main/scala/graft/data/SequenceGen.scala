@@ -19,8 +19,8 @@ import graft.model.SourceConfig
 object SequenceGen {
   val baseEpochMicros: Long = 1611171420L * 1000000L // 2021-01-20T19:37:00Z
 
-  /** Per-source parse/enrich configs for the synthetic corpus — the broadcast
-    * dimension of the enrich stage (FIXTURES.md §3).
+  /** Per-source parse/enrich configs for the synthetic corpus — what the
+    * enrich stage resolves each source to (FIXTURES.md §3).
     */
   val configs: Seq[SourceConfig] = Seq(
     SourceConfig("log-*.txt", "kv", SourceConfig.defaultExtractors,

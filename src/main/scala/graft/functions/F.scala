@@ -68,6 +68,13 @@ object F {
       configs.map(c => (globToRegex(c.source_glob), c.file_type, c.extractors, c.time_field)),
       graft.model.SourceConfig.defaultExtractors, "_time"))
 
+  /** Per-source enrich struct `(host, host_type, file_type, sink)`, memoized
+    * per distinct source (see ResolveSource).
+    */
+  def resolve_source(source: Column, configs: Seq[graft.model.SourceConfig]): Column =
+    toCol(ResolveSource(toExpr(source),
+      configs.map(c => (globToRegex(c.source_glob), c.host, c.host_type, c.file_type))))
+
   /** Per-source event-time parse (see EventTime). */
   def event_time(timeStr: Column, source: Column,
       configs: Seq[graft.model.SourceConfig]): Column = {

@@ -1063,3 +1063,84 @@ case class EventTime(
   override protected def withNewChildrenInternal(l: Expression, r: Expression): EventTime =
     copy(timeStr = l, source = r)
 }
+
+/** The enrich stage in ONE compact expression: resolves `source` to its
+  * config's (host, host_type, file_type) — globs tried in config order,
+  * first match wins, unmatched sources fall back to
+  * (`unknown-host`, `unknown`, `kv`) — plus the source's filesystem-safe
+  * sink key (every char outside `[A-Za-z0-9_-]` becomes `_`).
+  *
+  * All four are pure functions of `source`, so the answer is memoized per
+  * distinct source inside the expression instance, like [[ExtractEvent]]'s
+  * glob lookup: a row costs one hash probe on the source bytes, and no side
+  * plan (distinct + join + broadcast) runs to resolve a handful of
+  * sources. The memo lives and dies with the instance, and an instance is
+  * built from one config snapshot (one per micro-batch under hot reload),
+  * so it never outlives its config.
+  */
+case class ResolveSource(
+    source: Expression,
+    configs: Seq[(String, String, String, String)]) // (globRegex, host, hostType, fileType)
+  extends UnaryExpression {
+
+  override def child: Expression = source
+  override def dataType: DataType = ResolveSource.schema
+  override def nullable: Boolean = false
+
+  @transient private lazy val compiledGlobs: Array[java.util.regex.Pattern] =
+    configs.map(c => java.util.regex.Pattern.compile(c._1)).toArray
+  // memo: source bytes -> (host, host_type, file_type, sink); the shared row
+  // is never mutated, so every row of a source may hand out the same one
+  @transient private lazy val memo =
+    new java.util.concurrent.ConcurrentHashMap[UTF8String, InternalRow]()
+  @transient private lazy val nullSourceRow: InternalRow = resolved(null)
+
+  private def resolved(src: String): InternalRow = {
+    val idx = if (src == null) -1 else compiledGlobs.indexWhere(_.matcher(src).matches())
+    val (host, hostType, fileType) =
+      if (idx < 0) ("unknown-host", "unknown", "kv")
+      else (configs(idx)._2, configs(idx)._3, configs(idx)._4)
+    val sink = if (src == null) null else UTF8String.fromString(src.replaceAll("[^A-Za-z0-9_-]", "_"))
+    InternalRow(UTF8String.fromString(host), UTF8String.fromString(hostType),
+      UTF8String.fromString(fileType), sink)
+  }
+
+  def resolve(sourceS: UTF8String): InternalRow = {
+    if (sourceS == null) return nullSourceRow
+    val hit = memo.get(sourceS)
+    if (hit != null) hit
+    else {
+      // the key may point into a reused input buffer: store a private copy
+      val key = sourceS.clone()
+      memo.computeIfAbsent(key, k => resolved(k.toString))
+    }
+  }
+
+  override def eval(input: InternalRow): Any =
+    resolve(source.eval(input).asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("resolveSource", this, classOf[ResolveSource].getName)
+    val sC = source.genCode(ctx)
+    val srcV = if (source.nullable) s"${sC.isNull} ? null : ${sC.value}" else sC.value.toString
+    ev.copy(code =
+      org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
+        new StringContext(
+          s"""
+          ${sC.code}
+          boolean ${ev.isNull} = false;
+          InternalRow ${ev.value} = $ref.resolve($srcV);
+          """)).code())
+  }
+
+  override protected def withNewChildInternal(c: Expression): ResolveSource =
+    copy(source = c)
+}
+
+object ResolveSource {
+  val schema: StructType = StructType(Seq(
+    StructField("host", StringType, nullable = false),
+    StructField("host_type", StringType, nullable = false),
+    StructField("file_type", StringType, nullable = false),
+    StructField("sink", StringType, nullable = true)))
+}

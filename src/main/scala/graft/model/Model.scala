@@ -64,8 +64,8 @@ case class EventRow(
     offset: Long,
     raw: String)
 
-/** Per-source parse/enrich config, the broadcast "dimension" side of the
-  * enrich join (reference: pkg/logsuck/indexedfiles/IndexedFileConfig.go:27-38,
+/** Per-source parse/enrich config, resolved per distinct source by the
+  * enrich expression (reference: pkg/logsuck/indexedfiles/IndexedFileConfig.go:27-38,
   * glob resolution plugins/steps/Utils.go:24-49).
   */
 case class SourceConfig(

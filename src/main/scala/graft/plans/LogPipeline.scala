@@ -13,17 +13,17 @@ import graft.model.SourceConfig
   *   parse     — render tokens -> raw, extract dynamic fields, derive ts
   *               (reference P1-P3); tokens carried untouched (per-row
   *               token-array-equality invariant)
-  *   enrich    — broadcast equi-join against the source_config dimension;
-  *               the non-equi glob match is evaluated once per *distinct
-  *               source* (tiny) and converted to an equi-join key, so the
-  *               big side never sees a nested-loop join (reference J2)
+  *   enrich    — one memoized expression maps source -> (host, host_type,
+  *               file_type, sink): the glob match runs once per *distinct
+  *               source* inside the expression instance, so the big side
+  *               sees neither a join nor a per-row glob (reference J2)
   *   route     — salted repartition + fan-out write partitioned by sink
   *               (reference S5-S7 forwarder/recipient topology)
   *   aggregate — per-sink counts (A3), field stats (A1), time histogram
   *
-  * All stages are Dataset/Catalyst expressions — one shuffle for the route
-  * (repartition) and one tiny one for the enrich dimension; the parse stage
-  * is pure whole-stage-codegen map work.
+  * All stages are Dataset/Catalyst expressions — the route's repartition is
+  * the only shuffle, and parse + enrich are pure whole-stage-codegen map
+  * work: a micro-batch or batch route runs no side job before its write.
   */
 object LogPipeline {
 
@@ -37,70 +37,29 @@ object LogPipeline {
       .withColumn("offset", regexp_extract(col("doc_id"), "(\\d+)$", 1).cast("long"))
       .withColumn("source_id", col("source"))
 
-  /** The config dimension as a DataFrame (broadcast side). */
-  def configDim(spark: SparkSession, configs: Seq[SourceConfig]): DataFrame = {
-    import spark.implicits._
-    configs.zipWithIndex.map { case (c, i) =>
-      (c.source_glob, F.globToRegex(c.source_glob), c.file_type, c.time_field,
-        c.time_layout, c.host, c.host_type, i)
-    }.toDF("source_glob", "glob_regex", "file_type", "time_field",
-      "time_layout", "cfg_host", "host_type", "priority")
-  }
-
-  /** enrich: resolve each event's source to its config (first match wins by
-    * priority) and stamp host/host_type/ts + the dynamic fields map.
+  /** enrich: resolve each event's source to its config and stamp
+    * host/host_type/file_type/sink, then the dynamic fields map and ts.
     *
-    * Scale shape: `distinct sources` is a partial-aggregated shuffle over a
-    * low-cardinality key; the glob (non-equi) match runs on that tiny frame
-    * only; the result is broadcast and the 10^12-row side does a broadcast
-    * hash equi-join — no big-side shuffle at all.
-    */
-  def enrich(spark: SparkSession, parsed: DataFrame, configs: Seq[SourceConfig]): DataFrame = {
-    val dim = configDim(spark, configs)
-    val sources = parsed.select("source").distinct()
-    val resolved = sources.join(dim, expr("source rlike glob_regex"), "left")
-      .groupBy("source")
-      .agg(min_by(
-        struct(col("file_type"), col("time_field"), col("time_layout"),
-          col("cfg_host"), col("host_type"), col("priority")),
-        col("priority")).as("cfg"))
-      .select(col("source"),
-        coalesce(col("cfg.cfg_host"), lit("unknown-host")).as("host"),
-        coalesce(col("cfg.host_type"), lit("unknown")).as("host_type"),
-        coalesce(col("cfg.file_type"), lit("kv")).as("file_type"),
-        // sink is a pure function of `source`: computing it here (once per
-        // distinct source) instead of per row removes a regexp_replace from
-        // the 10^12-row side (measured 13s/8M rows — the single biggest
-        // map-side cost after the fix)
-        sinkCol.as("sink"))
-
-    val withHost = parsed.join(broadcast(resolved), Seq("source"), "left")
-
-    // fields + ts are per-config *plan constants* (extractor regexes and time
-    // layouts can't travel through a join), so they compile to expressions
-    // with the same first-match-wins glob dispatch. Both run straight off the
-    // tokens payload; ts goes through the time-only extraction so plans that
-    // never touch `fields` (the fan-out write) prune the map build entirely.
-    withHost
-      .withColumn("fields",
-        F.extract_event_tokens(col("tokens"), col("host"), col("source"), configs))
-      .withColumn("ts", tsColumnTokens(configs))
-  }
-
-  /** enrich without the dimension join — host/host_type resolved through the
-    * same first-match-wins CASE chain as fields/ts. Used on unbounded
-    * (streaming) inputs where a distinct+join per micro-plan isn't legal, and
-    * as the zero-shuffle enrich when the config set is small.
+    * Scale shape: one memoized [[F.resolve_source]] expression per row —
+    * globs tried in config order, first match wins, resolved once per
+    * distinct source inside the expression instance — so enrich is map
+    * work in the parse stage's codegen span: no join, no exchange and no
+    * side job, on bounded and streaming inputs alike. `sink` is a pure
+    * function of `source` and comes out of the same memo, so no per-row
+    * `regexp_replace` runs on the big side.
     */
   def enrichStatic(parsed: DataFrame, configs: Seq[SourceConfig]): DataFrame = {
-    def chain(f: SourceConfig => String, dflt: String): Column =
-      configs.foldRight(lit(dflt): Column) { (cfg, acc) =>
-        when(F.globMatches(col("source"), cfg.source_glob), lit(f(cfg))).otherwise(acc)
+    val cfg = "_source_cfg"
+    Seq("host", "host_type", "file_type", "sink")
+      .foldLeft(parsed.withColumn(cfg, F.resolve_source(col("source"), configs))) {
+        (df, c) => df.withColumn(c, col(s"$cfg.$c"))
       }
-    parsed
-      .withColumn("host", chain(_.host, "unknown-host"))
-      .withColumn("host_type", chain(_.host_type, "unknown"))
-      .withColumn("file_type", chain(_.file_type, "kv"))
+      .drop(cfg)
+      // fields + ts are per-config *plan constants* (extractor regexes and
+      // time layouts), compiled to expressions with the same first-match-wins
+      // glob dispatch. Both run straight off the tokens payload; ts goes
+      // through the time-only extraction so plans that never touch `fields`
+      // (the fan-out write) prune the map build entirely.
       .withColumn("fields",
         F.extract_event_tokens(col("tokens"), col("host"), col("source"), configs))
       .withColumn("ts", tsColumnTokens(configs))
@@ -136,8 +95,10 @@ object LogPipeline {
     coalesce(F.event_time(timeStr, col("source"), configs), fallbackTs)
   }
 
-  /** Sink key for the fan-out write: filesystem-safe source name. */
-  def sinkCol: Column = regexp_replace(col("source"), "[^A-Za-z0-9_-]", "_")
+  /** Sink key for the fan-out write: filesystem-safe source name (every
+    * char outside `[A-Za-z0-9_-]` becomes `_`), memoized per distinct source.
+    */
+  def sinkCol: Column = F.resolve_source(col("source"), Nil).getField("sink")
 
   /** Route-shuffle width from DATA volume, not cluster width. At a fixed
     * width the per-task volume grows linearly with input, and the write
@@ -279,10 +240,10 @@ object LogPipeline {
         sum(when(col("value").rlike(NUMERIC_RX), col("n")).otherwise(0L))
           .as("n_numeric"))
 
-  /** Full batch pipeline: returns the enriched frame (lazily) with sink col
-    * (already provided by the enrich dimension — no per-row recompute).
+  /** Full batch pipeline: returns the enriched frame (lazily) with its sink
+    * column. The plan needs no `spark`; the parameter stays for callers.
     */
   def run(spark: SparkSession, sequences: DataFrame,
       configs: Seq[SourceConfig]): DataFrame =
-    enrich(spark, parse(sequences), configs)
+    enrichStatic(parse(sequences), configs)
 }

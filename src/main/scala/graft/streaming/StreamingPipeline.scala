@@ -96,9 +96,9 @@ object StreamingPipeline {
     * [[reconcileLate]] after any outage that may have exceeded it: the
     * batch anti-join repair lands every dropped-but-new event exactly once.
     *
-    * Stream-side work is parse + static enrich of only the dedup-key +
-    * payload columns (the `fields` map never enters the stateful plan);
-    * the sink resolution + salted fan-out run per micro-batch.
+    * Stream-side work is parse + enrich of only the dedup-key + payload +
+    * sink columns (the `fields` map never enters the stateful plan); the
+    * salted fan-out runs per micro-batch.
     */
   def ingestDedup(spark: SparkSession, inputDir: String, outDir: String,
       checkpointDir: String, configs: Seq[SourceConfig],
@@ -111,16 +111,14 @@ object StreamingPipeline {
     val deduped = LogPipeline.enrichStatic(
         LogPipeline.parse(reader.parquet(inputDir)), configs)
       .select("doc_id", "tokens", "n_tok", "source", "host",
-        "ts", "offset") // source_id never stored (see routeWrite)
+        "ts", "offset", "sink") // source_id never stored (see routeWrite)
       .withWatermark("ts", horizon)
       .dropDuplicatesWithinWatermark("host", "source", "ts", "offset")
     deduped.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        LogPipeline.routeWrite(
-          batch.withColumn("sink", LogPipeline.sinkCol),
-          s"$outDir/batch=$batchId", saltBuckets)
+        LogPipeline.routeWrite(batch, s"$outDir/batch=$batchId", saltBuckets)
       }
       .start()
   }
@@ -184,7 +182,7 @@ object StreamingPipeline {
     val parsed = LogPipeline.enrichStatic(
         LogPipeline.parse(spark.read.parquet(inputDir)), configs)
       .select("doc_id", "tokens", "n_tok", "source", "host",
-        "ts", "offset") // source_id never stored (see routeWrite)
+        "ts", "offset", "sink") // source_id never stored (see routeWrite)
       // in-slice duplicates collapse first, mirroring the stream's
       // in-batch + stateful dedup on the same unique key
       .dropDuplicates("host", "source", "ts", "offset")
@@ -196,9 +194,7 @@ object StreamingPipeline {
     try {
       val n = missed.count()
       if (n > 0)
-        LogPipeline.routeWrite(
-          missed.withColumn("sink", LogPipeline.sinkCol),
-          s"$outDir/batch=$lateBatchId", saltBuckets)
+        LogPipeline.routeWrite(missed, s"$outDir/batch=$lateBatchId", saltBuckets)
       n
     } finally missed.unpersist(blocking = false): Unit
   }
@@ -213,7 +209,6 @@ object StreamingPipeline {
       .schema(Schemas.sequences)
       .parquet(inputDir)
     LogPipeline.enrichStatic(LogPipeline.parse(stream), configs)
-      .withColumn("sink", LogPipeline.sinkCol)
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), bucket), col("sink"))
       .agg(count(lit(1)).as("n"))

@@ -118,6 +118,34 @@ class ConfigSpec extends AnyFunSuite {
       s"each batch must carry its config snapshot's host: $byBatch")
     assert(byBatch.collect { case ((0, h), _) => h }.toSet == Set("hostA"))
     assert(byBatch.filter(_._1._1 > 0).keys.map(_._2).toSet == Set("hostB"))
+
+    // the same edit under ONE running query: each micro-batch resolves its
+    // sources through an enrich memo built from that batch's snapshot, so a
+    // memo filled under the old config must not answer the next batch
+    val liveIn = TestDirs.tmp("graft-hotcfg-live-in").toString
+    val liveOut = TestDirs.tmp("graft-hotcfg-live-out").toString
+    writeCfg("hostC")
+    kvOnly(500, 0).write.mode("overwrite").parquet(liveIn)
+    val q = graft.streaming.StreamingPipeline.ingestReloading(spark, liveIn, liveOut,
+      TestDirs.tmp("graft-hotcfg-live-ckpt").toString,
+      () => ConfigJson.parseFile(cfgPath.toString).configs, saltBuckets = 4,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+    val landed = try {
+      q.processAllAvailable()
+      writeCfg("hostD")
+      kvOnly(800, 500).write.mode("append").parquet(liveIn)
+      q.processAllAvailable()
+      spark.read.parquet(liveIn).count()
+    } finally q.stop()
+    val live = spark.read.option("basePath", liveOut).parquet(liveOut)
+      .groupBy("batch", "host").count().collect()
+      .map(r => (r.getAs[Any]("batch").toString.toLong, r.getString(1)) -> r.getLong(2)).toMap
+    assert(live.values.sum == landed, s"every landed row routed once: $live")
+    assert(live.collect { case ((0, h), _) => h }.toSet == Set("hostC"),
+      s"batch 0 carries the first snapshot's host: $live")
+    assert(live.keys.exists(_._1 > 0) &&
+      live.filter(_._1._1 > 0).keys.map(_._2).toSet == Set("hostD"),
+      s"batches after the edit carry the edited host: $live")
   }
 
   test("CLI batch route + query over a reference-format config") {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.data.{SequenceGen, Vocab}
+import graft.model.SourceConfig
 import graft.plans.{LogPipeline, RouteJob}
 
 /** End-to-end parse -> enrich -> route -> aggregate pipeline tests against an
@@ -92,13 +93,42 @@ class PipelineSpec extends AnyFunSuite {
     assert(enriched("doc-2") == (("unknown-host", "unknown")))
   }
 
-  test("enrichStatic equals join-based enrich") {
-    val seqs = spark.read.parquet(inputDir)
-    val a = LogPipeline.run(spark, seqs, SequenceGen.configs)
-      .select("doc_id", "host", "host_type", "ts")
-    val b = LogPipeline.enrichStatic(LogPipeline.parse(seqs), SequenceGen.configs)
-      .select("doc_id", "host", "host_type", "ts")
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+  test("enrich parity table: source -> (host, host_type, file_type, sink)") {
+    import spark.implicits._
+    def cfg(glob: String, host: String, hostType: String, fileType: String) =
+      SourceConfig(glob, fileType, SourceConfig.defaultExtractors, "_time",
+        SourceConfig.defaultTimeLayout, host, hostType)
+    // overlapping globs: app-special.log matches the first two and *.log,
+    // and the first one listed wins
+    val configs = Seq(
+      cfg("app-*.log", "h-app", "app", "kv"),
+      cfg("app-special.log", "h-special", "special", "json"),
+      cfg("*.log", "h-any", "any", "access"),
+      cfg("var/log/*", "h-var", "var", "kv"))
+    val expected = Map(
+      "app-1.log" -> (("h-app", "app", "kv", "app-1_log")),
+      "app-special.log" -> (("h-app", "app", "kv", "app-special_log")),
+      "web.log" -> (("h-any", "any", "access", "web_log")),
+      "var/log/my app.txt" -> (("h-var", "var", "kv", "var_log_my_app_txt")),
+      // `*` does not cross `/`: no glob matches, the fallbacks apply
+      "nested/web.log" -> (("unknown-host", "unknown", "kv", "nested_web_log")),
+      "mystery.bin" -> (("unknown-host", "unknown", "kv", "mystery_bin")))
+    // every source on several rows, so most rows are answered by the memo
+    val seqs = (0 until 24).map { i =>
+      val src = expected.keys.toSeq(i % expected.size)
+      (f"doc-$i%012d", Vocab.encode(s"event $i").toSeq, 2, src)
+    }.toDF("doc_id", "tokens", "n_tok", "source")
+    val got = LogPipeline.run(spark, seqs.repartition(3), configs)
+      .select("source", "host", "host_type", "file_type", "sink").distinct().collect()
+    assert(got.length == expected.size, s"one answer per source: ${got.mkString(", ")}")
+    assert(got.map(r => r.getString(0) ->
+      ((r.getString(1), r.getString(2), r.getString(3), r.getString(4)))).toMap == expected)
+    // sinkCol gives the same key as the enriched frame and the per-row
+    // sanitize it replaces
+    val sinks = seqs.select(col("source"), LogPipeline.sinkCol.as("sink"),
+      regexp_replace(col("source"), "[^A-Za-z0-9_-]", "_").as("per_row")).collect()
+    assert(sinks.forall(r => r.getString(1) == expected(r.getString(0))._4 &&
+      r.getString(1) == r.getString(2)))
   }
 
   test("parse: every kv/access/json row gets a real event time") {
@@ -157,20 +187,50 @@ class PipelineSpec extends AnyFunSuite {
     val ckpt = TestDirs.tmp("graft-ckpt").toString
     SequenceGen.sequences(spark, 1000, 2).write.mode("overwrite").parquet(streamIn)
 
-    val q1 = graft.streaming.StreamingPipeline.ingest(
-      spark, streamIn, streamOut, ckpt, SequenceGen.configs)
-    q1.awaitTermination()
-    val c1 = spark.read.parquet(streamOut).count()
-    assert(c1 == 1000L)
+    // Spark jobs per micro-batch, keyed by (query id, batch id)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, String), Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("sql.streaming.queryId"))
+            .map(_ -> p.getProperty("streaming.sql.batchId")))
+          .foreach(k => jobs.merge(k, 1, (a: Integer, b: Integer) => Integer.valueOf(a + b)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (q1, q2) = try {
+      val q1 = graft.streaming.StreamingPipeline.ingest(
+        spark, streamIn, streamOut, ckpt, SequenceGen.configs)
+      q1.awaitTermination()
+      val c1 = spark.read.parquet(streamOut).count()
+      assert(c1 == 1000L)
 
-    // new data arrives; restart from the same checkpoint
-    SequenceGen.sequences(spark, 1500, 2).filter(col("doc_id") >= "doc-000000001000")
-      .write.mode("append").parquet(streamIn)
-    val q2 = graft.streaming.StreamingPipeline.ingest(
-      spark, streamIn, streamOut, ckpt, SequenceGen.configs)
-    q2.awaitTermination()
-    val c2 = spark.read.parquet(streamOut).count()
-    assert(c2 == 1500L, "restart must process only the new file (no dupes)")
+      // new data arrives; restart from the same checkpoint
+      SequenceGen.sequences(spark, 1500, 2).filter(col("doc_id") >= "doc-000000001000")
+        .write.mode("append").parquet(streamIn)
+      val q2 = graft.streaming.StreamingPipeline.ingest(
+        spark, streamIn, streamOut, ckpt, SequenceGen.configs)
+      q2.awaitTermination()
+      val c2 = spark.read.parquet(streamOut).count()
+      assert(c2 == 1500L, "restart must process only the new file (no dupes)")
+      (q1, q2)
+    } finally {
+      try org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark.sparkContext, 10000L)
+      finally spark.sparkContext.removeSparkListener(listener)
+    }
+
+    Seq(q1 -> 1000L, q2 -> 500L).foreach { case (q, landed) =>
+      val data = q.recentProgress.filter(_.numInputRows > 0)
+      // one action per micro-batch: each landed row is read, and counted, once
+      assert(data.map(_.numInputRows).sum == landed,
+        s"numInputRows must equal the rows landed: ${data.map(_.numInputRows).mkString(",")}")
+      // a data trigger runs what the route write needs and nothing else:
+      // its shuffle map stage and its write (AQE); a per-batch side plan
+      // (e.g. resolving sources through a join) would add jobs here
+      data.foreach { p =>
+        val n = jobs.getOrDefault((q.id.toString, p.batchId.toString), 0)
+        assert(n == 2, s"batch ${p.batchId} ran $n Spark jobs, expected 2: $jobs")
+      }
+    }
   }
 
   test("streaming ingest dedup drops re-shipped rows across batches via checkpointed state") {
