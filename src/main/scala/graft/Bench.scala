@@ -8,6 +8,7 @@ import org.apache.spark.sql.SparkSession
 import graft.data.SequenceGen
 import graft.metrics.PipelineMetrics
 import graft.plans.LogPipeline
+import graft.util.Scratch
 
 /** Benchmark main (driver contract): prints ONE COMPACT JSON line
   * {"metric":…,"value":…,"unit":"sec","queries":{…},"pipeline":{…},
@@ -17,69 +18,17 @@ import graft.plans.LogPipeline
   * (round 1 shipped `parsed: null` from an oversized line).
   *
   * All bench I/O (synthetic input, routed output, Spark shuffle/local dirs)
-  * lives on tmpfs (/dev/shm) when available: page-cache writeback from a
-  * previous run's ~2 GB parquet output stalls later timed runs at random
-  * (±15 s observed), which is measurement noise, not plan quality. tmpfs
-  * removes the writeback entirely; `sync` hygiene stays for whatever still
-  * lands on disk (logs, sbt state).
+  * lives under [[Scratch]], i.e. on tmpfs when available: page-cache
+  * writeback from a previous run's ~2 GB parquet output stalls later timed
+  * runs at random (±15 s observed), which is measurement noise, not plan
+  * quality. tmpfs removes the writeback entirely; `sync` hygiene stays for
+  * whatever still lands on disk (logs, sbt state).
   */
 object Bench {
-  /** tmpfs root for everything this bench writes; falls back to the system
-    * temp dir when /dev/shm is absent (non-Linux).
+  /** Root for everything this bench writes: a [[Scratch]] dir, so it sits on
+    * tmpfs when available and goes with the process.
     */
-  private val benchRoot: String = {
-    val shm = new File("/dev/shm")
-    val base = if (shm.isDirectory && shm.canWrite) "/dev/shm" else System.getProperty("java.io.tmpdir")
-    // sweep leftovers from CRASHED prior invocations so repeated driver runs
-    // can't fill the tmpfs (graft-spark-local = SPARK_LOCAL_DIRS shuffle
-    // root; probe3-/graft- prefixes = scaling-probe staging) — but never a
-    // LIVE sibling's dirs: a pid-suffixed dir is only stale once its owner
-    // process is gone, and un-tagged dirs (temp-suffixed staging, the shared
-    // local-dir root) only once they've sat untouched for 30 minutes
-    val now = System.currentTimeMillis()
-    // These prefixes carry a real owner pid; createTempDirectory's RANDOM
-    // suffix must NOT be mistaken for one (ProcessHandle.of(random) is empty
-    // -> a live sibling's dir would be swept), so the ckpt/stream prefixes
-    // embed the pid BEFORE the random part (SparkEntry tags them) and the
-    // regexes anchor on the separator. Un-tagged dirs (old-style names, the
-    // shared local-dir root) go by age, where "age" is the newest recursive
-    // mtime — the graft-spark-local root's own mtime only refreshes when a
-    // session creates its app subdir, not while shuffle files are written
-    // below.
-    val pidTagged = "^(?:graft-bench|probe3-[a-z0-9]+)-([0-9]+)$".r
-    val pidPrefixed = "^(?:graft-ckpt|graft-stream-q|graft-compact|graft-bucket)-([0-9]+)-.*$".r
-    // full recursive newest mtime: shuffle writes land 3+ levels deep
-    // (spark-<app>/executor-<id>/blockmgr-<id>/<hex>/...), so a shallow
-    // check would age-out a live sibling's root. Runs once at startup over
-    // bounded leftovers — walk cost is noise.
-    def newestMtime(f: File): Long =
-      (f.lastModified() +: Option(f.listFiles()).getOrElse(Array.empty)
-        .map(newestMtime).toSeq).max
-    def stale(f: File): Boolean = f.getName match {
-      case pidTagged(pid) => ProcessHandle.of(pid.toLong).isEmpty
-      case pidPrefixed(pid) => ProcessHandle.of(pid.toLong).isEmpty
-      case _ => now - newestMtime(f) > 30L * 60 * 1000
-    }
-    // sweep BOTH candidate bases: a crashed run on a tmpfs host leaves its
-    // dirs in /dev/shm, but code paths that fell back (or predate the
-    // tmpfs preference) may have left pid-tagged dirs in /tmp
-    Set(base, System.getProperty("java.io.tmpdir")).foreach { b =>
-      new File(b).listFiles((_, n) =>
-        n.startsWith("graft-bench-") || n.startsWith("probe3-") ||
-          n.startsWith("graft-stream-") || n.startsWith("graft-ckpt-") ||
-          n.startsWith("graft-compact-") || n.startsWith("graft-bucket-") ||
-          n == "graft-spark-local") match {
-        case null => ()
-        case old => old.filter(stale).foreach(deleteRecursively)
-      }
-    }
-    Files.createDirectory(Paths.get(base, s"graft-bench-${ProcessHandle.current().pid()}")).toString
-  }
-
-  private def deleteRecursively(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
+  private val benchRoot: String = Scratch.dir("bench").toString
 
   private def session(cpus: Int): SparkSession = {
     SparkSession.clearActiveSession()
@@ -306,7 +255,7 @@ object Bench {
           val repStages = metrics.toJson
           metrics.reset()
           (t, repStages)
-        } finally deleteRecursively(new File(out)) // bound tmpfs usage
+        } finally Scratch.deleteRecursively(new File(out)) // bound tmpfs usage
       }
       spark.sparkContext.removeSparkListener(metrics)
       val (pipeSecs, bestStages) = reps.minBy(_._1)
@@ -399,7 +348,7 @@ object Bench {
                 System.err.println(s"[bench] scale n=$n w=$w phase=warmup FAILED: $e${drained()}")
                 throw e
               }
-              deleteRecursively(new File(warm))
+              Scratch.deleteRecursively(new File(warm))
               System.err.println(f"[bench] scale n=$n w=$w warmup ${tw}%.2f s${drained()}")
               (1 to repsPerWindow).foreach { r =>
                 new ProcessBuilder("sync").inheritIO().start().waitFor()
@@ -415,7 +364,7 @@ object Bench {
                   secs(n) = secs(n) :+ t
                 } catch { case e: Throwable =>
                   System.err.println(s"[bench] scale n=$n w=$w phase=rep-$r FAILED: $e${drained()}")
-                } finally deleteRecursively(new File(out)) // bound tmpfs usage
+                } finally Scratch.deleteRecursively(new File(out)) // bound tmpfs usage
                   // (also on failure — a partial rep output must not eat the
                   // headroom of the remaining reps)
               }
@@ -456,6 +405,5 @@ object Bench {
       (line.dropRight(1) + s""","stages":$stagesJson}""").getBytes("UTF-8"))
     catch { case _: Throwable => () }
     println(line)
-    deleteRecursively(new File(benchRoot))
   }
 }

@@ -19,36 +19,31 @@ object SparkEntry {
 
   private def eng(s: SparkSession, dir: String): QueryEngine = EventsAdapter.engine(s, dir)
 
-  // full-text index built once per scale dir within a process
-  private val indexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // staged streaming-input copy, once per scale dir
-  private val stagedCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // scratch dirs staged once per (kind, scale dir) within a process: the
+  // full-text index, streaming inputs, raw log files, routed batches
+  private val stagedDirs =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+
+  /** A [[graft.util.Scratch]] dir of `kind` filled by `build` once per
+    * (kind, dir); `build` gets the fresh dir and returns the path to serve.
+    */
+  private def staged(kind: String, dir: String)(build: String => String): String =
+    stagedDirs.computeIfAbsent((kind, dir),
+      _ => build(graft.util.Scratch.dir(kind).toString))
 
   /** Shared harness for the `q_stream_*` entries: stage the input once per
-    * `stageKey` into the swept scratch base (/dev/shm when writable —
-    * pid-tagged so Bench's liveness sweep reclaims a dead process's
-    * leftovers), hand the body fresh pid-tagged checkpoint + sink dirs at
+    * (`kind`, scale dir), hand the body fresh checkpoint + sink dirs at
     * shuffle-partitions=8, and ALWAYS tear down: stop the state-store
     * maintenance pool (its checkpoint is about to vanish) and delete both
     * scratch dirs immediately — the body must pin its result with an eager
     * localCheckpoint before returning, so nothing outlives the dirs.
     */
-  private def withStreamScratch(s: SparkSession, stageKey: String)(
+  private def withStreamScratch(s: SparkSession, kind: String, dir: String)(
       stage: String => Unit)(
       run: (String, String, String) => DataFrame): DataFrame = {
-    val shm = new java.io.File("/dev/shm")
-    val ckptBase = if (shm.isDirectory && shm.canWrite) shm.toPath
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val tmp = stagedCache.computeIfAbsent(stageKey, _ => {
-      val d = java.nio.file.Files.createTempDirectory(ckptBase,
-        s"graft-stream-q-${ProcessHandle.current().pid()}-").toString
-      stage(d)
-      d
-    })
-    def scratch() = java.nio.file.Files.createTempDirectory(ckptBase,
-      s"graft-ckpt-${ProcessHandle.current().pid()}-").toString
-    val ckpt = scratch()
-    val sink = scratch()
+    val tmp = staged(kind, dir) { d => stage(d); d }
+    val ckpt = graft.util.Scratch.dir("ckpt").toString
+    val sink = graft.util.Scratch.dir("sink").toString
     val oldShuffle = s.conf.get("spark.sql.shuffle.partitions")
     val oldNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     s.conf.set("spark.sql.shuffle.partitions", "8")
@@ -66,18 +61,10 @@ object SparkEntry {
       // maintenance-unload failures minutes later (their checkpoint is
       // about to vanish below); the pool restarts lazily on the next query
       org.apache.spark.sql.graftbridge.Bridge.stopStateStoreMaintenance()
-      graft.util.Dirs.deleteRecursively(new java.io.File(ckpt))
-      graft.util.Dirs.deleteRecursively(new java.io.File(sink))
+      graft.util.Scratch.deleteRecursively(new java.io.File(ckpt))
+      graft.util.Scratch.deleteRecursively(new java.io.File(sink))
     }
   }
-  // staged double-shipped corpus (streaming dedup input), once per scale dir
-  private val dedupStagedCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val urlStagedCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // staged raw log-text files (S2/S3 ingestion surface), once per scale dir
-  private val ingestCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // staged multi-batch routed output (compaction input), once per scale dir
-  private val routedCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private val bucketedCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   // IVF quantizer (build-once artifact), once per scale dir — serving a
@@ -228,7 +215,7 @@ object SparkEntry {
           case _: java.nio.file.FileAlreadyExistsException |
                _: java.nio.file.FileSystemException
             if new java.io.File(dst).isDirectory =>
-            graft.util.Dirs.deleteRecursively(new java.io.File(tmp))
+            graft.util.Scratch.deleteRecursively(new java.io.File(tmp))
         }
       }
       dst
@@ -345,19 +332,10 @@ object SparkEntry {
     // reference's insert-time FTS updates); the query measures the lookup.
     "q_indexed_search" -> ((s, dir) => {
       val e = eng(s, dir)
-      val idx = indexCache.computeIfAbsent(dir, _ => {
-        // pid-tagged under the swept scratch base (same prefix family as
-        // the stream staging dirs): the old bare createTempDirectory in
-        // /tmp leaked an index copy per verify/bench process, invisible
-        // to Bench's liveness sweep (VERDICT r5 "what's wrong" #3)
-        val shm = new java.io.File("/dev/shm")
-        val base = if (shm.isDirectory && shm.canWrite) shm.toPath
-          else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-        val d = java.nio.file.Files.createTempDirectory(base,
-          s"graft-stream-q-${ProcessHandle.current().pid()}-").toString
+      val idx = staged("ftindex", dir) { d =>
         graft.plans.FullTextIndex.build(e.events, d)
         d
-      })
+      }
       graft.plans.FullTextIndex.search(s, e, idx, "performing error userid=13")
         .select(col("doc_id"))
     }),
@@ -481,14 +459,8 @@ object SparkEntry {
     // Staging is driver-side test plumbing; the operator under test is
     // TextIngest.readLogFiles (glob -> wholetext -> delimiter split).
     "q_ingest_split" -> ((s, dir) => {
-      val staged = ingestCache.computeIfAbsent(dir, _ => {
-        // swept scratch base, pid-tagged — same rationale as the ftidx dir
-        // above (this one leaked a staged text copy of the corpus)
-        val shmI = new java.io.File("/dev/shm")
-        val baseI = if (shmI.isDirectory && shmI.canWrite) shmI.toPath
-          else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-        val d = java.nio.file.Files.createTempDirectory(baseI,
-          s"graft-stream-q-${ProcessHandle.current().pid()}-")
+      val logs = staged("ingest", dir) { dStr =>
+        val d = java.nio.file.Paths.get(dStr)
         // Spark writes the staged files (no driver-side row collect): one
         // partition per source, rows in event order, then one file per
         // source=… partition dir. The driver only RENAMES the handful of
@@ -523,9 +495,9 @@ object SparkEntry {
             finally out.close()
           }
         }
-        d.toString
-      })
-      graft.sources.TextIngest.readLogFiles(s, s"$staged/events-*.log")
+        dStr
+      }
+      graft.sources.TextIngest.readLogFiles(s, s"$logs/events-*.log")
         .select(col("doc_id"), col("raw"), col("source"), col("offset"))
     }),
 
@@ -537,16 +509,7 @@ object SparkEntry {
     // oracle recomputes both from the events table in DuckDB — the rewrite
     // must preserve the exact row set per sink across engines.
     "q_compaction" -> ((s, dir) => {
-      val routed = routedCache.computeIfAbsent(dir, _ => {
-        // pid-tagged under the swept scratch base (same lifecycle as the
-        // streaming staging dirs): a bare createTempDirectory in /tmp
-        // leaked a two-batch routed copy of the corpus per verify/bench
-        // process, invisible to Bench's sweep
-        val shm = new java.io.File("/dev/shm")
-        val base = if (shm.isDirectory && shm.canWrite) shm.toPath
-          else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-        val d = java.nio.file.Files.createTempDirectory(base,
-          s"graft-compact-${ProcessHandle.current().pid()}-").toString
+      val routed = staged("routed", dir) { d =>
         val enriched = graft.plans.LogPipeline.run(
           s, EventsAdapter.sequences(s, dir), EventsAdapter.configs)
         // two micro-batch dirs, like streaming ingest accumulates (S7)
@@ -555,21 +518,13 @@ object SparkEntry {
         graft.plans.LogPipeline.routeWrite(
           enriched.filter(col("offset") % 2 === 1), s"$d/routed/batch=1", 8)
         s"$d/routed"
-      })
-      // same pid-tagged swept base: the finally below deletes it in-process,
-      // the sweep covers a crashed process
-      val outBase = {
-        val shm = new java.io.File("/dev/shm")
-        if (shm.isDirectory && shm.canWrite) shm.toPath
-        else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
       }
-      val out = java.nio.file.Files.createTempDirectory(outBase,
-        s"graft-compact-${ProcessHandle.current().pid()}-").toString
+      val out = graft.util.Scratch.dir("compact").toString
       try {
         graft.plans.CompactionJob.compact(s, routed, s"$out/compacted", targetRows = 50000L)
         // pin the tiny per-sink aggregate so the scratch store can go now
         spark_read_compacted(s, s"$out/compacted").localCheckpoint(eager = true)
-      } finally graft.util.Dirs.deleteRecursively(new java.io.File(out))
+      } finally graft.util.Scratch.deleteRecursively(new java.io.File(out))
     }),
 
     // bucketed storage layout: the events table written ONCE bucketed +
@@ -583,13 +538,7 @@ object SparkEntry {
       // fresh session must re-register, not trust a stale name
       val tbl = bucketedCache.computeIfAbsent(
           s"${System.identityHashCode(s)}|$dir", _ => {
-        val base = {
-          val shm = new java.io.File("/dev/shm")
-          if (shm.isDirectory && shm.canWrite) shm.toPath
-          else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-        }
-        val d = java.nio.file.Files.createTempDirectory(base,
-          s"graft-bucket-${ProcessHandle.current().pid()}-").toString
+        val d = graft.util.Scratch.dir("bucketed").toString
         val name = s"events_bucketed_${Integer.toHexString(dir.hashCode)}"
         graft.plans.BucketedStore.writeBucketed(
           s.read.parquet(s"$dir/events.parquet"), name, s"$d/tbl", buckets = 8)
@@ -650,7 +599,7 @@ object SparkEntry {
       // the map side of the stateful agg was serialized; same fix as the
       // q_stream_dedup shipments). Round-robin layout; every consumer
       // aggregates, so row placement changes nothing.
-      withStreamScratch(s, s"$dir#mixed")(d =>
+      withStreamScratch(s, "stream-mixed", dir)(d =>
         EventsAdapter.mixedSequences(s, dir).repartition(8)
           .write.mode("overwrite").parquet(d)) {
         (tmp, ckpt, sink) =>
@@ -805,7 +754,7 @@ object SparkEntry {
     "q_stream_templates" -> ((s, dir) =>
       // 8-way staging: see q_stream_fieldprofile — cells/templates are
       // layout-independent aggregates
-      withStreamScratch(s, s"$dir#lines")(d =>
+      withStreamScratch(s, "stream-lines", dir)(d =>
         EventsAdapter.events(s, dir).select("source", "raw").repartition(8)
           .write.mode("overwrite").parquet(d)) { (tmp, ckpt, sink) =>
           graft.streaming.StreamingPipeline.templateCellsToSink(
@@ -822,7 +771,7 @@ object SparkEntry {
       // the single AvailableNow batch and flatMapGroupsWithState sorts
       // each group by (ts, event_id) before pairing, so file layout
       // cannot reorder transitions
-      withStreamScratch(s, s"$dir#events")(d =>
+      withStreamScratch(s, "stream-events", dir)(d =>
         s.read.parquet(s"$dir/events.parquet").repartition(8)
           .write.mode("overwrite").parquet(d)) { (tmp, ckpt, sink) =>
           graft.streaming.StreamingPipeline.transitionsToSink(
@@ -909,7 +858,7 @@ object SparkEntry {
     "q_stream_histogram" -> ((s, dir) =>
       // 8-way staging: see q_stream_fieldprofile (histogram + anomaly
       // share this corpus; both aggregate, so layout changes nothing)
-      withStreamScratch(s, dir)(d =>
+      withStreamScratch(s, "stream-seqs", dir)(d =>
         EventsAdapter.sequences(s, dir).repartition(8)
           .write.mode("overwrite").parquet(d)) {
         (tmp, ckpt, sink) =>
@@ -943,15 +892,8 @@ object SparkEntry {
     // the stateful unique-key dedup (reference UNIQUE(host,source,ts,
     // offset) ON CONFLICT ignore), so the routed union equals the distinct
     // corpus. Scratch dirs per call; 8 state partitions like the histogram.
-    "q_stream_dedup" -> ((s, dir) => {
-      val shm = new java.io.File("/dev/shm")
-      val ckptBase = if (shm.isDirectory && shm.canWrite) shm.toPath
-        else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-      def scratch(prefix: String) = java.nio.file.Files.createTempDirectory(ckptBase,
-        s"$prefix-${ProcessHandle.current().pid()}-").toString
-      val in = dedupStagedCache.computeIfAbsent(dir, _ => {
-        val d = java.nio.file.Files.createTempDirectory(ckptBase,
-          s"graft-stream-q-${ProcessHandle.current().pid()}-").toString
+    "q_stream_dedup" -> ((s, dir) =>
+      withStreamScratch(s, "stream-dedup", dir) { d =>
         // 4 files per shipment (was 1): a single-file shipment made each
         // micro-batch's parse a one-task scan — 4 files parallelize it
         // while maxFilesPerTrigger=4 below keeps exactly one shipment per
@@ -974,48 +916,24 @@ object SparkEntry {
               java.nio.file.attribute.FileTime.fromMillis(1600000000000L + i * 60000L)): Unit
           }
         }
-        inDir.toString
-      })
-      val out = scratch("graft-ckpt")
-      val ckpt = scratch("graft-ckpt")
-      val oldShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val oldNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        // see withStreamScratch: the trailing no-data batch is pure
-        // watermark bookkeeping for a checkpoint this harness deletes
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-        // saltBuckets matches the harness's 8 stream shuffle partitions
-        // (set just above): 32 writer tasks per 100k-row micro-batch were
-        // pure scheduling overhead + 4x the part files at this batch size
-        graft.streaming.StreamingPipeline.ingestDedup(s, in, out, ckpt,
+      } { (tmp, ckpt, out) =>
+        // saltBuckets matches the harness's 8 stream shuffle partitions:
+        // 32 writer tasks per 100k-row micro-batch were pure scheduling
+        // overhead + 4x the part files at this batch size
+        graft.streaming.StreamingPipeline.ingestDedup(s, s"$tmp/in", out, ckpt,
           EventsAdapter.configs, horizon = "10 days", saltBuckets = 8,
           maxFilesPerTrigger = Some(4)).awaitTermination()
         s.read.parquet(out).select(col("doc_id"))
-          .localCheckpoint(eager = true) // outlives the scratch dirs below
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", oldShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", oldNoData)
-        org.apache.spark.sql.graftbridge.Bridge.stopStateStoreMaintenance()
-        graft.util.Dirs.deleteRecursively(new java.io.File(ckpt))
-        graft.util.Dirs.deleteRecursively(new java.io.File(out))
-      }
-    }),
+          .localCheckpoint(eager = true) // outlives the scratch dirs
+      }),
     // streaming canonical-URL dedup: the urlDocs corpus is shipped TWICE
     // in forced-separate micro-batches (a re-crawl); the stateful
     // dropDuplicatesWithinWatermark on the canonical key must drop every
     // second-shipment URL via checkpointed STATE. The emitted (canon, n)
     // has n = 1 for every canonical URL precisely because the state dedup
     // worked — a failure would emit n = 2 rows and mismatch the twin.
-    "q_stream_urldedup" -> ((s, dir) => {
-      val shm = new java.io.File("/dev/shm")
-      val ckptBase = if (shm.isDirectory && shm.canWrite) shm.toPath
-        else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-      def scratch(prefix: String) = java.nio.file.Files.createTempDirectory(ckptBase,
-        s"$prefix-${ProcessHandle.current().pid()}-").toString
-      val in = urlStagedCache.computeIfAbsent(dir, _ => {
-        val d = java.nio.file.Files.createTempDirectory(ckptBase,
-          s"graft-stream-q-${ProcessHandle.current().pid()}-").toString
+    "q_stream_urldedup" -> ((s, dir) =>
+      withStreamScratch(s, "stream-urldedup", dir) { d =>
         // two shipments of the same crawl, one minute apart in event time
         Seq("2024-01-01 00:00:00", "2024-01-01 00:01:00").zipWithIndex
           .foreach { case (t, i) =>
@@ -1030,29 +948,12 @@ object SparkEntry {
             .filter(_.getName.endsWith(".parquet")).head
           java.nio.file.Files.copy(part.toPath, inDir.resolve(s"ship-$i.parquet")): Unit
         }
-        inDir.toString
-      })
-      val out = scratch("graft-ckpt")
-      val ckpt = scratch("graft-ckpt")
-      val oldShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val oldNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        // see withStreamScratch: the trailing no-data batch is pure
-        // watermark bookkeeping for a checkpoint this harness deletes
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-        graft.streaming.StreamingPipeline.urlDedupStream(s, in, out, ckpt,
+      } { (tmp, ckpt, out) =>
+        graft.streaming.StreamingPipeline.urlDedupStream(s, s"$tmp/in", out, ckpt,
           horizon = "10 days", maxFilesPerTrigger = Some(1)).awaitTermination()
         s.read.parquet(out).groupBy(col("canon")).agg(count(lit(1)).as("n"))
-          .localCheckpoint(eager = true) // outlives the scratch dirs below
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", oldShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", oldNoData)
-        org.apache.spark.sql.graftbridge.Bridge.stopStateStoreMaintenance()
-        graft.util.Dirs.deleteRecursively(new java.io.File(ckpt))
-        graft.util.Dirs.deleteRecursively(new java.io.File(out))
-      }
-    }),
+          .localCheckpoint(eager = true) // outlives the scratch dirs
+      }),
     // LSH-bucketed ANN pairs (signature + banding replicated in the oracle;
     // recall additionally asserted against the exact baseline in MlSpec)
     "q_ann_lsh" -> ((s, dir) =>

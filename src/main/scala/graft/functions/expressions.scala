@@ -573,11 +573,6 @@ case class JsonToFieldsMap(
     copy(raw = f, host = s, source = t)
 }
 
-/** Diagnostic counter (cheap atomic; used by perf probes only). */
-object ExtractCounter {
-  val n = new java.util.concurrent.atomic.AtomicLong()
-}
-
 /** Whole parse-stage extraction in ONE compact expression: resolves the
   * event's source to its config (glob dispatch, memoized per distinct source
   * exactly like the reference's getSourceToIndexedFileConfig memo,

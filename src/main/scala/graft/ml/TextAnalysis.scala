@@ -79,7 +79,7 @@ object TextAnalysis {
     ngramTopKSketchProven(docs, n, k, capacity)._1
 
   /** [[ngramTopKSketch]] plus whether the sketch path PROVED exactness (vs
-    * taking the exact fallback) — exposed for tests and the scale probe.
+    * taking the exact fallback) — exposed for tests.
     */
   private[graft] def ngramTopKSketchProven(docs: DataFrame, n: Int, k: Int,
       capacity: Int): (DataFrame, Boolean) = {

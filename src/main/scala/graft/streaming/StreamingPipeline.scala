@@ -199,7 +199,7 @@ object StreamingPipeline {
     } finally missed.unpersist(blocking = false): Unit
   }
 
-  /** The watermarked windowed aggregation shared by both histogram faces:
+  /** The watermarked windowed aggregation behind [[histogramToSink]]:
     * tumbling `bucket` window per sink, late data beyond `watermark`
     * dropped, state for closed windows evicted once the watermark passes.
     */
@@ -213,29 +213,6 @@ object StreamingPipeline {
       .groupBy(window(col("ts"), bucket), col("sink"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("bucket_start"), col("sink"), col("n"))
-  }
-
-  /** Streaming time-bucketed histogram — TEST/DEBUG face only: complete
-    * mode into a memory sink accumulates the whole aggregate on the driver
-    * every trigger and complete-mode state never evicts, which is exactly
-    * what must NOT ship at scale. Batch-parity tests use it; production
-    * serving is [[histogramToSink]] + [[servedHistogram]].
-    */
-  def histogram(spark: SparkSession, inputDir: String, configs: Seq[SourceConfig],
-      queryName: String, bucket: String = "1 hour",
-      watermark: String = "2 hours",
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val writer = histogramAgg(spark, inputDir, configs, bucket, watermark)
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-    // an explicit (e.g. tmpfs-backed) checkpoint skips the default
-    // disk-temp-dir state-store/commit-log churn — a fixed per-query cost
-    // that dwarfs the actual aggregation on small-batch benches
-    checkpointDir.foreach(d => writer.option("checkpointLocation", d))
-    writer.start()
   }
 
   /** Scale-real histogram serving (SURVEY.md §2.7): UPDATE-mode output into

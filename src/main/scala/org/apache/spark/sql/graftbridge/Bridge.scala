@@ -22,10 +22,9 @@ object Bridge {
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
 
   /** Block until the async listener bus has delivered every posted event
-    * (or the timeout passes — `waitUntilEmpty` throws on timeout). The
-    * probes' metric listeners need this to see the final stages of the job
-    * they just measured; the bus reference is `private[spark]`, hence the
-    * bridge.
+    * (or the timeout passes — `waitUntilEmpty` throws on timeout). A
+    * metric listener needs this to see the final stages of the job it just
+    * measured; the bus reference is `private[spark]`, hence the bridge.
     */
   def waitListenerBusEmpty(sc: org.apache.spark.SparkContext, timeoutMillis: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMillis)

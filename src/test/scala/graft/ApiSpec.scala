@@ -12,6 +12,7 @@ import graft.compile.QueryEngine
 import graft.data.SequenceGen
 import graft.plans.{LogPipeline, RetentionJob, RouteJob}
 import graft.sources.{EventsAdapter, TextIngest}
+import graft.util.Scratch
 
 /** Jobs API (reference Web.go surface), text-file ingestion (S3 split),
   * retention (S8), and the end-to-end query-over-routed-sinks path.
@@ -49,7 +50,7 @@ class ApiSpec extends AnyFunSuite {
 
   test("JobsApi routes fragment searches through an attached index (FTS parity)") {
     val e = EventsAdapter.engine(spark, dir)
-    val idx = TestDirs.tmp("graft-api-idx").toString
+    val idx = Scratch.dir("api-idx").toString
     try {
       graft.plans.FullTextIndex.build(e.events, idx)
       val indexed = new JobsApi(e, Some(idx))
@@ -59,7 +60,7 @@ class ApiSpec extends AnyFunSuite {
       // non-indexable shape (wildcard fragment) falls back to the scan path
       assert(indexed.jobStats(indexed.startJob("eventtype=p*").id).numMatchedEvents ==
         scan.jobStats(scan.startJob("eventtype=p*").id).numMatchedEvents)
-    } finally graft.util.Dirs.deleteRecursively(new java.io.File(idx))
+    } finally Scratch.deleteRecursively(new java.io.File(idx))
   }
 
   test("unknown job ids get a typed not-found, never an NPE (Web.go:192-257 404s)") {
@@ -94,23 +95,10 @@ class ApiSpec extends AnyFunSuite {
     // no shuffle, no scan of the skipped prefix, never a re-read of the
     // parquet source + re-sort
     def livePart(plan: String): String = plan.split("InMemoryRelation")(0)
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val pageListener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(
-          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        stages.add(s.stageInfo.numTasks): Unit
-    }
-    spark.sparkContext.addSparkListener(pageListener)
-    val page2rows = try {
-      val r = api.jobResults(job.id, 5, 5).collect()
-      // the listener bus is async: give the submit event time to land
-      val deadline = System.nanoTime() + 3000000000L
-      while (stages.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-      Thread.sleep(100) // settle any trailing stage events
-      r
-    } finally spark.sparkContext.removeSparkListener(pageListener)
+    val (page2rows, pageEvents) =
+      TestSpark.observe(api.jobResults(job.id, 5, 5).collect())
     assert(page2rows.length == 5)
-    val stageList = stages.toArray(Array.empty[Integer]).map(_.intValue).toSeq
+    val stageList = pageEvents.stageTasks
     // exactly ONE stage = one job, no shuffle (a shuffle would submit a
     // ShuffleMapStage first); its task count = touched cached partitions
     assert(stageList.length == 1, s"a page must be ONE shuffle-free stage: $stageList")
@@ -123,19 +111,10 @@ class ApiSpec extends AnyFunSuite {
       s"field stats must filter the persisted aggregate:\n$planF")
     // memoized stats: the second jobStats call launches ZERO Spark jobs
     api.jobStats(job.id)
-    val jobsStarted = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobsStarted.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val again = api.jobStats(job.id)
-      assert(again.numMatchedEvents == 201 && again.state == "finished")
-      Thread.sleep(1000) // let the async listener bus drain
-      assert(jobsStarted.get() == 0,
-        s"memoized jobStats must not touch the cluster, saw ${jobsStarted.get()} jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (again, statsEvents) = TestSpark.observe(api.jobStats(job.id))
+    assert(again.numMatchedEvents == 201 && again.state == "finished")
+    assert(statsEvents.jobs.isEmpty,
+      s"memoized jobStats must not touch the cluster, saw ${statsEvents.jobs.size} jobs")
     // releaseJob evicts: the job is gone and its caches are dropped
     assert(api.releaseJob(job.id))
     intercept[JobsApi.NoSuchJobException] { api.jobStats(job.id) }
@@ -172,27 +151,14 @@ class ApiSpec extends AnyFunSuite {
       .toInstant(java.time.ZoneOffset.UTC))
     // warm the partition-bounds index OUTSIDE the measured window
     api.jobResultsAfter(job.id, ts, anchor.getAs[String]("doc_id"), 5).collect()
-    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(
-          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        tasks.add(s.stageInfo.numTasks): Unit
-    }
-    spark.sparkContext.addSparkListener(l)
-    val keysetRows = try {
-      val r = api.jobResultsAfter(job.id, ts,
-        anchor.getAs[String]("doc_id"), 5).collect()
-      val deadline = System.nanoTime() + 3000000000L
-      while (tasks.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-      Thread.sleep(100)
-      r
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (keysetRows, pageEvents) = TestSpark.observe(
+      api.jobResultsAfter(job.id, ts, anchor.getAs[String]("doc_id"), 5).collect())
     assert(keysetRows.map(_.getAs[String]("doc_id")).toSeq ==
       offsetRows.map(_.getAs[String]("doc_id")).toSeq)
     // a deep page must read only the anchor's partition (plus at most one
     // limit scale-up), never the whole prefix: without pruning CollectLimit
     // walks partitions from 0 and the filter discards the entire prefix
-    val taskList = tasks.toArray(Array.empty[Integer]).map(_.intValue).toSeq
+    val taskList = pageEvents.stageTasks
     assert(taskList.sum <= 2,
       s"deep keyset page must touch <= 2 partitions, saw tasks per stage $taskList")
   }
@@ -229,7 +195,7 @@ class ApiSpec extends AnyFunSuite {
     val origStats = api.jobStats(job.id)
     val origFs = api.jobFieldStats(job.id, "userid").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val store = TestDirs.tmp("graft-jobstore").toString
+    val store = Scratch.dir("jobstore").toString
     api.exportJob(job.id, store)
     // a small result must land as ONE part file per store, not one per
     // cached partition (tiny-file debt at every export otherwise)
@@ -250,17 +216,8 @@ class ApiSpec extends AnyFunSuite {
     assert(api2.jobFieldStats(imported.id, "userid").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap == origFs)
     // stats after import are memoized — no cluster work
-    val jobsStarted = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobsStarted.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      api2.jobStats(imported.id)
-      Thread.sleep(1000)
-      assert(jobsStarted.get() == 0, s"imported stats must be memoized, saw ${jobsStarted.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, statsEvents) = TestSpark.observe(api2.jobStats(imported.id))
+    assert(statsEvents.jobs.isEmpty, s"imported stats must be memoized, saw ${statsEvents.jobs.size}")
     // keyset pagination still works on the imported timestampDesc job
     val anchor = api2.jobResults(imported.id, 9, 1).head()
     val ts = Timestamp.from(anchor.getAs[java.time.LocalDateTime]("ts").toInstant(java.time.ZoneOffset.UTC))
@@ -342,7 +299,7 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("text-file ingestion end-to-end: file -> events -> search") {
-    val tmp = TestDirs.tmp("graft-logs")
+    val tmp = Scratch.dir("logs")
     Files.writeString(tmp.resolve("my-log.txt"),
       "2021/01/20 19:37:00.000000 Starting Web GUI\n" +
         "2021/01/20 19:37:01.000000 Reticulated numSplines=423 for userId=7120\n")
@@ -358,9 +315,9 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("retention over routed sinks: old dropped, straddling rewritten, new kept") {
-    val in = TestDirs.tmp("graft-ret-in").toString
+    val in = Scratch.dir("ret-in").toString
     SequenceGen.sequences(spark, 2000, 4).write.mode("overwrite").parquet(in)
-    val out = TestDirs.tmp("graft-ret-out").toString
+    val out = Scratch.dir("ret-out").toString
     val job = new RouteJob(spark, out, batches = 4)
     job.run(in, SequenceGen.configs)
     val all = job.routed()
@@ -380,9 +337,9 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("query layer over routed sinks (the user's end-to-end path)") {
-    val in = TestDirs.tmp("graft-qsink-in").toString
+    val in = Scratch.dir("qsink-in").toString
     SequenceGen.sequences(spark, 1500, 4).write.mode("overwrite").parquet(in)
-    val out = TestDirs.tmp("graft-qsink-out").toString
+    val out = Scratch.dir("qsink-out").toString
     new RouteJob(spark, out, batches = 2).run(in, SequenceGen.configs)
     val sinks = LogPipeline.openSinks(spark, out)
     val engine = new QueryEngine(sinks, SequenceGen.configs)

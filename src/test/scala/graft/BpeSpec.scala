@@ -74,19 +74,9 @@ class BpeSpec extends AnyFunSuite {
     // fresh-driver simulation: forget the in-process table; the next use
     // must load from the store — a driver-local read, ZERO Spark jobs
     SparkEntry.clearBpeMemoryCache()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val loaded = try {
-      val m = SparkEntry.bpeMergesFor(spark, dir)
-      Thread.sleep(800) // async listener bus settle
-      assert(jobs.get() == 0,
-        s"loading the merge artifact must launch no Spark jobs (saw ${jobs.get()})")
-      m
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (loaded, loadEvents) = TestSpark.observe(SparkEntry.bpeMergesFor(spark, dir))
+    assert(loadEvents.jobs.isEmpty,
+      s"loading the merge artifact must launch no Spark jobs (saw ${loadEvents.jobs.size})")
     // the stored table is exactly what a retrain produces (v1 tag honest)
     assert(loaded == Bpe.trainOn(DocsAdapter.docs(spark, dir), 200))
   }

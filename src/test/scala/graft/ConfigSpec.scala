@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.ConfigJson
 import graft.model.SourceConfig
+import graft.util.Scratch
 
 /** Reference-format config reader (logsuck-config.schema.json;
   * JsonConverter.go:100-176, JsonFileTypeConfigConverter.go:24-157) and the
@@ -63,13 +64,13 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("per-fileType eventDelimiter drives the text split end-to-end (JsonConverter.go:50-55)") {
-    val dir = TestDirs.tmp("graft-delim-in").toString
-    val out = TestDirs.tmp("graft-delim-out").toString
+    val dir = Scratch.dir("delim-in").toString
+    val out = Scratch.dir("delim-out").toString
     // three events, semicolon-delimited, no trailing delimiter (the
     // remainder becomes the final event at batch EOF)
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "semi-0.log"),
       "first event a=1;second event a=2;third event a=3".getBytes("UTF-8"))
-    val cfgPath = TestDirs.tmp("graft-delim-cfg").resolve("logsuck.json")
+    val cfgPath = Scratch.dir("delim-cfg").resolve("logsuck.json")
     java.nio.file.Files.write(cfgPath,
       """{ "files": [ { "fileName": "semi-*.log", "fileTypes": ["semi"] } ],
         |  "fileTypes": [ { "name": "semi",
@@ -90,10 +91,10 @@ class ConfigSpec extends AnyFunSuite {
 
   test("streaming config hot-reload: an edited config file takes effect at the next micro-batch") {
     import org.apache.spark.sql.functions.col
-    val streamIn = TestDirs.tmp("graft-hotcfg-in").toString
-    val out = TestDirs.tmp("graft-hotcfg-out").toString
-    val ckpt = TestDirs.tmp("graft-hotcfg-ckpt").toString
-    val cfgPath = TestDirs.tmp("graft-hotcfg-cfg").resolve("logsuck.json")
+    val streamIn = Scratch.dir("hotcfg-in").toString
+    val out = Scratch.dir("hotcfg-out").toString
+    val ckpt = Scratch.dir("hotcfg-ckpt").toString
+    val cfgPath = Scratch.dir("hotcfg-cfg").resolve("logsuck.json")
     def writeCfg(host: String): Unit = java.nio.file.Files.write(cfgPath,
       s"""{ "host": {"name": "$host"}, "files": [ { "fileName": "log-*.txt" } ] }""".getBytes("UTF-8"))
     def kvOnly(n: Long, lo: Long) = graft.data.SequenceGen.sequences(spark, n, 2)
@@ -122,12 +123,12 @@ class ConfigSpec extends AnyFunSuite {
     // the same edit under ONE running query: each micro-batch resolves its
     // sources through an enrich memo built from that batch's snapshot, so a
     // memo filled under the old config must not answer the next batch
-    val liveIn = TestDirs.tmp("graft-hotcfg-live-in").toString
-    val liveOut = TestDirs.tmp("graft-hotcfg-live-out").toString
+    val liveIn = Scratch.dir("hotcfg-live-in").toString
+    val liveOut = Scratch.dir("hotcfg-live-out").toString
     writeCfg("hostC")
     kvOnly(500, 0).write.mode("overwrite").parquet(liveIn)
     val q = graft.streaming.StreamingPipeline.ingestReloading(spark, liveIn, liveOut,
-      TestDirs.tmp("graft-hotcfg-live-ckpt").toString,
+      Scratch.dir("hotcfg-live-ckpt").toString,
       () => ConfigJson.parseFile(cfgPath.toString).configs, saltBuckets = 4,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
     val landed = try {
@@ -150,12 +151,12 @@ class ConfigSpec extends AnyFunSuite {
 
   test("CLI batch route + query over a reference-format config") {
     // stage raw log files matching a config, run the Main body end-to-end
-    val dir = TestDirs.tmp("graft-cli-in").toString
-    val out = TestDirs.tmp("graft-cli-out").toString
+    val dir = Scratch.dir("cli-in").toString
+    val out = Scratch.dir("cli-out").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "log-0.txt"),
       ("2021/01/20 19:37:00.000000 doing eventType=error userId=7\n" +
         "2021/01/20 19:38:00.000000 doing eventType=view userId=8\n").getBytes("UTF-8"))
-    val cfgPath = TestDirs.tmp("graft-cli-cfg").resolve("logsuck.json")
+    val cfgPath = Scratch.dir("cli-cfg").resolve("logsuck.json")
     java.nio.file.Files.write(cfgPath,
       """{ "host": {"name": "h1"}, "files": [ { "fileName": "log-*.txt" } ] }""".getBytes("UTF-8"))
     Main.run(spark, Map(
@@ -171,8 +172,8 @@ class ConfigSpec extends AnyFunSuite {
 
   test("CLI --curate runs the funnel over a crawl parquet and writes survivors") {
     import org.apache.spark.sql.functions.col
-    val crawlDir = TestDirs.tmp("graft-curate-in").toString
-    val out = TestDirs.tmp("graft-curate-out").toString + "/ids"
+    val crawlDir = Scratch.dir("curate-in").toString
+    val out = Scratch.dir("curate-out").toString + "/ids"
     val crawl = graft.sources.DocsAdapter.funnelDocs(spark, "/root/testdata/sf0.001")
     crawl.write.mode("overwrite").parquet(crawlDir)
     Main.run(spark, Map("curate" -> "true", "out" -> out), crawlDir)
@@ -191,8 +192,8 @@ class ConfigSpec extends AnyFunSuite {
 
   test("multi-line stack traces reassemble into one event via a lookahead delimiter") {
     import org.apache.spark.sql.functions.col
-    val dir = TestDirs.tmp("graft-trace-in").toString
-    val out = TestDirs.tmp("graft-trace-out").toString + "/routed"
+    val dir = Scratch.dir("trace-in").toString
+    val out = Scratch.dir("trace-out").toString + "/routed"
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "app-0.log"),
       ("2024/01/01 00:00:01.000000 request ok userId=1\n" +
         "2024/01/01 00:00:02.000000 ERROR boom userId=2\n" +
@@ -201,7 +202,7 @@ class ConfigSpec extends AnyFunSuite {
         "2024/01/01 00:00:03.000000 request ok userId=3\n").getBytes("UTF-8"))
     // a new event starts only where a newline is FOLLOWED BY a timestamp —
     // continuation lines (the trace) stay inside the ERROR event
-    val cfgPath = TestDirs.tmp("graft-trace-cfg")
+    val cfgPath = Scratch.dir("trace-cfg")
       .resolve("logsuck.json")
     java.nio.file.Files.write(cfgPath,
       """{ "files": [ { "fileName": "app-*.log", "fileTypes": ["app"] } ],
@@ -229,8 +230,8 @@ class ConfigSpec extends AnyFunSuite {
 
   test("--prepare CLI: BPE-encode + pack conserve tokens under the cap") {
     import org.apache.spark.sql.functions.col
-    val in = TestDirs.tmp("graft-prep-in").toString
-    val out = TestDirs.tmp("graft-prep-out").toString + "/packed"
+    val in = Scratch.dir("prep-in").toString
+    val out = Scratch.dir("prep-out").toString + "/packed"
     graft.sources.DocsAdapter.docs(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text").write.mode("overwrite").parquet(in)
     Main.run(spark, Map("prepare" -> "true", "out" -> out,
@@ -251,7 +252,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("--profile CLI prints the field-discovery table for raw log input") {
-    val dir = TestDirs.tmp("graft-profile-in").toString
+    val dir = Scratch.dir("profile-in").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "log-0.txt"),
       ("2024/01/01 00:00:00.000000 hello a=1 b=foo\n" +
         "2024/01/01 00:00:01.000000 hello a=2 b=foo\n").getBytes("UTF-8"))

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.FullTextIndex
 import graft.sources.EventsAdapter
+import graft.util.Scratch
 
 /** The inverted full-text index (reference FTS4 EventRaws + MATCH prefilter,
   * SqliteEventRepository.go:64-65,305-352): results must equal the full-scan
@@ -18,7 +19,7 @@ class IndexSpec extends AnyFunSuite {
 
   private lazy val engine = EventsAdapter.engine(spark, dir)
   private lazy val indexDir: String = {
-    val d = TestDirs.tmp("graft-ftindex").toString
+    val d = Scratch.dir("ftindex").toString
     FullTextIndex.build(engine.events, d)
     d
   }
@@ -103,12 +104,12 @@ class IndexSpec extends AnyFunSuite {
   }
 
   test("index compaction merges per-batch postings with the signature gate; search parity kept") {
-    val idx = TestDirs.tmp("ftidx-cmp").toString
+    val idx = Scratch.dir("ftidx-cmp").toString
     val ev = engine.events
     // two ingest batches, like StreamingPipeline.ingest accumulates
     FullTextIndex.build(ev.filter(col("offset") % 2 === 0), s"$idx/batch=0")
     FullTextIndex.build(ev.filter(col("offset") % 2 === 1), s"$idx/batch=1")
-    val out = TestDirs.tmp("ftidx-cmp-out").toString
+    val out = Scratch.dir("ftidx-cmp-out").toString
     val res = graft.plans.CompactionJob.compactIndex(spark, idx, out, numPartitions = 2)
     assert(res.filesAfter < res.filesBefore,
       s"compaction must reduce postings files: ${res.filesBefore} -> ${res.filesAfter}")
@@ -126,10 +127,10 @@ class IndexSpec extends AnyFunSuite {
   test("streaming ingest maintains the index; indexed query over sinks == scan") {
     import graft.data.SequenceGen
     import graft.plans.LogPipeline
-    val in = TestDirs.tmp("ftidx-stream-in").toString
-    val out = TestDirs.tmp("ftidx-stream-out").toString
-    val ckpt = TestDirs.tmp("ftidx-stream-ckpt").toString
-    val idx = TestDirs.tmp("ftidx-stream-idx").toString
+    val in = Scratch.dir("ftidx-stream-in").toString
+    val out = Scratch.dir("ftidx-stream-out").toString
+    val ckpt = Scratch.dir("ftidx-stream-ckpt").toString
+    val idx = Scratch.dir("ftidx-stream-idx").toString
     SequenceGen.sequences(spark, 1000, 2).write.mode("overwrite").parquet(in)
     val q = graft.streaming.StreamingPipeline.ingest(
       spark, in, out, ckpt, SequenceGen.configs, indexDir = Some(idx))

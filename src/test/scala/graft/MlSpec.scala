@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ml.{Multimodal, Similarity, TextAnalysis, TextCleaning, TextDedup}
 import graft.sources.DocsAdapter
+import graft.util.Scratch
 
 /** Training-data operator tests: dedup family, similarity search, multimodal
   * plumbing. The sf0.001 testdata + deterministic augmentation gives known
@@ -93,31 +94,17 @@ class MlSpec extends AnyFunSuite {
 
   test("IVF quantizer is build-once: serving with prebuilt centroids launches no build jobs") {
     val emb = DocsAdapter.embeddings(spark, dir)
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val d = Option(j.properties).map(_.getProperty("spark.job.description")).orNull
-        if (d != null) descs.add(d): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // positive control: an inline (no-centroids) call DOES run build jobs —
-      // this validates the detection mechanism before asserting absence
-      Similarity.ivfTopK(emb, 3, 5, nCells = 8).collect()
-      val deadline = System.currentTimeMillis() + 10000
-      while (!descs.contains(Similarity.IVF_BUILD_TAG) &&
-        System.currentTimeMillis() < deadline) Thread.sleep(50)
-      assert(descs.contains(Similarity.IVF_BUILD_TAG),
-        "inline ivfTopK must run tagged centroid-build jobs")
-      // build once, serve from the artifact: NO build-tagged job may start
-      val cents = Similarity.ivfCentroids(emb, 8)
-      descs.clear()
-      Similarity.ivfTopK(emb, 3, 5, nCells = 8, centroids = Some(cents)).collect()
-      Thread.sleep(1500) // let the async listener bus drain
-      assert(!descs.contains(Similarity.IVF_BUILD_TAG),
-        s"serving from a prebuilt quantizer must not rebuild it: $descs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // positive control: an inline (no-centroids) call DOES run build jobs —
+    // this validates the detection mechanism before asserting absence
+    val (_, inline) = TestSpark.observe(Similarity.ivfTopK(emb, 3, 5, nCells = 8).collect())
+    assert(inline.jobDescriptions.contains(Similarity.IVF_BUILD_TAG),
+      "inline ivfTopK must run tagged centroid-build jobs")
+    // build once, serve from the artifact: NO build-tagged job may start
+    val cents = Similarity.ivfCentroids(emb, 8)
+    val (_, serve) = TestSpark.observe(
+      Similarity.ivfTopK(emb, 3, 5, nCells = 8, centroids = Some(cents)).collect())
+    assert(!serve.jobDescriptions.contains(Similarity.IVF_BUILD_TAG),
+      s"serving from a prebuilt quantizer must not rebuild it: ${serve.jobDescriptions}")
   }
 
   test("shipped IVF path round-trips the store: fresh process loads the artifact, zero build jobs") {
@@ -129,27 +116,17 @@ class MlSpec extends AnyFunSuite {
     // fresh-driver simulation: forget the in-process map; the next serve
     // must LOAD from the store and launch no build-tagged Spark jobs
     SparkEntry.clearIvfMemoryCache()
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val d = Option(j.properties).map(_.getProperty("spark.job.description")).orNull
-        if (d != null) descs.add(d): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val rows = SparkEntry.queries("q_ann_ivf")(spark, dir).collect()
-      assert(rows.nonEmpty)
-      Thread.sleep(1500) // let the async listener bus drain
-      assert(!descs.contains(Similarity.IVF_BUILD_TAG),
-        s"a fresh process must serve from the stored artifact, not rebuild: $descs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (rows, serve) = TestSpark.observe(SparkEntry.queries("q_ann_ivf")(spark, dir).collect())
+    assert(rows.nonEmpty)
+    val descs = serve.jobDescriptions
+    assert(!descs.contains(Similarity.IVF_BUILD_TAG),
+      s"a fresh process must serve from the stored artifact, not rebuild: $descs")
   }
 
   test("artifact store location is threadable: explicit dir round-trips across 'processes'") {
     // at 100 TB artifacts live NEXT TO THE DATA, not in /tmp — the base dir
     // must thread through (CLI --artifact-dir / env / setter)
-    val base = TestDirs.tmp("graft-artifacts").toString
+    val base = Scratch.dir("artifacts").toString
     val saved = SparkEntry.artifactBaseDirOverride
     try {
       SparkEntry.artifactBaseDirOverride = Some(base)
@@ -170,14 +147,14 @@ class MlSpec extends AnyFunSuite {
     } finally {
       SparkEntry.artifactBaseDirOverride = saved
       SparkEntry.clearIvfMemoryCache() // drop entries keyed under the temp base
-      graft.util.Dirs.deleteRecursively(new java.io.File(base))
+      Scratch.deleteRecursively(new java.io.File(base))
     }
   }
 
   test("IVF quantizer artifact round-trips and serves identical results") {
     val emb = DocsAdapter.embeddings(spark, dir)
     val cents = Similarity.ivfCentroids(emb, 8)
-    val ivfDir = TestDirs.tmp("graft-ivf")
+    val ivfDir = Scratch.dir("ivf")
     try {
       val path = ivfDir.resolve("centroids.txt").toString
       Similarity.saveCentroids(spark, path, cents)
@@ -189,7 +166,7 @@ class MlSpec extends AnyFunSuite {
         df.collect().sortBy(r => (r.getLong(0), r.getInt(1))).toSeq
       assert(sorted(Similarity.ivfTopK(emb, 3, 5, nCells = 8, centroids = Some(loaded))) ==
         sorted(Similarity.ivfTopK(emb, 3, 5, nCells = 8)))
-    } finally graft.util.Dirs.deleteRecursively(ivfDir.toFile)
+    } finally Scratch.deleteRecursively(ivfDir.toFile)
   }
 
   test("IVF cell assignment is a pure projection (no shuffle in the index build)") {
@@ -620,7 +597,7 @@ class MlSpec extends AnyFunSuite {
   test("PQ codebooks round-trip the store; fresh process serves from the artifact") {
     val emb = DocsAdapter.embeddings(spark, dir)
     val books = Similarity.pqCodebooks(emb, m = 8, kCodes = 16)
-    val path = TestDirs.tmp("graft-pq")
+    val path = Scratch.dir("pq")
       .resolve("books.txt").toString
     Similarity.savePqBooks(spark, path, books)
     val loaded = Similarity.loadPqBooks(spark, path)
@@ -686,22 +663,13 @@ class MlSpec extends AnyFunSuite {
     // must LOAD centroids + codebooks and launch no build-tagged jobs
     SparkEntry.clearIvfMemoryCache()
     SparkEntry.clearIvfPqMemoryCache()
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val d = Option(j.properties).map(_.getProperty("spark.job.description")).orNull
-        if (d != null) descs.add(d): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(SparkEntry.queries("q_ann_ivfpq")(spark, dir).collect().nonEmpty)
-      Thread.sleep(1500) // let the async listener bus drain
-      assert(!descs.contains(Similarity.IVF_BUILD_TAG),
-        s"artifact serve must not rebuild the coarse quantizer: $descs")
-      assert(!descs.contains(Similarity.PQ_BUILD_TAG),
-        s"artifact serve must not retrain the residual codebooks: $descs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (rows, serve) = TestSpark.observe(SparkEntry.queries("q_ann_ivfpq")(spark, dir).collect())
+    assert(rows.nonEmpty)
+    val descs = serve.jobDescriptions
+    assert(!descs.contains(Similarity.IVF_BUILD_TAG),
+      s"artifact serve must not rebuild the coarse quantizer: $descs")
+    assert(!descs.contains(Similarity.PQ_BUILD_TAG),
+      s"artifact serve must not retrain the residual codebooks: $descs")
   }
 
   test("URL canonicalization collapses case/www/port/slash/fragment/tracking variants") {
@@ -1056,7 +1024,7 @@ class MlSpec extends AnyFunSuite {
     val inc = Seq((10L, "alpha beta gamma"), (12L, "totally new words here"))
       .toDF("doc_id", "text")
     val bloom = TextDedup.buildHistoryBloom(hist, 16)
-    val path = TestDirs.tmp("graft-bloom")
+    val path = Scratch.dir("bloom")
       .resolve("hist.bloom").toString
     TextDedup.saveBloom(spark, path, bloom)
     val loaded = TextDedup.loadBloom(spark, path)

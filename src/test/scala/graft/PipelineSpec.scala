@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.data.{SequenceGen, Vocab}
 import graft.model.SourceConfig
 import graft.plans.{LogPipeline, RouteJob}
+import graft.util.Scratch
 
 /** End-to-end parse -> enrich -> route -> aggregate pipeline tests against an
   * independent single-threaded Scala oracle implementing the reference
@@ -20,7 +21,7 @@ class PipelineSpec extends AnyFunSuite {
   private val N = 3000L
 
   private lazy val inputDir: String = {
-    val dir = TestDirs.tmp("graft-seq").toString
+    val dir = Scratch.dir("seq").toString
     SequenceGen.sequences(spark, N, 6).write.mode("overwrite").parquet(dir)
     dir
   }
@@ -37,7 +38,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("route: per-sink counts match the oracle exactly") {
-    val out = TestDirs.tmp("graft-route").toString
+    val out = Scratch.dir("route").toString
     val job = new RouteJob(spark, out, batches = 4)
     val lineage = job.run(inputDir, SequenceGen.configs)
     assert(lineage.map(_.rows).sum == N)
@@ -51,7 +52,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("route: time-travel read at a lineage snapshot id") {
-    val out = TestDirs.tmp("graft-route-tt").toString
+    val out = Scratch.dir("route-tt").toString
     val job = new RouteJob(spark, out, batches = 4)
     val lineage = job.run(inputDir, SequenceGen.configs)
     // a reader pinned at snapshot 1 sees EXACTLY batches 0-1's manifested
@@ -70,7 +71,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("route: per-row token-array equality (the invariant)") {
-    val out = TestDirs.tmp("graft-route2").toString
+    val out = Scratch.dir("route2").toString
     val job = new RouteJob(spark, out, batches = 3)
     job.run(inputDir, SequenceGen.configs)
     val in = spark.read.parquet(inputDir).select("doc_id", "tokens")
@@ -138,7 +139,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("kill mid-run, resume completes without reprocessing (lineage)") {
-    val out = TestDirs.tmp("graft-resume").toString
+    val out = Scratch.dir("resume").toString
     val job = new RouteJob(spark, out, batches = 5)
     intercept[job.SimulatedKill] {
       job.run(inputDir, SequenceGen.configs, failAfter = 2)
@@ -160,7 +161,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("route output partitions by sink (pruned reads) and spreads skew") {
-    val out = TestDirs.tmp("graft-skew").toString
+    val out = Scratch.dir("skew").toString
     val job = new RouteJob(spark, out, batches = 2, saltBuckets = 8)
     job.run(inputDir, SequenceGen.configs)
     // pruned read: only the hot sink's directory is touched
@@ -182,22 +183,12 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("streaming ingest: same sink counts; restart processes only new files") {
-    val streamIn = TestDirs.tmp("graft-stream-in").toString
-    val streamOut = TestDirs.tmp("graft-stream-out").toString
-    val ckpt = TestDirs.tmp("graft-ckpt").toString
+    val streamIn = Scratch.dir("stream-in").toString
+    val streamOut = Scratch.dir("stream-out").toString
+    val ckpt = Scratch.dir("ckpt").toString
     SequenceGen.sequences(spark, 1000, 2).write.mode("overwrite").parquet(streamIn)
 
-    // Spark jobs per micro-batch, keyed by (query id, batch id)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, String), Integer]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties)
-          .flatMap(p => Option(p.getProperty("sql.streaming.queryId"))
-            .map(_ -> p.getProperty("streaming.sql.batchId")))
-          .foreach(k => jobs.merge(k, 1, (a: Integer, b: Integer) => Integer.valueOf(a + b)))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (q1, q2) = try {
+    val ((q1, q2), events) = TestSpark.observe {
       val q1 = graft.streaming.StreamingPipeline.ingest(
         spark, streamIn, streamOut, ckpt, SequenceGen.configs)
       q1.awaitTermination()
@@ -213,10 +204,12 @@ class PipelineSpec extends AnyFunSuite {
       val c2 = spark.read.parquet(streamOut).count()
       assert(c2 == 1500L, "restart must process only the new file (no dupes)")
       (q1, q2)
-    } finally {
-      try org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark.sparkContext, 10000L)
-      finally spark.sparkContext.removeSparkListener(listener)
     }
+    // Spark jobs per micro-batch, keyed by (query id, batch id)
+    val jobs = events.jobs.flatMap(e => Option(e.properties))
+      .flatMap(p => Option(p.getProperty("sql.streaming.queryId"))
+        .map(_ -> p.getProperty("streaming.sql.batchId")))
+      .groupMapReduce(identity)(_ => 1)(_ + _)
 
     Seq(q1 -> 1000L, q2 -> 500L).foreach { case (q, landed) =>
       val data = q.recentProgress.filter(_.numInputRows > 0)
@@ -227,16 +220,16 @@ class PipelineSpec extends AnyFunSuite {
       // its shuffle map stage and its write (AQE); a per-batch side plan
       // (e.g. resolving sources through a join) would add jobs here
       data.foreach { p =>
-        val n = jobs.getOrDefault((q.id.toString, p.batchId.toString), 0)
+        val n = jobs.getOrElse((q.id.toString, p.batchId.toString), 0)
         assert(n == 2, s"batch ${p.batchId} ran $n Spark jobs, expected 2: $jobs")
       }
     }
   }
 
   test("streaming ingest dedup drops re-shipped rows across batches via checkpointed state") {
-    val in = TestDirs.tmp("graft-sdedup-in").toString
-    val out = TestDirs.tmp("graft-sdedup-out").toString
-    val ckpt = TestDirs.tmp("graft-sdedup-ckpt").toString
+    val in = Scratch.dir("sdedup-in").toString
+    val out = Scratch.dir("sdedup-out").toString
+    val ckpt = Scratch.dir("sdedup-ckpt").toString
     SequenceGen.sequences(spark, 1000, 2).write.mode("overwrite").parquet(in)
     graft.streaming.StreamingPipeline.ingestDedup(
       spark, in, out, ckpt, SequenceGen.configs, horizon = "2 days")
@@ -274,9 +267,9 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("watermark loss window: beyond-horizon NEW events drop in-stream, reconcileLate repairs them exactly once") {
-    val in = TestDirs.tmp("graft-late-in").toString
-    val out = TestDirs.tmp("graft-late-out").toString
-    val ckpt = TestDirs.tmp("graft-late-ckpt").toString
+    val in = Scratch.dir("late-in").toString
+    val out = Scratch.dir("late-out").toString
+    val ckpt = Scratch.dir("late-ckpt").toString
     // batch 1: rows 0..999 span ~20.6 min of event time; horizon 5 min
     // leaves the watermark ~15.6 min into the range
     SequenceGen.sequences(spark, 1000, 2).write.mode("overwrite").parquet(in)
@@ -319,7 +312,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("streaming route replay is idempotent (same batch id overwrites)") {
-    val out = TestDirs.tmp("graft-replay").toString
+    val out = Scratch.dir("replay").toString
     val enriched = LogPipeline.run(spark,
       SequenceGen.sequences(spark, 500, 2), SequenceGen.configs)
     LogPipeline.routeWrite(enriched, s"$out/batch=7", 4)
@@ -329,10 +322,10 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("compaction: fewer files, identical per-sink row sets (signature-gated)") {
-    val streamIn = TestDirs.tmp("graft-cmp-in").toString
-    val routed = TestDirs.tmp("graft-cmp-routed").toString
-    val ckpt = TestDirs.tmp("graft-cmp-ckpt").toString
-    val compacted = TestDirs.tmp("graft-cmp-out").toString
+    val streamIn = Scratch.dir("cmp-in").toString
+    val routed = Scratch.dir("cmp-routed").toString
+    val ckpt = Scratch.dir("cmp-ckpt").toString
+    val compacted = Scratch.dir("cmp-out").toString
     // two streaming batches -> many small per-batch files
     SequenceGen.sequences(spark, 1000, 2).write.mode("overwrite").parquet(streamIn)
     graft.streaming.StreamingPipeline.ingest(
@@ -353,9 +346,9 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("histogram file-sink serving: batch parity across restarts, state evicts past the watermark") {
-    val streamIn = TestDirs.tmp("graft-hsink-in").toString
-    val sink = TestDirs.tmp("graft-hsink-out").toString
-    val ckpt = TestDirs.tmp("graft-hsink-ckpt").toString
+    val streamIn = Scratch.dir("hsink-in").toString
+    val sink = Scratch.dir("hsink-out").toString
+    val ckpt = Scratch.dir("hsink-ckpt").toString
     // the generator's json layout runs its own clock at 13 s/id (vs
     // 1.23 s/id for kv/access), which would put the watermark hours past
     // anything a later slice can reach — keep the corpus on ONE clock so
@@ -446,12 +439,13 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("streaming histogram with watermark matches batch histogram") {
-    val streamIn = TestDirs.tmp("graft-hist-in").toString
+    val streamIn = Scratch.dir("hist-in").toString
+    val sink = Scratch.dir("hist-out").toString
+    val ckpt = Scratch.dir("hist-ckpt").toString
     SequenceGen.sequences(spark, 800, 2).write.mode("overwrite").parquet(streamIn)
-    val q = graft.streaming.StreamingPipeline.histogram(
-      spark, streamIn, SequenceGen.configs, "hist_test")
-    q.awaitTermination()
-    val streamed = spark.table("hist_test")
+    graft.streaming.StreamingPipeline.histogramToSink(
+      spark, streamIn, sink, ckpt, SequenceGen.configs).awaitTermination()
+    val streamed = graft.streaming.StreamingPipeline.servedHistogram(spark, sink)
     val batch = LogPipeline.histogram(
       LogPipeline.run(spark, spark.read.parquet(streamIn), SequenceGen.configs))
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
@@ -490,7 +484,7 @@ class PipelineSpec extends AnyFunSuite {
     def t(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
     // two files an hour apart -> two micro-batches: the second batch's
     // watermark (delay 0 = max seen ts) closes every epoch-A session
-    val dir = TestDirs.tmp("graft-sess-in")
+    val dir = Scratch.dir("sess-in")
     val epochA = Seq(
       (1L, t("2024-01-01T00:00:00Z")), (1L, t("2024-01-01T00:00:08Z")),
       (1L, t("2024-01-01T00:01:00Z")), (2L, t("2024-01-01T00:00:30Z")))
@@ -503,7 +497,7 @@ class PipelineSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(dir.toString)
       .withWatermark("ts", "0 seconds")
-    val ckpt = TestDirs.tmp("graft-sess-ckpt")
+    val ckpt = Scratch.dir("sess-ckpt")
     val q = graft.plans.Sessionize.sessions(stream, 10)
       .writeStream.outputMode("append").format("memory")
       .queryName("sess_stream_test")
@@ -541,9 +535,9 @@ class PipelineSpec extends AnyFunSuite {
       rows.toDF("event_id", "ts", "user_id", "event_type")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
           lit(0.0).as("value"), lit("{}").as("props"))
-    val in = TestDirs.tmp("graft-trans-in").toString
-    val sink = TestDirs.tmp("graft-trans-sink").toString
-    val ckpt = TestDirs.tmp("graft-trans-ckpt").toString
+    val in = Scratch.dir("trans-in").toString
+    val sink = Scratch.dir("trans-sink").toString
+    val ckpt = Scratch.dir("trans-ckpt").toString
     df(a).write.mode("append").parquet(in)
     graft.streaming.StreamingPipeline.transitionsToSink(spark, in, sink, ckpt)
       .awaitTermination()
@@ -565,9 +559,9 @@ class PipelineSpec extends AnyFunSuite {
 
   test("streaming template mining: drift alerts fall out of diffing serve points") {
     import spark.implicits._
-    val in = TestDirs.tmp("graft-tpl-in").toString
-    val sink = TestDirs.tmp("graft-tpl-sink").toString
-    val ckpt = TestDirs.tmp("graft-tpl-ckpt").toString
+    val in = Scratch.dir("tpl-in").toString
+    val sink = Scratch.dir("tpl-sink").toString
+    val ckpt = Scratch.dir("tpl-ckpt").toString
     def lines(rows: Seq[(String, String)]) = rows.toDF("source", "raw")
     // epoch A: one stable template (user varies -> wildcard at pos 2)
     lines(Seq(("app", "request user 1 done"), ("app", "request user 2 done")))

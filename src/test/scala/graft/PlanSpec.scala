@@ -10,6 +10,7 @@ import graft.compile.QueryEngine
 import graft.data.SequenceGen
 import graft.plans.{LogPipeline, RouteJob}
 import graft.sources.EventsAdapter
+import graft.util.Scratch
 
 /** Physical-plan invariants — the scale properties the 100 TB deployment
   * depends on. These assert the *plan*, not the result: a regression that
@@ -74,9 +75,9 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("routed-sink query prunes sink partitions") {
-    val in = TestDirs.tmp("graft-plan-in").toString
+    val in = Scratch.dir("plan-in").toString
     SequenceGen.sequences(spark, 800, 2).write.mode("overwrite").parquet(in)
-    val out = TestDirs.tmp("graft-plan-out").toString
+    val out = Scratch.dir("plan-out").toString
     new RouteJob(spark, out, batches = 2).run(in, SequenceGen.configs)
     val sinks = LogPipeline.openSinks(spark, out)
     val plan = sinks.filter(col("sink") === "log-0_txt")
@@ -176,19 +177,9 @@ class PlanSpec extends AnyFunSuite {
     // source read first: parquet schema inference runs its own listing job,
     // which is scan setup, not a funnel-stage action
     val docs = graft.sources.DocsAdapter.funnelDocs(spark, dir)
-    val jobsStarted = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobsStarted.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val funnel = try {
-      val df = graft.ml.Funnel.curationFunnel(docs)
-      Thread.sleep(1000) // async listener bus
-      assert(jobsStarted.get() == 0,
-        s"building the funnel plan must not run jobs, saw ${jobsStarted.get()}")
-      df
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (funnel, planEvents) = TestSpark.observe(graft.ml.Funnel.curationFunnel(docs))
+    assert(planEvents.jobs.isEmpty,
+      s"building the funnel plan must not run jobs, saw ${planEvents.jobs.size}")
     val stages = funnel.collect().map(r =>
       r.getAs[String]("stage") -> r.getAs[Long]("n_docs")).toMap
     assert(stages.keySet == Set("0_input", "1_url_dedup", "2_quality",
@@ -221,7 +212,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("route write projection prunes the fields map (ts comes from time-only extraction)") {
-    val in = TestDirs.tmp("plan-route-in").toString
+    val in = Scratch.dir("plan-route-in").toString
     SequenceGen.sequences(spark, 100, 2).write.mode("overwrite").parquet(in)
     val enriched = LogPipeline.run(spark, spark.read.parquet(in), SequenceGen.configs)
     val persisted = enriched.select(col("doc_id"), col("tokens"), col("n_tok"),
@@ -242,7 +233,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("bucketed store: groupBy and self-join on the bucket key plan with ZERO exchanges") {
     val events = spark.read.parquet(s"$dir/events.parquet")
-    val d = TestDirs.tmp("graft-bucket-plan").toString
+    val d = Scratch.dir("bucket-plan").toString
     graft.plans.BucketedStore.writeBucketed(events, "events_bucketed_plan",
       s"$d/tbl", buckets = 4)
     // the repeated-analytics query: agg on the bucket key — the bucketed
@@ -272,7 +263,7 @@ class PlanSpec extends AnyFunSuite {
     assert(!jPlan.contains("Exchange hashpartitioning"),
       s"co-located self-join must not hash-shuffle either side:\n$jPlan")
     spark.sql("DROP TABLE IF EXISTS events_bucketed_plan")
-    graft.util.Dirs.deleteRecursively(new java.io.File(d))
+    Scratch.deleteRecursively(new java.io.File(d))
   }
 
   test("as-of enrich: latest-at-or-before semantics, one keyed exchange, no range join") {
@@ -544,6 +535,48 @@ class PlanSpec extends AnyFunSuite {
     assert(nExchanges <= 2, s"expected <=2 exchanges, got $nExchanges:\n$plan")
     assert(plan.contains("TakeOrderedAndProject"), s"k-cut must be TakeOrdered:\n$plan")
     assert(!plan.contains("rangepartitioning"), s"no global sort:\n$plan")
+  }
+
+  test("transitions + session paths: closed-form counts, tied k-cut order, ~n shuffle records") {
+    // user u = id div eper, i = id mod eper; types cycle t0→…→t4 per user
+    // (type t<(u+i) mod 5>), 5-event bursts 60 s apart, bursts 3600 s apart
+    val (users, eper) = (50L, 100L)
+    val n = users * eper
+    val events = spark.range(n).select(
+      col("id").as("event_id"),
+      expr(s"id div $eper").as("user_id"),
+      expr(s"timestampadd(SECOND, ((id % $eper) div 5) * 3600 + (id % 5) * 60, " +
+        "TIMESTAMP_NTZ '2024-01-01 00:00:00')").as("ts"),
+      concat(lit("t"), pmod(expr(s"id div $eper") + pmod(col("id"), lit(5L)),
+        lit(5L))).as("event_type"))
+    // each from-type has ONE successor, so every p is exactly 1.0; summed
+    // over the uniform user residues each cyclic pair occurs (eper-1)·users/5
+    val (tr, trEvents) = TestSpark.observe(
+      graft.plans.EventAnalytics.transitions(events).collect())
+    assert(tr.length == 5, s"${tr.length} transition rows != 5")
+    tr.foreach { r =>
+      val from = r.getString(0).stripPrefix("t").toInt
+      assert(r.getString(1) == s"t${(from + 1) % 5}", s"non-cyclic pair: $r")
+      assert(r.getLong(2) == (eper - 1) * users / 5, s"count off: $r")
+      assert(r.getDouble(3) == 1.0, s"p != 1.0: $r")
+    }
+    // one user-keyed exchange (n records) + type cells; the lower bound
+    // proves the listener saw the exchange at all
+    assert(trEvents.shuffleRecordsWritten >= n &&
+      trEvents.shuffleRecordsWritten <= n + n / 10,
+      s"transitions shuffled ${trEvents.shuffleRecordsWritten} records (bound ${n + n / 10})")
+    // the 3360 s inter-burst gap splits every burst into its own session:
+    // 3 trigrams per burst, and all five cyclic paths TIE at
+    // 3/5 · users · eper/5, pinning the (n DESC, path ASC) k-cut order
+    val (paths, spEvents) = TestSpark.observe(
+      graft.plans.EventAnalytics.sessionPaths(events, gapSeconds = 1800).collect())
+    val wantPer = 3L * users / 5 * (eper / 5)
+    val wantOrder = (0 until 5).map(k => s"t$k>t${(k + 1) % 5}>t${(k + 2) % 5}").sorted
+    assert(paths.map(r => r.getString(0) -> r.getLong(1)).toSeq ==
+      wantOrder.map(_ -> wantPer), s"paths: ${paths.toSeq}")
+    assert(spEvents.shuffleRecordsWritten >= n &&
+      spEvents.shuffleRecordsWritten <= n + n / 10,
+      s"sessionPaths shuffled ${spEvents.shuffleRecordsWritten} records (bound ${n + n / 10})")
   }
 
   test("step funnel: strict ordering, ties excluded, out-of-order steps don't count") {

@@ -119,20 +119,12 @@ class StepsSpec extends AnyFunSuite {
   }
 
   test("surrounding compiles lazily: no Spark job runs at plan time") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = counter.incrementAndGet()
-    }
     val e = engine(frame(
       ("1", "my-log.txt", "my-host", SID, T0, 0L, "a"),
       ("2", "my-log.txt", "my-host", SID, T0, 1L, "b")))
-    spark.sparkContext.addSparkListener(l)
-    try {
-      e.run("| surrounding count=2 eventId=1") // build only, no action
-      Thread.sleep(1000) // listener bus is async
-      assert(counter.get() == 0, "building a surrounding plan must not trigger a job")
-    } finally spark.sparkContext.removeSparkListener(l)
+    // build only, no action
+    val (_, planEvents) = TestSpark.observe(e.run("| surrounding count=2 eventId=1"))
+    assert(planEvents.jobs.isEmpty, "building a surrounding plan must not trigger a job")
   }
 
   test("table: empty fields is a compile error (TablePipelineStep_test.go:19-24)") {

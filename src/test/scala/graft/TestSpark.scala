@@ -1,6 +1,13 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted, StageInfo}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** One shared local session for the whole forked test JVM. */
 object TestSpark {
@@ -15,23 +22,45 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
-}
 
-/** Test scratch dirs that do not outlive the test JVM: every suite's
-  * temp dirs hang off ONE per-process root that a shutdown hook deletes.
-  * Before this, each `sbt test` run left ~50 MB of graft-* dirs in /tmp
-  * forever (the bench's sweeper only knows the handful of pid-tagged
-  * production prefixes) — repeated CI/driver cycles grew /tmp without
-  * bound. Same drop-in shape as `Files.createTempDirectory(prefix)`.
-  */
-object TestDirs {
-  private lazy val root: java.nio.file.Path = {
-    val r = java.nio.file.Files.createTempDirectory(
-      s"graft-test-${ProcessHandle.current().pid()}-")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      graft.util.Dirs.deleteRecursively(r.toFile)))
-    r
+  /** Scheduler events one [[observe]]d body caused. */
+  final class SparkEvents {
+    private[TestSpark] val jobStarts = new ConcurrentLinkedQueue[SparkListenerJobStart]
+    private[TestSpark] val submitted = new ConcurrentLinkedQueue[StageInfo]
+    private[TestSpark] val completed = new ConcurrentLinkedQueue[StageInfo]
+
+    def jobs: Seq[SparkListenerJobStart] = jobStarts.asScala.toSeq
+    /** `spark.job.description` of every job that carried one. */
+    def jobDescriptions: Seq[String] =
+      jobs.flatMap(j => Option(j.properties).flatMap(p =>
+        Option(p.getProperty("spark.job.description"))))
+    /** Task count of every submitted stage, in submission order. */
+    def stageTasks: Seq[Int] = submitted.asScala.toSeq.map(_.numTasks)
+    def shuffleRecordsWritten: Long = completed.asScala.toSeq
+      .flatMap(s => Option(s.taskMetrics))
+      .map(_.shuffleWriteMetrics.recordsWritten).sum
   }
-  def tmp(prefix: String): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory(root, prefix)
+
+  /** Runs `body` under a job/stage listener. The listener bus is async, so
+    * before the listener comes off it is drained with
+    * `LiveListenerBus.waitUntilEmpty`: every event the body posted has then
+    * been delivered, with no fixed sleep.
+    */
+  def observe[A](body: => A): (A, SparkEvents) = {
+    val ev = new SparkEvents
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        ev.jobStarts.add(j): Unit
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        ev.submitted.add(s.stageInfo): Unit
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        ev.completed.add(s.stageInfo): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    val a = try body finally {
+      try Bridge.waitListenerBusEmpty(spark.sparkContext, 10000L)
+      finally spark.sparkContext.removeSparkListener(l)
+    }
+    (a, ev)
+  }
 }
