@@ -428,18 +428,7 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     } else {
-      val touched = (0 until starts.length - 1)
-        .filter(i => starts(i) < hi && starts(i + 1) > lo).toArray
-      val touchedSet = touched.toSet
-      val pruned = org.apache.spark.rdd.PartitionPruningRDD.create(
-        job.results.rdd, touchedSet.contains)
-      val rows = pruned.mapPartitionsWithIndex { (pi, it) =>
-        val orig = touched(pi)
-        val base = starts(orig)
-        it.slice((math.max(base, lo) - base).toInt,
-          (math.min(starts(orig + 1), hi) - base).toInt)
-      }
-      spark.createDataFrame(rows, schema)
+      spark.createDataFrame(JobsApi.slicePage(job.results.rdd, starts, lo, hi), schema)
     }
   }
 
@@ -462,18 +451,7 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
         case Some(all) => // small result: in-memory slice, no Spark job
           java.util.Arrays.copyOfRange(all, lo.toInt,
             math.min(starts.last, hi).toInt)
-        case None =>
-          val touched = (0 until starts.length - 1)
-            .filter(i => starts(i) < hi && starts(i + 1) > lo).toArray
-          val touchedSet = touched.toSet
-          val pruned = org.apache.spark.rdd.PartitionPruningRDD.create(
-            job.wireJsonRdd, touchedSet.contains)
-          pruned.mapPartitionsWithIndex { (pi, it) =>
-            val orig = touched(pi)
-            val base = starts(orig)
-            it.slice((math.max(base, lo) - base).toInt,
-              (math.min(starts(orig + 1), hi) - base).toInt)
-          }.collect()
+        case None => JobsApi.slicePage(job.wireJsonRdd, starts, lo, hi).collect()
       }
     }
   }
@@ -633,6 +611,24 @@ object JobsApi {
     * order as one collected page burst under the old per-page path.
     */
   private[api] val LocalPageCacheMaxRows = 100000L
+
+  /** Rows [lo, hi) of a job's cached results, by its partition-offset index
+    * `starts`: only the partitions overlapping the range are read, and rows
+    * are sliced positionally inside them.
+    */
+  private def slicePage[T: scala.reflect.ClassTag](rdd: org.apache.spark.rdd.RDD[T],
+      starts: Array[Long], lo: Long, hi: Long): org.apache.spark.rdd.RDD[T] = {
+    val touched = (0 until starts.length - 1)
+      .filter(i => starts(i) < hi && starts(i + 1) > lo).toArray
+    val touchedSet = touched.toSet
+    org.apache.spark.rdd.PartitionPruningRDD.create(rdd, touchedSet.contains)
+      .mapPartitionsWithIndex { (pi, it) =>
+        val orig = touched(pi)
+        val base = starts(orig)
+        it.slice((math.max(base, lo) - base).toInt,
+          (math.min(starts(orig + 1), hi) - base).toInt)
+      }
+  }
 
   /** Row timestamp normalization: Spark's java8 datetime API yields
     * LocalDateTime (TIMESTAMP_NTZ rows) but legacy configs yield

@@ -39,27 +39,19 @@ class QueryEngine(val events: DataFrame, val configs: Seq[SourceConfig]) {
 
   // ---------------------------------------------------------------- parse
 
-  /** Search-time field extraction for one event, resolved per source via the
-    * config dimension (reference J2: plugins/steps/Utils.go:24-49). First
-    * matching glob wins; extraction runs on lowercased raw
-    * (plugins/steps/Fragments.go:95) and injects reserved host/source
-    * (Fragments.go:97-98).
-    */
-  def fieldsColumn(raw: Column, host: Column, source: Column): Column =
-    F.extract_event(raw, host, source, configs)
-
   /** Events frame with the `fields` map materialized as an expression
     * (schema-on-read: nothing stored, recomputed per query like the
-    * reference re-extracts per search). Frames carrying the tokens payload
-    * (routed sinks re-opened via LogPipeline.openSinks) take the decode-to-
-    * lowercase fast path instead of re-lowering the rendered string.
+    * reference re-extracts per search). Each event's source resolves to its
+    * config rule (reference J2: plugins/steps/Utils.go:24-49); extraction
+    * runs on lowercased raw (plugins/steps/Fragments.go:95) and injects
+    * reserved host/source (Fragments.go:97-98). Frames carrying the tokens
+    * payload (routed sinks re-opened via LogPipeline.openSinks) take the
+    * decode-to-lowercase fast path instead of re-lowering the rendered
+    * string.
     */
   def withFields(base: DataFrame): DataFrame = {
-    val fields =
-      if (base.columns.contains("tokens"))
-        F.extract_event_tokens(col("tokens"), col("host"), col("source"), configs)
-      else fieldsColumn(col("raw"), col("host"), col("source"))
-    base.withColumn("fields", fields)
+    val raw = if (base.columns.contains("tokens")) col("tokens") else col("raw")
+    base.withColumn("fields", F.extract_event(raw, col("host"), col("source"), configs))
   }
 
   // ---------------------------------------------------------------- search
@@ -75,13 +67,12 @@ class QueryEngine(val events: DataFrame, val configs: Seq[SourceConfig]) {
     * could populate fields another way (json, access, custom separators).
     */
   private lazy val kvPrefilterExcluded: Option[Set[String]] = {
-    val all = configs.map(c => (c.file_type, c.extractors)) :+
-      (("kv", graft.model.SourceConfig.defaultExtractors))
-    val exs = all.flatMap(_._2).map(new graft.functions.CompiledExtractor(_))
+    val rules = graft.functions.SourceRules(configs).rules // configs + fallback
+    val exs = rules.flatMap(_.extractors)
     // host/source are injected reserved fields; "_time" is injected too when
-    // the configured time_field differs (ExtractEvent.finish copies it), so
+    // the configured time_field differs (FieldsBuffer.finish copies it), so
     // a `_time=...` predicate must never gain a raw-substring conjunct
-    if (all.forall(_._1 == "kv") && exs.forall(e => e.isDefaultKv || e.namedOnly))
+    if (rules.forall(_.config.file_type == "kv") && exs.forall(e => e.isDefaultKv || e.namedOnly))
       Some(exs.flatMap(_.groupNames).toSet ++ Set("host", "source", "_time"))
     else None
   }

@@ -40,14 +40,12 @@ object F {
   def json_extract_map(raw: Column, timeField: String): Column =
     toCol(JsonToFieldsMap(toExpr(raw), nullStr, nullStr, timeField, inject = false))
 
-  /** Whole parse-stage extraction with per-source config dispatch (memoized
-    * glob resolution inside one compact expression — see ExtractEvent).
+  /** Whole parse-stage extraction with per-source config dispatch (see
+    * ExtractEvent and SourceRules).
     */
   def extract_event(raw: Column, host: Column, source: Column,
       configs: Seq[graft.model.SourceConfig]): Column =
-    toCol(ExtractEvent(toExpr(raw), toExpr(host), toExpr(source),
-      configs.map(c => (globToRegex(c.source_glob), c.file_type, c.extractors, c.time_field)),
-      graft.model.SourceConfig.defaultExtractors, "_time"))
+    toCol(ExtractEvent(toExpr(raw), toExpr(host), toExpr(source), SourceRules(configs)))
 
   /** [[extract_event]] straight from the tokens payload: decodes (lowercased)
     * into a reused buffer — two fewer string copies per row on the parse hot
@@ -55,35 +53,25 @@ object F {
     */
   def extract_event_tokens(tokens: Column, host: Column, source: Column,
       configs: Seq[graft.model.SourceConfig]): Column =
-    toCol(ExtractEvent(toExpr(tokens), toExpr(host), toExpr(source),
-      configs.map(c => (globToRegex(c.source_glob), c.file_type, c.extractors, c.time_field)),
-      graft.model.SourceConfig.defaultExtractors, "_time", rawIsTokens = true))
+    extract_event(tokens, host, source, configs)
 
   /** Time-field-only extraction from tokens (see ExtractTimeValue): yields
     * the same string `fields["_time"]` would, without building the map.
     */
   def extract_time_tokens(tokens: Column, source: Column,
       configs: Seq[graft.model.SourceConfig]): Column =
-    toCol(ExtractTimeValue(toExpr(tokens), toExpr(source),
-      configs.map(c => (globToRegex(c.source_glob), c.file_type, c.extractors, c.time_field)),
-      graft.model.SourceConfig.defaultExtractors, "_time"))
+    toCol(ExtractTimeValue(toExpr(tokens), toExpr(source), SourceRules(configs)))
 
   /** Per-source enrich struct `(host, host_type, file_type, sink)`, memoized
     * per distinct source (see ResolveSource).
     */
   def resolve_source(source: Column, configs: Seq[graft.model.SourceConfig]): Column =
-    toCol(ResolveSource(toExpr(source),
-      configs.map(c => (globToRegex(c.source_glob), c.host, c.host_type, c.file_type))))
+    toCol(ResolveSource(toExpr(source), SourceRules(configs)))
 
   /** Per-source event-time parse (see EventTime). */
   def event_time(timeStr: Column, source: Column,
-      configs: Seq[graft.model.SourceConfig]): Column = {
-    val defaultGo = graft.model.SourceConfig.defaultTimeLayout
-    toCol(EventTime(toExpr(timeStr), toExpr(source),
-      configs.map(c => (globToRegex(c.source_glob), c.time_layout)),
-      configs.map(c => goLayoutToJava(c.time_layout)),
-      (defaultGo, goLayoutToJava(defaultGo))))
-  }
+      configs: Seq[graft.model.SourceConfig]): Column =
+    toCol(EventTime(toExpr(timeStr), toExpr(source), SourceRules(configs)))
 
   /** Compile a search fragment to the reference's regex form
     * (plugins/steps/Fragments.go:74-89): case-insensitive, `*` -> `.*`,
@@ -98,20 +86,10 @@ object F {
   /** Predicate: does `c` contain fragment `frag` under reference semantics. */
   def fragMatches(c: Column, frag: String): Column = c.rlike(compileFrag(frag))
 
-  /** filepath.Match-style glob (reference plugins/steps/Utils.go:41) as a SQL
-    * predicate. `*` does not cross `/`; `?` matches one non-/ char.
-    */
-  def globToRegex(glob: String): String = {
-    val sb = new StringBuilder("^")
-    glob.foreach {
-      case '*' => sb.append("[^/]*")
-      case '?' => sb.append("[^/]")
-      case c if "\\.[]{}()+-^$|".contains(c) => sb.append('\\').append(c)
-      case c => sb.append(c)
-    }
-    sb.append("$").toString
-  }
+  /** filepath.Match-style glob as an anchored regex (see SourceRules). */
+  def globToRegex(glob: String): String = SourceRules.globToRegex(glob)
 
+  /** [[globToRegex]] as a SQL predicate. */
   def globMatches(c: Column, glob: String): Column = c.rlike(globToRegex(glob))
 
   /** Reference ParseTime (pkg/logsuck/parser/ParseTime.go:24-54): Go layout

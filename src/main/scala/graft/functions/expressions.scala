@@ -14,50 +14,58 @@ import graft.data.Vocab
   * is directly callable from codegen'd Java.
   */
 object ExprRuntime {
-  def decode(arr: ArrayData): UTF8String = {
+  /** Render tokens through a vocab table ([[Vocab.table]], or
+    * [[Vocab.tableLower]] for the lowercased text extraction consumes) into
+    * `sb`, cleared first. The parse hot path passes a reused ThreadLocal
+    * builder instead of allocating a String per row.
+    */
+  def decodeInto(arr: ArrayData, table: Array[String],
+      sb: java.lang.StringBuilder): java.lang.StringBuilder = {
+    sb.setLength(0)
     val n = arr.numElements()
-    val sb = new java.lang.StringBuilder(n * 2)
     var i = 0
     while (i < n) {
       val t = arr.getInt(i)
-      if (t >= 0 && t < Vocab.size) sb.append(Vocab.table(t)) else sb.append('�')
+      if (t >= 0 && t < table.length) sb.append(table(t)) else sb.append('�')
       i += 1
     }
-    UTF8String.fromString(sb.toString)
+    sb
   }
+
+  def decode(arr: ArrayData): UTF8String = UTF8String.fromString(
+    decodeInto(arr, Vocab.table, new java.lang.StringBuilder(arr.numElements() * 2)).toString)
 
   def encode(s: UTF8String): ArrayData = {
     val ints = Vocab.encode(s.toString)
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(ints)
   }
 
-  /** Decode into a caller-owned (reused) builder — the parse hot path renders
-    * each row into a ThreadLocal buffer instead of allocating a String.
-    */
-  def decodeInto(arr: ArrayData, sb: java.lang.StringBuilder): java.lang.StringBuilder = {
-    sb.setLength(0)
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      val t = arr.getInt(i)
-      if (t >= 0 && t < Vocab.size) sb.append(Vocab.table(t)) else sb.append('�')
-      i += 1
-    }
-    sb
-  }
+  // per-thread scratch of the extraction expressions: each call clears and
+  // fully consumes them before returning, so expressions may share them
+  val localFields: ThreadLocal[FieldsBuffer] =
+    ThreadLocal.withInitial[FieldsBuffer](() => new FieldsBuffer)
+  val localText: ThreadLocal[java.lang.StringBuilder] =
+    ThreadLocal.withInitial[java.lang.StringBuilder](() => new java.lang.StringBuilder(256))
 
-  /** [[decodeInto]] straight to lowercase (what extraction consumes). */
-  def decodeLowerInto(arr: ArrayData, sb: java.lang.StringBuilder): java.lang.StringBuilder = {
-    sb.setLength(0)
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      val t = arr.getInt(i)
-      if (t >= 0 && t < Vocab.size) sb.append(Vocab.tableLower(t)) else sb.append('�')
-      i += 1
-    }
-    sb
-  }
+  val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Put every top-level value of the JSON object `text` into `m`
+    * (stringified by [[jsonValueToString]]); false when `text` is not a
+    * JSON object.
+    */
+  def jsonObjectInto(text: String, m: FieldsBuffer): Boolean =
+    try {
+      val node = jsonMapper.readTree(text)
+      if (node == null || !node.isObject) false
+      else {
+        val it = node.fields()
+        while (it.hasNext) {
+          val e = it.next()
+          m.put(e.getKey, jsonValueToString(e.getValue))
+        }
+        true
+      }
+    } catch { case _: Exception => false }
 
   /** JSON value stringification shared by the fields-map and time-only
     * extraction paths (Go parity: numbers as %f, null as "<nil>").
@@ -85,6 +93,10 @@ object ExprRuntime {
       UTF8String.fromBytes(b)
     } else UTF8String.fromString(s.subSequence(from, to).toString)
   }
+
+  /** A configured time field as a map key; null (no `_time` alias) when unset. */
+  def keyOrNull(k: String): UTF8String =
+    if (k == null || k.isEmpty) null else UTF8String.fromString(k)
 
   val TIME_KEY: UTF8String = UTF8String.fromString("_time")
   val HOST_KEY: UTF8String = UTF8String.fromString("host")
@@ -153,6 +165,20 @@ final class FieldsBuffer {
     var i = 0
     while (i < n) { kk(i) = ks(i); vv(i) = vs(i); i += 1 }
     new ArrayBasedMapData(new GenericArrayData(kk), new GenericArrayData(vv))
+  }
+
+  /** Close an event's fields: alias `timeField` to `_time`
+    * (RegexFileParser.go:57-59), then inject the reserved host/source
+    * (Fragments.go:97-98), and build the map. A null argument skips its step.
+    */
+  def finish(timeField: UTF8String, host: UTF8String, source: UTF8String): MapData = {
+    if (timeField != null) {
+      val tv = get(timeField)
+      if (tv != null) put(ExprRuntime.TIME_KEY, tv)
+    }
+    if (host != null) put(ExprRuntime.HOST_KEY, host.clone())
+    if (source != null) put(ExprRuntime.SOURCE_KEY, source.clone())
+    build()
   }
 }
 
@@ -343,13 +369,60 @@ final class CompiledExtractor(val original: String) extends Serializable {
   }
 }
 
+/** The (raw, host, source) -> `fields` map shape of the search-time
+  * extraction expressions: one interpreted eval and one codegen'd call into
+  * [[extract]] through a reference object, so whole-stage codegen spans
+  * survive. `extract` gets the raw child's non-null value (a string, or
+  * the tokens array) and returns null for "no map".
+  */
+trait FieldsExtraction extends TernaryExpression {
+  def raw: Expression
+  def host: Expression
+  def source: Expression
+  def extract(raw: Any, host: UTF8String, source: UTF8String): MapData
+
+  override def first: Expression = raw
+  override def second: Expression = host
+  override def third: Expression = source
+  override def dataType: DataType = MapType(StringType, StringType, valueContainsNull = false)
+
+  override def eval(input: InternalRow): Any = {
+    val r = raw.eval(input)
+    if (r == null) null
+    else extract(r, host.eval(input).asInstanceOf[UTF8String],
+      source.eval(input).asInstanceOf[UTF8String])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("fieldsExtraction", this, getClass.getName)
+    val rawC = raw.genCode(ctx)
+    val hostC = host.genCode(ctx)
+    val sourceC = source.genCode(ctx)
+    def orNull(e: Expression, c: ExprCode): String =
+      if (e.nullable) s"${c.isNull} ? null : ${c.value}" else c.value.toString
+    ev.copy(code =
+      org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
+        new StringContext(
+          s"""
+          ${rawC.code}
+          ${hostC.code}
+          ${sourceC.code}
+          org.apache.spark.sql.catalyst.util.MapData ${ev.value} = null;
+          if (!${rawC.isNull}) {
+            ${ev.value} = $ref.extract(${rawC.value},
+              (${orNull(host, hostC)}), (${orNull(source, sourceC)}));
+          }
+          boolean ${ev.isNull} = (${ev.value} == null);
+          """)).code())
+  }
+}
+
 /** Search-time dynamic field extraction producing the `fields` map
   * (reference: plugins/steps/Fragments.go:95-98 + RegexFileParser.Extract).
   *
   * children: (raw, host, source). When `inject` is true the reserved fields
   * `host`/`source` overwrite extracted values after extraction, and the
   * configured `timeField` is aliased to `_time` (RegexFileParser.go:57-59).
-  * Codegen'd via a reference object so whole-stage codegen spans survive.
   */
 case class RegexExtractToMap(
     raw: Expression,
@@ -358,67 +431,21 @@ case class RegexExtractToMap(
     extractors: Seq[String],
     timeField: String,
     inject: Boolean)
-  extends TernaryExpression {
+  extends FieldsExtraction {
 
-  override def first: Expression = raw
-  override def second: Expression = host
-  override def third: Expression = source
-  override def dataType: DataType = MapType(StringType, StringType, valueContainsNull = false)
   override def nullable: Boolean = raw.nullable
 
   @transient private lazy val compiled: Array[CompiledExtractor] =
     extractors.map(new CompiledExtractor(_)).toArray
-  @transient private lazy val timeFieldU8: UTF8String =
-    if (timeField != null && timeField.nonEmpty) UTF8String.fromString(timeField) else null
-  @transient private lazy val localFields =
-    ThreadLocal.withInitial[FieldsBuffer](() => new FieldsBuffer)
+  @transient private lazy val timeFieldU8: UTF8String = ExprRuntime.keyOrNull(timeField)
 
-  def doExtract(rawS: UTF8String, hostS: UTF8String, sourceS: UTF8String): MapData = {
-    val s = rawS.toString
-    val m = localFields.get()
+  def extract(r: Any, hostS: UTF8String, sourceS: UTF8String): MapData = {
+    val s = r.toString
+    val m = ExprRuntime.localFields.get()
     m.clear()
     var i = 0
     while (i < compiled.length) { compiled(i).extractInto(s, m); i += 1 }
-    if (timeFieldU8 != null) {
-      val tv = m.get(timeFieldU8)
-      if (tv != null) m.put(ExprRuntime.TIME_KEY, tv)
-    }
-    if (inject) {
-      if (hostS != null) m.put(ExprRuntime.HOST_KEY, hostS.clone())
-      if (sourceS != null) m.put(ExprRuntime.SOURCE_KEY, sourceS.clone())
-    }
-    m.build()
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val r = raw.eval(input)
-    if (r == null) return null
-    val h = host.eval(input)
-    val s = source.eval(input)
-    doExtract(r.asInstanceOf[UTF8String],
-      h.asInstanceOf[UTF8String], s.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("rexMap", this, classOf[RegexExtractToMap].getName)
-    val rawC = raw.genCode(ctx)
-    val hostC = host.genCode(ctx)
-    val sourceC = source.genCode(ctx)
-    val hostV = if (host.nullable) s"${hostC.isNull} ? null : ${hostC.value}" else hostC.value.toString
-    val srcV = if (source.nullable) s"${sourceC.isNull} ? null : ${sourceC.value}" else sourceC.value.toString
-    ev.copy(code =
-      org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(
-          s"""
-          ${rawC.code}
-          ${hostC.code}
-          ${sourceC.code}
-          boolean ${ev.isNull} = ${rawC.isNull};
-          org.apache.spark.sql.catalyst.util.MapData ${ev.value} = null;
-          if (!${ev.isNull}) {
-            ${ev.value} = $ref.doExtract(${rawC.value}, ($hostV), ($srcV));
-          }
-          """)).code())
+    m.finish(timeFieldU8, if (inject) hostS else null, if (inject) sourceS else null)
   }
 
   override protected def withNewChildrenInternal(
@@ -501,71 +528,17 @@ case class JsonToFieldsMap(
     source: Expression,
     timeField: String,
     inject: Boolean)
-  extends TernaryExpression {
+  extends FieldsExtraction {
 
-  override def first: Expression = raw
-  override def second: Expression = host
-  override def third: Expression = source
-  override def dataType: DataType = MapType(StringType, StringType, valueContainsNull = false)
   override def nullable: Boolean = true
 
-  @transient private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  @transient private lazy val timeFieldU8: UTF8String = ExprRuntime.keyOrNull(timeField)
 
-  @transient private lazy val timeFieldU8: UTF8String =
-    if (timeField != null && timeField.nonEmpty) UTF8String.fromString(timeField) else null
-  @transient private lazy val localFields =
-    ThreadLocal.withInitial[FieldsBuffer](() => new FieldsBuffer)
-
-  def doExtract(rawS: UTF8String, hostS: UTF8String, sourceS: UTF8String): MapData = {
-    val node = try mapper.readTree(rawS.toString) catch { case _: Exception => return null }
-    if (node == null || !node.isObject) return null
-    val m = localFields.get()
+  def extract(r: Any, hostS: UTF8String, sourceS: UTF8String): MapData = {
+    val m = ExprRuntime.localFields.get()
     m.clear()
-    val it = node.fields()
-    while (it.hasNext) {
-      val e = it.next()
-      m.put(e.getKey, ExprRuntime.jsonValueToString(e.getValue))
-    }
-    if (timeFieldU8 != null) {
-      val tv = m.get(timeFieldU8)
-      if (tv != null) m.put(ExprRuntime.TIME_KEY, tv)
-    }
-    if (inject) {
-      if (hostS != null) m.put(ExprRuntime.HOST_KEY, hostS.clone())
-      if (sourceS != null) m.put(ExprRuntime.SOURCE_KEY, sourceS.clone())
-    }
-    m.build()
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val r = raw.eval(input)
-    if (r == null) return null
-    val h = host.eval(input)
-    val s = source.eval(input)
-    doExtract(r.asInstanceOf[UTF8String],
-      h.asInstanceOf[UTF8String], s.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("jsonMap", this, classOf[JsonToFieldsMap].getName)
-    val rawC = raw.genCode(ctx)
-    val hostC = host.genCode(ctx)
-    val sourceC = source.genCode(ctx)
-    val hostV = if (host.nullable) s"${hostC.isNull} ? null : ${hostC.value}" else hostC.value.toString
-    val srcV = if (source.nullable) s"${sourceC.isNull} ? null : ${sourceC.value}" else sourceC.value.toString
-    ev.copy(code =
-      org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(
-          s"""
-          ${rawC.code}
-          ${hostC.code}
-          ${sourceC.code}
-          org.apache.spark.sql.catalyst.util.MapData ${ev.value} = null;
-          if (!${rawC.isNull}) {
-            ${ev.value} = $ref.doExtract(${rawC.value}, ($hostV), ($srcV));
-          }
-          boolean ${ev.isNull} = (${ev.value} == null);
-          """)).code())
+    if (!ExprRuntime.jsonObjectInto(r.toString, m)) null
+    else m.finish(timeFieldU8, if (inject) hostS else null, if (inject) sourceS else null)
   }
 
   override protected def withNewChildrenInternal(
@@ -574,10 +547,10 @@ case class JsonToFieldsMap(
 }
 
 /** Whole parse-stage extraction in ONE compact expression: resolves the
-  * event's source to its config (glob dispatch, memoized per distinct source
-  * exactly like the reference's getSourceToIndexedFileConfig memo,
-  * plugins/steps/Utils.go:24-49), then runs that config's extractors
-  * (regex or JSON) and injects host/source.
+  * event's source to its rule through [[SourceRules]], then runs that
+  * rule's extractors (regex or JSON) and injects host/source. `raw` is
+  * either the rendered string or the tokens payload; tokens decode straight
+  * into a reused buffer, skipping two string copies per row.
   *
   * Replaces a CASE-WHEN chain of RegexExtractToMap branches: the chain's
   * generated code grew past JIT-compilable method sizes (observed 5x
@@ -587,138 +560,28 @@ case class ExtractEvent(
     raw: Expression,
     host: Expression,
     source: Expression,
-    configs: Seq[(String, String, Seq[String], String)], // (globRegex, fileType, extractors, timeField)
-    defaultExtractors: Seq[String],
-    defaultTimeField: String,
-    rawIsTokens: Boolean = false) // raw child is the tokens array: decode (to lowercase) in-place, skipping 2 string copies/row
-  extends TernaryExpression {
+    rules: SourceRules)
+  extends FieldsExtraction {
 
-  override def first: Expression = raw
-  override def second: Expression = host
-  override def third: Expression = source
-  override def dataType: DataType = MapType(StringType, StringType, valueContainsNull = false)
   override def nullable: Boolean = raw.nullable
 
-  @transient private lazy val compiledGlobs: Array[java.util.regex.Pattern] =
-    configs.map(c => java.util.regex.Pattern.compile(c._1)).toArray
-  @transient private lazy val compiledExtractors: Array[Array[CompiledExtractor]] =
-    configs.map(_._3.map(new CompiledExtractor(_)).toArray).toArray :+
-      defaultExtractors.map(new CompiledExtractor(_)).toArray
-  @transient private lazy val jsonMapper =
-    new com.fasterxml.jackson.databind.ObjectMapper()
-  // memo: source -> config index (configs.length = default fallback)
-  @transient private lazy val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  // reused per-row fields buffer (ThreadLocal: driver may share instances)
-  @transient private lazy val localFields =
-    ThreadLocal.withInitial[FieldsBuffer](() => new FieldsBuffer)
-  @transient private lazy val localSb =
-    ThreadLocal.withInitial[java.lang.StringBuilder](() => new java.lang.StringBuilder(256))
-  @transient private lazy val timeFieldsU8: Array[UTF8String] =
-    (configs.map(_._4) :+ defaultTimeField).map(tf =>
-      if (tf != null && tf.nonEmpty) UTF8String.fromString(tf) else null).toArray
-
-  private def resolve(source: String): Int =
-    memo.computeIfAbsent(source, s => {
-      var i = 0
-      while (i < compiledGlobs.length) {
-        if (compiledGlobs(i).matcher(s).matches()) return Integer.valueOf(i)
-        i += 1
-      }
-      Integer.valueOf(configs.length)
-    }).intValue()
-
-  private def jsonInto(text: String, m: FieldsBuffer): Unit =
-    try {
-      val node = jsonMapper.readTree(text)
-      if (node != null && node.isObject) {
-        val it = node.fields()
-        while (it.hasNext) {
-          val e = it.next()
-          m.put(e.getKey, ExprRuntime.jsonValueToString(e.getValue))
-        }
-      }
-    } catch { case _: Exception => () }
-
-  private def finish(m: FieldsBuffer,
-      timeFieldU8: UTF8String, hostS: UTF8String, sourceS: UTF8String): MapData = {
-    if (timeFieldU8 != null) {
-      val tv = m.get(timeFieldU8)
-      if (tv != null) m.put(ExprRuntime.TIME_KEY, tv)
+  def extract(r: Any, hostS: UTF8String, sourceS: UTF8String): MapData = {
+    val rule = rules.resolve(sourceS).rule
+    // regex extraction runs on lowercased raw (Fragments.go:95)
+    val text: CharSequence = r match {
+      case a: ArrayData => ExprRuntime.decodeInto(a,
+        if (rule.isJson) Vocab.table else Vocab.tableLower, ExprRuntime.localText.get())
+      case s => if (rule.isJson) s.toString else s.toString.toLowerCase(java.util.Locale.ROOT)
     }
-    if (hostS != null) m.put(ExprRuntime.HOST_KEY, hostS.clone())
-    if (sourceS != null) m.put(ExprRuntime.SOURCE_KEY, sourceS.clone())
-    m.build()
-  }
-
-  def doExtract(rawS: UTF8String, hostS: UTF8String, sourceS: UTF8String): MapData = {
-    val src = if (sourceS == null) "" else sourceS.toString
-    val idx = resolve(src)
-    val isJson = idx < configs.length && configs(idx)._2 == "json"
-    val m = localFields.get()
+    val m = ExprRuntime.localFields.get()
     m.clear()
-    if (isJson) {
-      jsonInto(rawS.toString, m)
-    } else {
-      // search-time extraction runs on lowercased raw (Fragments.go:95)
-      val s = rawS.toString.toLowerCase(java.util.Locale.ROOT)
-      val exs = compiledExtractors(idx)
+    if (rule.isJson) ExprRuntime.jsonObjectInto(text.toString, m): Unit
+    else {
+      val exs = rule.extractors
       var i = 0
-      while (i < exs.length) { exs(i).extractInto(s, m); i += 1 }
+      while (i < exs.length) { exs(i).extractInto(text, m); i += 1 }
     }
-    finish(m, timeFieldsU8(idx), hostS, sourceS)
-  }
-
-  /** Tokens fast path: decode the payload straight into a reused buffer
-    * (lowercased for the regex path), no intermediate String/toLowerCase.
-    */
-  def doExtractTokens(arr: ArrayData, hostS: UTF8String, sourceS: UTF8String): MapData = {
-    val src = if (sourceS == null) "" else sourceS.toString
-    val idx = resolve(src)
-    val isJson = idx < configs.length && configs(idx)._2 == "json"
-    val m = localFields.get()
-    m.clear()
-    if (isJson) {
-      jsonInto(ExprRuntime.decodeInto(arr, localSb.get()).toString, m)
-    } else {
-      val sb = ExprRuntime.decodeLowerInto(arr, localSb.get())
-      val exs = compiledExtractors(idx)
-      var i = 0
-      while (i < exs.length) { exs(i).extractInto(sb, m); i += 1 }
-    }
-    finish(m, timeFieldsU8(idx), hostS, sourceS)
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val r = raw.eval(input)
-    if (r == null) return null
-    val h = host.eval(input).asInstanceOf[UTF8String]
-    val s = source.eval(input).asInstanceOf[UTF8String]
-    if (rawIsTokens) doExtractTokens(r.asInstanceOf[ArrayData], h, s)
-    else doExtract(r.asInstanceOf[UTF8String], h, s)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("extractEvent", this, classOf[ExtractEvent].getName)
-    val rawC = raw.genCode(ctx)
-    val hostC = host.genCode(ctx)
-    val sourceC = source.genCode(ctx)
-    val hostV = if (host.nullable) s"${hostC.isNull} ? null : ${hostC.value}" else hostC.value.toString
-    val srcV = if (source.nullable) s"${sourceC.isNull} ? null : ${sourceC.value}" else sourceC.value.toString
-    val call = if (rawIsTokens) "doExtractTokens" else "doExtract"
-    ev.copy(code =
-      org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(
-          s"""
-          ${rawC.code}
-          ${hostC.code}
-          ${sourceC.code}
-          boolean ${ev.isNull} = ${rawC.isNull};
-          org.apache.spark.sql.catalyst.util.MapData ${ev.value} = null;
-          if (!${ev.isNull}) {
-            ${ev.value} = $ref.$call(${rawC.value}, ($hostV), ($srcV));
-          }
-          """)).code())
+    m.finish(rule.timeFieldU8, hostS, sourceS)
   }
 
   override protected def withNewChildrenInternal(
@@ -726,19 +589,17 @@ case class ExtractEvent(
     copy(raw = f, host = s, source = t)
 }
 
-/** Time-field-only extraction from the tokens payload: same config dispatch
-  * and scan order as [[ExtractEvent]], but records just the `timeField` /
-  * `_time` values — no map, no per-field UTF8String churn. Deriving `ts`
-  * through this (instead of `fields["_time"]`) decouples the route path from
-  * the full fields map, so Catalyst prunes the map away from the fan-out
-  * write projection entirely.
+/** Time-field-only extraction from the tokens payload: same rule and scan
+  * order as [[ExtractEvent]], but records just the `timeField` / `_time`
+  * values — no map, no per-field UTF8String churn. Deriving `ts` through
+  * this (instead of `fields["_time"]`) decouples the route path from the
+  * full fields map, so Catalyst prunes the map away from the fan-out write
+  * projection entirely.
   */
 case class ExtractTimeValue(
     tokens: Expression,
     source: Expression,
-    configs: Seq[(String, String, Seq[String], String)], // (globRegex, fileType, extractors, timeField)
-    defaultExtractors: Seq[String],
-    defaultTimeField: String)
+    rules: SourceRules)
   extends BinaryExpression {
 
   override def left: Expression = tokens
@@ -746,54 +607,26 @@ case class ExtractTimeValue(
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
 
-  @transient private lazy val compiledGlobs: Array[java.util.regex.Pattern] =
-    configs.map(c => java.util.regex.Pattern.compile(c._1)).toArray
-  @transient private lazy val compiledExtractors: Array[Array[CompiledExtractor]] =
-    configs.map(_._3.map(new CompiledExtractor(_)).toArray).toArray :+
-      defaultExtractors.map(new CompiledExtractor(_)).toArray
-  @transient private lazy val jsonMapper =
-    new com.fasterxml.jackson.databind.ObjectMapper()
-  @transient private lazy val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  @transient private lazy val localSb =
-    ThreadLocal.withInitial[java.lang.StringBuilder](() => new java.lang.StringBuilder(256))
   @transient private lazy val localOut =
     ThreadLocal.withInitial[Array[String]](() => new Array[String](2))
 
-  private def resolve(source: String): Int =
-    memo.computeIfAbsent(source, s => {
-      var i = 0
-      while (i < compiledGlobs.length) {
-        if (compiledGlobs(i).matcher(s).matches()) return Integer.valueOf(i)
-        i += 1
-      }
-      Integer.valueOf(configs.length)
-    }).intValue()
-
   def doExtract(arr: ArrayData, sourceS: UTF8String): UTF8String = {
-    val src = if (sourceS == null) "" else sourceS.toString
-    val idx = resolve(src)
-    val isJson = idx < configs.length && configs(idx)._2 == "json"
-    val cfgField =
-      if (idx < configs.length) configs(idx)._4 else defaultTimeField
-    // an empty time_field config only disables the timeField OVERRIDE — a
-    // directly-extracted "_time" key still names the event time (matches
-    // ExtractEvent.finish, which always keeps the map entry)
-    val timeField =
-      if (cfgField == null || cfgField.isEmpty) "_time" else cfgField
-    if (isJson) {
+    val rule = rules.resolve(sourceS).rule
+    val timeField = rule.timeField
+    if (rule.isJson) {
       try {
-        val node = jsonMapper.readTree(ExprRuntime.decodeInto(arr, localSb.get()).toString)
+        val node = ExprRuntime.jsonMapper.readTree(
+          ExprRuntime.decodeInto(arr, Vocab.table, ExprRuntime.localText.get()).toString)
         if (node == null || !node.isObject) return null
         val v = ExprRuntime.jsonValueToString(node.get(timeField))
         val r = if (v != null) v else ExprRuntime.jsonValueToString(node.get("_time"))
         if (r == null) null else UTF8String.fromString(r)
       } catch { case _: Exception => null }
     } else {
-      val sb = ExprRuntime.decodeLowerInto(arr, localSb.get())
+      val sb = ExprRuntime.decodeInto(arr, Vocab.tableLower, ExprRuntime.localText.get())
       val out = localOut.get()
       out(0) = null; out(1) = null
-      val exs = compiledExtractors(idx)
+      val exs = rule.extractors
       var i = 0
       while (i < exs.length) { exs(i).extractTimeInto(sb, timeField, out); i += 1 }
       val r = if (out(0) != null) out(0) else out(1)
@@ -830,18 +663,16 @@ case class ExtractTimeValue(
     copy(tokens = l, source = r)
 }
 
-/** Per-config event-time parse in one compact expression (reference
+/** Per-rule event-time parse in one compact expression (reference
   * ParseTime.go:24-54 semantics: Go layouts + UNIX / UNIX_MILLIS /
   * UNIX_DECIMAL_NANOS). Case-insensitive java.time parsing (month names
-  * arrive lowercased because extraction lowercases raw). Config resolution
-  * memoized per source. Returns micros since epoch; null if unparseable.
+  * arrive lowercased because extraction lowercases raw). The rule comes
+  * from [[SourceRules]]. Returns micros since epoch; null if unparseable.
   */
 case class EventTime(
     timeStr: Expression,
     source: Expression,
-    configs: Seq[(String, String)], // (globRegex, goLayout)
-    javaLayouts: Seq[String],       // pre-translated java patterns ("" for UNIX forms)
-    defaultLayout: (String, String)) // (goLayout, javaLayout)
+    rules: SourceRules)
   extends BinaryExpression {
 
   override def left: Expression = timeStr
@@ -849,28 +680,31 @@ case class EventTime(
   override def dataType: DataType = TimestampType
   override def nullable: Boolean = true
 
-  @transient private lazy val compiledGlobs: Array[java.util.regex.Pattern] =
-    configs.map(c => java.util.regex.Pattern.compile(c._1)).toArray
-  @transient private lazy val formatters: Array[AnyRef] =
-    (configs.map(_._2).zip(javaLayouts) :+ defaultLayout).map {
-      case (go, _) if go == "UNIX" || go == "UNIX_MILLIS" || go == "UNIX_DECIMAL_NANOS" => go
-      case (_, java0) =>
-        new java.time.format.DateTimeFormatterBuilder()
-          .parseCaseInsensitive().appendPattern(java0)
-          .toFormatter(java.util.Locale.ROOT)
-    }.toArray
-  @transient private lazy val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  @transient private lazy val layouts: Array[String] = rules.rules.map(_.config.time_layout)
+  @transient private lazy val formatters: Array[AnyRef] = layouts.map {
+    case go if go == "UNIX" || go == "UNIX_MILLIS" || go == "UNIX_DECIMAL_NANOS" => go
+    case go =>
+      new java.time.format.DateTimeFormatterBuilder()
+        .parseCaseInsensitive().appendPattern(F.goLayoutToJava(go))
+        .toFormatter(java.util.Locale.ROOT)
+  }
+  @transient private lazy val isDefaultKv: Array[Boolean] =
+    layouts.map(_ == "2006/01/02 15:04:05.000000")
+  @transient private lazy val isAccessLayout: Array[Boolean] =
+    layouts.map(_ == "02/Jan/2006:15:04:05 -0700")
 
-  private def resolve(source: String): Int =
-    memo.computeIfAbsent(source, s => {
-      var i = 0
-      while (i < compiledGlobs.length) {
-        if (compiledGlobs(i).matcher(s).matches()) return Integer.valueOf(i)
-        i += 1
-      }
-      Integer.valueOf(configs.length)
-    }).intValue()
+  /** Days from 1970-01-01 to a proleptic Gregorian date (Howard Hinnant's
+    * days-from-civil algorithm, public domain).
+    */
+  private def daysFromCivil(year: Int, month: Int, day: Int): Long = {
+    val y = if (month <= 2) year - 1 else year
+    val era = (if (y >= 0) y else y - 399) / 400
+    val yoe = y - era * 400
+    val mp = (month + 9) % 12
+    val doy = (153 * mp + 2) / 5 + day - 1
+    val doe = yoe * 365 + yoe / 4 - yoe / 100 + doy
+    era * 146097L + doe - 719468L
+  }
 
   /** Allocation-free fast path for the reference's default kv layout
     * ("2006/01/02 15:04:05.000000"): fixed-width numeric parse + the
@@ -900,23 +734,10 @@ case class EventTime(
       micros = micros * 10 + (c - '0')
       i += 1
     }
-    // days-from-civil (Howard Hinnant's algorithm, public domain)
-    val y = if (month <= 2) year - 1 else year
-    val era = (if (y >= 0) y else y - 399) / 400
-    val yoe = y - era * 400
-    val mp = (month + 9) % 12
-    val doy = (153 * mp + 2) / 5 + day - 1
-    val doe = yoe * 365 + yoe / 4 - yoe / 100 + doy
-    val days = era * 146097L + doe - 719468L
+    val days = daysFromCivil(year, month, day)
     java.lang.Long.valueOf(
       ((days * 86400L + hh * 3600L + mm * 60L + ss) * 1000000L) + micros)
   }
-
-  @transient private lazy val isDefaultKv: Array[Boolean] =
-    (configs.map(_._2) :+ defaultLayout._1).map(_ == "2006/01/02 15:04:05.000000").toArray
-
-  @transient private lazy val isAccessLayout: Array[Boolean] =
-    (configs.map(_._2) :+ defaultLayout._1).map(_ == "02/Jan/2006:15:04:05 -0700").toArray
 
   /** Allocation-free fast path for the common-log-format layout
     * ("02/Jan/2006:15:04:05 -0700", e.g. `20/jan/2021:19:37:00 +0000`) —
@@ -976,14 +797,7 @@ case class EventTime(
       case _ => 31
     }
     if (day > dim) return null
-    // days-from-civil (Howard Hinnant's algorithm, public domain)
-    val y = if (month <= 2) year - 1 else year
-    val era = (if (y >= 0) y else y - 399) / 400
-    val yoe = y - era * 400
-    val mp = (month + 9) % 12
-    val doy = (153 * mp + 2) / 5 + day - 1
-    val doe = yoe * 365 + yoe / 4 - yoe / 100 + doy
-    val days = era * 146097L + doe - 719468L
+    val days = daysFromCivil(year, month, day)
     val offsetSecs = sign * (oh * 3600L + om * 60L)
     java.lang.Long.valueOf(
       (days * 86400L + hh * 3600L + mm * 60L + ss - offsetSecs) * 1000000L)
@@ -992,7 +806,7 @@ case class EventTime(
   /** null (boxed) when unparseable — callers coalesce a fallback. */
   def doParse(value: UTF8String, sourceS: UTF8String): java.lang.Long = {
     if (value == null) return null
-    val idx = resolve(if (sourceS == null) "" else sourceS.toString)
+    val idx = rules.resolve(sourceS).rule.index
     val v = value.toString
     if (isDefaultKv(idx)) return fastKv(v)
     if (isAccessLayout(idx)) {
@@ -1059,57 +873,20 @@ case class EventTime(
     copy(timeStr = l, source = r)
 }
 
-/** The enrich stage in ONE compact expression: resolves `source` to its
-  * config's (host, host_type, file_type) — globs tried in config order,
-  * first match wins, unmatched sources fall back to
-  * (`unknown-host`, `unknown`, `kv`) — plus the source's filesystem-safe
-  * sink key (every char outside `[A-Za-z0-9_-]` becomes `_`).
-  *
-  * All four are pure functions of `source`, so the answer is memoized per
-  * distinct source inside the expression instance, like [[ExtractEvent]]'s
-  * glob lookup: a row costs one hash probe on the source bytes, and no side
-  * plan (distinct + join + broadcast) runs to resolve a handful of
-  * sources. The memo lives and dies with the instance, and an instance is
-  * built from one config snapshot (one per micro-batch under hot reload),
-  * so it never outlives its config.
+/** The enrich stage in ONE compact expression: the source's
+  * (host, host_type, file_type) from its [[SourceRules]] rule, plus its
+  * filesystem-safe sink key (every char outside `[A-Za-z0-9_-]` becomes
+  * `_`). All four are pure functions of `source` and come out of the rule
+  * table's per-source memo, so a row costs one hash probe and no side plan
+  * (distinct + join + broadcast) runs to resolve a handful of sources.
   */
-case class ResolveSource(
-    source: Expression,
-    configs: Seq[(String, String, String, String)]) // (globRegex, host, hostType, fileType)
-  extends UnaryExpression {
+case class ResolveSource(source: Expression, rules: SourceRules) extends UnaryExpression {
 
   override def child: Expression = source
   override def dataType: DataType = ResolveSource.schema
   override def nullable: Boolean = false
 
-  @transient private lazy val compiledGlobs: Array[java.util.regex.Pattern] =
-    configs.map(c => java.util.regex.Pattern.compile(c._1)).toArray
-  // memo: source bytes -> (host, host_type, file_type, sink); the shared row
-  // is never mutated, so every row of a source may hand out the same one
-  @transient private lazy val memo =
-    new java.util.concurrent.ConcurrentHashMap[UTF8String, InternalRow]()
-  @transient private lazy val nullSourceRow: InternalRow = resolved(null)
-
-  private def resolved(src: String): InternalRow = {
-    val idx = if (src == null) -1 else compiledGlobs.indexWhere(_.matcher(src).matches())
-    val (host, hostType, fileType) =
-      if (idx < 0) ("unknown-host", "unknown", "kv")
-      else (configs(idx)._2, configs(idx)._3, configs(idx)._4)
-    val sink = if (src == null) null else UTF8String.fromString(src.replaceAll("[^A-Za-z0-9_-]", "_"))
-    InternalRow(UTF8String.fromString(host), UTF8String.fromString(hostType),
-      UTF8String.fromString(fileType), sink)
-  }
-
-  def resolve(sourceS: UTF8String): InternalRow = {
-    if (sourceS == null) return nullSourceRow
-    val hit = memo.get(sourceS)
-    if (hit != null) hit
-    else {
-      // the key may point into a reused input buffer: store a private copy
-      val key = sourceS.clone()
-      memo.computeIfAbsent(key, k => resolved(k.toString))
-    }
-  }
+  def resolve(sourceS: UTF8String): InternalRow = rules.resolve(sourceS).row
 
   override def eval(input: InternalRow): Any =
     resolve(source.eval(input).asInstanceOf[UTF8String])

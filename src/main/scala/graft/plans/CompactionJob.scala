@@ -23,19 +23,37 @@ import org.apache.spark.sql.functions._
   */
 object CompactionJob {
 
-  /** Order-independent row-set signature over sink-tagged rows: (count,
-    * bit_xor of xxhash64(sink, doc_id, tokens)). Including `sink` in the
-    * hash makes a row silently CHANGING sinks flip the global xor, so one
-    * (count, xor) pair carries the same per-sink-row-set guarantee the old
-    * per-sink map did — while being computable as a plain global aggregate
-    * (and hence as an [[org.apache.spark.sql.Observation]] riding the
-    * rewrite itself, guide §1.2: one pass, not two).
+  /** Order-independent row-set signature over `cols`: (count, bit_xor of
+    * xxhash64(cols)). A plain global aggregate, so the same signature is
+    * both recomputed from written files ([[of]], the "after" side) and
+    * observed as an [[org.apache.spark.sql.Observation]] riding the rewrite
+    * itself ([[observe]], the "before" side; guide §1.2: one pass, not two).
+    * Including `sink` in the routed-row columns makes a row silently
+    * CHANGING sinks flip the global xor, so one (count, xor) pair carries
+    * the per-sink row-set guarantee.
     */
-  private def rowSetSig(df: DataFrame): (Long, Long) = {
-    val r = df.agg(count(lit(1)),
-      bit_xor(xxhash64(col("sink"), col("doc_id"), col("tokens")))).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  private final class RowSetSig(cols: String*) {
+    private def aggs = (count(lit(1)).as("n"), bit_xor(xxhash64(cols.map(col): _*)).as("sig"))
+    private def value(n: Any, sig: Any): (Long, Long) =
+      (n.asInstanceOf[Long], sig match { case l: Long => l; case _ => 0L })
+
+    def of(df: DataFrame): (Long, Long) = {
+      val (n, sig) = aggs
+      val r = df.agg(n, sig).head()
+      value(r.get(0), r.get(1))
+    }
+
+    /** `df` observing its signature, and the signature once an action ran it. */
+    def observe(df: DataFrame): (DataFrame, () => (Long, Long)) = {
+      val obs = org.apache.spark.sql.Observation()
+      val (n, sig) = aggs
+      (df.observe(obs, n, sig), () => {
+        val m = obs.get
+        value(m("n"), m.getOrElse("sig", null))
+      })
+    }
   }
+  private val routedSig = new RowSetSig("sink", "doc_id", "tokens")
 
   final case class Result(sinks: Int, rows: Long, filesBefore: Long, filesAfter: Long)
 
@@ -116,18 +134,13 @@ object CompactionJob {
     // kept, no commit) — fail-safe, never a silent wrong commit.
     val rows = spark.read.parquet(inDir).count()
     val parts = math.max(1, math.min(Int.MaxValue.toLong, (rows + targetRows - 1) / targetRows)).toInt
-    val obs = org.apache.spark.sql.Observation()
+    val (observed, before) = routedSig.observe(in)
     verifiedSwap(fs, staging, outPath) { dst =>
-      in.observe(obs, count(lit(1)).as("n"),
-          bit_xor(xxhash64(col("sink"), col("doc_id"), col("tokens"))).as("sig"))
+      observed
         .repartition(parts, col("sink"), pmod(hash(col("doc_id")), lit(parts * 8)))
         .sortWithinPartitions(col("sink"), col("ts"))
         .write.mode("overwrite").partitionBy("sink").parquet(dst)
-    }(dst => rowSetSig(spark.read.parquet(dst)), {
-      val m = obs.get
-      (m("n").asInstanceOf[Long],
-        m.get("sig").collect { case l: Long => l }.getOrElse(0L))
-    })
+    }(dst => routedSig.of(spark.read.parquet(dst)), before())
     val sinks = {
       val it = fs.listStatus(outPath)
       it.count(s => s.isDirectory && s.getPath.getName.startsWith("sink="))
@@ -205,12 +218,7 @@ object CompactionJob {
     // file sets and fail the gate under steady ingest
     val served = StreamingPipeline.servedFrom(spark, outDir, oldBase, deltas)
 
-    def sig(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        bit_xor(xxhash64(col("bucket_start"), col("sink"), col("n")))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-
+    val sig = new RowSetSig("bucket_start", "sink", "n")
     val staging = new Path(outPath, s".histbase-staging-${System.nanoTime()}")
     var committed = false
     var rowsBefore = 0L
@@ -219,15 +227,11 @@ object CompactionJob {
       // (CollectMetrics) instead of a separate full evaluation of the
       // merge-on-read view — one pass, same gate: `after` is still
       // recomputed independently from the written files
-      val obs = org.apache.spark.sql.Observation()
-      served.observe(obs, count(lit(1)).as("n"),
-          bit_xor(xxhash64(col("bucket_start"), col("sink"), col("n"))).as("sig"))
-        .write.mode("overwrite").parquet(staging.toString)
-      val m = obs.get
-      val before = (m("n").asInstanceOf[Long],
-        m.get("sig").collect { case l: Long => l }.getOrElse(0L))
+      val (observed, observedSig) = sig.observe(served)
+      observed.write.mode("overwrite").parquet(staging.toString)
+      val before = observedSig()
       rowsBefore = before._1
-      val after = sig(spark.read.parquet(staging.toString))
+      val after = sig.of(spark.read.parquet(staging.toString))
       require(before == after,
         s"histogram compaction changed the served rows: before=$before after=$after")
       if (!fs.rename(staging, new Path(outPath, s"base-$newId")))
@@ -268,11 +272,8 @@ object CompactionJob {
       if (numPartitions > 0) numPartitions
       else spark.sparkContext.defaultParallelism
 
-    def sig(dir: String): (Long, Long) = {
-      val r = spark.read.parquet(dir).select("word", "doc_id")
-        .agg(count(lit(1)), bit_xor(xxhash64(col("word"), col("doc_id")))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
+    val postingsSig = new RowSetSig("word", "doc_id")
+    def sig(dir: String): (Long, Long) = postingsSig.of(spark.read.parquet(dir))
     val before = sig(inDir)
     verifiedSwap(fs, staging, outPath) { dst =>
       spark.read.parquet(inDir).select("word", "doc_id")

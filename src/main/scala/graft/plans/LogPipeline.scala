@@ -15,7 +15,7 @@ import graft.model.SourceConfig
   *               token-array-equality invariant)
   *   enrich    — one memoized expression maps source -> (host, host_type,
   *               file_type, sink): the glob match runs once per *distinct
-  *               source* inside the expression instance, so the big side
+  *               source* in its SourceRules table, so the big side
   *               sees neither a join nor a per-row glob (reference J2)
   *   route     — salted repartition + fan-out write partitioned by sink
   *               (reference S5-S7 forwarder/recipient topology)
@@ -56,22 +56,14 @@ object LogPipeline {
       }
       .drop(cfg)
       // fields + ts are per-config *plan constants* (extractor regexes and
-      // time layouts), compiled to expressions with the same first-match-wins
-      // glob dispatch. Both run straight off the tokens payload; ts goes
-      // through the time-only extraction so plans that never touch `fields`
-      // (the fan-out write) prune the map build entirely.
+      // time layouts) behind the same first-match-wins SourceRules table.
+      // Both run straight off the tokens payload; ts goes through the
+      // time-only extraction so plans that never touch `fields` (the
+      // fan-out write) prune the map build entirely.
       .withColumn("fields",
         F.extract_event_tokens(col("tokens"), col("host"), col("source"), configs))
       .withColumn("ts", tsColumnTokens(configs))
   }
-
-  /** Search-time field extraction per source config (first glob match wins,
-    * memoized inside one compact ExtractEvent expression — a CASE-WHEN chain
-    * of per-config extractions blew generated methods past JIT limits).
-    */
-  def fieldsColumn(raw: Column, host: Column, source: Column,
-      configs: Seq[SourceConfig]): Column =
-    F.extract_event(raw, host, source, configs)
 
   /** Event-time: parse `_time` with the per-config layout; rows without an
     * extractable time get a deterministic fallback (the reference stamps

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.data.{SequenceGen, Vocab}
+import graft.functions.F
 import graft.model.SourceConfig
 import graft.plans.{LogPipeline, RouteJob}
 import graft.util.Scratch
@@ -96,15 +97,17 @@ class PipelineSpec extends AnyFunSuite {
 
   test("enrich parity table: source -> (host, host_type, file_type, sink)") {
     import spark.implicits._
-    def cfg(glob: String, host: String, hostType: String, fileType: String) =
-      SourceConfig(glob, fileType, SourceConfig.defaultExtractors, "_time",
-        SourceConfig.defaultTimeLayout, host, hostType)
+    def cfg(glob: String, host: String, hostType: String, fileType: String,
+        timeField: String = "_time", layout: String = SourceConfig.defaultTimeLayout,
+        extractors: Seq[String] = SourceConfig.defaultExtractors) =
+      SourceConfig(glob, fileType, extractors, timeField, layout, host, hostType)
     // overlapping globs: app-special.log matches the first two and *.log,
     // and the first one listed wins
     val configs = Seq(
-      cfg("app-*.log", "h-app", "app", "kv"),
-      cfg("app-special.log", "h-special", "special", "json"),
-      cfg("*.log", "h-any", "any", "access"),
+      cfg("app-*.log", "h-app", "app", "kv", timeField = "t", layout = "UNIX",
+        extractors = Seq("(\\w+)=(\\w+)")),
+      cfg("app-special.log", "h-special", "special", "json", timeField = "when"),
+      cfg("*.log", "h-any", "any", "access", timeField = "t", layout = "UNIX_MILLIS"),
       cfg("var/log/*", "h-var", "var", "kv"))
     val expected = Map(
       "app-1.log" -> (("h-app", "app", "kv", "app-1_log")),
@@ -114,16 +117,45 @@ class PipelineSpec extends AnyFunSuite {
       // `*` does not cross `/`: no glob matches, the fallbacks apply
       "nested/web.log" -> (("unknown-host", "unknown", "kv", "nested_web_log")),
       "mystery.bin" -> (("unknown-host", "unknown", "kv", "mystery_bin")))
+    // every row carries the same line, so what `fields` and `ts` make of it
+    // names the rule that parsed it; var/log/* configures the defaults
+    val line = "2024/01/02 03:04:05.000000 t=1700000000 n=7"
+    val kv = Map("t" -> "1700000000", "n" -> "7")
+    val appRule = (kv + ("_time" -> "1700000000"), java.time.Instant.ofEpochSecond(1700000000L))
+    val anyLogRule = (appRule._1, java.time.Instant.ofEpochMilli(1700000000L))
+    val defaults = (kv + ("_time" -> "2024/01/02 03:04:05.000000"),
+      java.time.Instant.parse("2024-01-02T03:04:05Z"))
+    val parsedBy = Map(
+      // kv-extracted under app-*.log's time field and layout, not as JSON
+      "app-1.log" -> appRule, "app-special.log" -> appRule,
+      "web.log" -> anyLogRule, "var/log/my app.txt" -> defaults,
+      // the fallback rule: default extractors, `_time`, default layout
+      "nested/web.log" -> defaults, "mystery.bin" -> defaults)
     // every source on several rows, so most rows are answered by the memo
     val seqs = (0 until 24).map { i =>
       val src = expected.keys.toSeq(i % expected.size)
-      (f"doc-$i%012d", Vocab.encode(s"event $i").toSeq, 2, src)
+      (f"doc-$i%012d", Vocab.encode(line).toSeq, 2, src)
     }.toDF("doc_id", "tokens", "n_tok", "source")
-    val got = LogPipeline.run(spark, seqs.repartition(3), configs)
+    val enriched = LogPipeline.run(spark, seqs.repartition(3), configs)
+    val got = enriched
       .select("source", "host", "host_type", "file_type", "sink").distinct().collect()
     assert(got.length == expected.size, s"one answer per source: ${got.mkString(", ")}")
     assert(got.map(r => r.getString(0) ->
       ((r.getString(1), r.getString(2), r.getString(3), r.getString(4)))).toMap == expected)
+    // fields and ts come from the same rule as host; ExtractEvent over the
+    // rendered raw and over the tokens gives the same map as `fields`
+    val parsed = enriched.select(col("source"), col("fields"), col("ts"),
+      F.extract_event(col("raw"), col("host"), col("source"), configs),
+      F.extract_event_tokens(col("tokens"), col("host"), col("source"), configs)).collect()
+    assert(parsed.length == 24)
+    parsed.foreach { r =>
+      val src = r.getString(0)
+      val fields = r.getMap[String, String](1).toMap
+      assert(fields("host") == expected(src)._1 && fields("source") == src, src)
+      assert((fields - "host" - "source", r.getTimestamp(2).toInstant) == parsedBy(src), src)
+      assert(r.getMap[String, String](3) == r.getMap[String, String](1), s"raw path: $src")
+      assert(r.getMap[String, String](4) == r.getMap[String, String](1), s"tokens path: $src")
+    }
     // sinkCol gives the same key as the enriched frame and the per-row
     // sanitize it replaces
     val sinks = seqs.select(col("source"), LogPipeline.sinkCol.as("sink"),
