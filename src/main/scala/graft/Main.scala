@@ -59,10 +59,9 @@ object Main {
 
   /** Testable body (session injected). */
   def run(spark: SparkSession, opts: Map[String, String], input: String): Unit = {
-    // --artifact-dir: where train-once artifacts (IVF/PQ/BPE/bloom) live —
-    // next to the data in a real deployment; must be set before the first
-    // artifact use (SparkEntry.artifactBaseDir)
-    opts.get("artifact-dir").foreach(d => SparkEntry.artifactBaseDirOverride = Some(d))
+    // --artifact-dir: where train-once artifacts (graft.util.Artifacts)
+    // live — next to the data in a real deployment
+    opts.get("artifact-dir").foreach(d => graft.util.Artifacts.artifactBaseDirOverride = Some(d))
     val parsedCfg = opts.get("config").map(ConfigJson.parseFile)
     val configs = parsedCfg.map(_.configs).getOrElse(graft.data.SequenceGen.configs)
 

@@ -252,19 +252,9 @@ final class HttpApi(api: JobsApi,
     o.putArray("tableRows")
     o.putArray("columnOrder")
     o.put("resultType", 1) // PipeTypeEvents (keyset implies the events sort)
-    pageJson(eventsWire(page)).foreach(s => events.add(mapper.readTree(s)))
+    pageJson(JobsApi.eventsWire(page)).foreach(s => events.add(mapper.readTree(s)))
     sendJson(ex, 200, mapper.writeValueAsString(o))
   }
-
-  /** Reference wire keys for an events page
-    * (pkg/logsuck/events/Event.go:46-54).
-    */
-  private def eventsWire(page: DataFrame): DataFrame =
-    page.select(
-      col("doc_id").as("Id"), col("raw").as("Raw"),
-      col("ts").as("Timestamp"), col("host").as("Host"),
-      col("source").as("Source"), col("source_id").as("SourceId"),
-      col("fields").as("Fields"))
 
   private def jobFieldStats(ex: HttpExchange): Unit = {
     val q = params(ex)

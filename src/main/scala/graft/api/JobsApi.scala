@@ -133,12 +133,7 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       * Events frames only (tables keep the per-page DataFrame path).
       */
     private[JobsApi] lazy val wireJsonRdd: org.apache.spark.rdd.RDD[String] = {
-      val r = results.select(
-          col("doc_id").as("Id"), col("raw").as("Raw"),
-          col("ts").as("Timestamp"), col("host").as("Host"),
-          col("source").as("Source"), col("source_id").as("SourceId"),
-          col("fields").as("Fields"))
-        .toJSON.rdd
+      val r = JobsApi.eventsWire(results).toJSON.rdd
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       persistedRdds.add(r)
       r
@@ -611,6 +606,16 @@ object JobsApi {
     * order as one collected page burst under the old per-page path.
     */
   private[api] val LocalPageCacheMaxRows = 100000L
+
+  /** Reference wire keys for events
+    * (pkg/logsuck/events/Event.go:46-54).
+    */
+  private[api] def eventsWire(events: DataFrame): DataFrame =
+    events.select(
+      col("doc_id").as("Id"), col("raw").as("Raw"),
+      col("ts").as("Timestamp"), col("host").as("Host"),
+      col("source").as("Source"), col("source_id").as("SourceId"),
+      col("fields").as("Fields"))
 
   /** Rows [lo, hi) of a job's cached results, by its partition-offset index
     * `starts`: only the partitions overlapping the range are read, and rows

@@ -5,6 +5,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Artifacts
+
 /** Learned byte-pair-encoding tokenizer over the corpus (Sennrich et al.,
   * ACL'16) — the tokens-axis counterpart of the fixed [[graft.data.Vocab]]
   * wordpiece table.
@@ -142,35 +144,18 @@ object Bpe {
     symbols.toSeq.zipWithIndex.toMap
   }
 
-  /** Persist learned merges as a tiny text artifact (one `a<TAB>b` pair
-    * per line, in rank order — symbols come from normalized text, so tabs
-    * and newlines cannot occur inside them). Same Hadoop-FS pattern as
-    * the IVF quantizer: trained ONCE per corpus generation, loaded by
-    * every encode job like a broadcast dim.
+  /** The learned merges' artifact format ([[graft.util.Artifacts]]): one
+    * `a<TAB>b` pair per line, in rank order (symbols come from normalized
+    * text, so tabs and newlines cannot occur inside them). Trained ONCE per
+    * corpus generation, loaded by every encode job like a broadcast dim.
     */
-  def saveMerges(spark: SparkSession, path: String,
-      merges: Seq[(String, String)]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(merges.map { case (a, b) => s"$a\t$b" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Load a [[saveMerges]] artifact (rank order restored from line order). */
-  def loadMerges(spark: SparkSession, path: String): Seq[(String, String)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-    val in = fs.open(p)
-    try in.readFully(0, bytes) finally in.close()
-    new String(bytes, "UTF-8").split("\n").filter(_.nonEmpty).toSeq
+  val mergesCodec: Artifacts.Codec[Seq[(String, String)]] = Artifacts.Codec.text(
+    _.map { case (a, b) => s"$a\t$b" }.mkString("\n"),
+    _.split("\n").filter(_.nonEmpty).toSeq
       .map { line =>
         val t = line.split("\t", 2)
         (t(0), t(1))
-      }
-  }
+      })
 
   /** Map-only distributed encode: (doc_id, tokens array<string>, ids
     * array<int>, n_tok, decoded). `decoded` is the reconstruction

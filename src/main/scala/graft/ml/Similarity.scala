@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Artifacts
+
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float>, label): brute-force cosine top-k as the exact baseline and
   * a random-hyperplane LSH bucketing as the 10^12-scale path.
@@ -169,39 +171,21 @@ object Similarity {
     } finally sc.setJobDescription(prevDesc)
   }
 
-  /** Persist the quantizer as a tiny text artifact (one centroid per line,
-    * comma-separated floats — Float.toString round-trips exactly). Goes
-    * through the Hadoop FS API so the artifact lives next to the data on
-    * whatever store the cluster uses; at 100 TB the quantizer is built ONCE
-    * per corpus generation and every query loads it, like a broadcast dim.
+  /** The quantizer's artifact format ([[graft.util.Artifacts]]): one
+    * centroid per line, comma-separated floats (Float.toString round-trips
+    * exactly). Built ONCE per corpus generation, loaded by every query
+    * like a broadcast dim.
     */
-  def saveCentroids(spark: org.apache.spark.sql.SparkSession, path: String,
-      cents: Array[Array[Float]]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(cents.map(_.mkString(",")).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Load a [[saveCentroids]] artifact. */
-  def loadCentroids(spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[Array[Float]] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-    val in = fs.open(p)
-    try in.readFully(0, bytes) finally in.close()
-    new String(bytes, "UTF-8").split("\n").filter(_.nonEmpty)
-      .map(_.split(",").map(_.toFloat))
-  }
+  val centroidsCodec: Artifacts.Codec[Array[Array[Float]]] = Artifacts.Codec.text(
+    _.map(_.mkString(",")).mkString("\n"),
+    _.split("\n").filter(_.nonEmpty).map(_.split(",").map(_.toFloat)))
 
   /** IVF top-k: exact cosine rank within the nProbe probed cells per query.
     * The probe fan-out (queries x nProbe) stays on the tiny broadcast side;
     * the indexed table joins on its map-derived `cell` key.
     *
     * `centroids` supplies a prebuilt quantizer ([[ivfCentroids]] /
-    * [[loadCentroids]]) — the build-once serving path: no build jobs run
+    * [[centroidsCodec]]) — the build-once serving path: no build jobs run
     * when it is given. Omitting it rebuilds per call (one-off/ad-hoc use).
     */
   def ivfTopK(emb: DataFrame, nQueries: Int, k: Int,
@@ -563,35 +547,19 @@ object Similarity {
       .select(col("qid"), col("rank"), col("vec_id"), col("adist"))
   }
 
-  /** Persist the codebooks as a text artifact (`mi;cid;f,f,...` lines,
-    * Float.toString round-trips exactly), like [[saveCentroids]].
+  /** The codebooks' artifact format: `mi;cid;f,f,...` lines, like
+    * [[centroidsCodec]].
     */
-  def savePqBooks(spark: org.apache.spark.sql.SparkSession, path: String,
-      books: Array[Array[Array[Float]]]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    val text = books.indices.flatMap(mi => books(mi).indices.map(c =>
-      s"$mi;$c;${books(mi)(c).mkString(",")}")).mkString("\n")
-    try out.write(text.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Load a [[savePqBooks]] artifact. */
-  def loadPqBooks(spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[Array[Array[Float]]] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-    val in = fs.open(p)
-    try in.readFully(0, bytes) finally in.close()
-    new String(bytes, "UTF-8").split("\n").filter(_.nonEmpty)
+  val pqBooksCodec: Artifacts.Codec[Array[Array[Array[Float]]]] = Artifacts.Codec.text(
+    books => books.indices.flatMap(mi => books(mi).indices.map(c =>
+      s"$mi;$c;${books(mi)(c).mkString(",")}")).mkString("\n"),
+    _.split("\n").filter(_.nonEmpty)
       .map { line =>
         val Array(mi, c, fs0) = line.split(";", 3)
         (mi.toInt, c.toInt, fs0.split(",").map(_.toFloat))
       }
       .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3).toArray).toArray
-  }
+      .map(_._2.sortBy(_._2).map(_._3).toArray).toArray)
 
   // Shared SQL-twin builders for the PQ family: the build CTEs, encode
   // columns, and ADC terms are identical whether the vectors are raw
@@ -690,7 +658,7 @@ object Similarity {
         residualCol(col("embedding"), col("cell"), cents).as("embedding"))
 
   /** Residual codebooks for IVF-PQ: [[pqCodebooks]] trained on
-    * [[ivfPqResiduals]] (build-once artifact, same [[savePqBooks]] format).
+    * [[ivfPqResiduals]] (build-once artifact, same [[pqBooksCodec]] format).
     */
   def ivfPqCodebooks(emb: DataFrame, cents: Array[Array[Float]],
       m: Int = 8, kCodes: Int = 16, sampleMod: Int = 1): Array[Array[Array[Float]]] =

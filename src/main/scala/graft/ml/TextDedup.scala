@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Artifacts
+
 /** Deduplication operators for training-data pipelines over the `documents`
   * table: exact (hash groupBy), n-gram Jaccard, MinHash+LSH, SimHash,
   * embedding-cosine near-dup.
@@ -291,25 +293,17 @@ object TextDedup {
     history.select(hash64Col(normalizeCol(col("text"))).as("h"))
       .stat.bloomFilter("h", math.max(expectedHistoryDocs, 1L), fpp)
 
-  /** Persist a [[buildHistoryBloom]] artifact through the Hadoop FS API
-    * (BloomFilter's own binary format), like the IVF centroids.
+  /** A [[buildHistoryBloom]] artifact's format: BloomFilter's own binary
+    * serialization ([[graft.util.Artifacts]]).
     */
-  def saveBloom(spark: SparkSession, path: String,
-      bloom: org.apache.spark.util.sketch.BloomFilter): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try bloom.writeTo(out) finally out.close()
-  }
-
-  /** Load a [[saveBloom]] artifact. */
-  def loadBloom(spark: SparkSession,
-      path: String): org.apache.spark.util.sketch.BloomFilter = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try org.apache.spark.util.sketch.BloomFilter.readFrom(in) finally in.close()
-  }
+  val bloomCodec: Artifacts.Codec[org.apache.spark.util.sketch.BloomFilter] =
+    Artifacts.Codec(
+      bloom => {
+        val out = new java.io.ByteArrayOutputStream()
+        bloom.writeTo(out)
+        out.toByteArray
+      },
+      org.apache.spark.util.sketch.BloomFilter.readFrom(_))
 
   /** DuckDB twin of [[incrementalDedup]]: the bloom is invisible to the
     * result by construction, so the twin is the plain exact anti-join.

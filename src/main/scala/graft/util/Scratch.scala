@@ -15,7 +15,7 @@ import java.nio.file.{Files, Path}
   *     shutdown hook deletes it;
   *   - [[dir]] hands out fresh subdirs of the root.
   *
-  * Train-once artifacts (`graft-<name>-v<N>-…`, see `SparkEntry`) are NOT
+  * Train-once artifacts (`graft-<name>-v<N>-…`, see [[Artifacts]]) are NOT
   * scratch: they are meant to outlive the process and the sweep never
   * touches them.
   */

@@ -68,12 +68,12 @@ class BpeSpec extends AnyFunSuite {
 
   test("merge artifact round-trips the store; a fresh process loads it with zero Spark jobs") {
     SparkEntry.queries("q_bpe_roundtrip")(spark, dir).collect()
-    val artifact = new java.io.File(SparkEntry.bpeArtifactPath(dir, 200))
+    val artifact = new java.io.File(SparkEntry.bpeArtifact.path(dir, "m200"))
     assert(artifact.isFile && artifact.length() > 0,
       s"training must publish the merge artifact at $artifact")
     // fresh-driver simulation: forget the in-process table; the next use
     // must load from the store — a driver-local read, ZERO Spark jobs
-    SparkEntry.clearBpeMemoryCache()
+    graft.util.Artifacts.clearMemory()
     val (loaded, loadEvents) = TestSpark.observe(SparkEntry.bpeMergesFor(spark, dir))
     assert(loadEvents.jobs.isEmpty,
       s"loading the merge artifact must launch no Spark jobs (saw ${loadEvents.jobs.size})")

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ml.{Multimodal, Similarity, TextAnalysis, TextCleaning, TextDedup}
 import graft.sources.DocsAdapter
-import graft.util.Scratch
+import graft.util.{Artifacts, Scratch}
 
 /** Training-data operator tests: dedup family, similarity search, multimodal
   * plumbing. The sf0.001 testdata + deterministic augmentation gives known
@@ -110,12 +110,12 @@ class MlSpec extends AnyFunSuite {
   test("shipped IVF path round-trips the store: fresh process loads the artifact, zero build jobs") {
     // first call in SOME process built + published the artifact
     SparkEntry.queries("q_ann_ivf")(spark, dir).collect()
-    val artifact = new java.io.File(SparkEntry.ivfArtifactPath(dir, 16))
+    val artifact = new java.io.File(SparkEntry.ivfArtifact.path(dir, "c16"))
     assert(artifact.isFile && artifact.length() > 0,
       s"build must publish the quantizer artifact at $artifact")
     // fresh-driver simulation: forget the in-process map; the next serve
     // must LOAD from the store and launch no build-tagged Spark jobs
-    SparkEntry.clearIvfMemoryCache()
+    Artifacts.clearMemory()
     val (rows, serve) = TestSpark.observe(SparkEntry.queries("q_ann_ivf")(spark, dir).collect())
     assert(rows.nonEmpty)
     val descs = serve.jobDescriptions
@@ -127,27 +127,48 @@ class MlSpec extends AnyFunSuite {
     // at 100 TB artifacts live NEXT TO THE DATA, not in /tmp — the base dir
     // must thread through (CLI --artifact-dir / env / setter)
     val base = Scratch.dir("artifacts").toString
-    val saved = SparkEntry.artifactBaseDirOverride
+    val base2 = Scratch.dir("artifacts").toString
+    val saved = Artifacts.artifactBaseDirOverride
     try {
-      SparkEntry.artifactBaseDirOverride = Some(base)
-      SparkEntry.clearIvfMemoryCache()
+      Artifacts.artifactBaseDirOverride = Some(base)
+      // the names are pinned: artifacts already on disk must keep loading
+      val k = java.security.MessageDigest.getInstance("MD5")
+        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      Seq(
+        SparkEntry.ivfArtifact.path(dir, "c16") -> s"graft-ivf-v1-$k-c16.centroids",
+        SparkEntry.bpeArtifact.path(dir, "m200") -> s"graft-bpe-v1-$k-m200.merges",
+        SparkEntry.bloomArtifact.path(dir) -> s"graft-bloom-v1-$k.bloom",
+        SparkEntry.bandIndexArtifact.path(dir) -> s"graft-bands-v1-$k.idx",
+        SparkEntry.pqArtifact.path(dir, "m8", "k16") -> s"graft-pq-v1-$k-m8-k16.books",
+        SparkEntry.ivfPqArtifact.path(dir, "c16", "m8", "k16") ->
+          s"graft-ivfpq-v1-$k-c16-m8-k16.books"
+      ).foreach { case (path, name) => assert(path == s"$base/$name") }
+      Artifacts.clearMemory()
       val built = SparkEntry.ivfCentroidsFor(spark, dir, 16)
-      val artifact = new java.io.File(SparkEntry.ivfArtifactPath(dir, 16))
+      val artifact = new java.io.File(SparkEntry.ivfArtifact.path(dir, "c16"))
       assert(artifact.getParentFile.getAbsolutePath ==
         new java.io.File(base).getAbsolutePath,
         s"artifact must land under the explicit base: $artifact")
       assert(artifact.isFile && artifact.length() > 0)
       // fresh-process simulation: forget the memory map, reload from the
       // explicit dir and serve identical state
-      SparkEntry.clearIvfMemoryCache()
+      Artifacts.clearMemory()
       val loaded = SparkEntry.ivfCentroidsFor(spark, dir, 16)
       assert(loaded.length == built.length &&
         loaded.zip(built).forall { case (a, b) => a.sameElements(b) },
         "explicit-dir artifact must round-trip exactly")
+      // the memo is keyed by path: switching the base mid-process (no
+      // clearMemory) serves and publishes under the new base
+      Artifacts.artifactBaseDirOverride = Some(base2)
+      val rebuilt = SparkEntry.ivfCentroidsFor(spark, dir, 16)
+      val moved = new java.io.File(s"$base2/graft-ivf-v1-$k-c16.centroids")
+      assert(moved.isFile && moved.length() > 0,
+        s"a switched base must publish its own artifact: $moved")
+      assert(rebuilt.zip(built).forall { case (a, b) => a.sameElements(b) })
     } finally {
-      SparkEntry.artifactBaseDirOverride = saved
-      SparkEntry.clearIvfMemoryCache() // drop entries keyed under the temp base
+      Artifacts.artifactBaseDirOverride = saved
       Scratch.deleteRecursively(new java.io.File(base))
+      Scratch.deleteRecursively(new java.io.File(base2))
     }
   }
 
@@ -157,8 +178,8 @@ class MlSpec extends AnyFunSuite {
     val ivfDir = Scratch.dir("ivf")
     try {
       val path = ivfDir.resolve("centroids.txt").toString
-      Similarity.saveCentroids(spark, path, cents)
-      val loaded = Similarity.loadCentroids(spark, path)
+      Similarity.centroidsCodec.write(path, cents)
+      val loaded = Similarity.centroidsCodec.read(path)
       assert(loaded.length == cents.length)
       assert(loaded.zip(cents).forall { case (a, b) => a.sameElements(b) },
         "Float.toString round-trip must be exact")
@@ -502,8 +523,8 @@ class MlSpec extends AnyFunSuite {
       prebuiltIndex = Some(SparkEntry.bandIndexFor(spark, dir)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(viaIdx == incr, "prebuilt index path must equal recompute path")
-    SparkEntry.clearBandIndexMemoryCache()
-    assert(new java.io.File(SparkEntry.bandIndexPath(dir)).isDirectory,
+    Artifacts.clearMemory()
+    assert(new java.io.File(SparkEntry.bandIndexArtifact.path(dir)).isDirectory,
       "band index artifact must persist on disk")
     val cold = TextDedup.incrementalNearDups(batch, history, 0.5,
       prebuiltIndex = Some(SparkEntry.bandIndexFor(spark, dir)))
@@ -599,8 +620,8 @@ class MlSpec extends AnyFunSuite {
     val books = Similarity.pqCodebooks(emb, m = 8, kCodes = 16)
     val path = Scratch.dir("pq")
       .resolve("books.txt").toString
-    Similarity.savePqBooks(spark, path, books)
-    val loaded = Similarity.loadPqBooks(spark, path)
+    Similarity.pqBooksCodec.write(path, books)
+    val loaded = Similarity.pqBooksCodec.read(path)
     assert(loaded.length == books.length)
     for (mi <- books.indices) {
       assert(loaded(mi).length == books(mi).length)
@@ -610,9 +631,9 @@ class MlSpec extends AnyFunSuite {
     // shipped path: q_ann_pq publishes the artifact; a cleared memory map
     // must reload it from disk and serve
     SparkEntry.queries("q_ann_pq")(spark, dir).collect()
-    val artifact = new java.io.File(SparkEntry.pqArtifactPath(dir, 8, 16))
+    val artifact = new java.io.File(SparkEntry.pqArtifact.path(dir, "m8", "k16"))
     assert(artifact.isFile && artifact.length() > 0)
-    SparkEntry.clearPqMemoryCache()
+    Artifacts.clearMemory()
     assert(SparkEntry.queries("q_ann_pq")(spark, dir).collect().nonEmpty)
   }
 
@@ -656,13 +677,12 @@ class MlSpec extends AnyFunSuite {
 
   test("IVFPQ serves from the two artifacts: fresh process, zero build jobs") {
     SparkEntry.queries("q_ann_ivfpq")(spark, dir).collect()
-    val artifact = new java.io.File(SparkEntry.ivfPqArtifactPath(dir, 16, 8, 16))
+    val artifact = new java.io.File(SparkEntry.ivfPqArtifact.path(dir, "c16", "m8", "k16"))
     assert(artifact.isFile && artifact.length() > 0,
       s"build must publish the residual codebooks at $artifact")
     // fresh-driver simulation: forget both in-process maps; the next serve
     // must LOAD centroids + codebooks and launch no build-tagged jobs
-    SparkEntry.clearIvfMemoryCache()
-    SparkEntry.clearIvfPqMemoryCache()
+    Artifacts.clearMemory()
     val (rows, serve) = TestSpark.observe(SparkEntry.queries("q_ann_ivfpq")(spark, dir).collect())
     assert(rows.nonEmpty)
     val descs = serve.jobDescriptions
@@ -1026,8 +1046,8 @@ class MlSpec extends AnyFunSuite {
     val bloom = TextDedup.buildHistoryBloom(hist, 16)
     val path = Scratch.dir("bloom")
       .resolve("hist.bloom").toString
-    TextDedup.saveBloom(spark, path, bloom)
-    val loaded = TextDedup.loadBloom(spark, path)
+    TextDedup.bloomCodec.write(path, bloom)
+    val loaded = TextDedup.bloomCodec.read(path)
     assert(loaded.bitSize == bloom.bitSize && loaded.isCompatible(bloom))
     val kept = TextDedup.incrementalDedup(inc, hist, prebuilt = Some(loaded))
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -1035,10 +1055,10 @@ class MlSpec extends AnyFunSuite {
     // shipped path: the first q_incr_dedup call publishes the artifact; a
     // fresh-driver simulation (cleared memory map) must load it from disk
     SparkEntry.queries("q_incr_dedup")(spark, dir).collect()
-    val artifact = new java.io.File(SparkEntry.bloomArtifactPath(dir))
+    val artifact = new java.io.File(SparkEntry.bloomArtifact.path(dir))
     assert(artifact.isFile && artifact.length() > 0,
       s"q_incr_dedup must publish the bloom artifact at $artifact")
-    SparkEntry.clearBloomMemoryCache()
+    Artifacts.clearMemory()
     assert(SparkEntry.queries("q_incr_dedup")(spark, dir).collect().nonEmpty)
   }
 
