@@ -199,31 +199,10 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     finally sc.clearJobGroup()
   }
 
-  /** Go time.ParseDuration subset: [+-]?(<num><unit>)+ with units
-    * ns, us, ms, s, m, h (Web.go:349 passes relativeTime through it).
-    * Returns millis.
+  /** Go time.ParseDuration ([[QueryEngine.goDurationNanos]]; Web.go:349
+    * passes relativeTime through it), in millis.
     */
-  def parseGoDuration(s: String): Long = {
-    val m = java.util.regex.Pattern
-      .compile("([0-9]*\\.?[0-9]+)(ns|us|µs|ms|s|m|h)").matcher(s)
-    var millis = 0.0
-    var any = false
-    while (m.find()) {
-      any = true
-      val v = m.group(1).toDouble
-      millis += (m.group(2) match {
-        case "ns" => v / 1e6
-        case "us" | "µs" => v / 1e3
-        case "ms" => v
-        case "s" => v * 1000
-        case "m" => v * 60000
-        case "h" => v * 3600000
-      })
-    }
-    if (!any) throw new IllegalArgumentException(s"invalid duration: $s")
-    val sign = if (s.startsWith("-")) -1 else 1
-    sign * millis.round
-  }
+  def parseGoDuration(s: String): Long = (QueryEngine.goDurationNanos(s) / 1e6).round
 
   /** Retention-style duration (plugins/tasks/DeleteOldEventsTask.go:97-129):
     * positive integer + one of s m h d M y (1d=24h, 1M=30d, 1y=365d).

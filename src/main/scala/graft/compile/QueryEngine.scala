@@ -449,12 +449,23 @@ object QueryEngine {
   def newestFirst(frame: Frame): DataFrame =
     frame.df.orderBy(col("ts").desc, col("doc_id"))
 
-  private val goDuration =
-    """([-+]?)((?:\d+(?:\.\d+)?(?:ns|us|µs|ms|s|m|h))+)""".r
-  private val goDurationUnit = """(\d+(?:\.\d+)?)(ns|us|µs|ms|s|m|h)""".r
+  private val goDuration = """[-+]?(?:[0-9]*\.?[0-9]+(?:ns|us|µs|ms|s|m|h))+""".r
+  private val goDurationUnit = """([0-9]*\.?[0-9]+)(ns|us|µs|ms|s|m|h)""".r
   private val unitNanos: Map[String, Double] = Map(
     "ns" -> 1d, "us" -> 1e3, "µs" -> 1e3, "ms" -> 1e6,
     "s" -> 1e9, "m" -> 6e10, "h" -> 3.6e12)
+
+  /** Go `time.ParseDuration` (Web.go:349 passes relativeTime through it):
+    * an optional sign, then one or more `<number><unit>` components that
+    * cover the whole string (units ns, us/µs, ms, s, m, h). Signed nanos;
+    * anything else throws IllegalArgumentException.
+    */
+  def goDurationNanos(s: String): Double = {
+    if (!goDuration.matches(s)) throw new IllegalArgumentException(s"invalid duration: $s")
+    val nanos = goDurationUnit.findAllMatchIn(s)
+      .map(m => m.group(1).toDouble * unitNanos(m.group(2))).sum
+    if (s.startsWith("-")) -nanos else nanos
+  }
 
   /** Parse a search-step time option. Accepted forms mirror what the
     * reference's web layer + dateparse take (Web.go:343-383,
@@ -473,14 +484,7 @@ object QueryEngine {
       .orElse(attempt(java.time.OffsetDateTime.parse(t).toInstant))
       .orElse(attempt(LocalDateTime.parse(t.replace(' ', 'T')).toInstant(ZoneOffset.UTC)))
       .orElse(attempt(LocalDate.parse(t).atStartOfDay.toInstant(ZoneOffset.UTC)))
-      .orElse(t match {
-        case goDuration(sign, units) =>
-          val nanos = goDurationUnit.findAllMatchIn(units)
-            .map(m => m.group(1).toDouble * unitNanos(m.group(2))).sum
-          val signed = if (sign == "-") -nanos else nanos
-          Some(now.plusNanos(signed.toLong))
-        case _ => None
-      })
+      .orElse(attempt(now.plusNanos(goDurationNanos(t).toLong)))
       .map(Timestamp.from)
   }
 }

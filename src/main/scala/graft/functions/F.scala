@@ -32,28 +32,17 @@ object F {
   /** Last-wins map merge (rex merges new fields over existing ones). */
   def map_union(l: Column, r: Column): Column = toCol(MapUnion(toExpr(l), toExpr(r)))
 
-  /** JSON top-level field extraction with Go %f number stringification. */
-  def json_fields(raw: Column, host: Column, source: Column, timeField: String): Column =
-    toCol(JsonToFieldsMap(toExpr(raw), toExpr(host), toExpr(source), timeField, inject = true))
-
   /** JSON extraction without host/source injection (parser unit semantics). */
   def json_extract_map(raw: Column, timeField: String): Column =
     toCol(JsonToFieldsMap(toExpr(raw), nullStr, nullStr, timeField, inject = false))
 
   /** Whole parse-stage extraction with per-source config dispatch (see
-    * ExtractEvent and SourceRules).
+    * ExtractEvent and SourceRules). `raw` is the rendered string or the
+    * tokens payload, which decodes into a reused buffer.
     */
   def extract_event(raw: Column, host: Column, source: Column,
       configs: Seq[graft.model.SourceConfig]): Column =
     toCol(ExtractEvent(toExpr(raw), toExpr(host), toExpr(source), SourceRules(configs)))
-
-  /** [[extract_event]] straight from the tokens payload: decodes (lowercased)
-    * into a reused buffer — two fewer string copies per row on the parse hot
-    * path.
-    */
-  def extract_event_tokens(tokens: Column, host: Column, source: Column,
-      configs: Seq[graft.model.SourceConfig]): Column =
-    extract_event(tokens, host, source, configs)
 
   /** Time-field-only extraction from tokens (see ExtractTimeValue): yields
     * the same string `fields["_time"]` would, without building the map.
@@ -88,9 +77,6 @@ object F {
 
   /** filepath.Match-style glob as an anchored regex (see SourceRules). */
   def globToRegex(glob: String): String = SourceRules.globToRegex(glob)
-
-  /** [[globToRegex]] as a SQL predicate. */
-  def globMatches(c: Column, glob: String): Column = c.rlike(globToRegex(glob))
 
   /** Reference ParseTime (pkg/logsuck/parser/ParseTime.go:24-54): Go layout
     * strings plus UNIX / UNIX_MILLIS / UNIX_DECIMAL_NANOS, as built-in

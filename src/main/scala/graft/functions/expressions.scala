@@ -2,7 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodeGenerator, CodegenContext,
+  EmptyBlock, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -101,6 +103,60 @@ object ExprRuntime {
   val TIME_KEY: UTF8String = UTF8String.fromString("_time")
   val HOST_KEY: UTF8String = UTF8String.fromString("host")
   val SOURCE_KEY: UTF8String = UTF8String.fromString("source")
+}
+
+/** The one codegen bridge of graft's compiled expressions: generated code
+  * calls the Scala method named [[kernel]] on the expression instance (one
+  * reference object) with the children's values in child order, so
+  * whole-stage codegen spans survive. The rule:
+  *   - a null child nulls the result without calling the kernel (Spark's
+  *     `nullSafeCodeGen` shape; no check for a non-nullable child), unless
+  *     its index is in [[nullPassing]]: then the kernel gets
+  *     `isNull ? null : value` (reference-typed children only);
+  *   - a primitive kernel result is assigned as is; a reference result, or
+  *     the boxed form of a primitive `dataType`, is null-checked unless the
+  *     expression is non-nullable.
+  * The interpreted face (`eval` / `nullSafeEval`) stays with each expression.
+  */
+trait KernelCodegen extends Expression {
+  /** Name of the kernel method the generated code calls. */
+  def kernel: String
+  /** Indices of the children handed to the kernel as null instead. */
+  def nullPassing: Set[Int] = Set.empty
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    nullPassing.foreach(i => require(!CodeGenerator.isPrimitiveType(children(i).dataType),
+      s"$nodeName: primitive child $i cannot be passed to $kernel as null"))
+    val method = getClass.getMethods
+      .find(m => m.getName == kernel && m.getParameterCount == children.length && !m.isBridge)
+      .getOrElse(throw new IllegalStateException(s"$nodeName has no kernel method $kernel"))
+    val ref = ctx.addReferenceObj(kernel, this, getClass.getName)
+    val gens = children.map(_.genCode(ctx))
+    val args = children.indices.map { i =>
+      if (nullPassing(i) && children(i).nullable) s"${gens(i).isNull} ? null : ${gens(i).value}"
+      else gens(i).value.toString
+    }
+    val guards = children.indices.filter(i => !nullPassing(i) && children(i).nullable)
+      .map(i => gens(i).isNull.toString)
+    val call = s"$ref.$kernel(${args.mkString(", ")})"
+    val jt = CodeGenerator.javaType(dataType)
+    val childCode = gens.map(_.code).foldLeft(EmptyBlock: Block)(_ + _)
+    if (!nullable) return ev.copy(isNull = FalseLiteral, code = code"""$childCode
+      $jt ${ev.value} = $call;""")
+    val result =
+      if (method.getReturnType.isPrimitive) s"${ev.value} = $call;"
+      else if (CodeGenerator.isPrimitiveType(dataType)) {
+        val boxed = ctx.freshName("boxed")
+        s"""${CodeGenerator.boxedType(dataType)} $boxed = $call;
+          ${ev.isNull} = $boxed == null;
+          if (!${ev.isNull}) ${ev.value} = $boxed.${jt}Value();"""
+      } else s"""${ev.value} = $call;
+          ${ev.isNull} = ${ev.value} == null;"""
+    ev.copy(code = code"""$childCode
+      boolean ${ev.isNull} = ${if (guards.isEmpty) "false" else guards.mkString(" || ")};
+      $jt ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+      ${if (guards.isEmpty) result else s"if (!${ev.isNull}) { $result }"}""")
+  }
 }
 
 /** Reusable flat fields builder: UTF8String keys/values in first-insertion
@@ -370,12 +426,11 @@ final class CompiledExtractor(val original: String) extends Serializable {
 }
 
 /** The (raw, host, source) -> `fields` map shape of the search-time
-  * extraction expressions: one interpreted eval and one codegen'd call into
-  * [[extract]] through a reference object, so whole-stage codegen spans
-  * survive. `extract` gets the raw child's non-null value (a string, or
-  * the tokens array) and returns null for "no map".
+  * extraction expressions: one interpreted eval and the [[KernelCodegen]]
+  * call into [[extract]]. `extract` gets the raw child's non-null value (a
+  * string, or the tokens array) and returns null for "no map".
   */
-trait FieldsExtraction extends TernaryExpression {
+trait FieldsExtraction extends TernaryExpression with KernelCodegen {
   def raw: Expression
   def host: Expression
   def source: Expression
@@ -385,35 +440,14 @@ trait FieldsExtraction extends TernaryExpression {
   override def second: Expression = host
   override def third: Expression = source
   override def dataType: DataType = MapType(StringType, StringType, valueContainsNull = false)
+  override def kernel: String = "extract"
+  override def nullPassing: Set[Int] = Set(1, 2)
 
   override def eval(input: InternalRow): Any = {
     val r = raw.eval(input)
     if (r == null) null
     else extract(r, host.eval(input).asInstanceOf[UTF8String],
       source.eval(input).asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("fieldsExtraction", this, getClass.getName)
-    val rawC = raw.genCode(ctx)
-    val hostC = host.genCode(ctx)
-    val sourceC = source.genCode(ctx)
-    def orNull(e: Expression, c: ExprCode): String =
-      if (e.nullable) s"${c.isNull} ? null : ${c.value}" else c.value.toString
-    ev.copy(code =
-      org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(
-          s"""
-          ${rawC.code}
-          ${hostC.code}
-          ${sourceC.code}
-          org.apache.spark.sql.catalyst.util.MapData ${ev.value} = null;
-          if (!${rawC.isNull}) {
-            ${ev.value} = $ref.extract(${rawC.value},
-              (${orNull(host, hostC)}), (${orNull(source, sourceC)}));
-          }
-          boolean ${ev.isNull} = (${ev.value} == null);
-          """)).code())
   }
 }
 
@@ -457,11 +491,16 @@ case class RegexExtractToMap(
   * field merge (plugins/steps/RexPipelineStep.go:64-68). Unlike Spark's
   * `map_concat` this does not depend on spark.sql.mapKeyDedupPolicy.
   */
-case class MapUnion(left: Expression, right: Expression) extends BinaryExpression {
+case class MapUnion(left: Expression, right: Expression)
+  extends BinaryExpression with KernelCodegen {
   override def dataType: DataType = MapType(StringType, StringType, valueContainsNull = false)
   override def nullable: Boolean = left.nullable && right.nullable
+  override def kernel: String = "doUnion"
+  override def nullPassing: Set[Int] = Set(0, 1)
 
+  /** Null only when both sides are null. */
   def doUnion(l: MapData, r: MapData): MapData = {
+    if (l == null && r == null) return null
     val m = new java.util.LinkedHashMap[UTF8String, UTF8String]()
     def put(d: MapData): Unit = if (d != null) {
       val ks = d.keyArray(); val vs = d.valueArray()
@@ -488,26 +527,6 @@ case class MapUnion(left: Expression, right: Expression) extends BinaryExpressio
     val r = right.eval(input)
     if (l == null && r == null) null
     else doUnion(l.asInstanceOf[MapData], r.asInstanceOf[MapData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("mapUnion", this, classOf[MapUnion].getName)
-    val lC = left.genCode(ctx)
-    val rC = right.genCode(ctx)
-    ev.copy(code =
-      org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(
-          s"""
-          ${lC.code}
-          ${rC.code}
-          boolean ${ev.isNull} = ${lC.isNull} && ${rC.isNull};
-          org.apache.spark.sql.catalyst.util.MapData ${ev.value} = null;
-          if (!${ev.isNull}) {
-            ${ev.value} = $ref.doUnion(
-              ${lC.isNull} ? null : ${lC.value},
-              ${rC.isNull} ? null : ${rC.value});
-          }
-          """)).code())
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): MapUnion =
@@ -600,12 +619,14 @@ case class ExtractTimeValue(
     tokens: Expression,
     source: Expression,
     rules: SourceRules)
-  extends BinaryExpression {
+  extends BinaryExpression with KernelCodegen {
 
   override def left: Expression = tokens
   override def right: Expression = source
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
+  override def kernel: String = "doExtract"
+  override def nullPassing: Set[Int] = Set(1)
 
   @transient private lazy val localOut =
     ThreadLocal.withInitial[Array[String]](() => new Array[String](2))
@@ -640,25 +661,6 @@ case class ExtractTimeValue(
     doExtract(t.asInstanceOf[ArrayData], source.eval(input).asInstanceOf[UTF8String])
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("extractTime", this, classOf[ExtractTimeValue].getName)
-    val tC = tokens.genCode(ctx)
-    val sC = source.genCode(ctx)
-    val srcV = if (source.nullable) s"${sC.isNull} ? null : ${sC.value}" else sC.value.toString
-    ev.copy(code =
-      org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(
-          s"""
-          ${tC.code}
-          ${sC.code}
-          org.apache.spark.unsafe.types.UTF8String ${ev.value} = null;
-          if (!${tC.isNull}) {
-            ${ev.value} = $ref.doExtract(${tC.value}, ($srcV));
-          }
-          boolean ${ev.isNull} = (${ev.value} == null);
-          """)).code())
-  }
-
   override protected def withNewChildrenInternal(l: Expression, r: Expression): ExtractTimeValue =
     copy(tokens = l, source = r)
 }
@@ -673,12 +675,14 @@ case class EventTime(
     timeStr: Expression,
     source: Expression,
     rules: SourceRules)
-  extends BinaryExpression {
+  extends BinaryExpression with KernelCodegen {
 
   override def left: Expression = timeStr
   override def right: Expression = source
   override def dataType: DataType = TimestampType
   override def nullable: Boolean = true
+  override def kernel: String = "doParse"
+  override def nullPassing: Set[Int] = Set(1)
 
   @transient private lazy val layouts: Array[String] = rules.rules.map(_.config.time_layout)
   @transient private lazy val formatters: Array[AnyRef] = layouts.map {
@@ -851,24 +855,6 @@ case class EventTime(
     doParse(v.asInstanceOf[UTF8String], source.eval(input).asInstanceOf[UTF8String])
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("eventTime", this, classOf[EventTime].getName)
-    val vC = timeStr.genCode(ctx)
-    val sC = source.genCode(ctx)
-    val srcV = if (source.nullable) s"${sC.isNull} ? null : ${sC.value}" else sC.value.toString
-    val boxed = ctx.freshName("boxedTs")
-    ev.copy(code =
-      org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(
-          s"""
-          ${vC.code}
-          ${sC.code}
-          java.lang.Long $boxed = ${vC.isNull} ? null : $ref.doParse(${vC.value}, ($srcV));
-          boolean ${ev.isNull} = ($boxed == null);
-          long ${ev.value} = ${ev.isNull} ? 0L : $boxed.longValue();
-          """)).code())
-  }
-
   override protected def withNewChildrenInternal(l: Expression, r: Expression): EventTime =
     copy(timeStr = l, source = r)
 }
@@ -880,30 +866,19 @@ case class EventTime(
   * table's per-source memo, so a row costs one hash probe and no side plan
   * (distinct + join + broadcast) runs to resolve a handful of sources.
   */
-case class ResolveSource(source: Expression, rules: SourceRules) extends UnaryExpression {
+case class ResolveSource(source: Expression, rules: SourceRules)
+  extends UnaryExpression with KernelCodegen {
 
   override def child: Expression = source
   override def dataType: DataType = ResolveSource.schema
   override def nullable: Boolean = false
+  override def kernel: String = "resolve"
+  override def nullPassing: Set[Int] = Set(0)
 
   def resolve(sourceS: UTF8String): InternalRow = rules.resolve(sourceS).row
 
   override def eval(input: InternalRow): Any =
     resolve(source.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("resolveSource", this, classOf[ResolveSource].getName)
-    val sC = source.genCode(ctx)
-    val srcV = if (source.nullable) s"${sC.isNull} ? null : ${sC.value}" else sC.value.toString
-    ev.copy(code =
-      org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(
-          s"""
-          ${sC.code}
-          boolean ${ev.isNull} = false;
-          InternalRow ${ev.value} = $ref.resolve($srcV);
-          """)).code())
-  }
 
   override protected def withNewChildInternal(c: Expression): ResolveSource =
     copy(source = c)

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -23,7 +22,7 @@ import org.apache.spark.sql.types._
   * SQL twin's checked BIGINT arithmetic.
   */
 case class MinHashSig(child: Expression, coefA: Seq[Long], coefB: Seq[Long], mod: Long)
-  extends UnaryExpression {
+  extends UnaryExpression with KernelCodegen {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
 
@@ -52,20 +51,14 @@ case class MinHashSig(child: Expression, coefA: Seq[Long], coefB: Seq[Long], mod
   }
 
   override protected def nullSafeEval(v: Any): Any = doSig(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("minhash", this, classOf[MinHashSig].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = $ref.doSig($c);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-  }
+  override def kernel: String = "doSig"
   override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
 }
 
 /** SimHash over an array<long> of word hashes: bit j of the result is set
   * iff more elements have bit j set than clear (strict majority).
   */
-case class SimHashSig(child: Expression, bits: Int) extends UnaryExpression {
+case class SimHashSig(child: Expression, bits: Int) extends UnaryExpression with KernelCodegen {
   override def dataType: DataType = LongType
 
   def doSig(arr: ArrayData): Long = {
@@ -91,10 +84,7 @@ case class SimHashSig(child: Expression, bits: Int) extends UnaryExpression {
   }
 
   override protected def nullSafeEval(v: Any): Any = doSig(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("simhash", this, classOf[SimHashSig].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.doSig($c)")
-  }
+  override def kernel: String = "doSig"
   override protected def withNewChildInternal(c: Expression): SimHashSig = copy(child = c)
 }
 
@@ -102,7 +92,7 @@ case class SimHashSig(child: Expression, bits: Int) extends UnaryExpression {
   * sum_d v[d] * h(j,d), h from the xor-shift + Lehmer mix (exact int64
   * arithmetic, same as the SQL twin), products folded in index order.
   */
-case class LshSig(child: Expression, bits: Int) extends UnaryExpression {
+case class LshSig(child: Expression, bits: Int) extends UnaryExpression with KernelCodegen {
   override def dataType: DataType = LongType
 
   @inline private def hyper(j: Int, d: Int): Double = {
@@ -130,10 +120,7 @@ case class LshSig(child: Expression, bits: Int) extends UnaryExpression {
   }
 
   override protected def nullSafeEval(v: Any): Any = doSig(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("lshsig", this, classOf[LshSig].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.doSig($c)")
-  }
+  override def kernel: String = "doSig"
   override protected def withNewChildInternal(c: Expression): LshSig = copy(child = c)
 }
 
@@ -189,7 +176,7 @@ object IvfScore {
   * straight from the digest bytes; the composed `conv(substring(md5(s),...))`
   * form allocates a 32-char hex string + parses it per call.
   */
-case class Md5Hash64(child: Expression) extends UnaryExpression {
+case class Md5Hash64(child: Expression) extends UnaryExpression with KernelCodegen {
   override def dataType: DataType = LongType
 
   @transient private lazy val localMd5 =
@@ -209,19 +196,10 @@ case class Md5Hash64(child: Expression) extends UnaryExpression {
 
   override protected def nullSafeEval(v: Any): Any =
     doHash(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("md5h64", this, classOf[Md5Hash64].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.doHash($c)")
-  }
+  override def kernel: String = "doHash"
   override protected def withNewChildInternal(c: Expression): Md5Hash64 = copy(child = c)
 }
 
-/** Cosine similarity of two float arrays in double precision, products and
-  * squares folded in index order — bit-identical to the composed
-  * `aggregate(zip_with(...))` form (which evaluated its lambdas interpreted
-  * per element: the dominant cost of every scored ANN join). Null if the
-  * lengths differ (the zip_with form nulls out there too).
-  */
 /** Unit-normalize an array<float> vector into array<double>: u = v/||v||,
   * accumulating the norm in double. A zero vector normalizes to all-zeros
   * rather than nulls; callers that need unit-norm semantics (the diversity
@@ -229,7 +207,7 @@ case class Md5Hash64(child: Expression) extends UnaryExpression {
   * [[graft.ml.Similarity.diversityByGroup]] filters them in both engines.
   * One pass; feeds aggregates that need Σu per dimension.
   */
-case class VecNormalize(child: Expression) extends UnaryExpression {
+case class VecNormalize(child: Expression) extends UnaryExpression with KernelCodegen {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
   def doNormalize(a: ArrayData): ArrayData = {
@@ -254,14 +232,18 @@ case class VecNormalize(child: Expression) extends UnaryExpression {
   override protected def nullSafeEval(v: Any): Any =
     doNormalize(v.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("vecnorm", this, classOf[VecNormalize].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.doNormalize($c)")
-  }
+  override def kernel: String = "doNormalize"
   override protected def withNewChildInternal(c: Expression): VecNormalize = copy(child = c)
 }
 
-case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
+/** Cosine similarity of two float arrays in double precision, products and
+  * squares folded in index order — bit-identical to the composed
+  * `aggregate(zip_with(...))` form (which evaluated its lambdas interpreted
+  * per element: the dominant cost of every scored ANN join). Null if the
+  * lengths differ (the zip_with form nulls out there too).
+  */
+case class CosineSim(left: Expression, right: Expression)
+  extends BinaryExpression with KernelCodegen {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
@@ -291,23 +273,7 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
     doCosine(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cossim", this, classOf[CosineSim].getName)
-    val lC = left.genCode(ctx)
-    val rC = right.genCode(ctx)
-    val boxed = ctx.freshName("boxedCos")
-    ev.copy(code =
-      org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(
-          s"""
-          ${lC.code}
-          ${rC.code}
-          java.lang.Double $boxed = (${lC.isNull} || ${rC.isNull})
-            ? null : $ref.doCosine(${lC.value}, ${rC.value});
-          boolean ${ev.isNull} = ($boxed == null);
-          double ${ev.value} = ${ev.isNull} ? 0.0 : $boxed.doubleValue();
-          """)).code())
-  }
+  override def kernel: String = "doCosine"
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
     copy(left = l, right = r)
@@ -368,7 +334,7 @@ private[functions] object ShingleRuntime {
   * the transform/slice/array_join lambda chain runs interpreted per
   * element).
   */
-case class ShingleJoin(child: Expression, k: Int) extends UnaryExpression {
+case class ShingleJoin(child: Expression, k: Int) extends UnaryExpression with KernelCodegen {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   def doShingles(words: ArrayData): ArrayData = {
@@ -384,17 +350,15 @@ case class ShingleJoin(child: Expression, k: Int) extends UnaryExpression {
   }
 
   override protected def nullSafeEval(v: Any): Any = doShingles(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shjoin", this, classOf[ShingleJoin].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.doShingles($c)")
-  }
+  override def kernel: String = "doShingles"
   override protected def withNewChildInternal(c: Expression): ShingleJoin = copy(child = c)
 }
 
 /** md5-prefix hashes of the distinct k-word shingles (optionally mod `mod`),
   * one compiled pass from the words array to array<long>.
   */
-case class ShingleHash(child: Expression, k: Int, mod: Long) extends UnaryExpression {
+case class ShingleHash(child: Expression, k: Int, mod: Long)
+  extends UnaryExpression with KernelCodegen {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   def doHashes(words: ArrayData): ArrayData = {
@@ -411,10 +375,7 @@ case class ShingleHash(child: Expression, k: Int, mod: Long) extends UnaryExpres
   }
 
   override protected def nullSafeEval(v: Any): Any = doHashes(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shhash", this, classOf[ShingleHash].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.doHashes($c)")
-  }
+  override def kernel: String = "doHashes"
   override protected def withNewChildInternal(c: Expression): ShingleHash = copy(child = c)
 }
 
@@ -426,7 +387,7 @@ case class ShingleHash(child: Expression, k: Int, mod: Long) extends UnaryExpres
   * array) re-evaluated the whole shingle+md5 pipeline once PER WINDOW
   * (~45x per 50-word doc) and measured 1.3k docs/s at 1M docs.
   */
-case class WinnowFps(child: Expression, k: Int, w: Int) extends UnaryExpression {
+case class WinnowFps(child: Expression, k: Int, w: Int) extends UnaryExpression with KernelCodegen {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   def doFps(words: ArrayData): ArrayData = {
@@ -490,15 +451,12 @@ case class WinnowFps(child: Expression, k: Int, w: Int) extends UnaryExpression 
   }
 
   override protected def nullSafeEval(v: Any): Any = doFps(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("winnow", this, classOf[WinnowFps].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.doFps($c)")
-  }
+  override def kernel: String = "doFps"
   override protected def withNewChildInternal(c: Expression): WinnowFps = copy(child = c)
 }
 
 /** md5-prefix hashes of the distinct words (SimHash input), one pass. */
-case class WordHash(child: Expression) extends UnaryExpression {
+case class WordHash(child: Expression) extends UnaryExpression with KernelCodegen {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   def doHashes(words: ArrayData): ArrayData = {
@@ -514,16 +472,13 @@ case class WordHash(child: Expression) extends UnaryExpression {
   }
 
   override protected def nullSafeEval(v: Any): Any = doHashes(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("wordhash", this, classOf[WordHash].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.doHashes($c)")
-  }
+  override def kernel: String = "doHashes"
   override protected def withNewChildInternal(c: Expression): WordHash = copy(child = c)
 }
 
 /** Nearest-centroid id (argmax rounded cosine, ties -> lowest cid). */
 case class IvfCellExpr(child: Expression, centroids: Array[Array[Float]])
-  extends UnaryExpression {
+  extends UnaryExpression with KernelCodegen {
   override def dataType: DataType = IntegerType
 
   def doCell(arr: ArrayData): Int = {
@@ -538,16 +493,13 @@ case class IvfCellExpr(child: Expression, centroids: Array[Array[Float]])
   }
 
   override protected def nullSafeEval(v: Any): Any = doCell(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfcell", this, classOf[IvfCellExpr].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.doCell($c)")
-  }
+  override def kernel: String = "doCell"
   override protected def withNewChildInternal(c: Expression): IvfCellExpr = copy(child = c)
 }
 
 /** Top-`nProbe` nearest centroid ids, best first (ties -> lowest cid). */
 case class IvfProbesExpr(child: Expression, centroids: Array[Array[Float]], nProbe: Int)
-  extends UnaryExpression {
+  extends UnaryExpression with KernelCodegen {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
   def doProbes(arr: ArrayData): ArrayData = {
@@ -557,10 +509,7 @@ case class IvfProbesExpr(child: Expression, centroids: Array[Array[Float]], nPro
   }
 
   override protected def nullSafeEval(v: Any): Any = doProbes(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfprobes", this, classOf[IvfProbesExpr].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.doProbes($c)")
-  }
+  override def kernel: String = "doProbes"
   override protected def withNewChildInternal(c: Expression): IvfProbesExpr = copy(child = c)
 }
 
@@ -572,7 +521,7 @@ case class IvfProbesExpr(child: Expression, centroids: Array[Array[Float]], nPro
   * binaries.
   */
 case class IvfResidualExpr(left: Expression, right: Expression,
-    centroids: Array[Array[Float]]) extends BinaryExpression {
+    centroids: Array[Array[Float]]) extends BinaryExpression with KernelCodegen {
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
 
   def doResidual(arr: ArrayData, cell: Int): ArrayData = {
@@ -588,10 +537,7 @@ case class IvfResidualExpr(left: Expression, right: Expression,
 
   override protected def nullSafeEval(v: Any, cell: Any): Any =
     doResidual(v.asInstanceOf[ArrayData], cell.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfresid", this, classOf[IvfResidualExpr].getName)
-    defineCodeGen(ctx, ev, (a, b) => s"$ref.doResidual($a, $b)")
-  }
+  override def kernel: String = "doResidual"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): IvfResidualExpr =
     copy(left = l, right = r)
 }
@@ -604,7 +550,7 @@ case class IvfResidualExpr(left: Expression, right: Expression,
   * projection and broke whole-stage codegen's method limit.
   */
 case class PqLutExpr(child: Expression, books: Array[Array[Array[Float]]])
-  extends UnaryExpression {
+  extends UnaryExpression with KernelCodegen {
   override def dataType: DataType =
     ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
 
@@ -636,10 +582,7 @@ case class PqLutExpr(child: Expression, books: Array[Array[Array[Float]]])
   }
 
   override protected def nullSafeEval(v: Any): Any = doLut(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqlut", this, classOf[PqLutExpr].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.doLut($c)")
-  }
+  override def kernel: String = "doLut"
   override protected def withNewChildInternal(c: Expression): PqLutExpr = copy(child = c)
 }
 
@@ -653,7 +596,7 @@ case class PqLutExpr(child: Expression, books: Array[Array[Array[Float]]])
   * task binaries and strained the codegen method limit).
   */
 case class PqCodesExpr(child: Expression, books: Array[Array[Array[Float]]])
-  extends UnaryExpression {
+  extends UnaryExpression with KernelCodegen {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
   def doCodes(arr: ArrayData): ArrayData = {
@@ -688,10 +631,7 @@ case class PqCodesExpr(child: Expression, books: Array[Array[Array[Float]]])
   }
 
   override protected def nullSafeEval(v: Any): Any = doCodes(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqcodes", this, classOf[PqCodesExpr].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.doCodes($c)")
-  }
+  override def kernel: String = "doCodes"
   override protected def withNewChildInternal(c: Expression): PqCodesExpr = copy(child = c)
 }
 
@@ -707,7 +647,7 @@ case class PqCodesExpr(child: Expression, books: Array[Array[Array[Float]]])
   * byte-wise filtering equals the regex's per-code-point replacement.
   * Property-tested equal to the composed form in MlSpec.
   */
-case class NormalizeText(child: Expression) extends UnaryExpression {
+case class NormalizeText(child: Expression) extends UnaryExpression with KernelCodegen {
   // expects a string child — TextDedup.normalizeCol casts its input like
   // lower() used to implicit-cast (AbstractDataType is private[sql], so
   // the coercion lives at the Column wrapper instead of inputTypes)
@@ -738,9 +678,6 @@ case class NormalizeText(child: Expression) extends UnaryExpression {
 
   override protected def nullSafeEval(v: Any): Any =
     doNormalize(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("normtext", this, classOf[NormalizeText].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.doNormalize($c)")
-  }
+  override def kernel: String = "doNormalize"
   override protected def withNewChildInternal(c: Expression): NormalizeText = copy(child = c)
 }

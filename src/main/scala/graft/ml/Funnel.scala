@@ -106,11 +106,12 @@ object Funnel {
     *   - C4 and Gopher verdicts become pass-through COLUMNS on the same
     *     frame (both are map-only), so "quality" is a filter, not two
     *     doc_id joins against re-derived subtrees;
-    *   - chunk dedup carries n_chunks through the posexplode instead of
-    *     joining the pre-split frame back (identical survivor set: a doc
-    *     that loses every chunk has n_kept = 0 < n_chunks/2 and fails
-    *     the survivor predicate either way — only the n_kept=0 rows the
-    *     batch operator reports, which the funnel drops, are elided);
+    *   - chunk dedup is [[TextDedup.chunkDedupKept]]: n_chunks rides the
+    *     posexplode instead of joining the pre-split frame back (identical
+    *     survivor set: a doc that loses every chunk has n_kept = 0 <
+    *     n_chunks/2 and fails the survivor predicate either way — only the
+    *     n_kept=0 rows the batch operator reports, which the funnel drops,
+    *     are elided);
     *   - the LM cutoff is one more observed conditional aggregate over
     *     [[TextAnalysis.lmScore]]'s output (whose (doc,w,cnt) exchange
     *     ReuseExchange already evaluates once).
@@ -125,7 +126,6 @@ object Funnel {
     */
   def curationFunnelOnePass(docs: DataFrame,
       lmCutoff: Double = DefaultLmCutoff): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
     def sig(flag: Column): Column =
       bit_xor(when(flag, TextDedup.hash64Col(col("doc_id").cast("string"))))
@@ -150,24 +150,9 @@ object Funnel {
       .observe(obsQ, n(col("keep_q")).as("n2"), sig(col("keep_q")).as("sig2"))
       .filter(col("keep_q")).select("doc_id", "text")
 
-    // chunk dedup, n_chunks riding the explode (see scaladoc above)
-    val chunkWords = 20
-    val ws = split(TextDedup.normalizeCol(col("text")), " ")
-    val nCh = ceil(size(col("ws")).cast("double") / chunkWords).cast("long")
-    val chunkArr = transform(sequence(lit(0L), nCh - 1),
-      i => concat_ws(" ", slice(col("ws"), (i * chunkWords + 1).cast("int"), lit(chunkWords))))
-    val chunks = quality.withColumn("ws", ws)
-      .select(col("doc_id"), nCh.as("n_chunks"), posexplode(chunkArr).as(Seq("idx", "chunk")))
-    val w = Window.partitionBy(md5(col("chunk"))).orderBy(col("doc_id"), col("idx"))
-    val rebuilt = chunks.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .groupBy("doc_id").agg(
-        first(col("n_chunks")).as("n_chunks"), count(lit(1)).as("n_kept"),
-        concat_ws(" ", transform(
-          array_sort(collect_list(struct(col("idx"), col("chunk")))),
-          x => x.getField("chunk"))).as("text"))
     val obsChunk = Observation()
     val surviveChunk = col("n_kept") * 2 >= col("n_chunks")
-    val chunked = rebuilt
+    val chunked = TextDedup.chunkDedupKept(quality)
       .observe(obsChunk, n(surviveChunk).as("n3"), sig(surviveChunk).as("sig3"))
       .filter(surviveChunk).select("doc_id", "text")
 

@@ -104,28 +104,39 @@ object TextDedup {
     * key domain is documents instead of chunks); the rebuild is one
     * groupBy(doc_id). Never all-pairs, nothing driver-side.
     */
-  def chunkDedup(docs: DataFrame, chunkWords: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val words = docs.select(col("doc_id"),
-      split(normalizeCol(col("text")), " ").as("ws"))
-    val nCh = ceil(size(col("ws")).cast("double") / chunkWords).cast("long")
-    val chunkArr = transform(sequence(lit(0L), nCh - 1),
-      i => concat_ws(" ", slice(col("ws"), (i * chunkWords + 1).cast("int"), lit(chunkWords))))
-    val chunks = words.select(col("doc_id"),
-      posexplode(chunkArr).as(Seq("idx", "chunk")))
-    val w = Window.partitionBy(md5(col("chunk"))).orderBy(col("doc_id"), col("idx"))
-    val kept = chunks.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-    val rebuilt = kept.groupBy("doc_id").agg(
-      count(lit(1)).as("n_kept"),
-      concat_ws(" ", transform(
-        array_sort(collect_list(struct(col("idx"), col("chunk")))),
-        x => x.getField("chunk"))).as("text"))
-    words.select(col("doc_id"), nCh.as("n_chunks"))
-      .join(rebuilt, Seq("doc_id"), "left")
+  def chunkDedup(docs: DataFrame, chunkWords: Int = 20): DataFrame =
+    docs.withColumn("ws", chunkWordsCol)
+      .select(col("doc_id"), chunkCountCol(chunkWords).as("n_chunks"))
+      .join(chunkDedupKept(docs, chunkWords).drop("n_chunks"), Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_chunks"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         coalesce(col("text"), lit("")).as("text"))
+
+  /** [[chunkDedup]] without the docs that keep no chunk: `n_chunks` rides
+    * the posexplode, the keep-first window picks each chunk's survivor, and
+    * the rebuild groups by `doc_id` — no join back to the docs. A caller
+    * that drops docs below a kept share (the curation funnel) gets the same
+    * survivors, since a doc that keeps no chunk has `n_kept = 0`.
+    */
+  def chunkDedupKept(docs: DataFrame, chunkWords: Int = 20): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val nCh = chunkCountCol(chunkWords)
+    val chunkArr = transform(sequence(lit(0L), nCh - 1),
+      i => concat_ws(" ", slice(col("ws"), (i * chunkWords + 1).cast("int"), lit(chunkWords))))
+    val chunks = docs.withColumn("ws", chunkWordsCol)
+      .select(col("doc_id"), nCh.as("n_chunks"), posexplode(chunkArr).as(Seq("idx", "chunk")))
+    val w = Window.partitionBy(md5(col("chunk"))).orderBy(col("doc_id"), col("idx"))
+    chunks.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .groupBy("doc_id").agg(
+        first(col("n_chunks")).as("n_chunks"), count(lit(1)).as("n_kept"),
+        concat_ws(" ", transform(
+          array_sort(collect_list(struct(col("idx"), col("chunk")))),
+          x => x.getField("chunk"))).as("text"))
   }
+
+  private def chunkWordsCol: Column = split(normalizeCol(col("text")), " ")
+  private def chunkCountCol(chunkWords: Int): Column =
+    ceil(size(col("ws")).cast("double") / chunkWords).cast("long")
 
   /** DuckDB twin of [[chunkDedup]]: same normalization, chunk windows,
     * keep-first window, and ordered rebuild.
@@ -432,14 +443,6 @@ object TextDedup {
     docs.withColumn("_xs", shingleHashesCol(col("text")))
       .withColumn("mh", minhashFromHashes(col("_xs")))
       .drop("_xs")
-
-  /** One-expression variant (convenience; prefer [[withMinhash]] in plans). */
-  def minhashCol(text: Column): Column = {
-    val xs = shingleHashesCol(text)
-    array((0 until NUM_HASHES).map { i =>
-      array_min(transform(xs, x => pmod(x * lit(COEF_A(i)) + lit(COEF_B(i)), lit(MOD))))
-    }: _*)
-  }
 
   def minhashSqlExpr(text: String): String = {
     // hash64 is a 60-bit non-negative value, so % == pmod in both engines
@@ -791,10 +794,6 @@ object TextDedup {
     docs.withColumn("_hs", wordHashesCol(col("text")))
       .withColumn("simhash", simhashFromHashes(col("_hs")))
       .drop("_hs")
-
-  /** One-expression variant (prefer [[withSimhash]] in plans). */
-  def simhashCol(text: Column): Column =
-    simhashFromHashes(wordHashesCol(text))
 
   def simhashSqlExpr(text: String): String = {
     val terms = (0 until SIMHASH_BITS).map { j =>

@@ -61,7 +61,7 @@ object LogPipeline {
       // time-only extraction so plans that never touch `fields` (the
       // fan-out write) prune the map build entirely.
       .withColumn("fields",
-        F.extract_event_tokens(col("tokens"), col("host"), col("source"), configs))
+        F.extract_event(col("tokens"), col("host"), col("source"), configs))
       .withColumn("ts", tsColumnTokens(configs))
   }
 

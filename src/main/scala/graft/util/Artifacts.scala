@@ -12,7 +12,8 @@ import java.util.concurrent.{ConcurrentHashMap, CopyOnWriteArrayList}
   * owns everything else:
   *
   *   - the file `graft-<name>-v<version>-<md5(dir)>[-<params>].<ext>` under
-  *     [[baseDir]] ([[Scratch]]'s sweep never touches that family);
+  *     [[baseDir]] ([[Scratch]]'s sweep never touches that family, only a
+  *     dead publisher's `.tmp-<pid>`);
   *   - one publish path for files and directories: build into a pid-tagged
   *     tmp beside the target, then ATOMIC_MOVE, so no reader sees a torn
   *     artifact. A failed build leaves no tmp behind; a failed move onto an

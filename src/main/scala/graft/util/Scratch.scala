@@ -11,13 +11,13 @@ import java.nio.file.{Files, Path}
   *     of staged parquet stalls later timed runs at random — else
   *     `java.io.tmpdir`; decided once per process;
   *   - the root is created on first use, right after [[sweep]] has reclaimed
-  *     what dead processes left behind in both candidate bases, and a single
-  *     shutdown hook deletes it;
+  *     what dead processes left behind in both candidate bases and in
+  *     [[Artifacts.baseDir]], and a single shutdown hook deletes it;
   *   - [[dir]] hands out fresh subdirs of the root.
   *
   * Train-once artifacts (`graft-<name>-v<N>-…`, see [[Artifacts]]) are NOT
   * scratch: they are meant to outlive the process and the sweep never
-  * touches them.
+  * touches them, only the `….tmp-<pid>` a dead publisher left behind.
   */
 object Scratch {
   private[graft] lazy val base: File = {
@@ -27,8 +27,8 @@ object Scratch {
   }
 
   private lazy val root: Path = {
-    sweep(Seq(base, new File(System.getProperty("java.io.tmpdir"))).distinct,
-      System.currentTimeMillis())
+    sweep(Seq(base, new File(System.getProperty("java.io.tmpdir")),
+      new File(Artifacts.baseDir)).distinct, System.currentTimeMillis())
     val r = new File(base, s"graft-scratch-${ProcessHandle.current().pid()}")
     deleteRecursively(r) // left by a dead process whose pid was recycled to us
     Files.createDirectories(r.toPath)
@@ -54,22 +54,28 @@ object Scratch {
   private val Family = "(?:scratch|bench|test|stream-q|ckpt|compact|bucket|spark-local)"
   private val PidTagged = s"^graft-$Family-([0-9]{1,7})(?:-.*)?$$".r
   private val Untagged = s"^graft-$Family(?:-.*)?$$".r
+  // an artifact's publish tmp (file or dir), and the `.crc` sidecar that
+  // Hadoop's local FileSystem wrote beside it before artifacts were
+  // published through java.nio
+  private val ArtifactTmp = """^\.?graft-.+\.tmp-([0-9]{1,7})(?:\.crc)?$""".r
   private val IdleMs = 30L * 60 * 1000
 
-  /** Delete every scratch dir in `bases` whose owner is gone: pid-tagged
-    * dirs once that process has exited, untagged ones (the shared
-    * `graft-spark-local` root of `SPARK_LOCAL_DIRS`, legacy random-suffixed
-    * staging) once nothing below them changed for 30 minutes.
+  /** Delete everything in `bases` whose owner is gone: pid-tagged scratch
+    * dirs and artifact publish tmps once that process has exited, untagged
+    * scratch dirs (the shared `graft-spark-local` root of
+    * `SPARK_LOCAL_DIRS`, legacy random-suffixed staging) once nothing below
+    * them changed for 30 minutes.
     */
   private[graft] def sweep(bases: Seq[File], now: Long): Unit =
     bases.foreach { b =>
-      Option(b.listFiles((f: File) => f.isDirectory && stale(f, now)))
+      Option(b.listFiles((f: File) => stale(f, now)))
         .getOrElse(Array.empty[File]).foreach(deleteRecursively)
     }
 
   private def stale(f: File, now: Long): Boolean = f.getName match {
-    case PidTagged(pid) => ProcessHandle.of(pid.toLong).isEmpty
-    case Untagged() => now - newestMtime(f) > IdleMs
+    case ArtifactTmp(pid) => ProcessHandle.of(pid.toLong).isEmpty
+    case PidTagged(pid) => f.isDirectory && ProcessHandle.of(pid.toLong).isEmpty
+    case Untagged() => f.isDirectory && now - newestMtime(f) > IdleMs
     case _ => false
   }
 

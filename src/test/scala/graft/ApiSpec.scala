@@ -272,6 +272,12 @@ class ApiSpec extends AnyFunSuite {
     assert(api.parseGoDuration("1h30m") == 5400000L)
     assert(api.parseGoDuration("100ms") == 100L)
     intercept[IllegalArgumentException] { api.parseGoDuration("nonsense") }
+    // the whole string must be sign + number-unit pairs, as in Go
+    Seq("10min", "-15minutes", "5s junk").foreach { bad =>
+      intercept[IllegalArgumentException] { api.parseGoDuration(bad) }
+    }
+    assert(api.parseGoDuration(".5h") == 1800000L)
+    assert(api.parseGoDuration("1.5h") == 5400000L)
     // relativeTime filters events to [now+d, inf)
     val now = Instant.parse("2024-01-04T00:00:00Z")
     val job = api.startJob("", relativeTime = Some("-24h"), now = now)

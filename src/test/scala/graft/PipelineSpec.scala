@@ -146,7 +146,7 @@ class PipelineSpec extends AnyFunSuite {
     // rendered raw and over the tokens gives the same map as `fields`
     val parsed = enriched.select(col("source"), col("fields"), col("ts"),
       F.extract_event(col("raw"), col("host"), col("source"), configs),
-      F.extract_event_tokens(col("tokens"), col("host"), col("source"), configs)).collect()
+      F.extract_event(col("tokens"), col("host"), col("source"), configs)).collect()
     assert(parsed.length == 24)
     parsed.foreach { r =>
       val src = r.getString(0)

@@ -69,11 +69,20 @@ class ScratchSpec extends AnyFunSuite {
     // train-once artifacts outlive processes by design, however old
     val artifact = "graft-bands-v1-a1e8d12c19f219451c9c328c515afd62.idx"
     val other = "graft-notes"
-    val b = base(legacy ++ Seq(live, artifact, other): _*)
+    // publish tmps (files or dirs) and the hidden Hadoop `.crc` sidecars:
+    // reclaimed once their pid is gone, a live publisher's tmp kept
+    val deadTmps = Seq(s"$artifact.tmp-$deadPid",
+      s"graft-bloom-v1-a1e8d12c19f219451c9c328c515afd62.bloom.tmp-$deadPid",
+      s".graft-ivf-v1-a1e8d12c19f219451c9c328c515afd62-c16.centroids.tmp-$deadPid.crc")
+    val liveTmp = s"graft-pq-v1-a1e8d12c19f219451c9c328c515afd62-m8-k16.books.tmp-$ownPid"
+    val fileArtifact = "graft-bloom-v1-a1e8d12c19f219451c9c328c515afd62.bloom"
+    val b = base(legacy ++ Seq(live, artifact, other, deadTmps.head): _*)
+    (deadTmps.tail :+ liveTmp :+ fileArtifact).foreach(n => assert(new File(b, n).createNewFile()))
     age(b, artifact, 24L * 3600 * 1000)
     age(b, other, 24L * 3600 * 1000)
+    age(b, fileArtifact, 24L * 3600 * 1000)
     Scratch.sweep(Seq(b), now)
-    assert(left(b) == Set(live, artifact, other))
+    assert(left(b) == Set(live, artifact, other, liveTmp, fileArtifact))
   }
 
   test("dir() hands out fresh dirs under this process's pid-tagged root") {
