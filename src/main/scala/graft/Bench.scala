@@ -197,7 +197,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // default: the cpus this process may run on (the affinity mask)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val pipelineRows = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROWS", "1000000").toLong
     val doScaling = sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") == "1"
 

@@ -62,8 +62,12 @@ import graft.compile.{EventsFrame, TableFrame}
   * and rows are rendered to JSON by Spark's codegen'd `toJSON`, so the
   * driver-side handler only stitches collected page-sized strings. The
   * job itself is "pumped" in the background on start (the reference's
-  * job engine pump, internal/jobs/Engine.go:84-174): stats are being
-  * computed while a client polls, and abort cancels the running stages.
+  * job engine pump, internal/jobs/Engine.go:84-174; [[JobsApi.pump]]): a
+  * newest-first events job first renders its head, the first rows in one
+  * top-k job, so its first page is served before the full sort; then its
+  * page index with the rendered results, and its stats, run as two
+  * overlapping pump tasks while a client pages and polls. Abort cancels
+  * the running stages; a failed query is logged once and ends aborted.
   */
 final class HttpApi(api: JobsApi,
     configPath: Option[Path] = None,
@@ -79,7 +83,8 @@ final class HttpApi(api: JobsApi,
   // first-action materializations, all competing for the cluster. Excess
   // pumps queue; their jobs still answer polls (state=running, progress 0)
   // and their first page/stats request computes inline if it arrives
-  // before the pump gets a slot (the lazy val is exactly-once either way).
+  // before the pump gets a slot (each of a job's values is computed once
+  // either way).
   private val httpPool = Executors.newFixedThreadPool(8)
   private val pumpPool = Executors.newFixedThreadPool(4)
   // periodic job-TTL sweep for long-lived --serve processes: finished and
@@ -176,13 +181,23 @@ final class HttpApi(api: JobsApi,
           startTime = q.get("startTime").map(rfc3339),
           endTime = q.get("endTime").map(rfc3339))
     }
-    // the pump (Engine.go:84-174): materialize results + stats in the
-    // background so clients can poll jobStats / estimatedProgress; an
-    // abort cancels these stages and the failure dies here, not in a
-    // request thread
-    pumpPool.submit(new Runnable {
-      def run(): Unit = try api.jobStats(job.id): Unit catch { case _: Throwable => () }
-    }): Unit
+    // the pump (Engine.go:84-174, JobsApi.pump): the job's head, then its
+    // page index and its stats as two overlapping pump tasks, so clients
+    // can page and poll jobStats / estimatedProgress meanwhile. An abort
+    // cancels these stages and the cancellation dies here, not in a
+    // request thread; any other failure is logged once, by the chain that
+    // hit it (the job is aborted by then).
+    def pumped(chain: => Unit): Runnable = () =>
+      try chain catch { case e: Throwable =>
+        if (!JobsApi.isCancellation(e)) System.err.println(
+          s"[graft] job ${job.id} failed (query: ${job.query}): ${HttpApi.oneLine(e)}")
+      }
+    // a stopped server rejects the forked chain; the stats chain then
+    // builds the page index itself
+    def fork(chain: () => Unit): Unit =
+      try pumpPool.submit(pumped(chain())): Unit
+      catch { case _: java.util.concurrent.RejectedExecutionException => () }
+    pumpPool.submit(pumped(api.pump(job.id)(fork))): Unit
     sendJson(ex, 200, mapper.writeValueAsString(job.id))
   }
 
@@ -394,6 +409,13 @@ object HttpApi {
     * `take`.
     */
   private[api] val FieldStatsMaxValues = 10000
+
+  /** An exception as one log line: its class and the first line of its
+    * message (a Spark job failure's message carries the task's stack).
+    */
+  private[api] def oneLine(e: Throwable): String =
+    e.getClass.getName + Option(e.getMessage)
+      .flatMap(_.linesIterator.nextOption()).fold("")(": " + _)
 
   /** JobsApi state string -> the reference's numeric enum
     * (pkg/logsuck/jobs/Job.go:26-30).

@@ -5,6 +5,7 @@ import java.time.Instant
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.compile.{EventsFrame, Frame, QueryEngine, TableFrame}
 
@@ -18,17 +19,29 @@ import graft.compile.{EventsFrame, Frame, QueryEngine, TableFrame}
   * one-time sort (exactly like the reference's insert-sorted store);
   * [[releaseJob]] is the eviction valve for long-lived processes.
   *
+  * A newest-first (timestampDesc) events job does not make its first page
+  * wait for that sort. The reference drains each storage page into its job
+  * store while the scan runs (internal/jobs/Engine.go:98-161), so its first
+  * page is ready early; here the job pins its compiled match set once, and
+  * one top-k job over it renders the first [[JobsApi.HeadRows]] rows (the
+  * job's head) while filling that cache. The sort, the page index, the
+  * render and the field stats then read the pinned match set, so the store
+  * is scanned once per search; [[pump]] orders that work.
+  *
   * Lifecycle mirrors pkg/logsuck/jobs/Job.go:24-40 (Running/Finished/
   * Aborted) and internal/jobs/Engine.go:84-174 (Abort cancels the running
   * work): every action for job N runs under Spark job group `graft-job-N`
   * with interruptOnCancel, and abortJob cancels that group — in-flight
-  * stages stop, not just the bookkeeping entry.
+  * stages stop, not just the bookkeeping entry. A query that fails ends
+  * its job as aborted too (the reference's state enum has no failed
+  * value), so a failed job reaches a terminal state and ages out.
   */
 class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     jobTtlMillis: Option[Long] = None) {
 
   final class Job private[JobsApi] (val id: Long, val query: String,
-      val frame: Frame, val sortMode: String, val columnOrder: Seq[String]) {
+      val frame: Frame, val sortMode: String, val columnOrder: Seq[String],
+      private[JobsApi] val hasHead: Boolean) {
     @volatile private[JobsApi] var stateRef: String = JobsApi.Running
     def state: String = stateRef
 
@@ -38,10 +51,57 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       * design only until it finishes, after which the TTL clock runs.
       */
     @volatile private[JobsApi] var terminalAtMs: Long = 0L
-    private[JobsApi] def markTerminal(state: String): Unit = {
-      stateRef = state
-      if (terminalAtMs == 0L) terminalAtMs = System.currentTimeMillis()
+    /** Running -> `state`; false (and no change) when the job already left
+      * Running, so of two racing transitions exactly one wins.
+      */
+    private[JobsApi] def markTerminal(state: String): Boolean = synchronized {
+      if (stateRef != JobsApi.Running) false
+      else {
+        stateRef = state
+        terminalAtMs = System.currentTimeMillis()
+        true
+      }
     }
+
+    /** A value this job computes at most once, under a lock of its own.
+      * Not a `lazy val`: those all lock the Job, so one long computation
+      * (the sort behind [[partStarts]]) would stall every other thread
+      * that wants an unrelated value ([[head]], [[fieldStatsCached]]). A
+      * failed computation leaves the cell empty; an aborted job computes
+      * nothing more, so a chain still running after an abort or a failure
+      * stops at its next cell instead of re-running the query.
+      */
+    private[JobsApi] final class Once[A](compute: => A) {
+      @volatile private var value: Option[A] = None
+      def isDone: Boolean = value.isDefined
+      def get: A = value.getOrElse(synchronized {
+        if (value.isEmpty) {
+          if (stateRef == JobsApi.Aborted) throw JobsApi.JobAbortedException(id)
+          value = Some(compute)
+        }
+        value.get
+      })
+    }
+
+    /** The compiled match set of a timestampDesc events job, pinned once
+      * (memory, spilling to disk). Its first scan is the [[head]] job, so
+      * the store is read once per search: [[results]] and
+      * [[fieldStatsCached]] read this cache, and [[releaseMatches]] drops
+      * it once both of them are pinned.
+      */
+    private[JobsApi] val matches: Once[DataFrame] =
+      new Once(track(frame.df.persist(StorageLevel.MEMORY_AND_DISK)))
+
+    /** The first [[JobsApi.HeadRows]] rows of a timestampDesc events job as
+      * their wire JSON: one top-k job (`TakeOrderedAndProject`, no range
+      * sample, no global sort) over [[matches]], which fills the match
+      * cache as it scans. Same rows, same order `(ts DESC, doc_id)` and
+      * same `eventsWire(..).toJSON` render as [[wireJsonLocal]], so a page
+      * sliced from it is byte-identical to the pinned page.
+      */
+    private[JobsApi] val head: Once[Array[String]] = new Once(
+      JobsApi.eventsWire(QueryEngine.newestFirst(EventsFrame(matches.get))
+        .limit(JobsApi.HeadRows)).toJSON.collect())
 
     /** Persisted-results analog of the reference's per-job results store
       * (plugins/sqlite_jobs/SqliteJobRepository.go:34-49,99-186 persists
@@ -49,36 +109,48 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       * ORDERED result materializes once into executor block storage
       * (memory, spilling to disk) on the job's first stats/results action;
       * every later page, stat, and field-stat reads the cache instead of
-      * re-running the compiled query + sort. lazy val = exactly-once under
-      * concurrent first actions.
+      * re-running the compiled query + sort. A timestampDesc events job
+      * sorts its pinned [[matches]], not the store.
       */
-    private[JobsApi] lazy val results: DataFrame = {
+    private[JobsApi] val results: Once[DataFrame] = new Once({
       val ordered = frame match {
         case TableFrame(df, _) => df
         case f: EventsFrame if sortMode == "preserveArgOrder" => f.df
+        case _ if hasHead => QueryEngine.newestFirst(EventsFrame(matches.get))
         case f: EventsFrame => QueryEngine.newestFirst(f)
       }
-      track(ordered.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
+      track(ordered.persist(StorageLevel.MEMORY_AND_DISK))
+    })
 
     /** The cached results re-wrapped as a Frame (same shape as `frame`) so
       * the engine's aggregate operators run over the persisted rows.
       */
     private[JobsApi] def resultsFrame: Frame = frame match {
-      case TableFrame(_, order) => TableFrame(results, order)
-      case _: EventsFrame => EventsFrame(results)
+      case TableFrame(_, order) => TableFrame(results.get, order)
+      case _: EventsFrame => EventsFrame(results.get)
     }
 
     /** JobFieldValues analog: the (key, value, occurrences) aggregate,
-      * computed over the persisted results and itself persisted on first
-      * use — jobFieldStats for different fields then only filters it.
-      * An imported job serves the aggregate written at export time instead
-      * of recomputing it.
+      * persisted on first use — jobFieldStats for different fields then
+      * only filters it. A timestampDesc events job aggregates its pinned
+      * [[matches]] (the same rows as its results; the aggregate is
+      * order-free), so the stats need not wait for the sort; other jobs
+      * aggregate their persisted results. An imported job serves the
+      * aggregate written at export time instead of recomputing it.
       */
     private[JobsApi] var fieldStatsOverride: Option[DataFrame] = None
-    private[JobsApi] lazy val fieldStatsCached: DataFrame =
-      track(fieldStatsOverride.getOrElse(engine.fieldStats(resultsFrame))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    private[JobsApi] val fieldStatsCached: Once[DataFrame] = new Once(
+      track(fieldStatsOverride.getOrElse(engine.fieldStats(
+        if (hasHead) EventsFrame(matches.get) else resultsFrame))
+        .persist(StorageLevel.MEMORY_AND_DISK)))
+
+    /** A2 of jobStats: distinct values per field key, folded from the
+      * persisted [[fieldStatsCached]] aggregate once — a client polling
+      * jobStats while the job runs waits for this one pass.
+      */
+    private[JobsApi] val fieldCounts: Once[Map[String, Long]] = new Once(
+      fieldStatsCached.get.groupBy(col("key")).agg(count(lit(1)).as("n_values"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
 
     /** Partition-offset index over the pinned results cache: prefix row
       * starts per cached partition, built in ONE narrow pass with the
@@ -88,10 +160,10 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       * skipped prefix through a single-partition exchange on EVERY page),
       * no scan of partitions before or after the page. The matched-event
       * count is the index's last entry, so the pass doubles as the
-      * jobStats count. lazy val = exactly-once, like `results`.
+      * jobStats count. Once it is built, the results are pinned.
       */
-    private[JobsApi] lazy val partStarts: Array[Long] = {
-      val counts = results.rdd
+    private[JobsApi] val partStarts: Once[Array[Long]] = new Once({
+      val counts = results.get.rdd
         .mapPartitionsWithIndex((i, it) => Iterator((i, {
           var n = 0L
           while (it.hasNext) { it.next(); n += 1 }
@@ -99,7 +171,7 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
         })))
         .collect().sortBy(_._1).map(_._2)
       counts.scanLeft(0L)(_ + _)
-    }
+    })
 
     /** First (ts, doc_id) key per cached partition — the range bounds of
       * the newest-first sort, one narrow pass, built lazily on the first
@@ -110,62 +182,71 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       * deep keyset page O(prefix) like OFFSET. Only meaningful for
       * timestampDesc jobs (the only mode with the total key).
       */
-    private[JobsApi] lazy val partFirstKeys: Array[Option[(java.time.LocalDateTime, String)]] = {
-      val schema = results.schema
-      val tsIdx = schema.fieldIndex("ts")
-      val didIdx = schema.fieldIndex("doc_id")
-      results.rdd.mapPartitionsWithIndex((i, it) =>
-        Iterator((i, if (it.hasNext) {
-          val r = it.next()
-          Some((JobsApi.rowLdt(r.get(tsIdx)), r.getString(didIdx)))
-        } else None)))
-        .collect().sortBy(_._1).map(_._2)
-    }
+    private[JobsApi] val partFirstKeys: Once[Array[Option[(java.time.LocalDateTime, String)]]] =
+      new Once({
+        val r = results.get
+        val tsIdx = r.schema.fieldIndex("ts")
+        val didIdx = r.schema.fieldIndex("doc_id")
+        r.rdd.mapPartitionsWithIndex((i, it) =>
+          Iterator((i, if (it.hasNext) {
+            val row = it.next()
+            Some((JobsApi.rowLdt(row.get(tsIdx)), row.getString(didIdx)))
+          } else None)))
+          .collect().sortBy(_._1).map(_._2)
+      })
 
     /** The events wire JSON (reference EventWithExtractedFields keys,
-      * pkg/logsuck/events/Event.go:46-54) rendered ONCE per job and pinned:
-      * one narrow map pass over the persisted results (same partitioning,
-      * so [[partStarts]] slices apply verbatim). Serving a page is then a
-      * partition-pruned RDD job over cached strings — the previous
-      * per-page path built a fresh DataFrame + analysis + codegen for
-      * EVERY page (40+ pages per exhaustive client), which dominated the
-      * HTTP serving wall (guide §1.2: don't re-plan per request).
+      * pkg/logsuck/events/Event.go:46-54) of a LARGE result, rendered once
+      * per job and pinned: one narrow map pass over the persisted results
+      * (same partitioning, so [[partStarts]] slices apply verbatim).
+      * Serving a page is then a partition-pruned RDD job over cached
+      * strings, not a fresh DataFrame + analysis + codegen per page.
       * Events frames only (tables keep the per-page DataFrame path).
       */
-    private[JobsApi] lazy val wireJsonRdd: org.apache.spark.rdd.RDD[String] = {
-      val r = JobsApi.eventsWire(results).toJSON.rdd
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    private[JobsApi] val wireJsonRdd: Once[org.apache.spark.rdd.RDD[String]] = new Once({
+      val r = JobsApi.eventsWire(results.get).toJSON.rdd
+        .persist(StorageLevel.MEMORY_AND_DISK)
       persistedRdds.add(r)
       r
-    }
+    })
 
     /** Driver-held page cache for SMALL results: when the whole result is
-      * at most [[JobsApi.LocalPageCacheMaxRows]] rows, the rendered wire
-      * JSON collects once and every page is an in-memory array slice —
-      * zero Spark jobs per page (the reference serves pages straight from
-      * its job-results table the same way). Bounded by the row threshold
-      * so a huge result keeps the executor-side partition-pruned path; the
-      * strings are the same [[wireJsonRdd]] output, so the wire bytes are
-      * identical either way.
+      * at most [[JobsApi.LocalPageCacheMaxRows]] rows, the wire JSON is
+      * rendered once straight into the driver (no executor copy is kept,
+      * none would be read again) and every page is an in-memory array
+      * slice — zero Spark jobs per page (the reference serves pages
+      * straight from its job-results table the same way). Bigger results
+      * keep the executor-side partition-pruned [[wireJsonRdd]]; both
+      * render the same rows through the same `toJSON`, so the wire bytes
+      * are identical either way.
       */
-    private[JobsApi] lazy val wireJsonLocal: Option[Array[String]] =
-      if (partStarts.last <= JobsApi.LocalPageCacheMaxRows)
-        Some(wireJsonRdd.collect())
-      else None
+    private[JobsApi] val wireJsonLocal: Once[Option[Array[String]]] = new Once(
+      if (partStarts.get.last <= JobsApi.LocalPageCacheMaxRows)
+        Some(JobsApi.eventsWire(results.get).toJSON.collect())
+      else None)
 
     // memoized jobStats — the second stats call launches zero Spark jobs
     @volatile private[JobsApi] var statsCache: JobStats = null
 
     // every frame this job actually persisted, in materialization order —
-    // unpersistAll drops exactly these (touching the lazy vals there would
-    // BUILD unmaterialized plans just to unpersist them, and a flag on one
-    // lazy val alone would miss a cache the other one created, e.g. an
-    // imported job that only ever materialized fieldStatsCached)
+    // unpersistAll drops exactly these (an unmaterialized cell is never
+    // built just to be unpersisted, and a cache any cell created is never
+    // missed, e.g. an imported job that only materialized fieldStatsCached)
     private val persistedFrames =
       new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
     private val persistedRdds =
       new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
     private def track(df: DataFrame): DataFrame = { persistedFrames.add(df); df }
+
+    /** Drop the pinned match set; called once [[results]] (with their
+      * page index) and the field-stats aggregate are pinned. Nothing reads
+      * it after that, and Spark keeps a loaded dependent cache when the
+      * cache it was built from goes, so the job holds no more cached data
+      * than its results and stats.
+      */
+    private[JobsApi] def releaseMatches(): Unit =
+      if (matches.isDone && persistedFrames.remove(matches.get))
+        matches.get.unpersist(blocking = false): Unit
 
     /** Drop every cached artifact of this job. */
     private[JobsApi] def unpersistAll(): Unit = {
@@ -186,18 +267,31 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
   private def groupId(id: Long) = s"graft-job-$id"
 
   /** Run a Spark action on behalf of a job: tagged with the job's group (so
-    * abort can cancel it); a cancellation surfaces as state=aborted.
+    * abort can cancel it). Any failure of a running job — a cancellation or
+    * an error in the query itself — ends it as aborted (the reference's
+    * wire enum has no failed state): its other in-flight stages are
+    * cancelled, its caches dropped, and later calls answer from the state
+    * without running the failing query again.
     */
   private def withJobGroup[A](job: Job)(body: => A): A = {
     sc.setJobGroup(groupId(job.id), s"graft query: ${job.query}", interruptOnCancel = true)
     try body
     catch { case e: Throwable =>
-      if (job.stateRef == JobsApi.Running && JobsApi.isCancellation(e))
-        job.markTerminal(JobsApi.Aborted)
+      abort(job)
       throw e
     }
     finally sc.clearJobGroup()
   }
+
+  /** Move a running job to Aborted: cancel its group's stages and drop its
+    * partially cached artifacts. A job that already left Running is left
+    * as it is.
+    */
+  private def abort(job: Job): Unit =
+    if (job.markTerminal(JobsApi.Aborted)) {
+      sc.cancelJobGroup(groupId(job.id))
+      job.unpersistAll()
+    }
 
   /** Go time.ParseDuration ([[QueryEngine.goDurationNanos]]; Web.go:349
     * passes relativeTime through it), in millis.
@@ -262,9 +356,29 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
           else "timestampDesc"
         (mode, Seq.empty)
     }
-    val job = new Job(id, query, frame, sortMode, cols)
+    val job = new Job(id, query, frame, sortMode, cols,
+      hasHead = sortMode == "timestampDesc")
     jobs.put(job.id, job)
     job
+  }
+
+  /** The work a started job does before any client asks for it (the
+    * reference's pump, internal/jobs/Engine.go:84-174). A timestampDesc
+    * events job first renders its [[Job#head]] — one top-k job that pins
+    * the match set as it scans — so its first page is ready after one
+    * pass. Then two chains overlap: `fork` runs the page index plus the
+    * rendered wire JSON, while this thread runs [[jobStats]] (the field
+    * stats over the match set, then the count from the page index). Other
+    * jobs run [[jobStats]] alone. Failures end the job as aborted (see
+    * [[withJobGroup]]) and are rethrown to the caller of each chain.
+    */
+  def pump(id: Long)(fork: (() => Unit) => Unit): Unit = {
+    val job = jobOrThrow(id)
+    if (job.hasHead) {
+      withJobGroup(job)(job.head.get): Unit
+      fork(() => withJobGroup(job) { job.partStarts.get; job.wireJsonLocal.get }: Unit)
+    }
+    jobStats(id): Unit
   }
 
   /** Abort (Engine.go:157-174 + Web.go abortJob): cancels the job's Spark
@@ -276,11 +390,7 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
   def abortJob(id: Long): Boolean = {
     val job = jobs.get(id)
     if (job == null) return false
-    sc.cancelJobGroup(groupId(id))
-    if (job.stateRef == JobsApi.Running) {
-      job.markTerminal(JobsApi.Aborted)
-      job.unpersistAll() // free partially-cached result blocks
-    }
+    abort(job)
     true
   }
 
@@ -351,8 +461,9 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
 
   /** jobStats (Web.go:192-218): state + A3 matched count + A2 distinct-value
     * count per field key. A job whose full stats pass completed is Finished
-    * (the lazy-frame analog of the reference's pump draining); an aborted
-    * job reports aborted without touching the cluster again.
+    * (the lazy-frame analog of the reference's pump draining): its stats
+    * are done and its results are pinned. An aborted job (cancelled, or
+    * failed) reports aborted without touching the cluster again.
     */
   def jobStats(id: Long): JobStats = {
     val job = jobOrThrow(id)
@@ -361,19 +472,22 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     val cached = job.statsCache
     if (cached != null) return cached // memoized: zero Spark jobs
     withJobGroup(job) {
-      // both actions read the persisted results (first action materializes
-      // them), so the count and the occurrence agg never re-run the
-      // compiled query — the count is the partition index's last prefix
-      // entry (one pass builds both), and the distinct-value agg folds the
-      // already persisted fieldStats aggregate
-      val n = job.partStarts.last
-      val occ = job.fieldStatsCached
-        .groupBy(col("key")).agg(count(lit(1)).as("n_values")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (job.stateRef == JobsApi.Running) job.markTerminal(JobsApi.Finished)
-      val stats = JobStats(job.stateRef, n, occ)
-      job.statsCache = stats
-      stats
+      // neither action re-runs the compiled query: the count is the page
+      // index's last prefix entry (one pass over the persisted results
+      // builds both), and the distinct-value agg folds the persisted
+      // fieldStats aggregate. A job with a head aggregates its match set,
+      // so its field stats go first, while the page index is being built
+      // on the pump's other chain; other jobs aggregate their results, so
+      // the pass that pins them goes first.
+      val occFirst = if (job.hasHead) Some(job.fieldCounts.get) else None
+      val n = job.partStarts.get.last
+      val occ = occFirst.getOrElse(job.fieldCounts.get)
+      job.releaseMatches()
+      if (job.markTerminal(JobsApi.Finished) || job.stateRef == JobsApi.Finished) {
+        val stats = JobStats(JobsApi.Finished, n, occ)
+        job.statsCache = stats
+        stats
+      } else JobStats(JobsApi.Aborted, 0, Map.empty)
     }
   }
 
@@ -393,39 +507,45 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
   def jobResults(id: Long, skip: Int, take: Int): DataFrame = {
     val job = jobOrThrow(id)
     require(skip >= 0 && take >= 0, s"skip/take must be non-negative ($skip, $take)")
-    val starts = withJobGroup(job)(job.partStarts) // may materialize the store
-    val spark = job.results.sparkSession
-    val schema = job.results.schema
+    val starts = withJobGroup(job)(job.partStarts.get) // may materialize the store
+    val results = job.results.get
+    val spark = results.sparkSession
     val lo = skip.toLong
     val hi = lo + take
     if (take == 0 || lo >= starts.last) {
       spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], results.schema)
     } else {
-      spark.createDataFrame(JobsApi.slicePage(job.results.rdd, starts, lo, hi), schema)
+      spark.createDataFrame(JobsApi.slicePage(results.rdd, starts, lo, hi), results.schema)
     }
   }
 
   /** [[jobResults]] for the HTTP events wire: the page's rows as their
-    * final JSON strings, sliced positionally from the job's pinned
-    * [[Job#wireJsonRdd]] — a one-stage partition-pruned job over cached
-    * strings, with no per-page DataFrame/plan/codegen. Same ordering and
-    * page boundaries as [[jobResults]] (the JSON cache is a narrow map of
-    * the persisted results, partition counts unchanged).
+    * final JSON strings, with the same ordering and page boundaries as
+    * [[jobResults]]. While a job with a head has not pinned its results,
+    * a page within the first [[JobsApi.HeadRows]] rows is a slice of
+    * [[Job#head]] (one top-k job, shared with the pump). Otherwise the
+    * page comes from the rendered results: an in-memory slice of
+    * [[Job#wireJsonLocal]] for a small result, else a one-stage
+    * partition-pruned job over the cached [[Job#wireJsonRdd]] strings
+    * (a narrow map of the persisted results, partition counts unchanged)
+    * — never a per-page DataFrame/plan/codegen.
     */
   def jobResultsWireJson(id: Long, skip: Int, take: Int): Array[String] = {
     val job = jobOrThrow(id)
     require(skip >= 0 && take >= 0, s"skip/take must be non-negative ($skip, $take)")
+    val lo = skip.toLong
+    val hi = lo + take
     withJobGroup(job) {
-      val starts = job.partStarts // may materialize the store
-      val lo = skip.toLong
-      val hi = lo + take
-      if (take == 0 || lo >= starts.last) Array.empty[String]
-      else job.wireJsonLocal match {
-        case Some(all) => // small result: in-memory slice, no Spark job
-          java.util.Arrays.copyOfRange(all, lo.toInt,
-            math.min(starts.last, hi).toInt)
-        case None => JobsApi.slicePage(job.wireJsonRdd, starts, lo, hi).collect()
+      if (job.hasHead && hi <= JobsApi.HeadRows && !job.partStarts.isDone)
+        JobsApi.slice(job.head.get, lo, hi)
+      else {
+        val starts = job.partStarts.get // may materialize the store
+        if (take == 0 || lo >= starts.last) Array.empty[String]
+        else job.wireJsonLocal.get match {
+          case Some(all) => JobsApi.slice(all, lo, hi) // no Spark job
+          case None => JobsApi.slicePage(job.wireJsonRdd.get, starts, lo, hi).collect()
+        }
       }
     }
   }
@@ -452,9 +572,10 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     // strictly-after predicate in the (ts desc, doc_id asc) result order
     def after(ts: java.time.LocalDateTime, docId: String): Boolean =
       ts.isBefore(anchorTs) || (ts.equals(anchorTs) && docId > lastDocId)
-    val bounds = withJobGroup(job)(job.partFirstKeys) // may materialize the store
-    val spark = job.results.sparkSession
-    val schema = job.results.schema
+    val bounds = withJobGroup(job)(job.partFirstKeys.get) // may materialize the store
+    val results = job.results.get
+    val spark = results.sparkSession
+    val schema = results.schema
     val n = bounds.length
     // Matches form a SUFFIX of the global order (the predicate is
     // "strictly after the anchor" in the total sort key), so the first
@@ -480,7 +601,7 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       // local copies: the task closure must capture values, not this Job
       val (anchorT, anchorDoc) = (anchorTs, lastDocId)
       val pruned = org.apache.spark.rdd.PartitionPruningRDD.create(
-        job.results.rdd, _ >= lo)
+        results.rdd, _ >= lo)
       val rows = pruned.mapPartitions(_.filter { r =>
         val t = JobsApi.rowLdt(r.get(tsIdx))
         t.isBefore(anchorT) || (t.equals(anchorT) && r.getString(didIdx) > anchorDoc)
@@ -497,7 +618,7 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     */
   def jobFieldStats(id: Long, field: String): DataFrame = {
     val job = jobOrThrow(id)
-    job.fieldStatsCached
+    job.fieldStatsCached.get
       .filter(col("key") === field)
       .select(col("value"), col("occurrences"))
   }
@@ -520,17 +641,18 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       // coalesce concatenates the cached partitions IN ORDER, so `_pos`
       // (partition-indexed monotonically_increasing_id, computed on either
       // side of the coalesce) still sorts back to the pinned cache order.
+      val results = job.results.get
       val parts = math.max(1L, math.min(
-        job.results.rdd.getNumPartitions.toLong,
+        results.rdd.getNumPartitions.toLong,
         (stats.numMatchedEvents + JobsApi.StoreRowsPerFile - 1) /
           JobsApi.StoreRowsPerFile)).toInt
       // monotonically_increasing_id over the PINNED cache is a stable
       // order key (partition-indexed, and the cached partitions are fixed)
-      job.results.withColumn("_pos", monotonically_increasing_id())
+      results.withColumn("_pos", monotonically_increasing_id())
         .coalesce(parts)
         .write.mode("overwrite").parquet(s"$dir/results")
-      job.fieldStatsCached.coalesce(parts).write.mode("overwrite").parquet(s"$dir/fieldstats")
-      val spark = job.results.sparkSession
+      job.fieldStatsCached.get.coalesce(parts).write.mode("overwrite").parquet(s"$dir/fieldstats")
+      val spark = results.sparkSession
       import spark.implicits._
       Seq((job.query, job.sortMode, job.columnOrder, stats.numMatchedEvents))
         .toDF("query", "sort_mode", "column_order", "n_matched")
@@ -555,13 +677,12 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     val frame: Frame =
       if (sortMode == "none") TableFrame(results, cols0)
       else EventsFrame(results)
-    val job = new Job(nextId.getAndIncrement(), query, frame, sortMode, cols0)
+    val job = new Job(nextId.getAndIncrement(), query, frame, sortMode, cols0,
+      hasHead = false)
     job.fieldStatsOverride = Some(spark.read.parquet(s"$dir/fieldstats"))
-    val occ = job.fieldStatsCached.groupBy(col("key"))
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    job.markTerminal(JobsApi.Finished)
-    job.statsCache = JobStats(JobsApi.Finished, meta.getAs[Long]("n_matched"), occ)
+    job.markTerminal(JobsApi.Finished): Unit
+    job.statsCache = JobStats(JobsApi.Finished, meta.getAs[Long]("n_matched"),
+      job.fieldCounts.get)
     jobs.put(job.id, job)
     job
   }
@@ -586,6 +707,11 @@ object JobsApi {
     */
   private[api] val LocalPageCacheMaxRows = 100000L
 
+  /** Rows a job's head holds (Job.head): the pages a client asks for
+    * first — the GUI's 25 rows, a 50-row API page — fit in it.
+    */
+  private[api] val HeadRows = 100
+
   /** Reference wire keys for events
     * (pkg/logsuck/events/Event.go:46-54).
     */
@@ -595,6 +721,12 @@ object JobsApi {
       col("ts").as("Timestamp"), col("host").as("Host"),
       col("source").as("Source"), col("source_id").as("SourceId"),
       col("fields").as("Fields"))
+
+  /** Rows [lo, hi) of a driver-held rendered result, clipped to its size. */
+  private def slice(all: Array[String], lo: Long, hi: Long): Array[String] = {
+    val n = all.length.toLong
+    java.util.Arrays.copyOfRange(all, math.min(lo, n).toInt, math.min(hi, n).toInt)
+  }
 
   /** Rows [lo, hi) of a job's cached results, by its partition-offset index
     * `starts`: only the partitions overlapping the range are read, and rows
@@ -637,6 +769,12 @@ object JobsApi {
   final case class NoSuchJobException(id: Long)
     extends NoSuchElementException(s"no job with id $id")
 
+  /** A computation asked of a job that was already aborted (cancelled, or
+    * failed): the job computes nothing more.
+    */
+  final case class JobAbortedException(id: Long)
+    extends IllegalStateException(s"job $id was aborted")
+
   /** Did this throwable originate from a job-group cancellation? Spark wraps
     * cancellations in SparkException chains whose messages carry
     * "cancelled"/"canceled" (either spelling appears across versions).
@@ -645,7 +783,8 @@ object JobsApi {
     var t: Throwable = e
     while (t != null) {
       val m = Option(t.getMessage).getOrElse("").toLowerCase
-      if (m.contains("cancel") || t.isInstanceOf[InterruptedException]) return true
+      if (m.contains("cancel") || t.isInstanceOf[InterruptedException] ||
+          t.isInstanceOf[JobAbortedException]) return true
       t = t.getCause
     }
     false

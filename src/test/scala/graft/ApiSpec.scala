@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.JobsApi
@@ -104,6 +105,12 @@ class ApiSpec extends AnyFunSuite {
     assert(stageList.length == 1, s"a page must be ONE shuffle-free stage: $stageList")
     assert(stageList.head <= 2,
       s"a page-sized take must touch at most 2 cached partitions: $stageList")
+    // a small result renders its wire JSON once, straight to the driver:
+    // no executor copy of it stays persisted next to the cached results
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    assert(api.jobResultsWireJson(job.id, 150, 10).length == 10)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(added.isEmpty, s"rendering a small result persisted RDDs $added")
     // jobFieldStats serves from the persisted (key,value,occurrences) store
     api.jobFieldStats(job.id, "eventtype").collect()
     val planF = api.jobFieldStats(job.id, "userid").queryExecution.executedPlan.toString
@@ -119,6 +126,70 @@ class ApiSpec extends AnyFunSuite {
     assert(api.releaseJob(job.id))
     intercept[JobsApi.NoSuchJobException] { api.jobStats(job.id) }
     assert(!api.releaseJob(job.id))
+  }
+
+  // Queries of the head tests carry a NOT fragment no other test uses, so
+  // no earlier job's cached results (CacheManager matches equal plans)
+  // stand in for the store.
+  private val headPages = Seq((0, 50), (0, 25), (25, 25), (90, 10), (0, 100))
+
+  test("head pages equal pinned pages byte for byte, below and above HeadRows") {
+    val api = new JobsApi(EventsAdapter.engine(spark, dir))
+    // 201 matches (more than the head holds) and 21 (fewer)
+    for ((q, n) <- Seq("error NOT zzhead1" -> 201L, "error userid=14 NOT zzhead1" -> 21L)) {
+      val job = api.startJob(q)
+      // a fresh job's first page is one Spark job: the head's top-k
+      val (first, ev) = TestSpark.observe(api.jobResultsWireJson(job.id, 0, 50))
+      assert(ev.jobs.size == 1, s"$q: first page ran ${ev.jobs.size} Spark jobs")
+      val fromHead = first +: headPages.tail.map { case (skip, take) =>
+        api.jobResultsWireJson(job.id, skip, take) }
+      assert(QueryEngine.newestFirst(job.frame).storageLevel == StorageLevel.NONE,
+        s"$q: head pages must not pin the results")
+      assert(api.jobStats(job.id).numMatchedEvents == n)
+      assert(QueryEngine.newestFirst(job.frame).storageLevel != StorageLevel.NONE,
+        s"$q: a finished job pins its results")
+      assert(job.frame.df.storageLevel == StorageLevel.NONE,
+        s"$q: a finished job releases its match set")
+      val pinned = headPages.map { case (skip, take) => api.jobResultsWireJson(job.id, skip, take) }
+      headPages.zip(fromHead.zip(pinned)).foreach { case ((skip, take), (h, p)) =>
+        assert(h.length == math.max(0L, math.min(take.toLong, n - skip)), s"$q ($skip, $take)")
+        assert(h.sameElements(p), s"$q ($skip, $take): head page != pinned page")
+      }
+      assert(api.releaseJob(job.id))
+    }
+  }
+
+  test("a fresh events search reads the store's rows in exactly one stage") {
+    val api = new JobsApi(EventsAdapter.engine(spark, dir))
+    val storeRows = EventsAdapter.events(spark, dir).count()
+    val job = api.startJob("error NOT zzhead3")
+    val (stats, ev) = TestSpark.observe {
+      api.pump(job.id)(chain => chain())
+      api.jobResultsWireJson(job.id, 0, 50)
+      api.jobResultsWireJson(job.id, 100, 50)
+      api.jobStats(job.id)
+    }
+    assert(stats.state == "finished" && stats.numMatchedEvents == 201)
+    val storeStages = ev.stageRecordsRead.filter(_ >= storeRows)
+    assert(storeStages.length == 1,
+      s"stages reading >= $storeRows records: $storeStages (all: ${ev.stageRecordsRead})")
+    assert(api.releaseJob(job.id))
+  }
+
+  test("a failed job ends aborted: no re-run, expires with its caches") {
+    // one row's raw line throws, so every search over raw fails
+    val broken = EventsAdapter.events(spark, dir).withColumn("raw",
+      when(col("doc_id") === "7", raise_error(lit("boom"))).otherwise(col("raw")))
+    val api = new JobsApi(new QueryEngine(broken, EventsAdapter.configs),
+      jobTtlMillis = Some(60000L))
+    val job = api.startJob("error")
+    intercept[Exception](api.jobStats(job.id))
+    assert(job.state == "aborted")
+    val (again, ev) = TestSpark.observe(api.jobStats(job.id))
+    assert(again.state == "aborted")
+    assert(ev.jobs.isEmpty, s"a failed job re-ran ${ev.jobs.size} Spark jobs")
+    assert(api.expireJobs(System.currentTimeMillis() + 3600000L) == 1)
+    assert(api.job(job.id).isEmpty)
   }
 
   test("keyset pagination equals offset pagination and reads O(page) from the cache (O2)") {
@@ -256,6 +327,24 @@ class ApiSpec extends AnyFunSuite {
     intercept[Exception](Await.result(fut, scala.concurrent.duration.Duration(120, "s")))
     assert(job.state == "aborted")
     assert(api.jobStats(job.id).state == "aborted")
+    // abort while a first page waits on the job's head (one top-k job);
+    // the head's Spark job has started once the job group has a job
+    val headJob = api.startJob("userid=2")
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == s"graft-job-${headJob.id}"))
+          started.countDown()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val page = Future(api.jobResultsWireJson(headJob.id, 0, 50))
+      assert(started.await(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(api.abortJob(headJob.id))
+      intercept[Exception](Await.result(page, scala.concurrent.duration.Duration(120, "s")))
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(headJob.state == "aborted")
+    assert(api.jobStats(headJob.id).state == "aborted")
     // aborting a finished job is accepted but leaves it finished
     val small = new JobsApi(EventsAdapter.engine(spark, dir))
     val done = small.startJob("error")

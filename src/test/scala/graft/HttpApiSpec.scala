@@ -8,9 +8,11 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.{HttpApi, JobsApi}
+import graft.compile.QueryEngine
 import graft.sources.EventsAdapter
 
 /** The REST surface (reference internal/web/Web.go api/v1 group +
@@ -96,6 +98,44 @@ class HttpApiSpec extends AnyFunSuite {
       assert(fullCounts.count(_._2 > floor) <= 3,
         s"the cap must keep top-occurrence values (floor $floor): $fullCounts")
     }
+  }
+
+  test("pages served from the head equal the pinned pages byte for byte over HTTP") {
+    withServer() { (port, _) =>
+      // the NOT fragment keeps other tests' cached results out of the plan;
+      // 201 matches (more than the head holds) and 21 (fewer)
+      for ((q, n) <- Seq("error NOT zzhttphead" -> 201L, "error userid=14 NOT zzhttphead" -> 21L)) {
+        val id = post(port, s"/api/v1/startJob?searchString=${enc(q)}").body().trim.toLong
+        val pages = Seq((0, 50), (0, 25), (25, 25), (90, 10), (0, 100))
+        def fetch() = pages.map { case (skip, take) =>
+          get(port, s"/api/v1/jobResults?jobId=$id&skip=$skip&take=$take").body() }
+        // asked right after startJob: the pump is still on the head or the sort
+        val early = fetch()
+        val stats = mapper.readTree(get(port, s"/api/v1/jobStats?jobId=$id").body())
+        assert(stats.get("State").asInt() == 2 && stats.get("NumMatchedEvents").asLong() == n)
+        val pinned = fetch()
+        pages.zip(early.zip(pinned)).foreach { case ((skip, take), (e, p)) =>
+          assert(mapper.readTree(e).get("events").size() ==
+            math.max(0L, math.min(take.toLong, n - skip)), s"$q ($skip, $take)")
+          assert(e == p, s"$q ($skip, $take): early page != pinned page")
+        }
+      }
+    }
+  }
+
+  test("a job whose query fails ends aborted over HTTP") {
+    val broken = EventsAdapter.events(spark, dir).withColumn("raw",
+      when(col("doc_id") === "7", raise_error(lit("boom"))).otherwise(col("raw")))
+    val api = new JobsApi(new QueryEngine(broken, EventsAdapter.configs))
+    val http = new HttpApi(api)
+    val port = http.start()
+    try {
+      val id = post(port, s"/api/v1/startJob?searchString=${enc("error")}").body().trim.toLong
+      // the first page waits on the pump's failing head, then answers 500
+      assert(get(port, s"/api/v1/jobResults?jobId=$id&skip=0&take=50").statusCode() == 500)
+      val stats = mapper.readTree(get(port, s"/api/v1/jobStats?jobId=$id").body())
+      assert(stats.get("State").asInt() == 3) // aborted
+    } finally http.stop()
   }
 
   test("table jobs serve resultType=2 with columnOrder and tableRows") {

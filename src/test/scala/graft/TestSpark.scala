@@ -36,6 +36,12 @@ object TestSpark {
         Option(p.getProperty("spark.job.description"))))
     /** Task count of every submitted stage, in submission order. */
     def stageTasks: Seq[Int] = submitted.asScala.toSeq.map(_.numTasks)
+    /** Input records of every completed stage, in completion order. A
+      * stage over a cached relation reads its cached batches, a handful of
+      * records, where a stage over the store reads each row.
+      */
+    def stageRecordsRead: Seq[Long] = completed.asScala.toSeq
+      .flatMap(s => Option(s.taskMetrics)).map(_.inputMetrics.recordsRead)
     def shuffleRecordsWritten: Long = completed.asScala.toSeq
       .flatMap(s => Option(s.taskMetrics))
       .map(_.shuffleWriteMetrics.recordsWritten).sum
