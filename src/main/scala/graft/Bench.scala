@@ -3,10 +3,12 @@ package graft
 import java.io.File
 import java.nio.file.{Files, Paths}
 
+import scala.util.{Failure, Success}
+
 import org.apache.spark.sql.SparkSession
 
 import graft.data.SequenceGen
-import graft.metrics.PipelineMetrics
+import graft.metrics.Recorder
 import graft.plans.LogPipeline
 import graft.util.Scratch
 
@@ -91,25 +93,15 @@ object Bench {
     None
   }
 
-  /** Counts task failures + executor losses during the scaling reps: an
-    * executor dying mid-rep silently inflates the wall (tasks re-run) — the
-    * per-rep stderr line attributes it instead of letting a stray stack
-    * trace open the log tail unexplained (r2 verdict #4).
+  /** The stderr suffix of a scaling warm-up or rep: its failed tasks and
+    * lost executors, exact because [[Recorder.observe]] drains the bus. An
+    * executor dying mid-rep silently inflates the wall (tasks re-run); the
+    * line attributes it instead of letting a stray stack trace open the log
+    * tail unexplained (r2 verdict #4).
     */
-  private final class FailureCounter extends org.apache.spark.scheduler.SparkListener {
-    private val taskFailures = new java.util.concurrent.atomic.AtomicLong
-    private val executorsLost = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      t.reason match {
-        case org.apache.spark.Success => ()
-        case _ => taskFailures.incrementAndGet(): Unit
-      }
-    override def onExecutorRemoved(
-        e: org.apache.spark.scheduler.SparkListenerExecutorRemoved): Unit =
-      executorsLost.incrementAndGet(): Unit
-    /** (taskFailures, executorsLost) since the last call, then reset. */
-    def drain(): (Long, Long) = (taskFailures.getAndSet(0), executorsLost.getAndSet(0))
-  }
+  private def failures(r: Recorder): String =
+    if (r.failedTasks + r.executorsLost == 0) ""
+    else s" [task_failures=${r.failedTasks} executors_lost=${r.executorsLost}]"
 
   private def time[A](f: => A): Double = {
     val t0 = System.nanoTime()
@@ -154,9 +146,16 @@ object Bench {
     * scales 4x); the absolutes close that hole (r4 verdict #1).
     */
   private final case class HostCal(mops1: Double, mops32: Double, x4: Double) {
-    def degraded: Boolean = mops1 < 450 || mops32 < 13500 || x4 < 3.5
+    def degraded: Boolean = Runtime.getRuntime.availableProcessors < FloorCpus ||
+      mops1 < 450 || mops32 < 13500 || x4 < 3.5
     def json: String = f""""mops_1t":$mops1%.0f,"mops_32t":$mops32%.0f,"cpu_x4":$x4%.2f,"degraded":$degraded"""
   }
+
+  /** Processors of the host the [[HostCal]] floors were measured on. A host
+    * with fewer fails them for good: it is degraded from the start, and
+    * waiting for a clean window there only idles.
+    */
+  private val FloorCpus = 32
 
   private def calibrate(): HostCal = {
     cpuMops(4) // JIT warmup for the loop body
@@ -171,7 +170,7 @@ object Bench {
     */
   private def calibrateGated(retries: Int, sleepMs: Long): HostCal = {
     var cal = calibrate()
-    var left = retries
+    var left = if (Runtime.getRuntime.availableProcessors < FloorCpus) 0 else retries
     while (cal.degraded && left > 0) {
       System.err.println(f"[bench] host degraded (1t ${cal.mops1}%.0f, 32t ${cal.mops32}%.0f, x4 ${cal.x4}%.2f) — waiting ${sleepMs / 1000}s for a clean window (${left} retries left)")
       Thread.sleep(sleepMs)
@@ -180,6 +179,27 @@ object Bench {
     }
     System.err.println(f"[bench] host calibration: 1t ${cal.mops1}%.0f Mops, 32t ${cal.mops32}%.0f Mops, x4 ${cal.x4}%.2f, degraded=${cal.degraded}")
     cal
+  }
+
+  /** Lowest scaling-phase throughput (rows/s) a window may run at before
+    * its deadline stops it: ~1/10 of a 4-core executor's, so only a stall
+    * reaches it.
+    */
+  private val MinScaleRowsPerSec = 20000L
+
+  /** Refuses a `local-cluster[workers,cores,memMb]` that does not fit the
+    * host: more executor cores than available processors, or more
+    * executor memory than MemTotal (`/proc/meminfo`; unchecked where that
+    * cannot be read).
+    */
+  private def requireFits(workers: Int, cores: Int, memMb: Int): Unit = {
+    val cluster = s"local-cluster[$workers,$cores,$memMb]"
+    val procs = Runtime.getRuntime.availableProcessors
+    require(workers * cores <= procs,
+      s"$cluster needs ${workers * cores} cores, the host has $procs")
+    scala.util.Using(scala.io.Source.fromFile("/proc/meminfo"))(_.getLines().collectFirst {
+      case l if l.startsWith("MemTotal:") => l.split("\\s+")(1).toLong / 1024 }.get).foreach(total => require(workers.toLong * memMb <= total,
+      s"$cluster needs ${workers.toLong * memMb} MB, the host has $total MB"))
   }
 
   /** One full pipeline pass: scan -> parse -> enrich -> route(write) ->
@@ -235,31 +255,25 @@ object Bench {
     // before its one-line JSON (the driver's only signal) is emitted
     val pipeReps = sys.env.get("SPARK_GRAFT_PIPE_REPS").flatMap(_.toIntOption)
       .filter(_ > 0).getOrElse(3)
-    val metrics = new PipelineMetrics
     var stagesJson = "[]"
     val pipelineJson = try {
       SequenceGen.sequences(spark, pipelineRows, cpus * 2)
         .write.mode("overwrite").parquet(benchIn)
       pipelineRun(spark, benchIn, benchOut + "/warm") // warmup
-      spark.sparkContext.addSparkListener(metrics)
       val reps = (1 to pipeReps).map { r =>
         // flush any dirty disk pages outside the timed window (bench I/O is
         // on tmpfs, but sbt/log writes can still be in flight)
         new ProcessBuilder("sync").inheritIO().start().waitFor()
         val out = benchOut + s"/timed-$r"
         try {
-          val t = pipelineRun(spark, benchIn, out)
-          System.err.println(f"[bench] pipeline rep=$r ${t}%.2f s")
-          // snapshot THIS rep's stage metrics (after a bus-settle beat) so
-          // the shipped detail describes exactly the rep whose wall is
-          // reported, not 3 reps' stages summed against one rep's seconds
-          Thread.sleep(300)
-          val repStages = metrics.toJson
-          metrics.reset()
-          (t, repStages)
+          // THIS rep's stage metrics, so the shipped detail describes
+          // exactly the rep whose wall is reported, not 3 reps' stages
+          // summed against one rep's seconds
+          val (t, rec) = Recorder.observe(spark.sparkContext)(pipelineRun(spark, benchIn, out))
+          System.err.println(f"[bench] pipeline rep=$r ${t.get}%.2f s")
+          (t.get, rec.stagesJson)
         } finally Scratch.deleteRecursively(new File(out)) // bound tmpfs usage
       }
-      spark.sparkContext.removeSparkListener(metrics)
       val (pipeSecs, bestStages) = reps.minBy(_._1)
       stagesJson = bestStages
       val pipeThr = pipelineRows / pipeSecs
@@ -296,6 +310,9 @@ object Bench {
       // wide config ±25%, so 3 reps under-sampled it)
       val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "4").toInt
       val nLarge = nSmall * 4
+      // before staging anything: a cluster the host cannot hold would wait
+      // for executors that never register, or swap
+      requireFits(nLarge, coresPerExec, execMemMb)
       val scaleIn = s"$benchRoot/scale-in"
       val warmIn = s"$benchRoot/scale-warm-in"
       locally {
@@ -331,53 +348,60 @@ object Bench {
         val windows = Seq(nSmall, nLarge, nSmall, nLarge).zipWithIndex
         val secs = scala.collection.mutable.Map[Int, Vector[Double]]()
           .withDefault(_ => Vector())
+        // a window that runs this far below any throughput a real host gave
+        // is stalled (executors that never register, a wedged job)
+        val deadlineS = 120L + (scaleRows / 4 + repsPerWindow * scaleRows) / MinScaleRowsPerSec
         for ((n, w) <- windows) {
           mkSession(n) match {
             case None => return None
-            case Some(s) => try {
-              val fc = new FailureCounter
-              s.sparkContext.addSparkListener(fc)
-              def drained(): String = {
-                // the listener bus is async: give late-posted events a beat
-                // to land, and mark the counts approximate either way — a
-                // straggler can still slip into the NEXT rep's line
-                Thread.sleep(300)
-                val (tf, xl) = fc.drain()
-                if (tf + xl == 0) "" else s" [~task_failures=$tf ~executors_lost=$xl]"
+            case Some(s) =>
+              // on expiry the window's jobs are cancelled and its session
+              // stopped, so whatever it waits on fails fast, and the phase
+              // reports the timeout instead of hanging
+              val expired = new java.util.concurrent.atomic.AtomicBoolean(false)
+              val watchdog = new java.util.Timer(s"bench-scale-deadline-$n-$w", true)
+              watchdog.schedule(new java.util.TimerTask {
+                def run(): Unit = { expired.set(true); s.sparkContext.cancelAllJobs(); s.stop() }
+              }, deadlineS * 1000)
+              try {
+                val warm = benchOut + s"/scale-warm-$n"
+                Recorder.observe(s.sparkContext)(pipelineRun(s, warmIn, warm)) match {
+                  case (Success(tw), rec) =>
+                    System.err.println(f"[bench] scale n=$n w=$w warmup ${tw}%.2f s${failures(rec)}")
+                  case (Failure(e), rec) =>
+                    System.err.println(s"[bench] scale n=$n w=$w phase=warmup FAILED: $e${failures(rec)}")
+                    throw e
+                }
+                Scratch.deleteRecursively(new File(warm))
+                (1 to repsPerWindow).foreach { r =>
+                  new ProcessBuilder("sync").inheritIO().start().waitFor()
+                  // prior reps' shuffle files sit in the (tmpfs) local dirs
+                  // until the ContextCleaner collects the shuffle objects —
+                  // force it so reps don't inherit a growing RAM footprint
+                  System.gc()
+                  Thread.sleep(1000)
+                  val out = benchOut + s"/scale-$n-$w-$r"
+                  try Recorder.observe(s.sparkContext)(pipelineRun(s, scaleIn, out)) match {
+                    case (Success(t), rec) =>
+                      System.err.println(f"[bench] scale n=$n w=$w rep=$r ${t}%.2f s${failures(rec)}")
+                      secs(n) = secs(n) :+ t
+                    case (Failure(e), rec) =>
+                      System.err.println(s"[bench] scale n=$n w=$w phase=rep-$r FAILED: $e${failures(rec)}")
+                  } finally Scratch.deleteRecursively(new File(out)) // bound tmpfs usage
+                    // (also on failure — a partial rep output must not eat the
+                    // headroom of the remaining reps)
+                }
+              } finally {
+                watchdog.cancel()
+                // ALWAYS tear the executor JVMs down — a leaked 8 GB
+                // local-cluster from a failed size would skew everything after
+                // it — and attribute any executor-exit trace the stop prints
+                System.err.println(s"[bench] phase=scale-teardown n=$n w=$w (any trace below until 'done' is stop() noise)")
+                s.stop()
+                System.err.println(s"[bench] phase=scale-teardown n=$n w=$w done")
+                if (expired.get) throw new java.util.concurrent.TimeoutException(
+                  s"scaling window n=$n w=$w passed its $deadlineS s deadline")
               }
-              val warm = benchOut + s"/scale-warm-$n"
-              val tw = try pipelineRun(s, warmIn, warm) catch { case e: Throwable =>
-                System.err.println(s"[bench] scale n=$n w=$w phase=warmup FAILED: $e${drained()}")
-                throw e
-              }
-              Scratch.deleteRecursively(new File(warm))
-              System.err.println(f"[bench] scale n=$n w=$w warmup ${tw}%.2f s${drained()}")
-              (1 to repsPerWindow).foreach { r =>
-                new ProcessBuilder("sync").inheritIO().start().waitFor()
-                // prior reps' shuffle files sit in the (tmpfs) local dirs
-                // until the ContextCleaner collects the shuffle objects —
-                // force it so reps don't inherit a growing RAM footprint
-                System.gc()
-                Thread.sleep(1000)
-                val out = benchOut + s"/scale-$n-$w-$r"
-                try {
-                  val t = pipelineRun(s, scaleIn, out)
-                  System.err.println(f"[bench] scale n=$n w=$w rep=$r ${t}%.2f s${drained()}")
-                  secs(n) = secs(n) :+ t
-                } catch { case e: Throwable =>
-                  System.err.println(s"[bench] scale n=$n w=$w phase=rep-$r FAILED: $e${drained()}")
-                } finally Scratch.deleteRecursively(new File(out)) // bound tmpfs usage
-                  // (also on failure — a partial rep output must not eat the
-                  // headroom of the remaining reps)
-              }
-            } finally {
-              // ALWAYS tear the executor JVMs down — a leaked 8 GB
-              // local-cluster from a failed size would skew everything after
-              // it — and attribute any executor-exit trace the stop prints
-              System.err.println(s"[bench] phase=scale-teardown n=$n w=$w (any trace below until 'done' is stop() noise)")
-              s.stop()
-              System.err.println(s"[bench] phase=scale-teardown n=$n w=$w done")
-            }
           }
         }
         Seq(nSmall, nLarge).foreach(n =>
@@ -389,7 +413,11 @@ object Bench {
       val eff = thr(nLarge) / (4.0 * thr(nSmall))
       f""""scaling":{"rows":$scaleRows,"n_small":$nSmall,"n_large":$nLarge,"cores_per_executor":$coresPerExec,"throughput_n":${thr(nSmall)}%.0f,"throughput_4n":${thr(nLarge)}%.0f,"efficiency":$eff%.3f,"host_cpu_x4":$hostX4%.2f,"host":{${hostScale.json}}},"""
     } catch { case e: Throwable =>
-      s""""scaling":{"error":"${e.getClass.getSimpleName}"},"""
+      // class and first message line, so a refused or stalled phase says why
+      val why = (e.getClass.getSimpleName +
+        Option(e.getMessage).fold("")(m => ": " + m.takeWhile(_ != '\n')))
+        .replaceAll("[\"\\\\\\p{Cntrl}]", "'")
+      s""""scaling":{"error":"$why"},"""
     } else ""
 
     // compact per-query map: 3 decimals keeps the whole line well under the

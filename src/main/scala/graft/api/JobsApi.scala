@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import java.time.Instant
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -90,7 +91,7 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       * it once both of them are pinned.
       */
     private[JobsApi] val matches: Once[DataFrame] =
-      new Once(track(frame.df.persist(StorageLevel.MEMORY_AND_DISK)))
+      new Once(pin(frame.df))
 
     /** The first [[JobsApi.HeadRows]] rows of a timestampDesc events job as
       * their wire JSON: one top-k job (`TakeOrderedAndProject`, no range
@@ -119,7 +120,7 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
         case _ if hasHead => QueryEngine.newestFirst(EventsFrame(matches.get))
         case f: EventsFrame => QueryEngine.newestFirst(f)
       }
-      track(ordered.persist(StorageLevel.MEMORY_AND_DISK))
+      pin(ordered)
     })
 
     /** The cached results re-wrapped as a Frame (same shape as `frame`) so
@@ -140,9 +141,8 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       */
     private[JobsApi] var fieldStatsOverride: Option[DataFrame] = None
     private[JobsApi] val fieldStatsCached: Once[DataFrame] = new Once(
-      track(fieldStatsOverride.getOrElse(engine.fieldStats(
-        if (hasHead) EventsFrame(matches.get) else resultsFrame))
-        .persist(StorageLevel.MEMORY_AND_DISK)))
+      pin(fieldStatsOverride.getOrElse(engine.fieldStats(
+        if (hasHead) EventsFrame(matches.get) else resultsFrame))))
 
     /** A2 of jobStats: distinct values per field key, folded from the
       * persisted [[fieldStatsCached]] aggregate once — a client polling
@@ -228,15 +228,15 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     // memoized jobStats — the second stats call launches zero Spark jobs
     @volatile private[JobsApi] var statsCache: JobStats = null
 
-    // every frame this job actually persisted, in materialization order —
-    // unpersistAll drops exactly these (an unmaterialized cell is never
-    // built just to be unpersisted, and a cache any cell created is never
+    // every frame this job actually pinned, in materialization order —
+    // unpersistAll unpins exactly these (an unmaterialized cell is never
+    // built just to be unpinned, and a cache any cell created is never
     // missed, e.g. an imported job that only materialized fieldStatsCached)
     private val persistedFrames =
       new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
     private val persistedRdds =
       new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
-    private def track(df: DataFrame): DataFrame = { persistedFrames.add(df); df }
+    private def pin(df: DataFrame): DataFrame = { JobsApi.pin(df); persistedFrames.add(df); df }
 
     /** Drop the pinned match set; called once [[results]] (with their
       * page index) and the field-stats aggregate are pinned. Nothing reads
@@ -246,12 +246,14 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       */
     private[JobsApi] def releaseMatches(): Unit =
       if (matches.isDone && persistedFrames.remove(matches.get))
-        matches.get.unpersist(blocking = false): Unit
+        JobsApi.unpin(matches.get)
 
-    /** Drop every cached artifact of this job. */
+    /** Drop every cached artifact of this job that no other live job with
+      * the same plan still pins.
+      */
     private[JobsApi] def unpersistAll(): Unit = {
       var df = persistedFrames.poll()
-      while (df != null) { df.unpersist(blocking = false); df = persistedFrames.poll() }
+      while (df != null) { JobsApi.unpin(df); df = persistedFrames.poll() }
       var r = persistedRdds.poll()
       while (r != null) { r.unpersist(blocking = false); r = persistedRdds.poll() }
     }
@@ -698,6 +700,25 @@ object JobsApi {
     * still splits across writers.
     */
   private[api] val StoreRowsPerFile = 1000000L
+
+  /** Holders per cached plan, keyed as the CacheManager (shared by every
+    * session) matches caches: two jobs with one query share each cache
+    * entry, so only the last holder of a plan unpersists it. The count and
+    * the cache change together under the map's per-key lock, and a
+    * (un)pin is one hash lookup: a release stays O(frames).
+    */
+  private val pins = new java.util.concurrent.ConcurrentHashMap[LogicalPlan, Integer]()
+  private def cacheKey(df: DataFrame): LogicalPlan = df.queryExecution.normalized.canonicalized
+
+  private def pin(df: DataFrame): Unit =
+    pins.compute(cacheKey(df), (_, n: Integer) => {
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+      Int.box(if (n == null) 1 else n + 1)
+    }): Unit
+
+  private def unpin(df: DataFrame): Unit =
+    pins.computeIfPresent(cacheKey(df), (_, n: Integer) =>
+      if (n > 1) Int.box(n - 1) else { df.unpersist(blocking = false); null }): Unit
 
   /** Row cap for the driver-held wire-JSON page cache (Job.wireJsonLocal):
     * results at or under it serve every page as an array slice with zero

@@ -26,8 +26,9 @@ object EventsAdapter {
     SourceConfig("events-*.log", "kv", extractors, "_time",
       SourceConfig.defaultTimeLayout, "events-host", "app"))
 
-  /** The rendered kv line as a column expression (shared by [[events]] and
-    * [[lines]] so the render can't drift between surfaces).
+  /** The rendered kv line as a column expression (shared by [[events]],
+    * [[lines]] and [[mixedSequences]] so the render can't drift between
+    * surfaces).
     */
   private def rawCol =
     concat(
@@ -85,10 +86,6 @@ object EventsAdapter {
   def mixedSequences(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
     val mode = pmod(col("event_id"), lit(3))
-    val kvRaw = concat(
-      date_format(col("ts"), "yyyy/MM/dd HH:mm:ss.SSSSSS"),
-      lit(" performing action eventType="), col("event_type"),
-      lit(" userId="), col("user_id"), lit(" eventId="), col("event_id"))
     val accessTime = concat(date_format(col("ts"), "dd/MMM/yyyy:HH:mm:ss"), lit(" +0000"))
     val status = lit(200) + pmod(col("user_id"), lit(4)) * 100
     val accessRaw = concat(
@@ -105,7 +102,7 @@ object EventsAdapter {
     val source = when(mode === 0, concat(lit("events-"), col("event_type"), lit(".log")))
       .when(mode === 1, lit("access-0.log"))
       .otherwise(lit("json-0.log"))
-    val raw = when(mode === 0, kvRaw).when(mode === 1, accessRaw).otherwise(jsonRaw)
+    val raw = when(mode === 0, rawCol).when(mode === 1, accessRaw).otherwise(jsonRaw)
     val toks = graft.functions.F.text_to_tokens(raw)
     ev.select(
       col("event_id").cast("string").as("doc_id"),

@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets
+
 import scala.util.matching.Regex
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -15,25 +17,24 @@ import graft.functions.F
 object TextIngest {
 
   final case class SplitEvent(raw: String, offset: Long)
-  final case class SplitResult(events: Seq[SplitEvent], remainder: String)
+  final case class SplitResult(events: Seq[SplitEvent], remainder: String,
+      remainderOffset: Long)
 
   /** Port of FileParser.Split: split on the delimiter regex, accumulate the
-    * byte offset of each event (event length + its delimiter length), keep
-    * the trailing un-delimited chunk as remainder (the reference buffers it
-    * until the next 4 KiB read).
+    * byte offset of each event (the UTF-8 bytes of the event and its
+    * delimiter), keep the trailing un-delimited chunk and its byte offset
+    * as remainder (the reference buffers it until the next 4 KiB read).
     */
   def split(s: String, delimiter: Regex): SplitResult = {
-    val delims = delimiter.findAllMatchIn(s).toVector
-    if (delims.isEmpty) return SplitResult(Seq.empty, s)
     val events = Seq.newBuilder[SplitEvent]
     var offset = 0L
     var pos = 0
-    delims.foreach { m =>
+    delimiter.findAllMatchIn(s).foreach { m =>
       events += SplitEvent(s.substring(pos, m.start), offset)
-      offset += (m.start - pos) + (m.end - m.start)
+      offset += s.substring(pos, m.end).getBytes(StandardCharsets.UTF_8).length
       pos = m.end
     }
-    SplitResult(events.result(), s.substring(pos))
+    SplitResult(events.result(), s.substring(pos), offset)
   }
 
   /** Read log files (glob) into the canonical event frame: one file = one
@@ -80,7 +81,7 @@ object TextIngest {
       val res = split(content, rx)
       val all =
         if (res.remainder.nonEmpty)
-          res.events :+ SplitEvent(res.remainder, (content.length - res.remainder.length).toLong)
+          res.events :+ SplitEvent(res.remainder, res.remainderOffset)
         else res.events
       all.filter(_.raw.nonEmpty).zipWithIndex.map { case (e, i) =>
         (s"$source-$i", e.raw, source, path, e.offset)

@@ -176,6 +176,25 @@ class ApiSpec extends AnyFunSuite {
     assert(api.releaseJob(job.id))
   }
 
+  test("releasing a job keeps the caches a live job with the same plan reads") {
+    // Spark keys a cache by plan, so two jobs with one query share each
+    // cache entry; releasing one must not drop what the other still pins
+    val api = new JobsApi(EventsAdapter.engine(spark, dir))
+    val (a, b) = (api.startJob("error NOT zzshared"), api.startJob("error NOT zzshared"))
+    api.jobStats(a.id)
+    api.jobStats(b.id)
+    def pageReads(): Seq[Long] =
+      TestSpark.observe(api.jobResults(b.id, 5, 5).collect())._2.stageRecordsRead
+    assert(pageReads().sum >= 1, "a page reads the cached batch")
+    assert(api.releaseJob(a.id))
+    val after = pageReads()
+    assert(after.sum >= 1, s"after releasing A, B's page read $after records")
+    assert(QueryEngine.newestFirst(b.frame).storageLevel != StorageLevel.NONE)
+    assert(api.releaseJob(b.id))
+    assert(QueryEngine.newestFirst(b.frame).storageLevel == StorageLevel.NONE,
+      "the last holder unpersists")
+  }
+
   test("a failed job ends aborted: no re-run, expires with its caches") {
     // one row's raw line throws, so every search over raw fails
     val broken = EventsAdapter.events(spark, dir).withColumn("raw",
@@ -330,19 +349,14 @@ class ApiSpec extends AnyFunSuite {
     // abort while a first page waits on the job's head (one top-k job);
     // the head's Spark job has started once the job group has a job
     val headJob = api.startJob("userid=2")
-    val started = new java.util.concurrent.CountDownLatch(1)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == s"graft-job-${headJob.id}"))
-          started.countDown()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val page = Future(api.jobResultsWireJson(headJob.id, 0, 50))
-      assert(started.await(120, java.util.concurrent.TimeUnit.SECONDS))
-      assert(api.abortJob(headJob.id))
-      intercept[Exception](Await.result(page, scala.concurrent.duration.Duration(120, "s")))
-    } finally spark.sparkContext.removeSparkListener(l)
+    val page = Future(api.jobResultsWireJson(headJob.id, 0, 50))
+    def headStarted = spark.sparkContext.statusTracker
+      .getJobIdsForGroup(s"graft-job-${headJob.id}").nonEmpty
+    val until = System.nanoTime() + 120000000000L
+    while (!headStarted && System.nanoTime() < until) Thread.sleep(20)
+    assert(headStarted)
+    assert(api.abortJob(headJob.id))
+    intercept[Exception](Await.result(page, scala.concurrent.duration.Duration(120, "s")))
     assert(headJob.state == "aborted")
     assert(api.jobStats(headJob.id).state == "aborted")
     // aborting a finished job is accepted but leaves it finished
@@ -388,9 +402,15 @@ class ApiSpec extends AnyFunSuite {
     val res = TextIngest.split("aaa\nbb\nrest", "\n".r)
     assert(res.events.map(_.raw) == Seq("aaa", "bb"))
     assert(res.events.map(_.offset) == Seq(0L, 4L))
-    assert(res.remainder == "rest")
+    assert(res.remainder == "rest" && res.remainderOffset == 7L)
     val none = TextIngest.split("no delimiter here", "\n".r)
     assert(none.events.isEmpty && none.remainder == "no delimiter here")
+    // offsets count UTF-8 bytes, not chars: \u00e9 is 2 bytes, and the
+    // surrogate pair \uD83D\uDE00 (two chars) is 4
+    val wide = TextIngest.split("\u00e9\nb\n\uD83D\uDE00\nrest", "\n".r)
+    assert(wide.events.map(_.raw) == Seq("\u00e9", "b", "\uD83D\uDE00"))
+    assert(wide.events.map(_.offset) == Seq(0L, 3L, 5L))
+    assert(wide.remainder == "rest" && wide.remainderOffset == 10L)
   }
 
   test("text-file ingestion end-to-end: file -> events -> search") {
