@@ -202,6 +202,13 @@ object Bench {
       s"$cluster needs ${workers.toLong * memMb} MB, the host has $total MB"))
   }
 
+  /** An exception as a JSON-safe string: its class and the first line of
+    * its message, quotes, backslashes and control characters replaced.
+    */
+  private def why(e: Throwable): String = (e.getClass.getSimpleName +
+    Option(e.getMessage).fold("")(m => ": " + m.takeWhile(_ != '\n')))
+    .replaceAll("[\"\\\\\\p{Cntrl}]", "'")
+
   /** One full pipeline pass: scan -> parse -> enrich -> route(write) ->
     * per-sink aggregate; returns wall seconds.
     */
@@ -217,10 +224,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default: the cpus this process may run on (the affinity mask)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val pipelineRows = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROWS", "1000000").toLong
+    // default: the cpus this process may run on (the affinity mask); a
+    // malformed value degrades to the default, like SPARK_GRAFT_PIPE_REPS
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+      .filter(_ > 0).getOrElse(Runtime.getRuntime.availableProcessors)
+    val pipelineRows = sys.env.get("SPARK_GRAFT_BENCH_ROWS").flatMap(_.toLongOption)
+      .filter(_ > 0).getOrElse(1000000L)
     val doScaling = sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") == "1"
 
     val doQueries = sys.env.getOrElse("SPARK_GRAFT_QUERIES", "1") == "1"
@@ -231,15 +240,22 @@ object Bench {
 
     // ---- per-query timings (steady state: 1 warmup + 1 timed run) ----
     var spark = session(cpus)
-    SparkEntry.queries.head._2(spark, sfDir).count() // JVM/codegen warmup
+    // JVM/codegen warmup; a query that fails here fails again when timed,
+    // and is reported there
+    try SparkEntry.queries.head._2(spark, sfDir).count() catch { case _: Throwable => () }
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the query phase (dev aid
     // for timing one operator without the 70-query sweep)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
+    // a timed query that throws reads -1.0 and is named in "errors"
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = if (doQueries) SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.isEmpty || only(q._1)).map { case (name, fn) =>
       try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      val secs = try time(fn(spark, sfDir).count()) catch { case _: Throwable => -1.0 }
+      val secs = try time(fn(spark, sfDir).count()) catch { case e: Throwable =>
+        errors(name) = why(e)
+        -1.0
+      }
       name -> secs
     } else Seq.empty
 
@@ -414,10 +430,7 @@ object Bench {
       f""""scaling":{"rows":$scaleRows,"n_small":$nSmall,"n_large":$nLarge,"cores_per_executor":$coresPerExec,"throughput_n":${thr(nSmall)}%.0f,"throughput_4n":${thr(nLarge)}%.0f,"efficiency":$eff%.3f,"host_cpu_x4":$hostX4%.2f,"host":{${hostScale.json}}},"""
     } catch { case e: Throwable =>
       // class and first message line, so a refused or stalled phase says why
-      val why = (e.getClass.getSimpleName +
-        Option(e.getMessage).fold("")(m => ": " + m.takeWhile(_ != '\n')))
-        .replaceAll("[\"\\\\\\p{Cntrl}]", "'")
-      s""""scaling":{"error":"$why"},"""
+      s""""scaling":{"error":"${why(e)}"},"""
     } else ""
 
     // compact per-query map: 3 decimals keeps the whole line well under the
@@ -426,6 +439,7 @@ object Bench {
     val total = results.map(_._2).filter(_ >= 0).sum
     val line =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
+      errors.map { case (k, v) => s""""$k":"$v"""" }.mkString(""""errors":{""", ",", "},") +
       s""""host":{${hostStart.json}},""" +
       pipelineJson +
       scaling +

@@ -12,9 +12,6 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-
 import graft.compile.{EventsFrame, TableFrame}
 
 /** The reference's HTTP/REST surface (internal/web/Web.go:163-276 — the
@@ -57,12 +54,14 @@ import graft.compile.{EventsFrame, TableFrame}
   * Unknown job ids map to 404 (the reference's lookup error), malformed
   * parameters to 400, everything else to 500 — never a handler crash.
   *
-  * Spark-first shape: a page response is built by the executors — the
-  * page slice runs over the job's persisted results store ([[JobsApi]])
-  * and rows are rendered to JSON by Spark's codegen'd `toJSON`, so the
-  * driver-side handler only stitches collected page-sized strings. The
-  * job itself is "pumped" in the background on start (the reference's
-  * job engine pump, internal/jobs/Engine.go:84-174; [[JobsApi.pump]]): a
+  * This class parses parameters and serialises; it runs no Spark action.
+  * Every page and field-stats response comes from [[JobsApi]], which runs
+  * each Spark job of a request under the job's group (so abort cancels
+  * it and its progress counts it): a page is a slice of the job's one
+  * rendered result, events or table, rendered to JSON once by `toJSON`,
+  * and the handler only stitches page-sized strings. The job itself is
+  * "pumped" in the background on start (the reference's job engine
+  * pump, internal/jobs/Engine.go:84-174; [[JobsApi.pump]]): a
   * newest-first events job first renders its head, the first rows in one
   * top-k job, so its first page is served before the full sort; then its
   * page index with the rendered results, and its stats, run as two
@@ -227,6 +226,7 @@ final class HttpApi(api: JobsApi,
     val skip = int(q, "skip")
     val take = int(q, "take")
     val job = api.job(id).getOrElse(throw JobsApi.NoSuchJobException(id))
+    val rows = api.jobResultsWireJson(id, skip, take)
     val o = mapper.createObjectNode()
     val events = o.putArray("events")
     val tableRows = o.putArray("tableRows")
@@ -234,16 +234,11 @@ final class HttpApi(api: JobsApi,
     job.frame match {
       case _: EventsFrame =>
         o.put("resultType", 1) // PipeTypeEvents
-        // rendered on the executors ONCE per job (JobsApi.wireJsonRdd) —
-        // a page request is a partition-pruned slice of cached JSON
-        // strings, not a fresh per-page plan
-        api.jobResultsWireJson(id, skip, take)
-          .foreach(s => events.add(mapper.readTree(s)))
+        rows.foreach(s => events.add(mapper.readTree(s)))
       case TableFrame(_, order) =>
         o.put("resultType", 2) // PipeTypeTable
         order.foreach(columnOrder.add)
-        pageJson(api.jobResults(id, skip, take))
-          .foreach(s => tableRows.add(mapper.readTree(s)))
+        rows.foreach(s => tableRows.add(mapper.readTree(s)))
     }
     sendJson(ex, 200, mapper.writeValueAsString(o))
   }
@@ -261,13 +256,13 @@ final class HttpApi(api: JobsApi,
       throw new IllegalArgumentException("lastTs is required")))
     val lastDocId = q.getOrElse("lastDocId",
       throw new IllegalArgumentException("lastDocId is required"))
-    val page = api.jobResultsAfter(id, lastTs, lastDocId, take)
+    val page = api.jobResultsAfterWireJson(id, lastTs, lastDocId, take)
     val o = mapper.createObjectNode()
     val events = o.putArray("events")
     o.putArray("tableRows")
     o.putArray("columnOrder")
     o.put("resultType", 1) // PipeTypeEvents (keyset implies the events sort)
-    pageJson(JobsApi.eventsWire(page)).foreach(s => events.add(mapper.readTree(s)))
+    page.foreach(s => events.add(mapper.readTree(s)))
     sendJson(ex, 200, mapper.writeValueAsString(o))
   }
 
@@ -286,12 +281,7 @@ final class HttpApi(api: JobsApi,
     val take = q.get("take").map(_.toInt).getOrElse(HttpApi.FieldStatsMaxValues)
     require(take >= 0, "take must be non-negative")
     val o = mapper.createObjectNode()
-    api.jobFieldStats(id, field)
-      .orderBy(col("occurrences").desc, col("value"))
-      .limit(take)
-      .collect()
-      .sortBy(_.getString(0))
-      .foreach(r => o.put(r.getString(0), r.getLong(1)))
+    api.jobFieldValues(id, field, take).foreach { case (v, n) => o.put(v, n) }
     sendJson(ex, 200, mapper.writeValueAsString(o))
   }
 
@@ -357,11 +347,6 @@ final class HttpApi(api: JobsApi,
   }
 
   // -------------------------------------------------------------- helpers
-
-  /** Rows -> JSON strings on the executors (whole-stage codegen JSON
-    * writer); the handler collects only the page (bounded by `take`).
-    */
-  private def pageJson(df: DataFrame): Array[String] = df.toJSON.collect()
 
   private def params(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getRawQuery).getOrElse("").split('&')

@@ -3,7 +3,8 @@ package graft.api
 import java.sql.Timestamp
 import java.time.Instant
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -66,7 +67,7 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
 
     /** A value this job computes at most once, under a lock of its own.
       * Not a `lazy val`: those all lock the Job, so one long computation
-      * (the sort behind [[partStarts]]) would stall every other thread
+      * (the sort behind [[index]]) would stall every other thread
       * that wants an unrelated value ([[head]], [[fieldStatsCached]]). A
       * failed computation leaves the cell empty; an aborted job computes
       * nothing more, so a chain still running after an abort or a failure
@@ -97,7 +98,7 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       * their wire JSON: one top-k job (`TakeOrderedAndProject`, no range
       * sample, no global sort) over [[matches]], which fills the match
       * cache as it scans. Same rows, same order `(ts DESC, doc_id)` and
-      * same `eventsWire(..).toJSON` render as [[wireJsonLocal]], so a page
+      * same `eventsWire(..).toJSON` render as [[rendered]], so a page
       * sliced from it is byte-identical to the pinned page.
       */
     private[JobsApi] val head: Once[Array[String]] = new Once(
@@ -152,78 +153,59 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       fieldStatsCached.get.groupBy(col("key")).agg(count(lit(1)).as("n_values"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
 
-    /** Partition-offset index over the pinned results cache: prefix row
-      * starts per cached partition, built in ONE narrow pass with the
-      * first results/stats action. Positional pages then read ONLY the
-      * cached partitions containing [skip, skip+take) — no per-page
-      * global shuffle (the previous offset+limit plan funneled the whole
-      * skipped prefix through a single-partition exchange on EVERY page),
-      * no scan of partitions before or after the page. The matched-event
-      * count is the index's last entry, so the pass doubles as the
-      * jobStats count. Once it is built, the results are pinned.
+    /** The page index over the pinned results cache, built in ONE narrow
+      * pass with the first results/stats action: each cached partition's
+      * row count and, for a timestampDesc job, its first (ts, doc_id) key.
+      * Positional pages then read ONLY the cached partitions containing
+      * [skip, skip+take) — no per-page global shuffle, no scan of
+      * partitions before or after the page — and a keyset page prunes its
+      * scan to the partitions at/after its anchor ([[jobResultsAfter]]).
+      * The matched-event count is the last prefix start, so the pass
+      * doubles as the jobStats count. Once it is built, the results are
+      * pinned.
       */
-    private[JobsApi] val partStarts: Once[Array[Long]] = new Once({
-      val counts = results.get.rdd
-        .mapPartitionsWithIndex((i, it) => Iterator((i, {
-          var n = 0L
-          while (it.hasNext) { it.next(); n += 1 }
-          n
-        })))
-        .collect().sortBy(_._1).map(_._2)
-      counts.scanLeft(0L)(_ + _)
+    private[JobsApi] val index: Once[JobsApi.PageIndex] = new Once({
+      val r = results.get
+      val keyed = sortMode == "timestampDesc"
+      val (tsIdx, didIdx) =
+        if (keyed) (r.schema.fieldIndex("ts"), r.schema.fieldIndex("doc_id")) else (-1, -1)
+      val parts = r.rdd.mapPartitionsWithIndex((i, it) => Iterator((i, {
+        val first = if (keyed && it.hasNext) {
+          val row = it.next()
+          Some((JobsApi.rowLdt(row.get(tsIdx)), row.getString(didIdx)))
+        } else None
+        var n = if (first.isDefined) 1L else 0L
+        while (it.hasNext) { it.next(); n += 1 }
+        (n, first)
+      }))).collect().sortBy(_._1).map(_._2)
+      JobsApi.PageIndex(parts.map(_._1).scanLeft(0L)(_ + _), parts.map(_._2))
     })
 
-    /** First (ts, doc_id) key per cached partition — the range bounds of
-      * the newest-first sort, one narrow pass, built lazily on the first
-      * keyset page. [[jobResultsAfter]] locates the anchor's partition in
-      * these bounds and prunes the scan to partitions at/after it: without
-      * the bounds, a filter+limit still scanned the whole prefix (every
-      * row with ts >= anchor fails the predicate but is read), making a
-      * deep keyset page O(prefix) like OFFSET. Only meaningful for
-      * timestampDesc jobs (the only mode with the total key).
+    /** The job's wire JSON, rendered once: the events wire keys (reference
+      * EventWithExtractedFields, pkg/logsuck/events/Event.go:46-54) for an
+      * events job, the table's own columns for a table job — the bytes a
+      * per-page `toJSON` of the same rows gives. A result of at most
+      * [[JobsApi.LocalPageCacheMaxRows]] rows is rendered straight into the
+      * driver and every page is an array slice with zero Spark jobs (the
+      * reference serves pages straight from its job-results table the same
+      * way). A bigger one stays on the executors: one narrow map over the
+      * persisted results (same partitioning, so [[index]] slices apply
+      * verbatim), pinned as it is first read, so a page is a
+      * partition-pruned job over cached strings. It is registered for
+      * release before the cell completes, so an abort leaks nothing.
       */
-    private[JobsApi] val partFirstKeys: Once[Array[Option[(java.time.LocalDateTime, String)]]] =
-      new Once({
-        val r = results.get
-        val tsIdx = r.schema.fieldIndex("ts")
-        val didIdx = r.schema.fieldIndex("doc_id")
-        r.rdd.mapPartitionsWithIndex((i, it) =>
-          Iterator((i, if (it.hasNext) {
-            val row = it.next()
-            Some((JobsApi.rowLdt(row.get(tsIdx)), row.getString(didIdx)))
-          } else None)))
-          .collect().sortBy(_._1).map(_._2)
-      })
-
-    /** The events wire JSON (reference EventWithExtractedFields keys,
-      * pkg/logsuck/events/Event.go:46-54) of a LARGE result, rendered once
-      * per job and pinned: one narrow map pass over the persisted results
-      * (same partitioning, so [[partStarts]] slices apply verbatim).
-      * Serving a page is then a partition-pruned RDD job over cached
-      * strings, not a fresh DataFrame + analysis + codegen per page.
-      * Events frames only (tables keep the per-page DataFrame path).
-      */
-    private[JobsApi] val wireJsonRdd: Once[org.apache.spark.rdd.RDD[String]] = new Once({
-      val r = JobsApi.eventsWire(results.get).toJSON.rdd
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      persistedRdds.add(r)
-      r
+    private[JobsApi] val rendered: Once[Either[Array[String], RDD[String]]] = new Once({
+      val json = (frame match {
+        case _: TableFrame => results.get
+        case _: EventsFrame => JobsApi.eventsWire(results.get)
+      }).toJSON
+      if (index.get.starts.last <= JobsApi.LocalPageCacheMaxRows) Left(json.collect())
+      else {
+        val r = json.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+        persistedRdds.add(r)
+        Right(r)
+      }
     })
-
-    /** Driver-held page cache for SMALL results: when the whole result is
-      * at most [[JobsApi.LocalPageCacheMaxRows]] rows, the wire JSON is
-      * rendered once straight into the driver (no executor copy is kept,
-      * none would be read again) and every page is an in-memory array
-      * slice — zero Spark jobs per page (the reference serves pages
-      * straight from its job-results table the same way). Bigger results
-      * keep the executor-side partition-pruned [[wireJsonRdd]]; both
-      * render the same rows through the same `toJSON`, so the wire bytes
-      * are identical either way.
-      */
-    private[JobsApi] val wireJsonLocal: Once[Option[Array[String]]] = new Once(
-      if (partStarts.get.last <= JobsApi.LocalPageCacheMaxRows)
-        Some(JobsApi.eventsWire(results.get).toJSON.collect())
-      else None)
 
     // memoized jobStats — the second stats call launches zero Spark jobs
     @volatile private[JobsApi] var statsCache: JobStats = null
@@ -234,8 +216,7 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     // missed, e.g. an imported job that only materialized fieldStatsCached)
     private val persistedFrames =
       new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    private val persistedRdds =
-      new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
+    private val persistedRdds = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
     private def pin(df: DataFrame): DataFrame = { JobsApi.pin(df); persistedFrames.add(df); df }
 
     /** Drop the pinned match set; called once [[results]] (with their
@@ -378,7 +359,7 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     val job = jobOrThrow(id)
     if (job.hasHead) {
       withJobGroup(job)(job.head.get): Unit
-      fork(() => withJobGroup(job) { job.partStarts.get; job.wireJsonLocal.get }: Unit)
+      fork(() => withJobGroup(job)(job.rendered.get): Unit)
     }
     jobStats(id): Unit
   }
@@ -482,7 +463,7 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       // on the pump's other chain; other jobs aggregate their results, so
       // the pass that pins them goes first.
       val occFirst = if (job.hasHead) Some(job.fieldCounts.get) else None
-      val n = job.partStarts.get.last
+      val n = job.index.get.starts.last
       val occ = occFirst.getOrElse(job.fieldCounts.get)
       job.releaseMatches()
       if (job.markTerminal(JobsApi.Finished) || job.stateRef == JobsApi.Finished) {
@@ -509,29 +490,24 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
   def jobResults(id: Long, skip: Int, take: Int): DataFrame = {
     val job = jobOrThrow(id)
     require(skip >= 0 && take >= 0, s"skip/take must be non-negative ($skip, $take)")
-    val starts = withJobGroup(job)(job.partStarts.get) // may materialize the store
+    val starts = withJobGroup(job)(job.index.get).starts // may materialize the store
     val results = job.results.get
     val spark = results.sparkSession
     val lo = skip.toLong
-    val hi = lo + take
-    if (take == 0 || lo >= starts.last) {
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], results.schema)
-    } else {
-      spark.createDataFrame(JobsApi.slicePage(results.rdd, starts, lo, hi), results.schema)
-    }
+    val rows =
+      if (take == 0 || lo >= starts.last) spark.sparkContext.emptyRDD[Row]
+      else JobsApi.slicePage(results.rdd, starts, lo, lo + take)
+    spark.createDataFrame(rows, results.schema)
   }
 
-  /** [[jobResults]] for the HTTP events wire: the page's rows as their
-    * final JSON strings, with the same ordering and page boundaries as
-    * [[jobResults]]. While a job with a head has not pinned its results,
-    * a page within the first [[JobsApi.HeadRows]] rows is a slice of
-    * [[Job#head]] (one top-k job, shared with the pump). Otherwise the
-    * page comes from the rendered results: an in-memory slice of
-    * [[Job#wireJsonLocal]] for a small result, else a one-stage
-    * partition-pruned job over the cached [[Job#wireJsonRdd]] strings
-    * (a narrow map of the persisted results, partition counts unchanged)
-    * — never a per-page DataFrame/plan/codegen.
+  /** [[jobResults]] on the HTTP wire, for events and table jobs alike: the
+    * page's rows as their final JSON strings, with the same ordering and
+    * page boundaries as [[jobResults]]. While a job with a head has not
+    * built its page index, a page within the first [[JobsApi.HeadRows]]
+    * rows is a slice of [[Job#head]] (one top-k job, shared with the pump).
+    * Otherwise the page is a slice of [[Job#rendered]]: in memory for a
+    * small result, else a one-stage partition-pruned job over the cached
+    * strings — never a per-page DataFrame/plan/codegen.
     */
   def jobResultsWireJson(id: Long, skip: Int, take: Int): Array[String] = {
     val job = jobOrThrow(id)
@@ -539,14 +515,14 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     val lo = skip.toLong
     val hi = lo + take
     withJobGroup(job) {
-      if (job.hasHead && hi <= JobsApi.HeadRows && !job.partStarts.isDone)
+      if (job.hasHead && hi <= JobsApi.HeadRows && !job.index.isDone)
         JobsApi.slice(job.head.get, lo, hi)
       else {
-        val starts = job.partStarts.get // may materialize the store
+        val starts = job.index.get.starts // may materialize the store
         if (take == 0 || lo >= starts.last) Array.empty[String]
-        else job.wireJsonLocal.get match {
-          case Some(all) => JobsApi.slice(all, lo, hi) // no Spark job
-          case None => JobsApi.slicePage(job.wireJsonRdd.get, starts, lo, hi).collect()
+        else job.rendered.get match {
+          case Left(all) => JobsApi.slice(all, lo, hi) // no Spark job
+          case Right(rdd) => JobsApi.slicePage(rdd, starts, lo, hi).collect()
         }
       }
     }
@@ -563,10 +539,37 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     */
   def jobResultsAfter(id: Long, lastTs: Timestamp, lastDocId: String,
       take: Int): DataFrame = {
+    val job = keysetJob(id, take)
+    withJobGroup(job)(job.index.get): Unit // may materialize the store
+    pageAfter(job, lastTs, lastDocId, take)
+  }
+
+  /** [[jobResultsAfter]] on the HTTP wire: the page's events as their wire
+    * JSON, rendered under the job's group.
+    */
+  def jobResultsAfterWireJson(id: Long, lastTs: Timestamp, lastDocId: String,
+      take: Int): Array[String] = {
+    val job = keysetJob(id, take)
+    withJobGroup(job)(
+      JobsApi.eventsWire(pageAfter(job, lastTs, lastDocId, take)).toJSON.collect())
+  }
+
+  /** The job a keyset page may be asked of; checked before any Spark work,
+    * so a bad request does not end the job.
+    */
+  private def keysetJob(id: Long, take: Int): Job = {
     val job = jobOrThrow(id)
     require(job.sortMode == "timestampDesc",
       s"keyset pagination needs the (ts, doc_id) sort key; job ${job.id} sorts ${job.sortMode}")
     require(take >= 0, s"take must be non-negative ($take)")
+    job
+  }
+
+  /** The keyset page as a lazy frame over the pinned results, its scan
+    * pruned by the page index's first keys.
+    */
+  private def pageAfter(job: Job, lastTs: Timestamp, lastDocId: String,
+      take: Int): DataFrame = {
     // Spark's java8 datetime rows carry LocalDateTime; the wire anchor is
     // a java.sql.Timestamp — normalize both to UTC LocalDateTime
     val anchorTs = java.time.LocalDateTime.ofInstant(
@@ -574,7 +577,7 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     // strictly-after predicate in the (ts desc, doc_id asc) result order
     def after(ts: java.time.LocalDateTime, docId: String): Boolean =
       ts.isBefore(anchorTs) || (ts.equals(anchorTs) && docId > lastDocId)
-    val bounds = withJobGroup(job)(job.partFirstKeys.get) // may materialize the store
+    val bounds = job.index.get.firstKeys
     val results = job.results.get
     val spark = results.sparkSession
     val schema = results.schema
@@ -595,16 +598,13 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       if (prev < 0) firstAfter else prev
     }
     if (take == 0 || lo >= n) {
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     } else {
       val tsIdx = schema.fieldIndex("ts")
       val didIdx = schema.fieldIndex("doc_id")
       // local copies: the task closure must capture values, not this Job
       val (anchorT, anchorDoc) = (anchorTs, lastDocId)
-      val pruned = org.apache.spark.rdd.PartitionPruningRDD.create(
-        results.rdd, _ >= lo)
-      val rows = pruned.mapPartitions(_.filter { r =>
+      val rows = PartitionPruningRDD.create(results.rdd, _ >= lo).mapPartitions(_.filter { r =>
         val t = JobsApi.rowLdt(r.get(tsIdx))
         t.isBefore(anchorT) || (t.equals(anchorT) && r.getString(didIdx) > anchorDoc)
       })
@@ -623,6 +623,20 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     job.fieldStatsCached.get
       .filter(col("key") === field)
       .select(col("value"), col("occurrences"))
+  }
+
+  /** [[jobFieldStats]] on the HTTP wire: at most `take` (value,
+    * occurrences) pairs, collected under the job's group and ordered by
+    * value. Top-occurrence values win the cut, ties by value.
+    */
+  def jobFieldValues(id: Long, field: String, take: Int): Array[(String, Long)] = {
+    val job = jobOrThrow(id)
+    withJobGroup(job)(jobFieldStats(id, field)
+      .orderBy(col("occurrences").desc, col("value"))
+      .limit(take)
+      .collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+      .sortBy(_._1))
   }
 
   /** Persist a job's stores to `dir` — the cross-process analog of the
@@ -720,11 +734,10 @@ object JobsApi {
     pins.computeIfPresent(cacheKey(df), (_, n: Integer) =>
       if (n > 1) Int.box(n - 1) else { df.unpersist(blocking = false); null }): Unit
 
-  /** Row cap for the driver-held wire-JSON page cache (Job.wireJsonLocal):
-    * results at or under it serve every page as an array slice with zero
-    * Spark jobs; bigger results keep the executor-side partition-pruned
-    * path. ~200 B/row of JSON -> at most ~20 MB on the driver, the same
-    * order as one collected page burst under the old per-page path.
+  /** Row cap for a driver-held rendered result (Job.rendered): results at
+    * or under it serve every page as an array slice with zero Spark jobs;
+    * bigger results keep the executor-side partition-pruned path. ~200
+    * B/row of JSON -> at most ~20 MB on the driver per job.
     */
   private[api] val LocalPageCacheMaxRows = 100000L
 
@@ -743,6 +756,14 @@ object JobsApi {
       col("source").as("Source"), col("source_id").as("SourceId"),
       col("fields").as("Fields"))
 
+  /** A job's page index (Job.index): `starts` holds the prefix row starts
+    * of the cached partitions (one more entry than partitions; the last is
+    * the row count), `firstKeys` each partition's first (ts, doc_id), None
+    * for an empty partition or a job not sorted timestampDesc.
+    */
+  private[api] final case class PageIndex(starts: Array[Long],
+      firstKeys: Array[Option[(java.time.LocalDateTime, String)]])
+
   /** Rows [lo, hi) of a driver-held rendered result, clipped to its size. */
   private def slice(all: Array[String], lo: Long, hi: Long): Array[String] = {
     val n = all.length.toLong
@@ -753,12 +774,12 @@ object JobsApi {
     * `starts`: only the partitions overlapping the range are read, and rows
     * are sliced positionally inside them.
     */
-  private def slicePage[T: scala.reflect.ClassTag](rdd: org.apache.spark.rdd.RDD[T],
-      starts: Array[Long], lo: Long, hi: Long): org.apache.spark.rdd.RDD[T] = {
+  private def slicePage[T: scala.reflect.ClassTag](rdd: RDD[T],
+      starts: Array[Long], lo: Long, hi: Long): RDD[T] = {
     val touched = (0 until starts.length - 1)
       .filter(i => starts(i) < hi && starts(i + 1) > lo).toArray
     val touchedSet = touched.toSet
-    org.apache.spark.rdd.PartitionPruningRDD.create(rdd, touchedSet.contains)
+    PartitionPruningRDD.create(rdd, touchedSet.contains)
       .mapPartitionsWithIndex { (pi, it) =>
         val orig = touched(pi)
         val base = starts(orig)

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -77,35 +76,6 @@ object F {
 
   /** filepath.Match-style glob as an anchored regex (see SourceRules). */
   def globToRegex(glob: String): String = SourceRules.globToRegex(glob)
-
-  /** Reference ParseTime (pkg/logsuck/parser/ParseTime.go:24-54): Go layout
-    * strings plus UNIX / UNIX_MILLIS / UNIX_DECIMAL_NANOS, as built-in
-    * Catalyst expressions (all codegen'd).
-    */
-  def parse_time(value: Column, layout: String): Column = layout match {
-    case "UNIX" => timestamp_seconds(value.cast(LongType))
-    case "UNIX_MILLIS" => timestamp_millis(value.cast(LongType))
-    case "UNIX_DECIMAL_NANOS" =>
-      // Go: time.Unix(int64(split[0]), int64(split[1])) — the decimals parsed
-      // as integer *nanoseconds* (a reference quirk we preserve).
-      val parts = split(value, "\\.")
-      timestamp_micros(
-        element_at(parts, 1).cast(LongType) * lit(1000000L) +
-          (element_at(parts, 2).cast(LongType) / lit(1000L)).cast(LongType))
-    case goLayout =>
-      // extraction runs on lowercased raw (Fragments.go:95), so month/day
-      // names arrive lowercased; java.time parsing is case-sensitive. The
-      // reference would silently fall back to wall clock here (its default
-      // layouts are numeric-only); we normalize instead (SURVEY.md §7.3).
-      val v =
-        if (goLayout.contains("Jan") || goLayout.contains("Mon")) {
-          val names = Seq("jan", "feb", "mar", "apr", "may", "jun", "jul",
-            "aug", "sep", "oct", "nov", "dec", "mon", "tue", "wed", "thu",
-            "fri", "sat", "sun")
-          names.foldLeft(value)((c, n) => regexp_replace(c, "\\b" + n, n.capitalize))
-        } else value
-      to_timestamp(v, goLayoutToJava(goLayout))
-  }
 
   /** Translate a Go reference-time layout (Mon Jan 2 15:04:05 MST 2006) to a
     * java.time DateTimeFormatter pattern. Covers the tokens the reference's

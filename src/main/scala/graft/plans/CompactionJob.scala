@@ -32,7 +32,7 @@ object CompactionJob {
     * CHANGING sinks flip the global xor, so one (count, xor) pair carries
     * the per-sink row-set guarantee.
     */
-  private final class RowSetSig(cols: String*) {
+  private[plans] final class RowSetSig(cols: String*) {
     private def aggs = (count(lit(1)).as("n"), bit_xor(xxhash64(cols.map(col): _*)).as("sig"))
     private def value(n: Any, sig: Any): (Long, Long) =
       (n.asInstanceOf[Long], sig match { case l: Long => l; case _ => 0L })
@@ -53,28 +53,31 @@ object CompactionJob {
       })
     }
   }
-  private val routedSig = new RowSetSig("sink", "doc_id", "tokens")
+  private[plans] val routedSig = new RowSetSig("sink", "doc_id", "tokens")
 
   final case class Result(sinks: Int, rows: Long, filesBefore: Long, filesAfter: Long)
 
-  /** Write `staged` via `write`, verify it with `sig` (recomputed on both
-    * sides), then swap it into `outPath`. The old output is renamed ASIDE —
-    * not deleted — before the swap, and the backup is dropped only after the
-    * swap succeeds: a failed rename (or a crash between the two) always
+  /** Write a staging dir via `write`, verify it with `sig` (recomputed on
+    * both sides), then swap it into `outPath`. Staging and backup dirs are
+    * `.`-prefixed siblings of `outPath`, which Spark's file index skips.
+    * The old output is renamed ASIDE — not deleted — before the swap, and
+    * the backup is dropped only after the swap succeeds: a failed rename (or a crash between the two) always
     * leaves at least one complete output behind, old or new. A failed
     * write/verification leaves no partial output; once verified, the staging
     * dir may be the only complete copy, so post-verification failures keep
     * it for recovery instead of destroying both sides.
     */
-  private def verifiedSwap[S](fs: org.apache.hadoop.fs.FileSystem,
-      staging: Path, outPath: Path)(write: String => Unit)(sig: String => S,
+  private[plans] def verifiedSwap[S](fs: org.apache.hadoop.fs.FileSystem,
+      outPath: Path)(write: String => Unit)(sig: String => S,
       before: => S): Unit = { // by-name: the input signature may ride the
     var verified = false      // write itself as an Observation
+    val staging = new Path(outPath.getParent,
+      s".${outPath.getName}.compact-staging-${System.nanoTime()}")
     try {
       write(staging.toString)
       val after = sig(staging.toString)
       require(before == after,
-        s"compaction changed the row set: before=$before after=$after")
+        s"the rewrite changed the row set: before=$before after=$after")
       verified = true
       val backup = new Path(outPath.getParent,
         s".${outPath.getName}.compact-old-${System.nanoTime()}")
@@ -119,8 +122,6 @@ object CompactionJob {
       targetRows: Long = 2000000L): Result = {
     val outPath = new Path(outDir)
     val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(outPath.getParent,
-      s".${outPath.getName}.compact-staging-${System.nanoTime()}")
 
     val in = spark.read.parquet(inDir)
       .select("doc_id", "tokens", "n_tok", "source", "host",
@@ -135,7 +136,7 @@ object CompactionJob {
     val rows = spark.read.parquet(inDir).count()
     val parts = math.max(1, math.min(Int.MaxValue.toLong, (rows + targetRows - 1) / targetRows)).toInt
     val (observed, before) = routedSig.observe(in)
-    verifiedSwap(fs, staging, outPath) { dst =>
+    verifiedSwap(fs, outPath) { dst =>
       observed
         .repartition(parts, col("sink"), pmod(hash(col("doc_id")), lit(parts * 8)))
         .sortWithinPartitions(col("sink"), col("ts"))
@@ -266,8 +267,6 @@ object CompactionJob {
       numPartitions: Int = 0): Result = {
     val outPath = new Path(outDir)
     val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(outPath.getParent,
-      s".${outPath.getName}.compact-staging-${System.nanoTime()}")
     val parts =
       if (numPartitions > 0) numPartitions
       else spark.sparkContext.defaultParallelism
@@ -275,7 +274,7 @@ object CompactionJob {
     val postingsSig = new RowSetSig("word", "doc_id")
     def sig(dir: String): (Long, Long) = postingsSig.of(spark.read.parquet(dir))
     val before = sig(inDir)
-    verifiedSwap(fs, staging, outPath) { dst =>
+    verifiedSwap(fs, outPath) { dst =>
       spark.read.parquet(inDir).select("word", "doc_id")
         .repartitionByRange(parts, col("word"), col("doc_id"))
         .sortWithinPartitions("word", "doc_id")

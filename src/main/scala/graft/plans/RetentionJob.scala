@@ -5,6 +5,7 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,8 +26,11 @@ object RetentionJob {
 
   def apply(spark: SparkSession, routeOut: String, cutoff: Timestamp): RetentionStats = {
     val base = Paths.get(routeOut)
+    val fs = new Path(routeOut).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // `batch=<digits>` dirs only: a dir a rewrite or a crashed run left
+    // next to them is no batch
     val batchDirs = Files.list(base).iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith("batch=") && Files.isDirectory(p))
+      .filter(p => p.getFileName.toString.matches("batch=\\d+") && Files.isDirectory(p))
       .toSeq.sortBy(_.toString)
     var dropped = 0; var rewritten = 0; var kept = 0; var rowsDeleted = 0L
     batchDirs.foreach { dir =>
@@ -42,15 +46,14 @@ object RetentionJob {
       } else if (mn != null && !mn.before(cutoff)) {
         kept += 1
       } else {
-        // straddling batch: filter-rewrite (via temp dir, then swap)
-        val keptDf = df.filter(col("ts") >= lit(cutoff))
-        val tmp = dir.resolveSibling(dir.getFileName.toString + ".retention-tmp")
-        keptDf.write.mode(SaveMode.Overwrite).partitionBy("sink").parquet(tmp.toString)
-        val keptN = spark.read.parquet(tmp.toString).count()
-        Files.walk(dir).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => Files.delete(f))
-        Files.move(tmp, dir)
-        rewritten += 1; rowsDeleted += n - keptN
+        // straddling batch: filter-rewrite into a hidden staging dir, whose
+        // kept-row signature (observed on the write, recomputed from the
+        // written files) must match before it is swapped in
+        val (keptDf, keptSig) = CompactionJob.routedSig.observe(df.filter(col("ts") >= lit(cutoff)))
+        CompactionJob.verifiedSwap(fs, new Path(dir.toString)) { dst =>
+          keptDf.write.mode(SaveMode.Overwrite).partitionBy("sink").parquet(dst)
+        }(dst => CompactionJob.routedSig.of(spark.read.parquet(dst)), keptSig())
+        rewritten += 1; rowsDeleted += n - keptSig()._1
       }
     }
     RetentionStats(dropped, rewritten, kept, rowsDeleted)

@@ -195,6 +195,39 @@ class ApiSpec extends AnyFunSuite {
       "the last holder unpersists")
   }
 
+  test("a result over LocalPageCacheMaxRows pages from one persisted rendered RDD") {
+    // 120,000 synthetic events, one a second, all matched by the search
+    val many = spark.range(120000L).select(
+      col("id").cast("string").as("doc_id"), lit("events-0.log").as("source"),
+      lit("h").as("host"), lit("sid").as("source_id"),
+      timestamp_seconds(col("id") + 1704067200L).as("ts"), col("id").as("offset"),
+      concat(lit("2024/01/01 00:00:00.000000 userid="), col("id") % 50).as("raw"))
+    val api = new JobsApi(new QueryEngine(many, EventsAdapter.configs))
+    val job = api.startJob("userid NOT zzlarge")
+    assert(api.jobStats(job.id).numMatchedEvents == 120000L)
+    // the cached partitions' sizes; a page around each inner boundary
+    // straddles two of them
+    val sizes = QueryEngine.newestFirst(job.frame).rdd
+      .mapPartitions(it => Iterator(it.size.toLong)).collect()
+    val bounds = sizes.scanLeft(0L)(_ + _).slice(1, sizes.length)
+    assert(bounds.nonEmpty, s"the result must span several cached partitions: $sizes")
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    bounds.foreach { b =>
+      val skip = (b - 3).toInt
+      val wire = api.jobResultsWireJson(job.id, skip, 7).toSeq
+      val want = api.jobResults(job.id, skip, 7).select(
+        col("doc_id").as("Id"), col("raw").as("Raw"), col("ts").as("Timestamp"),
+        col("host").as("Host"), col("source").as("Source"),
+        col("source_id").as("SourceId"), col("fields").as("Fields")).toJSON.collect().toSeq
+      assert(wire.length == 7 && wire == want, s"page at $skip")
+    }
+    val rendered = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(rendered.size == 1, s"persisted RDDs added by the pages: $rendered")
+    assert(api.releaseJob(job.id))
+    assert(!spark.sparkContext.getPersistentRDDs.contains(rendered.head),
+      "releaseJob unpersists the rendered RDD")
+  }
+
   test("a failed job ends aborted: no re-run, expires with its caches") {
     // one row's raw line throws, so every search over raw fails
     val broken = EventsAdapter.events(spark, dir).withColumn("raw",
@@ -440,14 +473,21 @@ class ApiSpec extends AnyFunSuite {
     // cutoff = median ts -> roughly half the rows expire
     val cutoff = all.selectExpr("percentile(CAST(ts AS DOUBLE), 0.5)").head().getDouble(0)
     val cutoffTs = new Timestamp((cutoff * 1000).toLong)
-    val expectedKept = all.filter(col("ts") >= lit(cutoffTs)).count()
+    val keptIds = all.filter(col("ts") >= lit(cutoffTs)).select("doc_id")
+      .collect().map(_.getString(0)).sorted.toSeq
+    // a crashed run's rewrite temp, all of its rows older than the cutoff:
+    // not a batch, so it is neither counted nor deleted
+    val leftover = java.nio.file.Paths.get(out, "batch=1.retention-tmp")
+    all.filter(col("ts") < lit(cutoffTs)).write.partitionBy("sink").parquet(leftover.toString)
     val stats = RetentionJob(spark, out, cutoffTs)
-    assert(stats.rowsDeleted == total - expectedKept)
+    assert(stats.rowsDeleted == total - keptIds.length)
+    assert(stats.batchesDropped + stats.batchesRewritten + stats.batchesKept == 4)
+    assert(Files.isDirectory(leftover), "the leftover temp dir was deleted")
     val after = spark.read.option("basePath", out)
       .parquet(java.nio.file.Files.list(java.nio.file.Paths.get(out))
         .iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-        .asScala.filter(_.getFileName.toString.startsWith("batch=")).map(_.toString).toSeq: _*)
-    assert(after.count() == expectedKept)
+        .asScala.filter(_.getFileName.toString.matches("batch=\\d+")).map(_.toString).toSeq: _*)
+    assert(after.select("doc_id").collect().map(_.getString(0)).sorted.toSeq == keptIds)
     assert(after.filter(col("ts") < lit(cutoffTs)).count() == 0)
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -74,21 +75,26 @@ class ExtractSpec extends AnyFunSuite {
     assert(m("_time") == "1675006830.089307")
   }
 
-  test("parse_time UNIX variants (ParseTime.go:24-54)") {
+  /** `F.event_time` under a one-rule config whose time layout is `layout`. */
+  private def eventTime(value: Column, layout: String): Column =
+    F.event_time(value, lit("t.log"), Seq(graft.model.SourceConfig("t.log", "kv",
+      Seq(), "_time", layout, "h", "t")))
+
+  test("event_time UNIX variants (ParseTime.go:24-54)") {
     val df = Seq(("1611171420", "1611171420123", "1611171420.000123")).toDF("u", "um", "un")
     val r = df.select(
-      F.parse_time(col("u"), "UNIX").cast("long").as("a"),
-      F.parse_time(col("um"), "UNIX_MILLIS").cast("string").as("b"),
-      F.parse_time(col("un"), "UNIX_DECIMAL_NANOS").cast("string").as("c")).head()
+      eventTime(col("u"), "UNIX").cast("long").as("a"),
+      eventTime(col("um"), "UNIX_MILLIS").cast("string").as("b"),
+      eventTime(col("un"), "UNIX_DECIMAL_NANOS").cast("string").as("c")).head()
     assert(r.getLong(0) == 1611171420L)
     assert(r.getString(1) == "2021-01-20 19:37:00.123")
     // 123 "decimal nanos" -> 0.000000123s -> truncated to microseconds
     assert(r.getString(2) == "2021-01-20 19:37:00")
   }
 
-  test("parse_time Go layout (default kv layout)") {
+  test("event_time Go layout (default kv layout)") {
     val r = Seq("2021/01/20 19:37:00.123456").toDF("t")
-      .select(F.parse_time(col("t"), "2006/01/02 15:04:05.000000").cast("string")).head()
+      .select(eventTime(col("t"), "2006/01/02 15:04:05.000000").cast("string")).head()
     assert(r.getString(0) == "2021-01-20 19:37:00.123456")
   }
 

@@ -7,12 +7,13 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.{HttpApi, JobsApi}
 import graft.compile.QueryEngine
+import graft.metrics.Recorder
 import graft.sources.EventsAdapter
 
 /** The REST surface (reference internal/web/Web.go api/v1 group +
@@ -46,6 +47,15 @@ class HttpApiSpec extends AnyFunSuite {
 
   private def enc(s: String) = URLEncoder.encode(s, UTF_8)
 
+  /** `rec` saw Spark jobs, and every one ran under job `id`'s group. */
+  private def assertJobGroup(rec: Recorder, id: Long): Unit = {
+    val groups = rec.jobs.map(j => j.properties.getProperty("spark.jobGroup.id"))
+    assert(groups.nonEmpty && groups.forall(_ == s"graft-job-$id"), s"job groups: $groups")
+  }
+
+  /** The JSON rows of a page, parsed. */
+  private def parsed(rows: Iterable[String]): Seq[JsonNode] = rows.map(mapper.readTree).toSeq
+
   test("startJob/jobStats/jobResults/jobFieldStats over HTTP (Web.go api/v1)") {
     withServer() { (port, _) =>
       val start = post(port, s"/api/v1/startJob?searchString=${enc("error")}")
@@ -78,9 +88,10 @@ class HttpApiSpec extends AnyFunSuite {
       val ids2 = page2.get("events").elements().asScala.map(_.get("Id").asText()).toSet
       assert(ids2.size == 10 && ids1.intersect(ids2).isEmpty)
 
-      val fs = mapper.readTree(
-        get(port, s"/api/v1/jobFieldStats?jobId=$id&fieldName=eventtype").body())
+      val (fs, fsJobs) = TestSpark.observe(mapper.readTree(
+        get(port, s"/api/v1/jobFieldStats?jobId=$id&fieldName=eventtype").body()))
       assert(fs.get("error").asLong() == 201 && fs.size() == 1)
+      assertJobGroup(fsJobs, id)
 
       // take caps the driver-side collection for high-cardinality fields:
       // top-occurrence values win the cut; the full map stays the default
@@ -139,11 +150,14 @@ class HttpApiSpec extends AnyFunSuite {
   }
 
   test("table jobs serve resultType=2 with columnOrder and tableRows") {
-    withServer() { (port, _) =>
+    withServer() { (port, api) =>
       val q = enc("error | table \"userid,eventtype\"")
       val id = post(port, s"/api/v1/startJob?searchString=$q").body().trim.toLong
-      val res = mapper.readTree(
-        get(port, s"/api/v1/jobResults?jobId=$id&skip=0&take=5").body())
+      // finished first, so no pump work runs while the pages are observed
+      assert(mapper.readTree(get(port, s"/api/v1/jobStats?jobId=$id").body())
+        .get("State").asInt() == 2)
+      val (res, firstJobs) = TestSpark.observe(mapper.readTree(
+        get(port, s"/api/v1/jobResults?jobId=$id&skip=0&take=5").body()))
       assert(res.get("resultType").asInt() == 2) // PipeTypeTable
       assert(res.get("columnOrder").elements().asScala.map(_.asText()).toSeq
         == Seq("userid", "eventtype"))
@@ -151,20 +165,31 @@ class HttpApiSpec extends AnyFunSuite {
       val rows = res.get("tableRows")
       assert(rows.size() == 5)
       assert(rows.get(0).get("eventtype").asText() == "error")
+      assertJobGroup(firstJobs, id)
+      // the second page is a slice of the rendered result: no Spark job
+      val (res2, secondJobs) = TestSpark.observe(mapper.readTree(
+        get(port, s"/api/v1/jobResults?jobId=$id&skip=5&take=5").body()))
+      assert(secondJobs.jobs.isEmpty, s"a table's second page ran ${secondJobs.jobs.size} jobs")
+      // every page equals the per-page render of the same rows
+      for ((page, skip) <- Seq(res -> 0, res2 -> 5))
+        assert(page.get("tableRows").elements().asScala.toSeq ==
+          parsed(api.jobResults(id, skip, 5).toJSON.collect()), s"page at $skip")
     }
   }
 
   test("a | stats job serves its aggregate as a table over HTTP") {
-    withServer() { (port, _) =>
+    withServer() { (port, api) =>
       val q = enc("error | stats fn=count by=userid")
       val id = post(port, s"/api/v1/startJob?searchString=$q").body().trim.toLong
-      val res = mapper.readTree(
-        get(port, s"/api/v1/jobResults?jobId=$id&skip=0&take=200").body())
+      val (res, pageJobs) = TestSpark.observe(mapper.readTree(
+        get(port, s"/api/v1/jobResults?jobId=$id&skip=0&take=200").body()))
       assert(res.get("resultType").asInt() == 2)
       assert(res.get("columnOrder").elements().asScala.map(_.asText()).toSeq
         == Seq("userid", "count"))
       val rows = res.get("tableRows").elements().asScala.toSeq
       assert(rows.nonEmpty)
+      assertJobGroup(pageJobs, id)
+      assert(rows == parsed(api.jobResults(id, 0, 200).toJSON.collect()))
       // the served counts reconcile with the total error-event count
       val total = rows.map(_.get("count").asText().toLong).sum
       val all = post(port, s"/api/v1/startJob?searchString=${enc("error")}")
@@ -304,10 +329,11 @@ class HttpApiSpec extends AnyFunSuite {
         anchor.getAs[java.time.LocalDateTime](0), java.time.ZoneOffset.UTC)
         .format(java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME)
       val docId = anchor.getString(1)
-      val next = mapper.readTree(get(port,
+      val (next, keysetJobs) = TestSpark.observe(mapper.readTree(get(port,
         s"/api/v1/jobResultsAfter?jobId=$id&lastTs=${enc(ts)}&lastDocId=${enc(docId)}&take=5")
-        .body())
+        .body()))
       assert(next.get("resultType").asInt() == 1)
+      assertJobGroup(keysetJobs, id)
       val viaKeyset = next.get("events").elements().asScala
         .map(_.get("Id").asText()).toSeq
       val viaSkip = mapper.readTree(
