@@ -187,19 +187,47 @@ object Bench {
     */
   private val MinScaleRowsPerSec = 20000L
 
-  /** Refuses a `local-cluster[workers,cores,memMb]` that does not fit the
-    * host: more executor cores than available processors, or more
-    * executor memory than MemTotal (`/proc/meminfo`; unchecked where that
-    * cannot be read).
+  /** Bytes per staged scaling-input row: 1M `SequenceGen` rows in 64 files
+    * stage as 32.5 MB of parquet (measured; 250k rows in 16 files alike).
     */
-  private def requireFits(workers: Int, cores: Int, memMb: Int): Unit = {
+  private val StagedBytesPerRow = 33L
+
+  /** Why a `local-cluster[workers,cores,memMb]` does not fit the host, or
+    * None. Cores: the executors' against the available processors. Memory:
+    * the executor heaps, the driver's max heap and the staged input's tmpfs
+    * bytes against the lower of MemTotal and the cgroup's `memory.max`
+    * (each unchecked when unknown).
+    */
+  private[graft] def misfit(workers: Int, cores: Int, memMb: Int, procs: Int,
+      driverMb: Long, tmpfsMb: Long, memTotalMb: Option[Long],
+      cgroupMb: Option[Long]): Option[String] = {
     val cluster = s"local-cluster[$workers,$cores,$memMb]"
-    val procs = Runtime.getRuntime.availableProcessors
-    require(workers * cores <= procs,
-      s"$cluster needs ${workers * cores} cores, the host has $procs")
-    scala.util.Using(scala.io.Source.fromFile("/proc/meminfo"))(_.getLines().collectFirst {
-      case l if l.startsWith("MemTotal:") => l.split("\\s+")(1).toLong / 1024 }.get).foreach(total => require(workers.toLong * memMb <= total,
-      s"$cluster needs ${workers.toLong * memMb} MB, the host has $total MB"))
+    val execMb = workers.toLong * memMb
+    val needMb = execMb + driverMb + tmpfsMb
+    if (workers * cores > procs)
+      Some(s"$cluster needs ${workers * cores} cores, the host has $procs")
+    else (memTotalMb.map((_, "MemTotal")) ++ cgroupMb.map((_, "cgroup memory.max")))
+      .minByOption(_._1).collect { case (limitMb, what) if needMb > limitMb =>
+        s"$cluster needs $needMb MB ($execMb executors + $driverMb driver heap + " +
+          s"$tmpfsMb staged input on tmpfs), the host has $limitMb MB ($what)"
+      }
+  }
+
+  /** Refuses a `local-cluster[workers,cores,memMb]` that does not fit the
+    * host ([[misfit]]) while `stagedRows` input rows sit in [[Scratch]].
+    */
+  private def requireFits(workers: Int, cores: Int, memMb: Int, stagedRows: Long): Unit = {
+    def firstLine[T](path: String)(pick: Iterator[String] => Option[T]): Option[T] =
+      scala.util.Using(scala.io.Source.fromFile(path))(s => pick(s.getLines())).toOption.flatten
+    val memTotalMb = firstLine("/proc/meminfo")(_.collectFirst {
+      case l if l.startsWith("MemTotal:") => l.split("\\s+")(1).toLong / 1024 })
+    val cgroupMb = firstLine("/sys/fs/cgroup/memory.max")(
+      _.nextOption().flatMap(_.trim.toLongOption).map(_ >> 20)) // "max": no limit
+    val onTmpfs = scala.util.Try(Files.getFileStore(Scratch.base.toPath).`type` == "tmpfs").getOrElse(false)
+    val tmpfsMb = if (onTmpfs) (stagedRows * StagedBytesPerRow) >> 20 else 0L
+    val why = misfit(workers, cores, memMb, Runtime.getRuntime.availableProcessors,
+      Runtime.getRuntime.maxMemory >> 20, tmpfsMb, memTotalMb, cgroupMb)
+    require(why.isEmpty, why.getOrElse(""))
   }
 
   /** An exception as a JSON-safe string: its class and the first line of
@@ -328,7 +356,7 @@ object Bench {
       val nLarge = nSmall * 4
       // before staging anything: a cluster the host cannot hold would wait
       // for executors that never register, or swap
-      requireFits(nLarge, coresPerExec, execMemMb)
+      requireFits(nLarge, coresPerExec, execMemMb, scaleRows + scaleRows / 4)
       val scaleIn = s"$benchRoot/scale-in"
       val warmIn = s"$benchRoot/scale-warm-in"
       locally {

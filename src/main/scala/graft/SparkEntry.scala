@@ -725,9 +725,9 @@ object SparkEntry {
             s, tmp, sink, ckpt, EventsAdapter.configs).awaitTermination()
           // fold the deltas into a base snapshot before serving — the whole
           // stream -> delta sink -> compact -> serve chain sits under the
-          // batch-parity oracle (compactHistogram's own signature gate also
+          // batch-parity oracle (the compaction's own signature gate also
           // runs inside)
-          graft.plans.CompactionJob.compactHistogram(s, sink)
+          graft.streaming.DeltaStore.histogram(sink).compact(s)
           graft.streaming.StreamingPipeline.servedHistogram(s, sink)
             .select(
               date_format(col("bucket_start"), "yyyy-MM-dd HH:mm:ss").as("bucket_start"),

@@ -32,7 +32,7 @@ object CompactionJob {
     * CHANGING sinks flip the global xor, so one (count, xor) pair carries
     * the per-sink row-set guarantee.
     */
-  private[plans] final class RowSetSig(cols: String*) {
+  private[graft] final class RowSetSig(cols: String*) {
     private def aggs = (count(lit(1)).as("n"), bit_xor(xxhash64(cols.map(col): _*)).as("sig"))
     private def value(n: Any, sig: Any): (Long, Long) =
       (n.asInstanceOf[Long], sig match { case l: Long => l; case _ => 0L })
@@ -67,7 +67,7 @@ object CompactionJob {
     * dir may be the only complete copy, so post-verification failures keep
     * it for recovery instead of destroying both sides.
     */
-  private[plans] def verifiedSwap[S](fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def verifiedSwap[S](fs: org.apache.hadoop.fs.FileSystem,
       outPath: Path)(write: String => Unit)(sig: String => S,
       before: => S): Unit = { // by-name: the input signature may ride the
     var verified = false      // write itself as an Observation
@@ -107,7 +107,7 @@ object CompactionJob {
     }
   }
 
-  private def fileCount(spark: SparkSession, dir: String): Long = {
+  private[graft] def fileCount(spark: SparkSession, dir: String): Long = {
     val p = new Path(dir)
     val dfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!dfs.exists(p)) return 0L
@@ -123,9 +123,7 @@ object CompactionJob {
     val outPath = new Path(outDir)
     val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    val in = spark.read.parquet(inDir)
-      .select("doc_id", "tokens", "n_tok", "source", "host",
-        "ts", "offset", "sink")
+    val in = LogPipeline.routedRows(spark.read.parquet(inDir))
     // writer sizing from a column-less count (parquet footer row counts, no
     // data pass); the input row-set signature rides the rewrite itself as
     // an Observation — the previous shape read the full input TWICE (one
@@ -147,112 +145,6 @@ object CompactionJob {
       it.count(s => s.isDirectory && s.getPath.getName.startsWith("sink="))
     }
     Result(sinks, rows, fileCount(spark, inDir), fileCount(spark, outDir))
-  }
-
-  /** Compact a [[graft.streaming.StreamingPipeline.histogramToSink]] delta
-    * store: fold the newest base (if any) + all deltas into ONE base
-    * snapshot ranked at the newest delta's batch id, then drop the
-    * superseded parts. The streaming writer keeps appending deltas with
-    * HIGHER batch ids concurrently (its ids only grow), and the serving
-    * view composes `newest base + newer deltas`, so compaction never
-    * blocks ingest or serving.
-    *
-    * Crash safety is the single atomic rename of the verified staging dir
-    * to `base-<id>`: until it lands, readers see the old parts untouched;
-    * after it lands, superseded parts (old bases, deltas <= id) are
-    * invisible to every NEW reader (the serving view's base floor skips
-    * them) but stay at their paths for `graceMs` so a CONCURRENT reader
-    * whose plan listed them before the commit keeps reading — a
-    * merge-on-read store may never delete under a live scan. Supersede
-    * time is recorded as a tombstone marker (`.graft-reclaim/<part>`);
-    * any marked part older than the grace is reclaimed by a LATER
-    * compaction (including debris a crashed run left behind). The same
-    * refuse-to-commit signature gate as the data compaction guards the
-    * fold itself.
-    */
-  def compactHistogram(spark: SparkSession, outDir: String,
-      graceMs: Long = 600000L): Result = {
-    import graft.streaming.StreamingPipeline
-    val outPath = new Path(outDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (oldBase, deltas) = StreamingPipeline.storeParts(spark, outDir)
-    val filesBefore = fileCount(spark, outDir)
-    // reclaim pass runs on EVERY call (even a no-op one): delete parts
-    // whose tombstone aged past the grace, then stale staging debris
-    val marks = new Path(outPath, ".graft-reclaim")
-    val now = System.currentTimeMillis()
-    try {
-      if (fs.exists(marks)) fs.listStatus(marks).foreach { m =>
-        if (now - m.getModificationTime > graceMs) {
-          fs.delete(new Path(outPath, m.getPath.getName), true): Unit
-          fs.delete(m.getPath, false): Unit
-        }
-      }
-      if (fs.exists(outPath)) fs.listStatus(outPath)
-        .filter { s =>
-          s.getPath.getName.startsWith(".histbase-staging-") &&
-            now - s.getModificationTime > graceMs
-        }
-        .foreach(s => fs.delete(s.getPath, true): Unit)
-      // a crash between commit and tombstoning leaves superseded parts
-      // unmarked (invisible to readers, never reclaimed): start their
-      // grace clock now
-      if (fs.exists(outPath)) {
-        val floor = oldBase.map(_._1).getOrElse(-1L)
-        fs.listStatus(outPath).map(_.getPath.getName).filter { n =>
-          (n.startsWith("base-") &&
-            n.stripPrefix("base-").toLongOption.exists(_ < floor)) ||
-          (n.startsWith("delta=") &&
-            n.stripPrefix("delta=").toLongOption.exists(_ <= floor))
-        }.foreach { name =>
-          val m = new Path(marks, name)
-          if (!fs.exists(m)) { fs.mkdirs(marks): Unit; fs.create(m, true).close() }
-        }
-      }
-    } catch { case _: java.io.IOException => () }
-    if (deltas.isEmpty) // nothing newer than the base: no-op
-      return Result(1, 0L, filesBefore, filesBefore)
-    val newId = deltas.map(_._1).max
-    // ONE listing snapshot feeds the signature AND the rewrite: a delta the
-    // streaming writer appends while we run is simply not in this fold (the
-    // next compaction takes it) — re-listing per phase would see different
-    // file sets and fail the gate under steady ingest
-    val served = StreamingPipeline.servedFrom(spark, outDir, oldBase, deltas)
-
-    val sig = new RowSetSig("bucket_start", "sink", "n")
-    val staging = new Path(outPath, s".histbase-staging-${System.nanoTime()}")
-    var committed = false
-    var rowsBefore = 0L
-    try {
-      // the "before" signature rides the staging write as an Observation
-      // (CollectMetrics) instead of a separate full evaluation of the
-      // merge-on-read view — one pass, same gate: `after` is still
-      // recomputed independently from the written files
-      val (observed, observedSig) = sig.observe(served)
-      observed.write.mode("overwrite").parquet(staging.toString)
-      val before = observedSig()
-      rowsBefore = before._1
-      val after = sig.of(spark.read.parquet(staging.toString))
-      require(before == after,
-        s"histogram compaction changed the served rows: before=$before after=$after")
-      if (!fs.rename(staging, new Path(outPath, s"base-$newId")))
-        throw new java.io.IOException(s"failed to commit $staging as base-$newId")
-      committed = true
-    } finally {
-      if (!committed && fs.exists(staging)) fs.delete(staging, true): Unit
-    }
-    // tombstone the just-superseded parts (best-effort: the commit already
-    // happened); their marker mtime IS the supersede time, so the grace
-    // clock starts now, not at the part's write time
-    try {
-      fs.mkdirs(marks): Unit
-      (oldBase.map { case (id, _) => s"base-$id" } ++
-        deltas.map { case (id, _) => s"delta=$id" }).foreach { name =>
-        val m = new Path(marks, name)
-        if (!fs.exists(m)) fs.create(m, true).close()
-      }
-    } catch { case _: java.io.IOException => () }
-    Result(1, rowsBefore, filesBefore, fileCount(spark, outDir))
   }
 
   /** Compact the per-batch inverted-index dirs that streaming ingest

@@ -1,5 +1,7 @@
 package graft.plans
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -123,6 +125,38 @@ object LogPipeline {
     math.max(floor, math.max(1, waves) * floor)
   }
 
+  /** The routed-row shape every routed store holds. Schema-on-read, like
+    * the reference ("fields are not stored", SURVEY.md §1.2): only the
+    * payload + metadata. `raw` and `fields` are pure functions of `tokens`
+    * and re-derived at search time — at 10^12 rows this halves the write
+    * volume of the fan-out. `source_id` is `source` by construction on
+    * every write path ([[parse]] defines it so), so it is NOT stored either
+    * — [[openSinks]] re-derives it; that's one string column off every
+    * shuffled and written row (guide §2.3 narrower rows / §6 write volume).
+    */
+  val RoutedCols: Seq[String] =
+    Seq("doc_id", "tokens", "n_tok", "source", "host", "ts", "offset", "sink")
+
+  def routedRows(df: DataFrame): DataFrame = df.select(RoutedCols.map(col): _*)
+
+  /** A routed store's batch dir names: `batch=<digits>` (RouteJob and the
+    * streaming ingests, keyed by batch id) and `batch=late-<id>`
+    * (`StreamingPipeline.reconcileLate`). A `.`-prefixed staging dir or any
+    * other leftover next to them is no batch.
+    */
+  private val BatchDir = "batch=(?:[0-9]+|late-[A-Za-z0-9_-]+)".r
+
+  def isBatchDir(name: String): Boolean = BatchDir.matches(name)
+
+  /** The batch dirs of the routed store at `outDir`, sorted by path. */
+  def batchDirs(outDir: String): Seq[java.nio.file.Path] = {
+    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(outDir))
+    try ls.iterator().asScala
+      .filter(p => isBatchDir(p.getFileName.toString) && java.nio.file.Files.isDirectory(p))
+      .toSeq.sortBy(_.toString)
+    finally ls.close()
+  }
+
   /** route: salted repartition + fan-out write, one directory per sink.
     *
     * The salt spreads each (possibly huge) source across all writer tasks so
@@ -138,17 +172,7 @@ object LogPipeline {
     */
   def routeWrite(enriched: DataFrame, outDir: String, numPartitions: Int,
       mode: String = "overwrite"): Unit = {
-    // Schema-on-read, like the reference ("fields are not stored",
-    // SURVEY.md §1.2): persist only the payload + metadata. `raw` and
-    // `fields` are pure functions of `tokens` and re-derived at search time —
-    // at 10^12 rows this halves the write volume of the fan-out. `source_id`
-    // is `source` by construction on every write path ([[parse]] defines it
-    // so), so it is NOT stored either — [[openSinks]] re-derives it; that's
-    // one string column off every shuffled and written row (guide §2.3
-    // narrower rows / §6 write volume).
-    val persisted = enriched.select(
-      col("doc_id"), col("tokens"), col("n_tok"), col("source"),
-      col("host"), col("ts"), col("offset"), col("sink"))
+    val persisted = routedRows(enriched)
     val parts = routeParts(persisted, numPartitions)
     val salted = persisted
       .withColumn("_salt", pmod(hash(col("doc_id")), lit(parts * 8)))

@@ -1,13 +1,12 @@
 package graft.plans
 
-import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.util.Scratch
 
 /** Retention over routed sinks (reference DeleteOldEventsTask,
   * plugins/tasks/DeleteOldEventsTask.go:47-84 + S8 DeleteBatch): drop events
@@ -25,23 +24,21 @@ object RetentionJob {
       batchesKept: Int, rowsDeleted: Long)
 
   def apply(spark: SparkSession, routeOut: String, cutoff: Timestamp): RetentionStats = {
-    val base = Paths.get(routeOut)
     val fs = new Path(routeOut).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // `batch=<digits>` dirs only: a dir a rewrite or a crashed run left
-    // next to them is no batch
-    val batchDirs = Files.list(base).iterator().asScala
-      .filter(p => p.getFileName.toString.matches("batch=\\d+") && Files.isDirectory(p))
-      .toSeq.sortBy(_.toString)
-    var dropped = 0; var rewritten = 0; var kept = 0; var rowsDeleted = 0L
-    batchDirs.foreach { dir =>
+    // a micro-batch that routed no row (all of it dropped as late or
+    // duplicate) leaves a dir without data files: nothing in it expires
+    val (empty, batches) = LogPipeline.batchDirs(routeOut)
+      .partition(d => CompactionJob.fileCount(spark, d.toString) == 0L)
+    var dropped = 0; var rewritten = 0; var kept = empty.size; var rowsDeleted = 0L
+    batches.foreach { dir =>
       val df = spark.read.parquet(dir.toString)
       // min/max from parquet column statistics — no row scan
       val mm = df.agg(min("ts").as("mn"), max("ts").as("mx"), count(lit(1)).as("n")).head()
       val (mn, mx, n) = (mm.getTimestamp(0), mm.getTimestamp(1), mm.getLong(2))
       if (mx != null && mx.before(cutoff)) {
         // whole batch expired: directory delete, no read
-        Files.walk(dir).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => Files.delete(f))
+        Scratch.deleteRecursively(dir.toFile)
+        if (dir.toFile.exists) throw new java.io.IOException(s"failed to delete expired batch $dir")
         dropped += 1; rowsDeleted += n
       } else if (mn != null && !mn.before(cutoff)) {
         kept += 1

@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.SourceConfig
+import graft.util.Scratch
 
 /** Resumable fan-out route with per-batch lineage — the rebuild's analog of
   * Iceberg snapshot / streaming-offset commit tracking (north rule:
@@ -48,12 +49,6 @@ class RouteJob(spark: SparkSession, outDir: String,
 
   private def batchDir(i: Int): Path = Paths.get(outDir, s"batch=$i")
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-    }
-
   /** Deterministic micro-batch planning: sorted leaf files, round-robin. */
   def planBatches(inputDir: String): Map[Int, Seq[String]] = {
     val files = Files.walk(Paths.get(inputDir)).iterator().asScala
@@ -71,7 +66,7 @@ class RouteJob(spark: SparkSession, outDir: String,
     Files.createDirectories(lineageDir)
     val plan = planBatches(inputDir)
     val done = committedBatches()
-    plan.keys.filterNot(done).foreach(i => deleteRecursively(batchDir(i)))
+    plan.keys.filterNot(done).foreach(i => Scratch.deleteRecursively(batchDir(i).toFile))
 
     val out = Seq.newBuilder[Lineage]
     var committed = 0

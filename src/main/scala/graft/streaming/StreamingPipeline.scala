@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -108,10 +108,8 @@ object StreamingPipeline {
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     val reader = spark.readStream.schema(Schemas.sequences)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n): Unit)
-    val deduped = LogPipeline.enrichStatic(
-        LogPipeline.parse(reader.parquet(inputDir)), configs)
-      .select("doc_id", "tokens", "n_tok", "source", "host",
-        "ts", "offset", "sink") // source_id never stored (see routeWrite)
+    val deduped = LogPipeline.routedRows(LogPipeline.enrichStatic(
+        LogPipeline.parse(reader.parquet(inputDir)), configs))
       .withWatermark("ts", horizon)
       .dropDuplicatesWithinWatermark("host", "source", "ts", "offset")
     deduped.writeStream
@@ -179,10 +177,11 @@ object StreamingPipeline {
       configs: Seq[SourceConfig],
       lateBatchId: String = s"late-${System.currentTimeMillis()}",
       saltBuckets: Int = 32): Long = {
-    val parsed = LogPipeline.enrichStatic(
-        LogPipeline.parse(spark.read.parquet(inputDir)), configs)
-      .select("doc_id", "tokens", "n_tok", "source", "host",
-        "ts", "offset", "sink") // source_id never stored (see routeWrite)
+    val lateDir = s"batch=$lateBatchId"
+    require(LogPipeline.isBatchDir(lateDir),
+      s"late batch id $lateBatchId is not late-<letters, digits, _ or ->")
+    val parsed = LogPipeline.routedRows(LogPipeline.enrichStatic(
+        LogPipeline.parse(spark.read.parquet(inputDir)), configs))
       // in-slice duplicates collapse first, mirroring the stream's
       // in-batch + stateful dedup on the same unique key
       .dropDuplicates("host", "source", "ts", "offset")
@@ -194,7 +193,7 @@ object StreamingPipeline {
     try {
       val n = missed.count()
       if (n > 0)
-        LogPipeline.routeWrite(missed, s"$outDir/batch=$lateBatchId", saltBuckets)
+        LogPipeline.routeWrite(missed, s"$outDir/$lateDir", saltBuckets)
       n
     } finally missed.unpersist(blocking = false): Unit
   }
@@ -216,150 +215,34 @@ object StreamingPipeline {
   }
 
   /** Scale-real histogram serving (SURVEY.md §2.7): UPDATE-mode output into
-    * a partitioned file sink. Each micro-batch writes only the windows it
-    * CHANGED (cumulative counts) into its own `delta=<batchId>/` directory —
-    * the same per-batch-id overwrite idempotence as [[ingest]], so a
-    * replayed batch lands in place instead of duplicating. Nothing
+    * the [[DeltaStore.histogram]] store — each micro-batch writes only the
+    * windows it CHANGED (cumulative counts) into its own delta dir. Nothing
     * accumulates on the driver, and the watermark EVICTS closed-window
     * state (update mode re-emits a window on change, so dropping its state
     * after the watermark passes loses nothing — late rows beyond the
     * watermark are dropped before the aggregation either way). Serving
-    * reads the deltas latest-wins via [[servedHistogram]]; CompactionJob
-    * can fold old deltas exactly like routed batch dirs.
+    * reads the store newest-wins via [[servedHistogram]];
+    * [[DeltaStore.compact]] folds old deltas into a base snapshot.
     */
   def histogramToSink(spark: SparkSession, inputDir: String, outDir: String,
       checkpointDir: String, configs: Seq[SourceConfig],
       bucket: String = "1 hour", watermark: String = "2 hours",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    histogramAgg(spark, inputDir, configs, bucket, watermark)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(deltaSinkBatch(outDir) _)
-      .start()
+    DeltaStore.histogram(outDir).start(
+      histogramAgg(spark, inputDir, configs, bucket, watermark), checkpointDir, trigger)
 
-  /** List a histogram store's components: (newest base snapshot id + path
-    * if any, delta dirs NEWER than that base). Deltas at or below the base
-    * id are superseded by it (compaction deletes them; a crash may leave
-    * some behind — they are ignored here, which is what makes the
-    * base-commit rename the single atomic point of the compaction).
+  /** Merge-on-read over [[histogramToSink]]'s store: the latest batch that
+    * touched a (bucket_start, sink) window carries its cumulative count, so
+    * newest-wins per window reconstructs the full histogram.
     */
-  private[graft] def storeParts(spark: SparkSession,
-      outDir: String): (Option[(Long, String)], Seq[(Long, String)]) = {
-    val p = new org.apache.hadoop.fs.Path(outDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return (None, Seq.empty)
-    val children = fs.listStatus(p).filter(_.isDirectory)
-    def numbered(prefix: String) = children.flatMap { c =>
-      val n = c.getPath.getName
-      if (n.startsWith(prefix))
-        n.stripPrefix(prefix).toLongOption.map(id => (id, c))
-      else None
-    }
-    val base = numbered("base-").sortBy(_._1).lastOption
-    val floor = base.map(_._1).getOrElse(-1L)
-    val (deltas, superseded) = numbered("delta=").partition(_._1 > floor)
-    // a superseded delta (id <= base) is normally crash debris from before
-    // the base committed — but one WRITTEN AFTER the base and with an id
-    // STRICTLY below it means the streaming checkpoint was reset while the
-    // sink was kept: batch ids restarted from 0, and silently ignoring
-    // them would serve a frozen pre-reset snapshot. Refuse loudly. (id ==
-    // base exactly is the one legitimate late writer: a crash-replay of
-    // the last folded batch re-emits identical rows the base already
-    // carries.)
-    base.foreach { case (_, bst) =>
-      val reset = superseded.filter { case (id, st) =>
-        id < floor && st.getModificationTime > bst.getModificationTime }
-      require(reset.isEmpty,
-        s"histogram store $outDir has deltas newer than base-$floor with ids < $floor " +
-          s"(${reset.map(_._2.getPath.getName).mkString(", ")}) — the streaming " +
-          "checkpoint was reset against a kept sink; start a fresh sink dir " +
-          "or remove the stale base")
-    }
-    (base.map { case (id, st) => (id, st.getPath.toString) },
-      deltas.sortBy(_._1).map { case (id, st) => (id, st.getPath.toString) }.toSeq)
-  }
-
-  /** Merge-on-read over [[histogramToSink]]'s store: the newest base
-    * snapshot (if compaction ran — rows rank at the base's batch id) plus
-    * every NEWER delta; the latest batch that touched a (bucket_start,
-    * sink) window carries its cumulative count, so newest-wins per window
-    * reconstructs the full histogram. The window function shuffles only
-    * aggregate rows (windows x sinks), never events.
-    */
-  def servedHistogram(spark: SparkSession, outDir: String): DataFrame = {
-    val (base, deltas) = storeParts(spark, outDir)
-    servedFrom(spark, outDir, base, deltas)
-  }
-
-  /** [[servedHistogram]] over an EXPLICIT parts listing — callers that must
-    * see one consistent snapshot (compaction: signature + rewrite from the
-    * same file set, with the streaming writer appending concurrently) list
-    * once and build both frames from it.
-    */
-  private[graft] def servedFrom(spark: SparkSession, outDir: String,
-      base: Option[(Long, String)], deltas: Seq[(Long, String)]): DataFrame =
-    servedNewestWins(spark, outDir, base, deltas,
-      keyCols = Seq("bucket_start", "sink"),
-      outCols = Seq("bucket_start", "sink", "n"))
-
-  /** The merge-on-read core shared by every update-delta store: newest base
-    * + newer deltas, latest batch that touched a key carries its cumulative
-    * row, newest-wins per `keyCols`. The window shuffles only aggregate
-    * rows (key cardinality), never events.
-    */
-  private[graft] def servedNewestWins(spark: SparkSession, outDir: String,
-      base: Option[(Long, String)], deltas: Seq[(Long, String)],
-      keyCols: Seq[String], outCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // single-part store: exactly one base (a compacted snapshot) or exactly
-    // one delta — each is an aggregation output, so its keys are unique by
-    // construction and newest-wins is the identity. Skipping the window
-    // removes a full shuffle + sort of the cell table from the serving
-    // plan (guide §2.4 "remove shuffles outright"); the multi-part path
-    // below is unchanged.
-    (base, deltas) match {
-      case (Some((_, path)), Seq()) =>
-        return spark.read.parquet(path).select(outCols.map(col): _*)
-      case (None, Seq((_, path))) =>
-        return spark.read.parquet(path).select(outCols.map(col): _*)
-      case _ => ()
-    }
-    val frames =
-      base.map { case (id, path) =>
-        spark.read.parquet(path).withColumn("delta", lit(id)) }.toSeq ++
-      (if (deltas.nonEmpty)
-        Seq(spark.read.option("basePath", outDir).parquet(deltas.map(_._2): _*)
-          .withColumn("delta", col("delta").cast("long")))
-      else Seq.empty)
-    require(frames.nonEmpty, s"no update-delta store at $outDir")
-    val all = frames.reduce(_ unionByName _)
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("delta").desc)
-    all.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(outCols.map(col): _*)
-  }
-
-  /** The per-batch-id delta writer shared by every update-mode file sink:
-    * each micro-batch overwrites only its own `delta=<batchId>/` directory
-    * (idempotent under replay; [[servedNewestWins]] reads newest-wins).
-    */
-  private def deltaSinkBatch(outDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    // pin the update-mode output: the emptiness probe and the write would
-    // otherwise each re-run the stateful aggregation
-    batch.persist()
-    try {
-      if (!batch.isEmpty)
-        batch.write.mode("overwrite").parquet(s"$outDir/delta=$batchId")
-    } finally batch.unpersist(): Unit
-  }
+  def servedHistogram(spark: SparkSession, outDir: String): DataFrame =
+    DeltaStore.histogram(outDir).served(spark)
 
   /** Streaming schema-on-read field cells: the stream maintains
     * (day window, source, key, value) occurrence counts — the state behind
     * a LIVE field-discovery panel (`LogPipeline.fieldProfile` is its batch
     * face; the profile aggregates the served cells). Update-mode deltas
-    * into the same per-batch-id file sink as the histogram.
+    * into the [[DeltaStore.fieldCells]] store.
     *
     * Scale shape: state is CELL-cardinality per open day window — the same
     * "a field's wire cost is its information content" argument as the batch
@@ -374,40 +257,33 @@ object StreamingPipeline {
     val stream = spark.readStream
       .schema(Schemas.sequences)
       .parquet(inputDir)
-    LogPipeline.enrichStatic(LogPipeline.parse(stream), configs)
-      .withWatermark("ts", watermark)
-      .select(col("ts"), col("source"),
-        explode(col("fields")).as(Seq("key", "value")))
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window),
-        col("source"), col("key"), col("value"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("source"),
-        col("key"), col("value"), col("n"))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(deltaSinkBatch(outDir) _)
-      .start()
+    DeltaStore.fieldCells(outDir).start(
+      LogPipeline.enrichStatic(LogPipeline.parse(stream), configs)
+        .withWatermark("ts", watermark)
+        .select(col("ts"), col("source"),
+          explode(col("fields")).as(Seq("key", "value")))
+        .groupBy(org.apache.spark.sql.functions.window(col("ts"), window),
+          col("source"), col("key"), col("value"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("window.start").as("window_start"), col("source"),
+          col("key"), col("value"), col("n")),
+      checkpointDir, trigger)
   }
 
   /** Merge-on-read over [[fieldCellsToSink]]'s store. */
-  def servedFieldCells(spark: SparkSession, outDir: String): DataFrame = {
-    val (base, deltas) = storeParts(spark, outDir)
-    servedNewestWins(spark, outDir, base, deltas,
-      keyCols = Seq("window_start", "source", "key", "value"),
-      outCols = Seq("window_start", "source", "key", "value", "n"))
-  }
+  def servedFieldCells(spark: SparkSession, outDir: String): DataFrame =
+    DeltaStore.fieldCells(outDir).served(spark)
 
   /** LIVE template mining: the stream maintains exactly
     * `LogTemplates.tokCells` — distinct (source, len, pos, token)
-    * occurrence counts — as update-mode state into the per-batch-id delta
-    * sink; `LogTemplates.templatesFromCells` over the served cells IS the
-    * current template set (and template DRIFT alerts fall out of diffing
-    * two serve points). State equals the corpus's distinct-token content —
-    * the same irreducible-information bound the batch probe measures (the
-    * mining index being built, not an overhead), cumulative by design:
-    * template discovery is corpus-lifetime, so no watermark applies.
+    * occurrence counts — as update-mode state into the
+    * [[DeltaStore.templateCells]] store; `LogTemplates.templatesFromCells`
+    * over the served cells IS the current template set (and template DRIFT
+    * alerts fall out of diffing two serve points). State equals the
+    * corpus's distinct-token content — the same irreducible-information
+    * bound the batch probe measures (the mining index being built, not an
+    * overhead), cumulative by design: template discovery is
+    * corpus-lifetime, so no watermark applies.
     */
   def templateCellsToSink(spark: SparkSession, inputDir: String,
       outDir: String, checkpointDir: String,
@@ -416,23 +292,15 @@ object StreamingPipeline {
     val schema = StructType(Seq(
       StructField("source", StringType, nullable = false),
       StructField("raw", StringType, nullable = false)))
-    graft.plans.LogTemplates.tokCells(
-        spark.readStream.schema(schema).parquet(inputDir))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(deltaSinkBatch(outDir) _)
-      .start()
+    DeltaStore.templateCells(outDir).start(
+      graft.plans.LogTemplates.tokCells(
+        spark.readStream.schema(schema).parquet(inputDir)),
+      checkpointDir, trigger)
   }
 
   /** Merge-on-read over [[templateCellsToSink]]'s store. */
-  def servedTemplateCells(spark: SparkSession, outDir: String): DataFrame = {
-    val (base, deltas) = storeParts(spark, outDir)
-    servedNewestWins(spark, outDir, base, deltas,
-      keyCols = Seq("source", "len", "pos", "tok"),
-      outCols = Seq("source", "len", "pos", "tok", "cnt"))
-  }
+  def servedTemplateCells(spark: SparkSession, outDir: String): DataFrame =
+    DeltaStore.templateCells(outDir).served(spark)
 
   // ------------------------------------------- arbitrary-state transitions
 
@@ -451,8 +319,8 @@ object StreamingPipeline {
     * (time, event_id, type) — and each micro-batch emits the transition
     * pairs linking the carried state through the batch's time-ordered new
     * events, including the pair that SPANS the batch/restart boundary.
-    * Pairs append into the per-batch-id delta sink (exactly-once under
-    * replay); `EventAnalytics.transitionStats` over the served pairs is the
+    * Pairs append into the [[DeltaStore.transitionPairs]] store
+    * (exactly-once under replay); `EventAnalytics.transitionStats` over the served pairs is the
     * live matrix, and equals the batch [[graft.plans.EventAnalytics.transitions]]
     * whenever each user's events arrive time-ordered across batches (the
     * file-tail delivery order; out-of-order arrivals are the documented
@@ -468,20 +336,6 @@ object StreamingPipeline {
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    // the pair store is APPEND (every delta counts — no newest-wins row to
-    // supersede stale ones), so a RESET checkpoint against a kept sink
-    // would silently double-count: batch ids restart at 0, overwrite
-    // delta=0 with all pairs, and the stale delta=1.. survive. Refuse
-    // loudly up front — the same contract storeParts enforces for the
-    // update-mode stores once a base exists.
-    {
-      val ckptOffsets = new java.io.File(checkpointDir, "offsets")
-      val (_, deltas) = storeParts(spark, outDir)
-      require(deltas.isEmpty || ckptOffsets.isDirectory,
-        s"transition store $outDir already holds deltas but checkpoint " +
-          s"$checkpointDir is fresh — a reset checkpoint against a kept " +
-          "append sink double-counts; start a fresh sink dir")
-    }
     // NB per-batch memory: a group's NEW events materialize on one executor
     // for the in-batch sort (state itself stays one row/user). Under
     // AvailableNow over a deep backlog, cap the batch with
@@ -493,40 +347,30 @@ object StreamingPipeline {
       .parquet(inputDir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .as[UserEvent]
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastEvent, TransitionPair](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[UserEvent], state: GroupState[LastEvent]) =>
-          val sorted = rows.toSeq.sortBy(e => (microsOf(e.ts), e.event_id))
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            val types = state.getOption.map(_.event_type).toSeq ++
-              sorted.map(_.event_type)
-            val last = sorted.last
-            state.update(LastEvent(microsOf(last.ts), last.event_id,
-              last.event_type))
-            types.sliding(2).collect {
-              case Seq(a, b) => TransitionPair(a, b)
+    DeltaStore.transitionPairs(outDir).start(
+      events.groupByKey(_.user_id)
+        .flatMapGroupsWithState[LastEvent, TransitionPair](
+          OutputMode.Append, GroupStateTimeout.NoTimeout) {
+          (uid: Long, rows: Iterator[UserEvent], state: GroupState[LastEvent]) =>
+            val sorted = rows.toSeq.sortBy(e => (microsOf(e.ts), e.event_id))
+            if (sorted.isEmpty) Iterator.empty
+            else {
+              val types = state.getOption.map(_.event_type).toSeq ++
+                sorted.map(_.event_type)
+              val last = sorted.last
+              state.update(LastEvent(microsOf(last.ts), last.event_id,
+                last.event_type))
+              types.sliding(2).collect {
+                case Seq(a, b) => TransitionPair(a, b)
+              }
             }
-          }
-      }
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[TransitionPair], batchId: Long) =>
-        deltaSinkBatch(outDir)(batch.toDF(), batchId)
-      }
-      .start()
+        },
+      checkpointDir, trigger)
   }
 
   /** All transition pairs the stream has emitted (append store — every
     * delta counts; replayed batches overwrote their own dir).
     */
-  def servedTransitionPairs(spark: SparkSession, outDir: String): DataFrame = {
-    val (_, deltas) = storeParts(spark, outDir)
-    require(deltas.nonEmpty, s"no transition store at $outDir")
-    spark.read.option("basePath", outDir).parquet(deltas.map(_._2): _*)
-      .select(col("from_type"), col("to_type"))
-  }
+  def servedTransitionPairs(spark: SparkSession, outDir: String): DataFrame =
+    DeltaStore.transitionPairs(outDir).served(spark)
 }

@@ -340,6 +340,20 @@ class PipelineSpec extends AnyFunSuite {
     // idempotent: a second reconcile finds nothing left to repair
     assert(graft.streaming.StreamingPipeline.reconcileLate(
       spark, in, out, SequenceGen.configs, lateBatchId = "late-B") == 0L)
+    // retention covers the repaired batch dir: a cutoff past the repaired
+    // rows drops them and counts them
+    val routedNow = spark.read.parquet(out)
+    val lateMax = routedNow.filter(col("source") === "log-9.txt")
+      .agg(max("ts")).head().getTimestamp(0)
+    val cutoff = new java.sql.Timestamp(lateMax.getTime + 1)
+    val expired = routedNow.filter(col("ts") < lit(cutoff)).count()
+    assert(expired >= nLate)
+    val stats = graft.plans.RetentionJob(spark, out, cutoff)
+    assert(stats.rowsDeleted == expired,
+      s"rowsDeleted ${stats.rowsDeleted} != $expired rows older than the cutoff")
+    val left = spark.read.parquet(out)
+    assert(left.filter(col("source") === "log-9.txt").isEmpty, "repaired rows must expire")
+    assert(left.count() == 1000L + nLate - expired)
     org.apache.spark.sql.graftbridge.Bridge.stopStateStoreMaintenance()
   }
 
@@ -439,7 +453,7 @@ class PipelineSpec extends AnyFunSuite {
       s"each micro-batch writes its own delta dir, saw ${Option(deltaDirs).map(_.length)}")
 
     // --- delta compaction: fold deltas into one base snapshot ---
-    val res = graft.plans.CompactionJob.compactHistogram(spark, sink)
+    val res = graft.streaming.DeltaStore.histogram(sink).compact(spark)
     assert(res.rows == allWindows)
     val afterCompact = graft.streaming.StreamingPipeline.servedHistogram(spark, sink)
     assert(afterCompact.exceptAll(batch).isEmpty && batch.exceptAll(afterCompact).isEmpty,
@@ -452,7 +466,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(new java.io.File(sink).listFiles((_, n) => n.startsWith("delta=")).nonEmpty,
       "superseded deltas persist through the grace window")
     // a later compaction past the grace reclaims them (grace -1 = expired)
-    val res2 = graft.plans.CompactionJob.compactHistogram(spark, sink, graceMs = -1L)
+    val res2 = graft.streaming.DeltaStore.histogram(sink).compact(spark, graceMs = -1L)
     assert(res2.rows == 0L) // no new deltas: the fold itself is a no-op
     val left = new java.io.File(sink).listFiles((_, n) => n.startsWith("delta="))
     assert(left == null || left.isEmpty, "aged-out superseded deltas must be reclaimed")
@@ -468,6 +482,100 @@ class PipelineSpec extends AnyFunSuite {
       LogPipeline.run(spark, spark.read.parquet(streamIn), SequenceGen.configs))
     assert(served3.exceptAll(batch3).isEmpty && batch3.exceptAll(served3).isEmpty,
       "post-compaction deltas must compose with the base snapshot")
+  }
+
+  test("delta stores refuse a fresh checkpoint against a sink that already holds deltas") {
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.StreamingQuery
+    val SP = graft.streaming.StreamingPipeline
+    val seqIn = Scratch.dir("reset-seq").toString
+    SequenceGen.sequences(spark, 300, 2).write.mode("overwrite").parquet(seqIn)
+    val rawIn = Scratch.dir("reset-raw").toString
+    Seq(("app", "request user 1 done"), ("app", "request user 2 done"))
+      .toDF("source", "raw").write.mode("overwrite").parquet(rawIn)
+    val evIn = Scratch.dir("reset-ev").toString
+    Seq((1L, java.time.LocalDateTime.parse("2026-01-01T10:00:00"), 1L, "view"),
+        (2L, java.time.LocalDateTime.parse("2026-01-01T10:01:00"), 1L, "click"))
+      .toDF("event_id", "ts", "user_id", "event_type")
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
+        lit(0.0).as("value"), lit("{}").as("props"))
+      .write.mode("overwrite").parquet(evIn)
+    val writers: Seq[(String, (String, String) => StreamingQuery)] = Seq(
+      "histogram" -> ((sink, ck) => SP.histogramToSink(spark, seqIn, sink, ck, SequenceGen.configs)),
+      "field cells" -> ((sink, ck) => SP.fieldCellsToSink(spark, seqIn, sink, ck, SequenceGen.configs)),
+      "template cells" -> ((sink, ck) => SP.templateCellsToSink(spark, rawIn, sink, ck)),
+      "transitions" -> ((sink, ck) => SP.transitionsToSink(spark, evIn, sink, ck)))
+    writers.foreach { case (name, run) =>
+      val sink = Scratch.dir("reset-sink").toString
+      run(sink, Scratch.dir("reset-ckpt").toString).awaitTermination()
+      assert(new java.io.File(sink).listFiles((_, n) => n.startsWith("delta=")).nonEmpty,
+        s"$name wrote no delta")
+      val e = intercept[IllegalArgumentException](
+        run(sink, Scratch.dir("reset-ckpt").toString))
+      assert(e.getMessage.contains(s"delta store $sink already holds parts"),
+        s"$name: ${e.getMessage}")
+    }
+    org.apache.spark.sql.graftbridge.Bridge.stopStateStoreMaintenance()
+  }
+
+  test("DeltaStore.compact folds the field-cell and template-cell stores") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import graft.streaming.{DeltaStore, StreamingPipeline => SP}
+    // kv/access sources only: one event-time clock, so no later slice
+    // trails the watermark (see the histogram test)
+    def seqSlice(lo: Long, hi: Long): DataFrame = SequenceGen.sequences(spark, hi, 2)
+      .filter(col("doc_id") >= f"doc-$lo%012d" && !col("source").startsWith("json"))
+    def rawSlice(lo: Long, hi: Long): DataFrame =
+      seqSlice(lo, hi).select(col("source"), F.tokens_to_text(col("tokens")).as("raw"))
+    val cases: Seq[(String, (Long, Long) => DataFrame,
+        (String, String, String) => StreamingQuery, String => DeltaStore)] = Seq(
+      ("field cells", seqSlice,
+        (in, sink, ck) => SP.fieldCellsToSink(spark, in, sink, ck, SequenceGen.configs),
+        DeltaStore.fieldCells),
+      ("template cells", rawSlice,
+        (in, sink, ck) => SP.templateCellsToSink(spark, in, sink, ck),
+        DeltaStore.templateCells))
+    cases.foreach { case (name, slice, run, storeOf) =>
+      val in = Scratch.dir("dcmp-in").toString
+      val sink = Scratch.dir("dcmp-sink").toString
+      val ckpt = Scratch.dir("dcmp-ckpt").toString
+      val store = storeOf(sink)
+      def dirs(prefix: String): Int = Option(new java.io.File(sink)
+        .listFiles((_, n) => n.startsWith(prefix))).fold(0)(_.length)
+      // a first run and two restarts on one checkpoint: three deltas
+      Seq((0L, 1500L), (1500L, 3000L), (3000L, 4500L)).foreach { case (lo, hi) =>
+        slice(lo, hi).write.mode("append").parquet(in)
+        run(in, sink, ckpt).awaitTermination()
+      }
+      assert(dirs("delta=") == 3, s"$name: one delta per run")
+      val pinned = store.served(spark).localCheckpoint(eager = true)
+      val planned = store.served(spark) // lists the deltas before the commit
+      val res = store.compact(spark)
+      assert(res.rows == pinned.count(), s"$name: the fold covers every served row")
+      assert(dirs("base-") == 1, s"$name: one base committed")
+      val served = store.served(spark)
+      assert(served.exceptAll(pinned).isEmpty && pinned.exceptAll(served).isEmpty,
+        s"$name: the compacted store must serve the identical rows")
+      assert(planned.exceptAll(pinned).isEmpty && pinned.exceptAll(planned).isEmpty,
+        s"$name: a reader planned before the commit must survive it")
+      // a second fold past the grace reclaims every superseded part
+      assert(store.compact(spark, graceMs = -1L).rows == 0L)
+      assert(dirs("base-") == 1 && dirs("delta=") == 0,
+        s"$name: left ${dirs("base-")} bases and ${dirs("delta=")} deltas")
+      // a later batch composes with the base: the store serves what a
+      // one-shot stream over the whole input serves
+      slice(4500L, 6000L).write.mode("append").parquet(in)
+      run(in, sink, ckpt).awaitTermination()
+      assert(dirs("delta=") == 1)
+      val oneShot = Scratch.dir("dcmp-once").toString
+      run(in, oneShot, Scratch.dir("dcmp-ckpt").toString).awaitTermination()
+      val got = store.served(spark)
+      val want = storeOf(oneShot).served(spark)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"$name: post-compaction deltas must compose with the base")
+    }
+    org.apache.spark.sql.graftbridge.Bridge.stopStateStoreMaintenance()
   }
 
   test("streaming histogram with watermark matches batch histogram") {
