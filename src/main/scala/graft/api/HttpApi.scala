@@ -58,15 +58,21 @@ import graft.compile.{EventsFrame, TableFrame}
   * Every page and field-stats response comes from [[JobsApi]], which runs
   * each Spark job of a request under the job's group (so abort cancels
   * it and its progress counts it): a page is a slice of the job's one
-  * rendered result, events or table, rendered to JSON once by `toJSON`,
-  * and the handler only stitches page-sized strings. The job itself is
-  * "pumped" in the background on start (the reference's job engine
-  * pump, internal/jobs/Engine.go:84-174; [[JobsApi.pump]]): a
-  * newest-first events job first renders its head, the first rows in one
-  * top-k job, so its first page is served before the full sort; then its
-  * page index with the rendered results, and its stats, run as two
-  * overlapping pump tasks while a client pages and polls. Abort cancels
-  * the running stages; a failed query is logged once and ends aborted.
+  * rendered result, events or table, rendered to JSON once, and the
+  * handler only stitches page-sized strings. The job itself is "pumped"
+  * in the background on start (the reference's job engine pump,
+  * internal/jobs/Engine.go:84-174; [[JobsApi.pump]]): a newest-first
+  * events job first renders its head, the first rows in one top-k job, so
+  * its first page is served at once; then one narrow pass gathers a small
+  * job's every page, count and field stats on the driver. A large job
+  * instead builds its page index and its stats as two overlapping pump
+  * tasks while a client pages and polls. Abort cancels the running
+  * stages; a failed query is logged once and ends aborted.
+  *
+  * The server sets `sun.net.httpserver.nodelay` before its first `create`:
+  * without it the JDK server flushes the headers as one TCP segment and
+  * Nagle's algorithm holds the small body until the client's delayed ACK,
+  * ~40 ms on loopback for every response.
   */
 final class HttpApi(api: JobsApi,
     configPath: Option[Path] = None,
@@ -103,6 +109,8 @@ final class HttpApi(api: JobsApi,
     // stop() shuts the pools down for good — a restarted instance would
     // bind its socket but reject every dispatched request
     require(!httpPool.isShutdown, "HttpApi cannot restart; create a new instance")
+    // read once, when the JDK's server config first loads
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/api/v1", (ex: HttpExchange) => handle(ex))
     // longest-prefix routing: the root context only sees non-api paths
@@ -180,19 +188,20 @@ final class HttpApi(api: JobsApi,
           startTime = q.get("startTime").map(rfc3339),
           endTime = q.get("endTime").map(rfc3339))
     }
-    // the pump (Engine.go:84-174, JobsApi.pump): the job's head, then its
-    // page index and its stats as two overlapping pump tasks, so clients
-    // can page and poll jobStats / estimatedProgress meanwhile. An abort
-    // cancels these stages and the cancellation dies here, not in a
-    // request thread; any other failure is logged once, by the chain that
-    // hit it (the job is aborted by then).
+    // the pump (Engine.go:84-174, JobsApi.pump): the job's head, then one
+    // pass for its pages and stats (a large job: its page index and its
+    // stats as two overlapping pump tasks), so clients can page and poll
+    // jobStats / estimatedProgress meanwhile. An abort cancels these
+    // stages and the cancellation dies here, not in a request thread; any
+    // other failure is logged once, by the chain that hit it (the job is
+    // aborted by then).
     def pumped(chain: => Unit): Runnable = () =>
       try chain catch { case e: Throwable =>
         if (!JobsApi.isCancellation(e)) System.err.println(
           s"[graft] job ${job.id} failed (query: ${job.query}): ${HttpApi.oneLine(e)}")
       }
     // a stopped server rejects the forked chain; the stats chain then
-    // builds the page index itself
+    // builds a large job's page index itself
     def fork(chain: () => Unit): Unit =
       try pumpPool.submit(pumped(chain())): Unit
       catch { case _: java.util.concurrent.RejectedExecutionException => () }

@@ -4,10 +4,13 @@ import java.sql.Timestamp
 import java.time.Instant
 
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.compile.{EventsFrame, Frame, QueryEngine, TableFrame}
 
@@ -26,9 +29,17 @@ import graft.compile.{EventsFrame, Frame, QueryEngine, TableFrame}
   * store while the scan runs (internal/jobs/Engine.go:98-161), so its first
   * page is ready early; here the job pins its compiled match set once, and
   * one top-k job over it renders the first [[JobsApi.HeadRows]] rows (the
-  * job's head) while filling that cache. The sort, the page index, the
-  * render and the field stats then read the pinned match set, so the store
-  * is scanned once per search; [[pump]] orders that work.
+  * job's head) while filling that cache. Everything else reads the pinned
+  * match set, so the store is scanned once per search; [[pump]] orders
+  * that work.
+  *
+  * A job of at most [[JobsApi.LocalPageCacheMaxRows]] rows needs no sort
+  * and no aggregate at all: one narrow pass ([[Job#local]]) brings every
+  * row's wire JSON and the field counts to the driver, which sorts and
+  * counts them there, so a small search runs two Spark jobs, the head and
+  * that pass. The sorted, pinned [[jobResults]] frames and the
+  * [[jobFieldStats]] aggregate are still built, by the path above, when an
+  * in-process caller first asks for them; the HTTP surface never does.
   *
   * Lifecycle mirrors pkg/logsuck/jobs/Job.go:24-40 (Running/Finished/
   * Aborted) and internal/jobs/Engine.go:84-174 (Abort cancels the running
@@ -87,9 +98,9 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
 
     /** The compiled match set of a timestampDesc events job, pinned once
       * (memory, spilling to disk). Its first scan is the [[head]] job, so
-      * the store is read once per search: [[results]] and
+      * the store is read once per search: [[local]], [[results]] and
       * [[fieldStatsCached]] read this cache, and [[releaseMatches]] drops
-      * it once both of them are pinned.
+      * it once nothing needs it.
       */
     private[JobsApi] val matches: Once[DataFrame] =
       new Once(pin(frame.df))
@@ -98,8 +109,8 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       * their wire JSON: one top-k job (`TakeOrderedAndProject`, no range
       * sample, no global sort) over [[matches]], which fills the match
       * cache as it scans. Same rows, same order `(ts DESC, doc_id)` and
-      * same `eventsWire(..).toJSON` render as [[rendered]], so a page
-      * sliced from it is byte-identical to the pinned page.
+      * same wire JSON as [[local]] and [[rendered]], so a page sliced from
+      * it is byte-identical to the later page.
       */
     private[JobsApi] val head: Once[Array[String]] = new Once(
       JobsApi.eventsWire(QueryEngine.newestFirst(EventsFrame(matches.get))
@@ -109,10 +120,11 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       * (plugins/sqlite_jobs/SqliteJobRepository.go:34-49,99-186 persists
       * JobResults/JobTableResults once and serves every page from it): the
       * ORDERED result materializes once into executor block storage
-      * (memory, spilling to disk) on the job's first stats/results action;
-      * every later page, stat, and field-stat reads the cache instead of
-      * re-running the compiled query + sort. A timestampDesc events job
-      * sorts its pinned [[matches]], not the store.
+      * (memory, spilling to disk) on its first action: the stats of a table
+      * or `surrounding` job or of a large job, or an in-process page;
+      * every later use reads the cache instead of re-running the compiled
+      * query + sort. A timestampDesc events job sorts its pinned
+      * [[matches]], not the store.
       */
     private[JobsApi] val results: Once[DataFrame] = new Once({
       val ordered = frame match {
@@ -145,16 +157,15 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       pin(fieldStatsOverride.getOrElse(engine.fieldStats(
         if (hasHead) EventsFrame(matches.get) else resultsFrame))))
 
-    /** A2 of jobStats: distinct values per field key, folded from the
-      * persisted [[fieldStatsCached]] aggregate once — a client polling
-      * jobStats while the job runs waits for this one pass.
+    /** A2 of a large or imported job's stats: distinct values per field
+      * key, folded from the persisted [[fieldStatsCached]] aggregate once.
       */
     private[JobsApi] val fieldCounts: Once[Map[String, Long]] = new Once(
       fieldStatsCached.get.groupBy(col("key")).agg(count(lit(1)).as("n_values"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
 
     /** The page index over the pinned results cache, built in ONE narrow
-      * pass with the first results/stats action: each cached partition's
+      * pass with the first action on [[results]]: each cached partition's
       * row count and, for a timestampDesc job, its first (ts, doc_id) key.
       * Positional pages then read ONLY the cached partitions containing
       * [skip, skip+take) — no per-page global shuffle, no scan of
@@ -181,31 +192,60 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
       JobsApi.PageIndex(parts.map(_._1).scanLeft(0L)(_ + _), parts.map(_._2))
     })
 
-    /** The job's wire JSON, rendered once: the events wire keys (reference
-      * EventWithExtractedFields, pkg/logsuck/events/Event.go:46-54) for an
-      * events job, the table's own columns for a table job — the bytes a
-      * per-page `toJSON` of the same rows gives. A result of at most
-      * [[JobsApi.LocalPageCacheMaxRows]] rows is rendered straight into the
-      * driver and every page is an array slice with zero Spark jobs (the
-      * reference serves pages straight from its job-results table the same
-      * way). A bigger one stays on the executors: one narrow map over the
-      * persisted results (same partitioning, so [[index]] slices apply
-      * verbatim), pinned as it is first read, so a page is a
-      * partition-pruned job over cached strings. It is registered for
-      * release before the cell completes, so an abort leaks nothing.
+    /** A small job's whole result on the driver, or None for a job of more
+      * than [[JobsApi.LocalPageCacheMaxRows]] rows. The reference's pump
+      * fills one per-job results and field-values table in a single drain
+      * (internal/jobs/Engine.go:84-174, SqliteJobRepository.go:34-49,99-205);
+      * here one narrow pass ([[JobsApi.gather]]) over the job's pinned rows
+      * gathers every row's wire JSON and the field stats, and the pages, the
+      * count, FieldCount and the field-values cuts all come from it with no
+      * further Spark job. A timestampDesc events job runs it after its
+      * [[head]], over the match set the head cached; the size is the row
+      * count that cache recorded as it filled, so no count job runs, and
+      * the match set is released after the pass. Other jobs count their
+      * pinned [[results]] with the [[index]] pass first. A large job keeps
+      * the [[results]] / [[index]] / [[rendered]] path.
       */
-    private[JobsApi] val rendered: Once[Either[Array[String], RDD[String]]] = new Once({
-      val json = (frame match {
-        case _: TableFrame => results.get
-        case _: EventsFrame => JobsApi.eventsWire(results.get)
-      }).toJSON
-      if (index.get.starts.last <= JobsApi.LocalPageCacheMaxRows) Left(json.collect())
+    private[JobsApi] val local: Once[Option[JobsApi.Gathered]] = new Once({
+      val (rows, n) =
+        if (hasHead) {
+          head.get
+          val m = matches.get
+          (m, Bridge.cachedRows(m).getOrElse(m.queryExecution.toRdd.count()))
+        } else (results.get, index.get.starts.last)
+      if (n > JobsApi.LocalPageCacheMaxRows) None
       else {
-        val r = json.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        persistedRdds.add(r)
-        Right(r)
+        val all = JobsApi.gather(rows, frame, keyed = hasHead)
+        releaseMatches()
+        Some(all)
       }
     })
+
+    /** A large job's wire JSON, rendered once: the events wire keys
+      * (reference EventWithExtractedFields, pkg/logsuck/events/Event.go:46-54)
+      * for an events job, the table's own columns for a table job — the
+      * bytes a per-page `toJSON` of the same rows gives. It stays on the
+      * executors: one narrow map over the persisted results (same
+      * partitioning, so [[index]] slices apply verbatim), pinned as it is
+      * first read, so a page is a partition-pruned job over cached strings.
+      * It is registered for release before the cell completes, so an abort
+      * leaks nothing.
+      */
+    private[JobsApi] val rendered: Once[RDD[String]] = new Once({
+      val r = (frame match {
+        case _: TableFrame => results.get
+        case _: EventsFrame => JobsApi.eventsWire(results.get)
+      }).toJSON.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      persistedRdds.add(r)
+      r
+    })
+
+    /** Whether pages come from the whole result rather than the [[head]]:
+      * once the one pass gathered a small job, or once a large job's page
+      * index is built.
+      */
+    private[JobsApi] def pagesReady: Boolean =
+      local.isDone && (local.get.isDefined || index.isDone)
 
     // memoized jobStats — the second stats call launches zero Spark jobs
     @volatile private[JobsApi] var statsCache: JobStats = null
@@ -219,11 +259,13 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     private val persistedRdds = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
     private def pin(df: DataFrame): DataFrame = { JobsApi.pin(df); persistedFrames.add(df); df }
 
-    /** Drop the pinned match set; called once [[results]] (with their
-      * page index) and the field-stats aggregate are pinned. Nothing reads
-      * it after that, and Spark keeps a loaded dependent cache when the
-      * cache it was built from goes, so the job holds no more cached data
-      * than its results and stats.
+    /** Drop the pinned match set; called once a small job's one pass has
+      * gathered it ([[local]]), or once a large job's [[results]] (with
+      * their page index) and field-stats aggregate are pinned. Nothing on
+      * the HTTP path reads it after that, and Spark keeps a loaded dependent
+      * cache when the cache it was built from goes, so a finished job holds
+      * no more cached data than its results and stats; an in-process frame
+      * asked for later reads the store again.
       */
     private[JobsApi] def releaseMatches(): Unit =
       if (matches.isDone && persistedFrames.remove(matches.get))
@@ -349,17 +391,20 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     * reference's pump, internal/jobs/Engine.go:84-174). A timestampDesc
     * events job first renders its [[Job#head]] — one top-k job that pins
     * the match set as it scans — so its first page is ready after one
-    * pass. Then two chains overlap: `fork` runs the page index plus the
-    * rendered wire JSON, while this thread runs [[jobStats]] (the field
-    * stats over the match set, then the count from the page index). Other
-    * jobs run [[jobStats]] alone. Failures end the job as aborted (see
-    * [[withJobGroup]]) and are rethrown to the caller of each chain.
+    * pass. Then one narrow pass over the match set ([[Job#local]]) gathers
+    * a small job's every page, count and field stats, and [[jobStats]]
+    * reads them. A larger job runs two overlapping chains instead: `fork`
+    * builds the page index, while this thread runs [[jobStats]] (the
+    * field stats over the match set, then the count from the page index).
+    * Other jobs run [[jobStats]] alone. Failures end the job as aborted
+    * (see [[withJobGroup]]) and are rethrown to the caller of each chain.
     */
   def pump(id: Long)(fork: (() => Unit) => Unit): Unit = {
     val job = jobOrThrow(id)
     if (job.hasHead) {
       withJobGroup(job)(job.head.get): Unit
-      fork(() => withJobGroup(job)(job.rendered.get): Unit)
+      if (withJobGroup(job)(job.local.get).isEmpty)
+        fork(() => withJobGroup(job)(job.index.get): Unit)
     }
     jobStats(id): Unit
   }
@@ -445,8 +490,9 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
   /** jobStats (Web.go:192-218): state + A3 matched count + A2 distinct-value
     * count per field key. A job whose full stats pass completed is Finished
     * (the lazy-frame analog of the reference's pump draining): its stats
-    * are done and its results are pinned. An aborted job (cancelled, or
-    * failed) reports aborted without touching the cluster again.
+    * are done and every page is ready, gathered on the driver or pinned.
+    * An aborted job (cancelled, or failed) reports aborted without
+    * touching the cluster again.
     */
   def jobStats(id: Long): JobStats = {
     val job = jobOrThrow(id)
@@ -455,17 +501,22 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     val cached = job.statsCache
     if (cached != null) return cached // memoized: zero Spark jobs
     withJobGroup(job) {
-      // neither action re-runs the compiled query: the count is the page
-      // index's last prefix entry (one pass over the persisted results
-      // builds both), and the distinct-value agg folds the persisted
-      // fieldStats aggregate. A job with a head aggregates its match set,
-      // so its field stats go first, while the page index is being built
-      // on the pump's other chain; other jobs aggregate their results, so
-      // the pass that pins them goes first.
-      val occFirst = if (job.hasHead) Some(job.fieldCounts.get) else None
-      val n = job.index.get.starts.last
-      val occ = occFirst.getOrElse(job.fieldCounts.get)
-      job.releaseMatches()
+      val (n, occ) = job.local.get match {
+        case Some(all) => (all.rows.length.toLong, all.fieldCounts)
+        case None =>
+          // a large job: neither action re-runs the compiled query. The
+          // count is the page index's last prefix entry (one pass over the
+          // persisted results builds both), and the distinct-value agg
+          // folds the persisted fieldStats aggregate. A job with a head
+          // aggregates its match set, so its field stats go first, while
+          // the page index is being built on the pump's other chain; other
+          // jobs aggregate their results, pinned by the page index pass.
+          val occFirst = if (job.hasHead) Some(job.fieldCounts.get) else None
+          val n = job.index.get.starts.last
+          val occ = occFirst.getOrElse(job.fieldCounts.get)
+          job.releaseMatches()
+          (n, occ)
+      }
       if (job.markTerminal(JobsApi.Finished) || job.stateRef == JobsApi.Finished) {
         val stats = JobStats(JobsApi.Finished, n, occ)
         job.statsCache = stats
@@ -502,12 +553,13 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
 
   /** [[jobResults]] on the HTTP wire, for events and table jobs alike: the
     * page's rows as their final JSON strings, with the same ordering and
-    * page boundaries as [[jobResults]]. While a job with a head has not
-    * built its page index, a page within the first [[JobsApi.HeadRows]]
-    * rows is a slice of [[Job#head]] (one top-k job, shared with the pump).
-    * Otherwise the page is a slice of [[Job#rendered]]: in memory for a
-    * small result, else a one-stage partition-pruned job over the cached
-    * strings — never a per-page DataFrame/plan/codegen.
+    * page boundaries as [[jobResults]]. Until a job with a head has its
+    * whole result ready, a page within the first [[JobsApi.HeadRows]] rows
+    * is a slice of [[Job#head]] (one top-k job, shared with the pump).
+    * Otherwise a small job's page is a slice of [[Job#local]], with no
+    * Spark job, and a large job's a one-stage partition-pruned job over
+    * [[Job#rendered]]'s cached strings — never a per-page
+    * DataFrame/plan/codegen.
     */
   def jobResultsWireJson(id: Long, skip: Int, take: Int): Array[String] = {
     val job = jobOrThrow(id)
@@ -515,15 +567,14 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
     val lo = skip.toLong
     val hi = lo + take
     withJobGroup(job) {
-      if (job.hasHead && hi <= JobsApi.HeadRows && !job.index.isDone)
+      if (job.hasHead && hi <= JobsApi.HeadRows && !job.pagesReady)
         JobsApi.slice(job.head.get, lo, hi)
-      else {
-        val starts = job.index.get.starts // may materialize the store
-        if (take == 0 || lo >= starts.last) Array.empty[String]
-        else job.rendered.get match {
-          case Left(all) => JobsApi.slice(all, lo, hi) // no Spark job
-          case Right(rdd) => JobsApi.slicePage(rdd, starts, lo, hi).collect()
-        }
+      else job.local.get match {
+        case Some(all) => JobsApi.slice(all.rows, lo, hi) // no Spark job
+        case None =>
+          val starts = job.index.get.starts // may materialize the store
+          if (take == 0 || lo >= starts.last) Array.empty[String]
+          else JobsApi.slicePage(job.rendered.get, starts, lo, hi).collect()
       }
     }
   }
@@ -626,17 +677,21 @@ class JobsApi(engine: QueryEngine, indexDir: Option[String] = None,
   }
 
   /** [[jobFieldStats]] on the HTTP wire: at most `take` (value,
-    * occurrences) pairs, collected under the job's group and ordered by
-    * value. Top-occurrence values win the cut, ties by value.
+    * occurrences) pairs ordered by value. Top-occurrence values win the
+    * cut, ties by value. A small job answers from [[Job#local]]; a large
+    * one collects the cut from its aggregate under the job's group.
     */
   def jobFieldValues(id: Long, field: String, take: Int): Array[(String, Long)] = {
     val job = jobOrThrow(id)
-    withJobGroup(job)(jobFieldStats(id, field)
-      .orderBy(col("occurrences").desc, col("value"))
-      .limit(take)
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-      .sortBy(_._1))
+    withJobGroup(job)(job.local.get match {
+      case Some(all) => all.fieldValues(field, take)
+      case None => jobFieldStats(id, field)
+        .orderBy(col("occurrences").desc, col("value"))
+        .limit(take)
+        .collect()
+        .map(r => r.getString(0) -> r.getLong(1))
+        .sortBy(_._1)
+    })
   }
 
   /** Persist a job's stores to `dir` — the cross-process analog of the
@@ -749,12 +804,99 @@ object JobsApi {
   /** Reference wire keys for events
     * (pkg/logsuck/events/Event.go:46-54).
     */
-  private[api] def eventsWire(events: DataFrame): DataFrame =
-    events.select(
-      col("doc_id").as("Id"), col("raw").as("Raw"),
-      col("ts").as("Timestamp"), col("host").as("Host"),
-      col("source").as("Source"), col("source_id").as("SourceId"),
-      col("fields").as("Fields"))
+  private def eventWire: Seq[Column] = Seq(
+    col("doc_id").as("Id"), col("raw").as("Raw"),
+    col("ts").as("Timestamp"), col("host").as("Host"),
+    col("source").as("Source"), col("source_id").as("SourceId"),
+    col("fields").as("Fields"))
+
+  private[api] def eventsWire(events: DataFrame): DataFrame = events.select(eventWire: _*)
+
+  /** A small job's whole result ([[Job#local]]): every row's wire JSON in
+    * page order, and how often each field `(key, value)` pair occurs.
+    */
+  private[api] final class Gathered(val rows: Array[String],
+      occurrences: collection.Map[(String, String), Long]) {
+    /** A2 of jobStats: distinct values per field key. */
+    val fieldCounts: Map[String, Long] = occurrences.keys.groupMapReduce(_._1)(_ => 1L)(_ + _)
+
+    /** [[JobsApi#jobFieldValues]]: the `take` top-occurrence values of
+      * `field`, ties by value as Spark orders strings, then sorted by value.
+      */
+    def fieldValues(field: String, take: Int): Array[(String, Long)] =
+      occurrences.iterator.collect { case ((k, v), n) if k == field => (v, n) }.toArray
+        .sortWith { case ((v1, n1), (v2, n2)) =>
+          n1 > n2 || n1 == n2 && utf8Compare(utf8(v1), utf8(v2)) < 0 }
+        .take(take)
+        .sortBy(_._1)
+  }
+
+  private def utf8(s: String): UTF8String = if (s == null) null else UTF8String.fromString(s)
+
+  /** Spark's ascending string order: nulls first, then UTF-8 bytes (Java's
+    * `String.compareTo` compares UTF-16 units, which differs beyond the BMP).
+    */
+  private def utf8Compare(a: UTF8String, b: UTF8String): Int =
+    if (a == null) { if (b == null) 0 else -1 }
+    else if (b == null) 1
+    else a.binaryCompare(b)
+
+  /** [[QueryEngine.newestFirst]]'s order over `(ts, doc_id)` keys: `ts`
+    * descending with nulls last, then `doc_id` ascending.
+    */
+  private val NewestFirst: Ordering[(java.time.LocalDateTime, UTF8String)] = { (a, b) =>
+    val byTs =
+      if (a._1 == null) { if (b._1 == null) 0 else 1 }
+      else if (b._1 == null) -1
+      else b._1.compareTo(a._1)
+    if (byTs != 0) byTs else utf8Compare(a._2, b._2)
+  }
+
+  /** One partition's share of [[gather]]. */
+  private final case class Part(json: Array[String],
+      keys: Array[(java.time.LocalDateTime, String)],
+      occurrences: collection.Map[(String, String), Long])
+
+  /** The one narrow pass of a small job: per partition, each row's wire JSON
+    * (the render `toJSON` gives the same columns, so the same bytes), its
+    * `(ts, doc_id)` key when `keyed`, and a partial `(key, value) ->
+    * occurrences` count of [[QueryEngine.fieldPairs]]. The driver sorts a
+    * keyed job's rows newest-first; other jobs keep partition order.
+    */
+  private[api] def gather(rows: DataFrame, frame: Frame, keyed: Boolean): Gathered = {
+    val wire = frame match {
+      case _: EventsFrame => eventWire
+      case _: TableFrame => Seq(col("*"))
+    }
+    val keyCols = if (keyed) Seq(col("ts"), col("doc_id")) else Seq.empty
+    val pass = rows.select(wire ++ (QueryEngine.fieldPairs(frame) +: keyCols): _*)
+    val n = pass.schema.length - 1 - keyCols.length
+    val wireSchema = org.apache.spark.sql.types.StructType(pass.schema.take(n))
+    val timeZone = pass.sparkSession.conf.get("spark.sql.session.timeZone")
+    val parts = pass.rdd.mapPartitions { it =>
+      val render = Bridge.jsonRender(wireSchema, timeZone)
+      val json = Array.newBuilder[String]
+      val keys = Array.newBuilder[(java.time.LocalDateTime, String)]
+      val occ = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      it.foreach { r =>
+        json += render(Row.fromSeq(r.toSeq.take(n)))
+        if (!r.isNullAt(n)) r.getSeq[Row](n).foreach { p =>
+          val kv = (p.getString(0), p.getString(1))
+          occ.update(kv, occ.getOrElse(kv, 0L) + 1)
+        }
+        if (keyed) keys += ((Option(r.get(n + 1)).map(rowLdt).orNull, r.getString(n + 2)))
+      }
+      Iterator(Part(json.result(), keys.result(), occ))
+    }.collect()
+    val all = parts.flatMap(_.json)
+    val ordered =
+      if (!keyed) all
+      else { // a stable sort: rows of equal keys keep partition order
+        val byKey = parts.flatMap(_.keys).map { case (t, d) => (t, utf8(d)) }
+        all.zip(byKey).sortBy(_._2)(NewestFirst).map(_._1)
+      }
+    new Gathered(ordered, parts.flatMap(_.occurrences).groupMapReduce(_._1)(_._2)(_ + _))
+  }
 
   /** A job's page index (Job.index): `starts` holds the prefix row starts
     * of the cached partitions (one more entry than partitions; the last is

@@ -412,9 +412,8 @@ class QueryEngine(val events: DataFrame, val configs: Seq[SourceConfig]) {
     case EventsFrame(df) =>
       df.select(explode(col("fields")).as(Seq("key", "value")))
         .groupBy("key", "value").agg(count(lit(1)).as("occurrences"))
-    case TableFrame(df, order) =>
-      val kv = order.map(c => struct(lit(c).as("key"), coalesce(col(c), lit("")).as("value")))
-      df.select(explode(array(kv: _*)).as("kv"))
+    case TableFrame(df, _) =>
+      df.select(explode(QueryEngine.fieldPairs(frame)).as("kv"))
         .select(col("kv.key").as("key"), col("kv.value").as("value"))
         .groupBy("key", "value").agg(count(lit(1)).as("occurrences"))
   }
@@ -448,6 +447,16 @@ object QueryEngine {
     */
   def newestFirst(frame: Frame): DataFrame =
     frame.df.orderBy(col("ts").desc, col("doc_id"))
+
+  /** The (key, value) pairs [[QueryEngine#fieldStats]] counts, per row, as
+    * an `array<struct<key, value>>`: an event's extracted fields, or a table
+    * row's columns in column order with null read as "".
+    */
+  def fieldPairs(frame: Frame): Column = frame match {
+    case _: EventsFrame => map_entries(col("fields"))
+    case TableFrame(_, order) => array(order.map(c =>
+      struct(lit(c).as("key"), coalesce(col(c), lit("")).as("value"))): _*)
+  }
 
   private val goDuration = """[-+]?(?:[0-9]*\.?[0-9]+(?:ns|us|µs|ms|s|m|h))+""".r
   private val goDurationUnit = """([0-9]*\.?[0-9]+)(ns|us|µs|ms|s|m|h)""".r

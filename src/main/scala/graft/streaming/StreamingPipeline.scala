@@ -60,7 +60,7 @@ object StreamingPipeline {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val enriched = LogPipeline.run(batch.sparkSession, batch, configsProvider())
-        LogPipeline.routeWrite(enriched, s"$outDir/batch=$batchId", saltBuckets)
+        routeBatch(enriched, outDir, batchId, saltBuckets)
         // maintain the inverted full-text index at ingest time, like the
         // reference inserts into FTS4 EventRaws alongside Events (S5);
         // same per-batch-id idempotence as the row write
@@ -69,6 +69,21 @@ object StreamingPipeline {
         }
       }
       .start()
+  }
+
+  /** [[LogPipeline.routeWrite]] of one micro-batch into its own
+    * `batch=<id>/` dir. A batch that routes no row (all of it late or
+    * duplicate) writes a dir holding only `_SUCCESS`, from which no reader
+    * can infer a schema, so that dir is removed again: one listing, no
+    * Spark job.
+    */
+  private def routeBatch(batch: DataFrame, outDir: String, batchId: Long,
+      saltBuckets: Int): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(s"$outDir/batch=$batchId")
+    LogPipeline.routeWrite(batch, dir.toString, saltBuckets)
+    val fs = dir.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+    if (!fs.listStatus(dir).exists(_.getPath.getName.startsWith("sink=")))
+      fs.delete(dir, true): Unit
   }
 
   /** [[ingest]] plus the reference's ingest-time duplicate rejection made
@@ -116,7 +131,7 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        LogPipeline.routeWrite(batch, s"$outDir/batch=$batchId", saltBuckets)
+        routeBatch(batch, outDir, batchId, saltBuckets)
       }
       .start()
   }

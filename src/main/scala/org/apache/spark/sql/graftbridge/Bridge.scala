@@ -28,4 +28,38 @@ object Bridge {
     */
   def waitListenerBusEmpty(sc: org.apache.spark.SparkContext, timeoutMillis: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMillis)
+
+  /** The rows a persisted frame's cache counted while it filled, once every
+    * cached partition is built; None while it is not cached or not fully
+    * built. Reading it runs no Spark job. A partition built twice counts
+    * twice, so the figure is an upper bound, never less than the rows.
+    */
+  def cachedRows(df: org.apache.spark.sql.DataFrame): Option[Long] = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .map(_.cachedRepresentation.cacheBuilder)
+      .filter(_.isCachedColumnBuffersLoaded)
+      .map(_.rowCountStats.value.longValue)
+  }
+
+  /** `Dataset.toJSON`'s render of one row of `schema`: the same encoder
+    * round trip (so a map's entries come out in the same order) and the
+    * same generator and options, so the same bytes. One renderer per
+    * thread; it reuses its buffer.
+    */
+  def jsonRender(schema: org.apache.spark.sql.types.StructType,
+      timeZone: String): org.apache.spark.sql.Row => String = {
+    import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+    import org.apache.spark.sql.catalyst.json.{JacksonGenerator, JSONOptions}
+    val writer = new java.io.CharArrayWriter()
+    val gen = new JacksonGenerator(schema, writer,
+      new JSONOptions(Map.empty[String, String], timeZone))
+    val toRow = ExpressionEncoder(RowEncoder.encoderFor(schema)).createSerializer()
+    row => {
+      writer.reset()
+      gen.write(toRow(row))
+      gen.flush()
+      writer.toString
+    }
+  }
 }

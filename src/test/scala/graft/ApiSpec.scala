@@ -146,14 +146,16 @@ class ApiSpec extends AnyFunSuite {
       assert(QueryEngine.newestFirst(job.frame).storageLevel == StorageLevel.NONE,
         s"$q: head pages must not pin the results")
       assert(api.jobStats(job.id).numMatchedEvents == n)
-      assert(QueryEngine.newestFirst(job.frame).storageLevel != StorageLevel.NONE,
-        s"$q: a finished job pins its results")
+      // a finished small job pages from its one pass over the match set,
+      // not from a sorted, pinned copy
+      assert(QueryEngine.newestFirst(job.frame).storageLevel == StorageLevel.NONE,
+        s"$q: a finished small job pins no sorted results")
       assert(job.frame.df.storageLevel == StorageLevel.NONE,
         s"$q: a finished job releases its match set")
       val pinned = headPages.map { case (skip, take) => api.jobResultsWireJson(job.id, skip, take) }
       headPages.zip(fromHead.zip(pinned)).foreach { case ((skip, take), (h, p)) =>
         assert(h.length == math.max(0L, math.min(take.toLong, n - skip)), s"$q ($skip, $take)")
-        assert(h.sameElements(p), s"$q ($skip, $take): head page != pinned page")
+        assert(h.sameElements(p), s"$q ($skip, $take): head page != one-pass page")
       }
       assert(api.releaseJob(job.id))
     }
@@ -174,6 +176,76 @@ class ApiSpec extends AnyFunSuite {
     assert(storeStages.length == 1,
       s"stages reading >= $storeRows records: $storeStages (all: ${ev.stageRecordsRead})")
     assert(api.releaseJob(job.id))
+  }
+
+  test("a fresh small events search runs at most 3 Spark jobs, pages and stats included") {
+    val api = new JobsApi(EventsAdapter.engine(spark, dir))
+    val ((job, first, stats, deep), ev) = TestSpark.observe {
+      val job = api.startJob("error NOT zzthree")
+      val first = api.jobResultsWireJson(job.id, 0, 50)
+      val stats = api.jobStats(job.id)
+      (job, first, stats, api.jobResultsWireJson(job.id, (stats.numMatchedEvents / 2).toInt, 50))
+    }
+    assert(ev.jobs.size <= 3, s"a small search ran ${ev.jobs.size} Spark jobs")
+    assert(stats.state == "finished" && stats.numMatchedEvents == 201)
+    val all = api.jobResultsWireJson(job.id, 0, 201)
+    assert(first.sameElements(all.take(50)) && deep.sameElements(all.slice(100, 150)))
+    assert(api.releaseJob(job.id))
+  }
+
+  /** The events wire render of today's per-page path (`eventsWire`). */
+  private def wire(df: org.apache.spark.sql.DataFrame): Array[String] = df.select(
+    col("doc_id").as("Id"), col("raw").as("Raw"), col("ts").as("Timestamp"),
+    col("host").as("Host"), col("source").as("Source"),
+    col("source_id").as("SourceId"), col("fields").as("Fields")).toJSON.collect()
+
+  test("one-pass pages, count and field stats equal the sorted and aggregated frames") {
+    // equal and null ts; doc_ids whose UTF-16 order differs from their
+    // UTF-8 order (a surrogate pair sorts before U+E000 in UTF-16, after it
+    // in UTF-8); tag values tied in occurrences across that same split
+    val (smile, pua, fffd) = ("\uD83D\uDE00", "\uE000", "\uFFFD")
+    val rows = Seq[(String, java.lang.Long, String)](
+      ("a" + smile, 100L, s"tag=x$smile userid=1"), ("a" + pua, 100L, s"tag=x$pua userid=1"),
+      ("a" + fffd, 100L, s"tag=x$fffd userid=2"), ("b", 100L, s"tag=x$smile userid=2"),
+      ("c" + smile, null, s"tag=x$pua userid=3"), ("c", null, "tag=plain userid=3"),
+      ("d", 200L, s"tag=x$fffd userid=1"), ("e", 50L, "tag=plain userid=4"),
+      ("f" + pua, 50L, "userid=4"), ("f" + smile, 50L, "tag=plain userid=5"))
+    val df = spark.createDataFrame(rows.zipWithIndex.map { case ((d, t, kv), i) =>
+      (d, t, s"2024/01/01 00:00:00.000000 $kv", i.toLong) })
+      .toDF("doc_id", "secs", "raw", "offset")
+      .select(col("doc_id"), lit("diff-0.log").as("source"), lit("h").as("host"),
+        lit("diff-0.log").as("source_id"), timestamp_seconds(col("secs")).as("ts"),
+        col("offset"), col("raw"))
+      .repartition(3)
+    val engine = new QueryEngine(df, Seq(graft.model.SourceConfig("diff*.log", "kv",
+      Seq("tag=(?P<tag>[^ ]+)", "userid=(?P<userid>[^ ]+)"), "_time",
+      graft.model.SourceConfig.defaultTimeLayout, "h", "app")))
+    val api = new JobsApi(engine)
+    def fieldCounts(f: graft.compile.Frame) = engine.fieldOccurrences(f).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    def cut(f: graft.compile.Frame, field: String, take: Int) = engine.fieldStats(f)
+      .filter(col("key") === field).select(col("value"), col("occurrences"))
+      .orderBy(col("occurrences").desc, col("value")).limit(take).collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1).toSeq
+    // (query, today's full wire render)
+    val jobs = Seq[(String, JobsApi#Job => Array[String])](
+      "userid" -> (j => wire(QueryEngine.newestFirst(j.frame))),
+      "userid | table \"tag,userid\"" -> (j => api.jobResults(j.id, 0, rows.length).toJSON.collect()),
+      "| surrounding count=6 eventId=d" -> (j => wire(api.jobResults(j.id, 0, rows.length))))
+    for ((q, want) <- jobs) {
+      val job = api.startJob(q)
+      val stats = api.jobStats(job.id)
+      val all = want(job)
+      assert(all.length >= 6, s"$q matched ${all.length} rows")
+      assert(stats.numMatchedEvents == all.length, q)
+      assert(stats.fieldOccurrences == fieldCounts(job.frame), q)
+      for (skip <- 0 to all.length; take <- Seq(1, 3, all.length))
+        assert(api.jobResultsWireJson(job.id, skip, take).sameElements(all.slice(skip, skip + take)),
+          s"$q: page ($skip, $take)")
+      for (field <- stats.fieldOccurrences.keys; take <- Seq(1, 2, 100))
+        assert(api.jobFieldValues(job.id, field, take).toSeq == cut(job.frame, field, take),
+          s"$q: $field values, take $take")
+      assert(api.releaseJob(job.id))
+    }
   }
 
   test("releasing a job keeps the caches a live job with the same plan reads") {

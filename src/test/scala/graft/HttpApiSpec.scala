@@ -57,7 +57,7 @@ class HttpApiSpec extends AnyFunSuite {
   private def parsed(rows: Iterable[String]): Seq[JsonNode] = rows.map(mapper.readTree).toSeq
 
   test("startJob/jobStats/jobResults/jobFieldStats over HTTP (Web.go api/v1)") {
-    withServer() { (port, _) =>
+    withServer() { (port, api) =>
       val start = post(port, s"/api/v1/startJob?searchString=${enc("error")}")
       assert(start.statusCode() == 200)
       val id = start.body().trim.toLong
@@ -88,10 +88,18 @@ class HttpApiSpec extends AnyFunSuite {
       val ids2 = page2.get("events").elements().asScala.map(_.get("Id").asText()).toSet
       assert(ids2.size == 10 && ids1.intersect(ids2).isEmpty)
 
+      // a finished small job answers from its one pass: no Spark job
       val (fs, fsJobs) = TestSpark.observe(mapper.readTree(
         get(port, s"/api/v1/jobFieldStats?jobId=$id&fieldName=eventtype").body()))
       assert(fs.get("error").asLong() == 201 && fs.size() == 1)
-      assertJobGroup(fsJobs, id)
+      assert(fsJobs.jobs.isEmpty, s"finished job's field stats ran ${fsJobs.jobs.size} jobs")
+      // a job no pump has run yet runs its head and its one pass for the
+      // request, every Spark job under the job's group
+      val fresh = api.startJob("error NOT zzhttpfields").id
+      val (fs2, freshJobs) = TestSpark.observe(mapper.readTree(
+        get(port, s"/api/v1/jobFieldStats?jobId=$fresh&fieldName=eventtype").body()))
+      assert(fs2 == fs)
+      assertJobGroup(freshJobs, fresh)
 
       // take caps the driver-side collection for high-cardinality fields:
       // top-occurrence values win the cut; the full map stays the default
@@ -165,7 +173,15 @@ class HttpApiSpec extends AnyFunSuite {
       val rows = res.get("tableRows")
       assert(rows.size() == 5)
       assert(rows.get(0).get("eventtype").asText() == "error")
-      assertJobGroup(firstJobs, id)
+      // the stats' one pass gathered every page: the first page is a slice
+      assert(firstJobs.jobs.isEmpty, s"a finished table's first page ran ${firstJobs.jobs.size} jobs")
+      // a table job no pump has run yet builds its pages for the request,
+      // every Spark job under the job's group
+      val fresh = api.startJob("error NOT zzhttptable | table \"userid,eventtype\"").id
+      val (freshRes, freshJobs) = TestSpark.observe(mapper.readTree(
+        get(port, s"/api/v1/jobResults?jobId=$fresh&skip=0&take=5").body()))
+      assert(freshRes.get("tableRows").size() == 5)
+      assertJobGroup(freshJobs, fresh)
       // the second page is a slice of the rendered result: no Spark job
       val (res2, secondJobs) = TestSpark.observe(mapper.readTree(
         get(port, s"/api/v1/jobResults?jobId=$id&skip=5&take=5").body()))
@@ -179,8 +195,8 @@ class HttpApiSpec extends AnyFunSuite {
 
   test("a | stats job serves its aggregate as a table over HTTP") {
     withServer() { (port, api) =>
-      val q = enc("error | stats fn=count by=userid")
-      val id = post(port, s"/api/v1/startJob?searchString=$q").body().trim.toLong
+      // started without a pump, so the page request runs the job's work
+      val id = api.startJob("error | stats fn=count by=userid").id
       val (res, pageJobs) = TestSpark.observe(mapper.readTree(
         get(port, s"/api/v1/jobResults?jobId=$id&skip=0&take=200").body()))
       assert(res.get("resultType").asInt() == 2)
@@ -218,6 +234,20 @@ class HttpApiSpec extends AnyFunSuite {
       val stats = mapper.readTree(get(port, s"/api/v1/jobStats?jobId=$id").body())
       assert(stats.get("State").asInt() == 3) // aborted
       assert(post(port, "/api/v1/abortJob?jobId=99999").statusCode() == 404)
+    }
+  }
+
+  test("a small response is sent at once, not held for the client's delayed ACK") {
+    withServer() { (port, _) =>
+      // with Nagle's algorithm on, each body waits ~40 ms on loopback for
+      // the ACK of the header segment; the schema endpoint runs no Spark job
+      val ms = (0 until 21).map { _ =>
+        val t0 = System.nanoTime()
+        val r = get(port, "/api/v1/config/schema")
+        assert(r.statusCode() == 200 && r.body().nonEmpty)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(10) < 20.0, s"median ${ms(10)} ms over 21 GETs: $ms")
     }
   }
 

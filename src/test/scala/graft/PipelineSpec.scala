@@ -330,6 +330,13 @@ class PipelineSpec extends AnyFunSuite {
     // insert would have kept them
     assert(spark.read.parquet(out).count() == 1000L,
       "beyond-horizon events (new AND duplicate) are dropped by the stream")
+    // a micro-batch that routed no row leaves no batch dir behind: a dir
+    // without parquet files fails every reader's schema inference
+    val bare = LogPipeline.batchDirs(out).filterNot { d =>
+      val files = Files.walk(d)
+      try files.anyMatch(_.getFileName.toString.endsWith(".parquet")) finally files.close()
+    }
+    assert(bare.isEmpty, s"batch dirs without parquet files: $bare")
     // the batch repair lands exactly the missed sliver, exactly once
     val repaired = graft.streaming.StreamingPipeline.reconcileLate(
       spark, in, out, SequenceGen.configs, lateBatchId = "late-A")
